@@ -219,6 +219,10 @@ object Bench {
       dvOverhead: Double, dvFilteredOverhead: Double, avRatio: Double,
       laneRatios: Seq[Double], sf1LaneJson: String, slotScore: Double,
       sfDir: String): String = {
+    require(laneRatios.length == 8,
+      s"composeHeadline: expected 8 columnar lane ratios (nested, array, " +
+        "arraystruct, twolevel, structarray, elemcontainers, childstructarr, " +
+        s"threelevel), got ${laneRatios.length}")
     val Seq(nestRatio, arrRatio, asRatio, tlRatio, saRatio, ecRatio, csRatio,
       t3Ratio) = laneRatios
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +

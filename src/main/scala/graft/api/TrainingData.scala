@@ -984,8 +984,7 @@ object TrainingData {
           val avroRows: Map[String, Long] =
             if (format != "graft-avro" || counts.isEmpty) Map.empty
             else {
-              val conf = new org.apache.spark.util.SerializableConfiguration(
-                spark.sparkContext.hadoopConfiguration)
+              val conf = graft.spark.GraftSources.broadcastHadoopConf(spark)
               val rootStr = dir
               spark.sparkContext
                 .parallelize(counts.keySet.toSeq.sorted,
@@ -993,9 +992,9 @@ object TrainingData {
                 .map { f =>
                   val p = new org.apache.hadoop.fs.Path(
                     new org.apache.hadoop.fs.Path(rootStr), f)
-                  val pfs = p.getFileSystem(conf.value)
+                  val pfs = p.getFileSystem(conf.value.value)
                   f -> (try Some(graft.spark.GraftAvro.countRecords(
-                      conf.value, p, 0L, pfs.getFileStatus(p).getLen))
+                      conf.value.value, p, 0L, pfs.getFileStatus(p).getLen))
                     catch { case _: Exception => None })
                 }.collect().collect { case (f, Some(n)) => f -> n }.toMap
             }
@@ -1086,15 +1085,14 @@ object TrainingData {
       dir: String, matches: org.apache.spark.sql.Dataset[(String, Long)],
       state: Map[String, String]): Array[(String, String)] = {
     import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = graft.spark.GraftSources.broadcastHadoopConf(spark)
     val rootStr = dir
     val stateB = spark.sparkContext.broadcast(state)
     matches
       .repartition(col("_f")).sortWithinPartitions(col("_f"), col("_i"))
       .mapPartitions { it =>
         val root = new org.apache.hadoop.fs.Path(rootStr)
-        val fs = root.getFileSystem(conf.value)
+        val fs = root.getFileSystem(conf.value.value)
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
         val bit = it.buffered
         while (bit.hasNext) {
@@ -1105,9 +1103,9 @@ object TrainingData {
           }
           val name = graft.spark.DeletionVectors.write(fs, root, f, ords,
             Option(stateB.value.getOrElse(f, null)),
-            formatVersion = conf.value.getInt(
+            formatVersion = conf.value.value.getInt(
               graft.spark.DeletionVectors.FormatKey, 2),
-            conf = conf.value)
+            conf = conf.value.value)
           out += ((f, name))
         }
         out.iterator
@@ -1811,7 +1809,7 @@ object TrainingData {
       files.map((_, true)) ++
         dvPairs.map { case (n, _) =>
           (graft.spark.DeletionVectors.DirName + "/" + n, false) }
-    val sconf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val sconf = graft.spark.GraftSources.broadcastHadoopConf(spark)
     val srcQ = fs.makeQualified(srcRoot).toString
     val dstQ = dfs.makeQualified(dstRoot).toString
     // one task per ~16 files, capped by the unit count and floored at the
@@ -1821,7 +1819,7 @@ object TrainingData {
       math.max(spark.sparkContext.defaultParallelism, units.size / 16)))
     spark.sparkContext.parallelize(units, slices).foreach {
       case (rel, trySidecar) =>
-        val c = sconf.value
+        val c = sconf.value.value
         val sp = new Path(s"$srcQ/$rel")
         val dp = new Path(s"$dstQ/$rel")
         val sfs = sp.getFileSystem(c)
@@ -2792,8 +2790,8 @@ object TrainingData {
       .distinct())
     var eRdd = snapRdd(e)
     var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
+    var changed = true
+    while (changed && round < maxRounds) {
       // LARGE-STAR. Group the full symmetric neighborhood of u; every
       // strictly-larger neighbor b re-attaches to m = min(Γ(u) ∪ {u}).
       // Emitted pairs are (m, b) with m < b — already canonical.
@@ -2844,8 +2842,12 @@ object TrainingData {
       // the snap's RDD job ran the whole plan incl. CollectMetrics: read
       // the fused count off the executed plan (Observation's listener
       // never fires for RDD-level actions like checkpoint)
+      // Only "any edge rewritten?" is read, never the count itself: on the
+      // reliable-checkpoint path Dataset.checkpoint runs the plan twice
+      // (materialize, then write the files), so the accumulator can hold
+      // about twice the symmetric difference.
       changed = org.apache.spark.sql.execution.CollectMetricsExec
-        .collect(classified.queryExecution.executedPlan)("cc_changed").getLong(0)
+        .collect(classified.queryExecution.executedPlan)("cc_changed").getLong(0) > 0
       // `next` is fully materialized (eager snap) and the convergence
       // count rode the same job over the old edge set — release it now
       eRdd.foreach(release)
@@ -2853,7 +2855,7 @@ object TrainingData {
       eRdd = snapRdd(e)
       round += 1
     }
-    require(changed == 0,
+    require(!changed,
       s"connectedComponents: no fixpoint within $maxRounds rounds — " +
         "raise maxRounds (star contraction needs O(log^2 n) rounds)")
     // fixpoint = disjoint stars rooted at each component's min: every

@@ -432,6 +432,7 @@ final class ColumnarPlate(
   private[this] var ekGVecs: Array[Array[Array[WritableColumnVector]]] = _
   allocate()
   private[this] var rows = 0
+  private[this] var skippedBytes = 0L
   private[this] val seen = new Array[Boolean](numCols)
   // count of distinct top-level columns filled this row; when it reaches
   // numCols the row is SATURATED and unnest answers Signal.FinishRow (the
@@ -3014,7 +3015,10 @@ final class ColumnarPlate(
   }
 
   def finishBatch(terminal: Boolean): Long = rowCount
-  def skipped(bytes: Int): Unit = ()
+  def skipped(bytes: Int): Unit = skippedBytes += bytes
+
+  /** Total bytes the parser pruned for this plate (custom metric). */
+  def totalSkippedBytes: Long = skippedBytes
 
   /** Discard any in-flight row state (malformed-record recovery): buffered
     * complete rows stay; the partial row's cells are overwritten/nulled by

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -7,6 +8,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count,
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 partial aggregate pushdown for the graft scans (SURVEY §2.7's
   * row-count harness, generalized): grouped or ungrouped MIN / MAX /
@@ -177,7 +179,7 @@ final class GraftAggReaderFactory(
     parseSchema: StructType,
     spec: GraftAgg.Spec,
     maxGroups: Int,
-    conf: org.apache.spark.util.SerializableConfiguration = null,
+    conf: Broadcast[SerializableConfiguration] = null,
     metadataOk: Boolean = false,
     partSpec: Array[(Int, Int, DataType)] = Array.empty) extends PartitionReaderFactory {
 
@@ -207,7 +209,7 @@ final class GraftAggReaderFactory(
           }.toOption
         }
         val path = new org.apache.hadoop.fs.Path(p.path)
-        FileStats.loadFor(path.getFileSystem(conf.value), path, p.fileLen)
+        FileStats.loadFor(path.getFileSystem(conf.value.value), path, p.fileLen)
           .flatMap(st => GraftAggMeta.answer(spec, st, lookup)) match {
           case Some(row) => return new GraftAggMeta.Reader(row)
           case None => ()
@@ -463,6 +465,10 @@ final class GraftAggPartitionReader(
 
   override def get(): InternalRow = current
   override def close(): Unit = inner.close()
+  // the inner parse's skip accounting reaches the scan node's metrics
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    inner.currentMetricsValues()
 }
 
 /** Metadata answers for pushed aggregates: a MIN / MAX / COUNT(col) /

@@ -5,6 +5,7 @@ import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
@@ -484,7 +485,7 @@ final class GraftAvroTable(
       Option(info.options.get("path")).orElse(Option(properties.get("path")))
         .orElse(Option(properties.get("location"))).orNull,
       info.schema(),
-      new SerializableConfiguration(GraftSources.activeHadoopConf()),
+      GraftSources.broadcastHadoopConf(),
       Option(info.options.get("codec"))
         .orElse(Option(properties.get("codec"))).getOrElse("none")
         .toLowerCase(java.util.Locale.ROOT),
@@ -674,7 +675,7 @@ final class GraftAvroScan(
       return new GraftCdfMicroBatchStream(options, checkpointLocation,
         new GraftAvroReaderFactory(streamSchema, cdfPartCols,
           countStar = false, absentOkFields(phys),
-          new SerializableConfiguration(GraftSources.activeHadoopConf())),
+          GraftSources.broadcastHadoopConf()),
         listing.partCols)
     }
     new GraftAvroMicroBatchStream(streamSchema, absentOkFields(phys),
@@ -936,7 +937,7 @@ final class GraftAvroScan(
       else StructType(parseLogical.fields.map(f =>
         if (synthetic.contains(f.name)) f
         else phys.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
-    val conf = new SerializableConfiguration(GraftSources.activeHadoopConf())
+    val conf = GraftSources.broadcastHadoopConf()
     // a pushed LIMIT stops each partition's decode early; when pushed
     // alongside OFFSET, Spark pushes limit+offset, so the wrapped stream
     // is exactly rows [offset, offset+limit) — the text lanes' contract
@@ -1043,13 +1044,13 @@ final class GraftAvroReaderFactory(
     partCols: Seq[String],
     countStar: Boolean,
     absentOk: Set[String],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     limit: Int = -1)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    if (countStar) new GraftAvroCountReader(p, conf.value)
-    else new GraftAvroPartitionReader(p, required, partCols, absentOk, conf.value,
+    if (countStar) new GraftAvroCountReader(p, conf.value.value)
+    else new GraftAvroPartitionReader(p, required, partCols, absentOk, conf.value.value,
       limit)
   }
 }
@@ -1200,7 +1201,7 @@ final class GraftAvroCountReader(
 final class GraftAvroWriteBuilder(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     queryId: String,
     blockBytes: Long = GraftSink.DefaultBlockBytes,
@@ -1249,7 +1250,7 @@ final class GraftAvroWriteBuilder(
 final class GraftAvroStreamingWrite(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     blockBytes: Long)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -1261,8 +1262,8 @@ final class GraftAvroStreamingWrite(
   // ALTER RENAME could silently flip later epochs' keys)
   private val physSchema: StructType = {
     val dir = new Path(path)
-    dir.getFileSystem(conf.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value, path, schema)
+    dir.getFileSystem(conf.value.value).mkdirs(dir)
+    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
   }
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
@@ -1276,13 +1277,13 @@ final class GraftAvroStreamingWrite(
 final class GraftAvroStreamingWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     blockBytes: Long)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new GraftAvroDataWriter(path, schema, conf.value, codec,
+    new GraftAvroDataWriter(path, schema, conf.value.value, codec,
       f"part-$epochId%05d", partitionId, taskId, blockBytes,
       includeTaskId = false)
 }
@@ -1290,7 +1291,7 @@ final class GraftAvroStreamingWriterFactory(
 final class GraftAvroBatchWrite(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     doTruncate: Boolean,
     queryId: String,
@@ -1319,16 +1320,16 @@ final class GraftAvroBatchWrite(
     // merged one) and widen = false: avro is a BINARY format — int and
     // long encode differently, so the text widening lattice cannot apply
     commitSchema = GraftSink.resolveCommitSchema(
-      conf.value, path, schema, doTruncate, mergeSchema = false, widen = false)
+      conf.value.value, path, schema, doTruncate, mergeSchema = false, widen = false)
     if (doTruncate) {
       val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value)
+      val fs = dir.getFileSystem(conf.value.value)
       if (fs.exists(dir))
         fs.listStatus(dir).foreach(s => fs.delete(s.getPath, true))
       else fs.mkdirs(dir)
     } else {
       val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value)
+      val fs = dir.getFileSystem(conf.value.value)
       if (!fs.exists(dir)) fs.mkdirs(dir)
     }
     // column mapping: serialize under PHYSICAL field names (see
@@ -1344,8 +1345,8 @@ final class GraftAvroBatchWrite(
   // manifest compaction folds every task's rendered stats into one
   // per-directory read, exactly like the text sinks.
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    GraftManifest.write(conf.value, messages)
-    GraftCommitLog.append(conf.value, path, messages, removes,
+    GraftManifest.write(conf.value.value, messages)
+    GraftCommitLog.append(conf.value.value, path, messages, removes,
       commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
       changeFiles, opTag)
   }
@@ -1355,13 +1356,13 @@ final class GraftAvroBatchWrite(
 final class GraftAvroWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     namePrefix: String,
     blockBytes: Long = GraftSink.DefaultBlockBytes)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftAvroDataWriter(path, schema, conf.value, codec, namePrefix,
+    new GraftAvroDataWriter(path, schema, conf.value.value, codec, namePrefix,
       partitionId, taskId, blockBytes)
 }
 

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** Micro-batch streaming over JSON-lines files: the engine's mapping of the
   * reference's async/BreakBatch partial-batch semantics onto Structured
@@ -179,7 +178,7 @@ final class GraftJsonMicroBatchStream(
   // the drain wait for the next run (the AvailableNow contract)
   private var availableNowCap: Long = -1L
 
-  private val conf = new SerializableConfiguration(GraftSources.activeHadoopConf())
+  private val conf = GraftSources.broadcastHadoopConf()
 
   override def initialOffset(): Offset = GraftStreamOffset(0L)
 
@@ -266,7 +265,7 @@ abstract class WholeFileMicroBatchStream(
     Option(options.get("maxfilespertrigger")).map(_.toInt).getOrElse(Int.MaxValue)
   private var availableNowCap: Long = -1L
 
-  protected val conf = new SerializableConfiguration(GraftSources.activeHadoopConf())
+  protected val conf = GraftSources.broadcastHadoopConf()
 
   override def initialOffset(): Offset = GraftStreamOffset(0L)
 

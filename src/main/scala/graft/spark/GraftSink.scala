@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
@@ -422,7 +423,7 @@ object GraftSink {
 final class GraftWriteBuilder(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String = "none",
     partCols: Seq[String] = Nil,
     queryId: String = "",
@@ -481,7 +482,7 @@ final class GraftWriteBuilder(
 final class GraftStreamingWrite(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String = "none",
     partCols: Seq[String] = Nil,
     check: GraftSink.CheckSpec = null,
@@ -495,8 +496,8 @@ final class GraftStreamingWrite(
   // ALTER RENAME could silently flip later epochs' keys)
   private val physSchema: StructType = {
     val dir = new Path(path)
-    dir.getFileSystem(conf.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value, path, schema)
+    dir.getFileSystem(conf.value.value).mkdirs(dir)
+    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
   }
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
@@ -511,7 +512,7 @@ final class GraftStreamingWrite(
 final class GraftStreamingWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String = "none",
     partCols: Seq[String] = Nil,
     check: GraftSink.CheckSpec = null,
@@ -527,7 +528,7 @@ final class GraftStreamingWriterFactory(
 final class GraftBatchWrite(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     truncate: Boolean,
     codec: String = "none",
     partCols: Seq[String] = Nil,
@@ -554,9 +555,9 @@ final class GraftBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     commitSchema =
-      GraftSink.resolveCommitSchema(conf.value, path, schema, truncate, mergeSchema)
+      GraftSink.resolveCommitSchema(conf.value.value, path, schema, truncate, mergeSchema)
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(conf.value.value)
     if (truncate && fs.exists(dir)) {
       // recursive: partitioned layouts nest their part files in k=v dirs
       fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
@@ -570,8 +571,8 @@ final class GraftBatchWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    GraftManifest.write(conf.value, messages)
-    GraftCommitLog.append(conf.value, path, messages, removes,
+    GraftManifest.write(conf.value.value, messages)
+    GraftCommitLog.append(conf.value.value, path, messages, removes,
       commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
       changeFiles, opTag)
   }
@@ -2226,7 +2227,7 @@ private[graft] object GraftCommitLog {
 final class GraftJsonWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String = "none",
     partCols: Seq[String] = Nil,
     namePrefix: String = "part",
@@ -2241,7 +2242,7 @@ final class GraftJsonWriterFactory(
 final class GraftJsonDataWriter(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     partitionId: Int,
     taskId: Long,
     namePrefix: String = "part",
@@ -2251,7 +2252,7 @@ final class GraftJsonDataWriter(
     blockBytes: Long = GraftSink.DefaultBlockBytes)
     extends DataWriter[InternalRow] {
 
-  private val fs = new Path(path).getFileSystem(conf.value)
+  private val fs = new Path(path).getFileSystem(conf.value.value)
   private val ext = codec match {
     case "gzip" => "jsonl.gz"
     case "zstd" => "jsonl.zst"
@@ -2302,7 +2303,7 @@ final class GraftJsonDataWriter(
       // (pruning disabled) rather than wrong-stats (wrong results)
       fs.delete(FileStats.sidecarFor(finalFile), false)
       fs.delete(finalFile, false)
-      GraftLogStore.forConf(conf.value).publish(fs, stageFile, finalFile, overwrite = false)
+      GraftLogStore.forConf(conf.value.value).publish(fs, stageFile, finalFile, overwrite = false)
       val rendered = FileStats.render(
         stats.snapshot(fs.getFileStatus(finalFile).getLen))
       try {
@@ -2498,7 +2499,7 @@ object GraftJsonDataWriter {
 final class GraftCsvWriteBuilder(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     header: Boolean,
     delim: String,
@@ -2545,9 +2546,9 @@ final class GraftCsvWriteBuilder(
         GraftSink.ResolvedSchema(schema, null)
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
         commitSchema = GraftSink.resolveCommitSchema(
-          conf.value, path, schema, doTruncate, mergeSchema)
+          conf.value.value, path, schema, doTruncate, mergeSchema)
         val dir = new Path(path)
-        val fs = dir.getFileSystem(conf.value)
+        val fs = dir.getFileSystem(conf.value.value)
         if (doTruncate && fs.exists(dir))
           fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
         fs.mkdirs(dir)
@@ -2557,8 +2558,8 @@ final class GraftCsvWriteBuilder(
           partCols, GraftSink.batchNamePrefix(queryId), check, blockBytes)
       }
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        GraftManifest.write(conf.value, messages)
-        GraftCommitLog.append(conf.value, path, messages, removes,
+        GraftManifest.write(conf.value.value, messages)
+        GraftCommitLog.append(conf.value.value, path, messages, removes,
           commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
           changeFiles, opTag)
       }
@@ -2589,7 +2590,7 @@ final class GraftCsvWriteBuilder(
 final class GraftCsvStreamingWrite(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     header: Boolean,
     delim: String,
@@ -2601,8 +2602,8 @@ final class GraftCsvStreamingWrite(
   // resolved ONCE at stream start — see GraftStreamingWrite's twin note
   private val physSchema: StructType = {
     val dir = new Path(path)
-    dir.getFileSystem(conf.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value, path, schema)
+    dir.getFileSystem(conf.value.value).mkdirs(dir)
+    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
   }
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
@@ -2616,7 +2617,7 @@ final class GraftCsvStreamingWrite(
 final class GraftCsvStreamingWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     header: Boolean,
     delim: String,
@@ -2635,7 +2636,7 @@ final class GraftCsvStreamingWriterFactory(
 final class GraftCsvWriterFactory(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     codec: String,
     header: Boolean,
     delim: String,
@@ -2652,7 +2653,7 @@ final class GraftCsvWriterFactory(
 final class GraftCsvDataWriter(
     path: String,
     schema: StructType,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     partitionId: Int,
     taskId: Long,
     codec: String,
@@ -2665,7 +2666,7 @@ final class GraftCsvDataWriter(
     blockBytes: Long = GraftSink.DefaultBlockBytes)
     extends DataWriter[InternalRow] {
 
-  private val fs = new Path(path).getFileSystem(conf.value)
+  private val fs = new Path(path).getFileSystem(conf.value.value)
   private val ext = codec match {
     case "gzip" => "csv.gz"
     case "zstd" => "csv.zst"
@@ -2720,7 +2721,7 @@ final class GraftCsvDataWriter(
       out.close()
       fs.delete(FileStats.sidecarFor(finalFile), false)
       fs.delete(finalFile, false)
-      GraftLogStore.forConf(conf.value).publish(fs, stageFile, finalFile, overwrite = false)
+      GraftLogStore.forConf(conf.value.value).publish(fs, stageFile, finalFile, overwrite = false)
       val rendered = FileStats.render(
         stats.snapshot(fs.getFileStatus(finalFile).getLen))
       try {

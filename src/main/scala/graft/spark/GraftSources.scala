@@ -6,6 +6,8 @@ import graft.core.json.JsonParser
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -43,8 +45,46 @@ import scala.jdk.CollectionConverters._
 object GraftSources {
   final val SkippedBytesMetricName = "graftSkippedBytes"
 
+  /** A reader's task-level report of [[SkippedBytesMetricName]]. */
+  def skippedBytesMetric(bytes: Long): Array[CustomTaskMetric] =
+    Array(new CustomTaskMetric {
+      override def name(): String = SkippedBytesMetricName
+      override def value(): Long = bytes
+    })
+
   def activeHadoopConf(): Configuration =
     SparkSession.active.sessionState.newHadoopConf()
+
+  /** The session's Hadoop conf as graft tasks read it: one broadcast per
+    * distinct conf per SparkContext, shared by every reader and writer
+    * factory (the `broadcastedConf` pattern of Spark's own file scans), so
+    * no task deserializes the ~113 KB conf itself. The last broadcast is
+    * reused while both the context and the conf's full key/value content
+    * are unchanged; any edit (`spark.conf.set`,
+    * `sparkContext.hadoopConfiguration`) ships a fresh one. The value is
+    * shared across tasks: read it, never mutate.
+    */
+  def broadcastHadoopConf(spark: SparkSession = SparkSession.active)
+      : Broadcast[SerializableConfiguration] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val content = new java.util.HashMap[String, String]()
+    conf.iterator().asScala.foreach(e => content.put(e.getKey, e.getValue))
+    val sc = spark.sparkContext
+    shipLock.synchronized {
+      val last = lastShipped
+      if (last != null && (last.sc eq sc) && !sc.isStopped && last.content == content)
+        last.conf
+      else {
+        val b = sc.broadcast(new SerializableConfiguration(conf))
+        lastShipped = ShippedConf(sc, content, b)
+        b
+      }
+    }
+  }
+  private final case class ShippedConf(sc: SparkContext,
+      content: java.util.Map[String, String], conf: Broadcast[SerializableConfiguration])
+  private val shipLock = new Object
+  private var lastShipped: ShippedConf = null
 
   /** Compressed inputs: read through a decompressor in DECOMPRESSED
     * coordinates, never split (a byte range inside a compressed member
@@ -1105,7 +1145,7 @@ final class GraftJsonTable(
         .orElse(Option(properties.get("location"))) // catalog DDL tables
         .orNull,
       info.schema(),
-      new SerializableConfiguration(GraftSources.activeHadoopConf()),
+      GraftSources.broadcastHadoopConf(),
       codec = Option(info.options.get("compression"))
         .orElse(Option(properties.get("compression"))).getOrElse("none")
         .toLowerCase(java.util.Locale.ROOT),
@@ -1226,7 +1266,7 @@ final class GraftCsvTable(
         .orElse(Option(properties.get("location"))) // catalog DDL tables
         .orNull,
       info.schema(),
-      new SerializableConfiguration(GraftSources.activeHadoopConf()),
+      GraftSources.broadcastHadoopConf(),
       codec = opt("compression", "none").toLowerCase(java.util.Locale.ROOT),
       header = opt("header", "true").toBoolean,
       delim = opt("delimiter", opt("sep", ",")), // both names accepted
@@ -1645,7 +1685,7 @@ final class GraftScan(
           s"'${GraftSources.ChangeTypeCol} STRING' column (or omit the " +
           "schema to take the table's recorded one)")
       val partSpec = GraftSources.partSpecFor(streamSchema, streamPartCols)
-      val conf = new SerializableConfiguration(GraftSources.activeHadoopConf())
+      val conf = GraftSources.broadcastHadoopConf()
       val factory: PartitionReaderFactory =
         if (isJson) new GraftJsonReaderFactory(streamSchema, streamFilters, conf,
           GraftSources.jsonMode(options.asCaseSensitiveMap()), partSpec = partSpec)
@@ -1993,7 +2033,7 @@ final class GraftScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(GraftSources.activeHadoopConf())
+    val conf = GraftSources.broadcastHadoopConf()
     // with a pushed aggregate battery the row readers parse only the
     // referenced columns; the aggregating wrapper folds their rows
     val rowSchema = aggSpec.map(_.parseSchema(fullSchema)).getOrElse(schema)
@@ -2117,7 +2157,7 @@ object GraftScan {
 final class GraftJsonReaderFactory(
     schema: StructType,
     filters: Array[Filter],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     mode: JsonParser.Mode,
     dropMalformed: Boolean = false,
     limit: Int = -1,
@@ -2135,7 +2175,7 @@ final class GraftJsonReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftJsonPartitionReader(
-      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value, mode,
+      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, mode,
       dropMalformed, limit, partSpec, corruptCol, saturate, rowIdxSlot,
       fastSatTail = fastSatTail, tz = tz)
 
@@ -2153,14 +2193,14 @@ final class GraftJsonReaderFactory(
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftJsonColumnarReader(
-      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value, mode,
+      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, mode,
       dropMalformed, limit, partSpec, saturate, fastSatTail = fastSatTail, tz = tz)
 }
 
 final class GraftCsvReaderFactory(
     schema: StructType,
     filters: Array[Filter],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     config: CsvParser.Config,
     limit: Int = -1,
     partSpec: Array[(Int, Int, org.apache.spark.sql.types.DataType)] = Array.empty,
@@ -2170,7 +2210,7 @@ final class GraftCsvReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftCsvPartitionReader(
-      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value, config,
+      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, config,
       limit, partSpec, fullDataCols, rowIdxSlot)
 
   // byte-range splits vectorize too (CsvRangeFeeder + providedHeader);
@@ -2181,7 +2221,7 @@ final class GraftCsvReaderFactory(
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftCsvColumnarReader(
-      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value, config,
+      partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, config,
       limit, partSpec, fullDataCols)
 }
 
@@ -2346,7 +2386,7 @@ object GraftTopNReaderFactory {
   * whole file per task. All values are byte-skipped (SkipAllCountPlate).
   */
 final class GraftCountReaderFactory(
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     jsonMode: Option[JsonParser.Mode],
     csvConfig: CsvParser.Config,
     dropMalformed: Boolean,
@@ -2354,7 +2394,7 @@ final class GraftCountReaderFactory(
     useStats: Boolean = true) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftCountPartitionReader(
-      partition.asInstanceOf[GraftInputPartition], conf.value, jsonMode, csvConfig,
+      partition.asInstanceOf[GraftInputPartition], conf.value.value, jsonMode, csvConfig,
       dropMalformed, countMalformed, useStats)
 }
 
@@ -2796,6 +2836,9 @@ final class GraftJsonColumnarReader(
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
   override def close(): Unit = feeder.close()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(if (plate == null) 0L else plate.totalSkippedBytes)
 }
 
 /** Vectorized CSV reader: one byte range per task (whole file when the
@@ -2848,6 +2891,9 @@ final class GraftCsvColumnarReader(
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
   override def close(): Unit = feeder.close()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(plate.totalSkippedBytes)
 }
 
 /** Streams one byte range of a JSON-lines file through the core parser.
@@ -3008,13 +3054,10 @@ final class GraftJsonPartitionReader(
   override def close(): Unit = feeder.close()
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(new CustomTaskMetric {
-      override def name(): String = GraftSources.SkippedBytesMetricName
-      override def value(): Long =
-        if (rowPlate != null) rowPlate.totalSkippedBytes
-        else if (pathPlate != null) pathPlate.totalSkippedBytes
-        else 0L
-    })
+    GraftSources.skippedBytesMetric(
+      if (rowPlate != null) rowPlate.totalSkippedBytes
+      else if (pathPlate != null) pathPlate.totalSkippedBytes
+      else 0L)
 }
 
 /** Feeds one byte range of a splittable CSV file into a parser, using the
@@ -3169,8 +3212,5 @@ final class GraftCsvPartitionReader(
   override def close(): Unit = feeder.close()
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(new CustomTaskMetric {
-      override def name(): String = GraftSources.SkippedBytesMetricName
-      override def value(): Long = plate.totalSkippedBytes
-    })
+    GraftSources.skippedBytesMetric(plate.totalSkippedBytes)
 }

@@ -36,4 +36,17 @@ class BenchLineSpec extends AnyFunSuite {
     // and it must stay ONE line (the driver parses the last line only)
     assert(!line.contains("\n"))
   }
+
+  test("a lane count other than eight fails with a message that names the lanes") {
+    val ex = intercept[IllegalArgumentException] {
+      Bench.composeHeadline(
+        total = 1.0, qs = "{}", failed = 0,
+        skipSpeedup = 1.0, csvMbps = 1.0, blkRatio = 1.0,
+        dvOverhead = 1.0, dvFilteredOverhead = 1.0, avRatio = 1.0,
+        laneRatios = Seq.fill(7)(1.0),
+        sf1LaneJson = "", slotScore = 1.0, sfDir = "sf")
+    }
+    assert(ex.getMessage.contains("expected 8 columnar lane ratios"))
+    assert(ex.getMessage.contains("got 7"))
+  }
 }

@@ -1,0 +1,75 @@
+package graft.spark
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+/** graftSkippedBytes on the readers scans actually take: the vectorized
+  * JSON reader (ColumnarPlate) and the pushed-aggregate wrapper, which
+  * forwards its inner parse's accounting. Each reports
+  * 0 < skipped <= file bytes on the scan node.
+  */
+class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
+
+  private var spark: SparkSession = _
+  private val dir = Files.createTempDirectory("graft-skip-metrics")
+  private var path: String = _
+  private var fileBytes: Long = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[2]")
+      .appName("columnar-skip-metrics-spec")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val p = dir.resolve("wide.json")
+    Files.write(p, (1 to 500).map { i =>
+      s"""{"id": $i, "v": ${i % 17}, "note": "${"x" * (i % 40)}", """ +
+        s""""tags": ["a$i", "b$i"], "w": {"p": $i, "q": "r$i"}}"""
+    }.mkString("\n").getBytes(UTF_8))
+    path = p.toString
+    fileBytes = Files.size(p)
+  }
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  private def scan(df: DataFrame): BatchScanExec = {
+    val scans = collect(df.queryExecution.executedPlan) { case s: BatchScanExec => s }
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    scans.head
+  }
+
+  private def skipped(df: DataFrame): Long =
+    scan(df).metrics(GraftSources.SkippedBytesMetricName).value
+
+  private def table: DataFrame = spark.read.format("graft-json")
+    .schema("id LONG, v LONG, note STRING, tags ARRAY<STRING>, w STRUCT<p: LONG, q: STRING>")
+    .load(path)
+
+  test("a vectorized 1-of-N projection reports the bytes its parse skipped") {
+    val df = table.select("v")
+    assert(df.collect().length == 500)
+    assert(scan(df).supportsColumnar, "the projection must take the vectorized reader")
+    val n = skipped(df)
+    assert(n > 0 && n <= fileBytes, s"graftSkippedBytes = $n of $fileBytes file bytes")
+  }
+
+  test("a pushed count/sum scan forwards its inner parse's skipped bytes") {
+    val df = table.agg(count(lit(1)), sum("v"))
+    assert(scan(df).scan.description().contains("pushedAgg"), scan(df).scan.description())
+    assert(df.collect().head.getLong(1) == (1 to 500).map(_ % 17).sum)
+    val n = skipped(df)
+    assert(n > 0 && n <= fileBytes, s"graftSkippedBytes = $n of $fileBytes file bytes")
+  }
+}

@@ -36,6 +36,16 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  private def unionFind(ids: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
   test("chains resolve transitively to the component min") {
     // 1-2-3-4 chained pairwise; 10-11; 20 isolated
     val got = run(Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L),
@@ -121,14 +131,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val edges = for {
         a <- ids; b <- ids if a < b && rnd.nextDouble() < density
       } yield (a, b)
-      // union-find oracle
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = ids.map(i => i -> find(i)).toMap
+      val want = unionFind(ids, edges)
       val got = run(ids, edges)
       assert(got == want, s"trial $trial (n=$n, ${edges.size} edges)")
     }
@@ -223,6 +226,35 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(_.getName.startsWith("rdd-"))
       assert(leaked.length <= 1,
         s"leaked checkpoint dirs: ${leaked.map(_.getName).mkString(", ")}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
+
+  test("reliable-checkpoint path: same components as the oracle, same round-budget guard") {
+    // Dataset.checkpoint runs the classified plan twice (materialize, then
+    // write the files), so the fused convergence count can read about
+    // twice the symmetric difference here. Only "changed at all?" may
+    // steer the loop: results and the no-fixpoint guard must match the
+    // localCheckpoint path exactly.
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-reliable").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    try {
+      val rnd = new scala.util.Random(0xCC0DL)
+      for (trial <- 0 until 3) {
+        val n = 20 + rnd.nextInt(20)
+        val ids = (1L to n.toLong).toSeq
+        val edges = for {
+          a <- ids; b <- ids if a < b && rnd.nextDouble() < 1.5 / n
+        } yield (a, b)
+        assert(run(ids, edges) == unionFind(ids, edges), s"trial $trial (n=$n)")
+      }
+      val path = (1L until 12L).map(i => (i, i + 1))
+      assert(run(1L to 12L, path).values.forall(_ == 1L))
+      val ex = intercept[IllegalArgumentException] {
+        run(1L to 12L, path, maxRounds = 2)
+      }
+      assert(ex.getMessage.contains("no fixpoint"))
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(dir)
     }
