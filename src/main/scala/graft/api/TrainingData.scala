@@ -902,17 +902,19 @@ object TrainingData {
   }
 
   /** Merge-on-read DELETE — the Delta deletion-vector shape: rows matching
-    * `predicate` are deleted WITHOUT rewriting any data file. Phase 1
-    * scans the latest snapshot with the predicate pushed down (stats /
-    * blooms / partition pruning drop definitely-clean files) and
-    * `withRowIndex` provenance on, so every match is an exact
-    * (file, ordinal) address; phase 2 writes one vector artifact per
-    * affected file EXECUTOR-SIDE (repartitioned by file, ordinals streamed
-    * in order, merged with the file's prior vector — each artifact is the
-    * file's full cumulative deleted set) and commits one atomic v4 entry
-    * attaching them. OCC: a concurrent rewrite retiring a target, or a
-    * concurrent DELETE replacing a vector this one merged from, aborts
-    * the commit loudly (orphan artifacts are hidden and harmless).
+    * `predicate` are deleted WITHOUT rewriting any data file, in ONE
+    * distributed pass: the latest snapshot is scanned with the predicate
+    * pushed down (stats / blooms / partition pruning drop definitely-clean
+    * files) and `withRowIndex` provenance on, so every match is an exact
+    * (file, ordinal) address; the matches are repartitioned by file and
+    * sorted, and each task streams its files' ordinals into one vector
+    * artifact per file, merged with the file's prior vector (each
+    * artifact is the file's full cumulative deleted set — see
+    * [[writeVectors]]). The driver gets one (file, artifact) pair per
+    * affected file and commits one atomic v4 entry attaching them. OCC: a
+    * concurrent rewrite retiring a target, or a concurrent DELETE
+    * replacing a vector this one merged from, aborts the commit loudly
+    * (orphan artifacts are hidden and harmless).
     *
     * Reads apply vectors on every log-mediated path (versionAsOf /
     * snapshot / the COW maintenance reads) AND on raw-listing reads of
@@ -924,11 +926,15 @@ object TrainingData {
     *
     * `dvMaxRatio` is the auto-materialize dial (Delta's shape): a file
     * whose cumulative mask density (prior vector ∪ this delete, over the
-    * sidecar row count) would exceed it ESCALATES to a COW rewrite of its
+    * file's row count) would exceed it ESCALATES to a COW rewrite of its
     * post-delete survivors — committed in the SAME atomic entry as the
-    * light files' vectors. 1.0 (default) never escalates; files without
-    * a sidecar row count never escalate (the dial must not guess).
-    * `retainHistory` applies to escalated originals, as in [[deleteWhere]].
+    * light files' vectors. The task that owns the file decides, once its
+    * merged vector is written: below 1.0 it reads the row count (the
+    * stats sidecar, or the avro block counts) and withdraws the vector of
+    * a file that escalates, so no artifact is published for it. 1.0
+    * (default) never escalates and reads no row count; files without one
+    * never escalate (the dial must not guess). `retainHistory` applies to
+    * escalated originals, as in [[deleteWhere]].
     *
     * Returns the root-relative files affected — vectored or escalated
     * (empty = no row matched, no version committed).
@@ -945,9 +951,6 @@ object TrainingData {
     require(dvMaxRatio > 0.0 && dvMaxRatio <= 1.0,
       s"dvMaxRatio must be in (0, 1], got $dvMaxRatio")
     val tbl = resolveCow(spark, dir, schema)
-    val log = graft.spark.GraftCommitLog
-    val state = log.liveStateAsOf(tbl.fs, tbl.root, tbl.latest)
-    val fileCol = graft.spark.GraftSources.FilePathCol
     val idxCol = graft.spark.GraftSources.RowIndexCol
     val scanSchema = org.apache.spark.sql.types.StructType(
       tbl.phase1Schema.fields :+ org.apache.spark.sql.types.StructField(
@@ -957,133 +960,90 @@ object TrainingData {
       .option("withfilepath", "true").option("withrowindex", "true")
       .option("versionasof", tbl.latest.toString).load(dir)
       .filter(expr(predicate))
-      .select(col(fileCol).as("_f"), col(idxCol).as("_i")).as[(String, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-file match counts (driver traffic: one row per AFFECTED file,
-      // the same size class as the file listing)
-      val counts: Map[String, Long] = matches.groupBy($"_f").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) return Nil
-      // AUTO-MATERIALIZE policy (the Delta dial): a file whose CUMULATIVE
-      // mask density (prior vector ∪ this delete, over the file's sidecar
-      // row count) would exceed dvMaxRatio escalates to a COW rewrite —
-      // past some density, dragging a near-dead file through every scan
-      // costs more than rewriting its few survivors once. Density needs
-      // the sidecar row count; files without one never escalate (can't
-      // assess — the dial must never guess).
-      val escalate: Set[String] =
-        if (dvMaxRatio >= 1.0) Set.empty
-        else {
-          // row counts: stats sidecar for the text formats (a few-byte
-          // driver read per file); avro files carry none — their
-          // per-block object counts are walked DISTRIBUTED, one task per
-          // affected file (nextBlock reads the block bytes, decode-free
-          // but not IO-free, so a driver-side loop would stream every
-          // affected byte through one machine)
-          val avroRows: Map[String, Long] =
-            if (format != "graft-avro" || counts.isEmpty) Map.empty
-            else {
-              val conf = graft.spark.GraftSources.broadcastHadoopConf(spark)
-              val rootStr = dir
-              spark.sparkContext
-                .parallelize(counts.keySet.toSeq.sorted,
-                  math.min(counts.size, 32))
-                .map { f =>
-                  val p = new org.apache.hadoop.fs.Path(
-                    new org.apache.hadoop.fs.Path(rootStr), f)
-                  val pfs = p.getFileSystem(conf.value.value)
-                  f -> (try Some(graft.spark.GraftAvro.countRecords(
-                      conf.value.value, p, 0L, pfs.getFileStatus(p).getLen))
-                    catch { case _: Exception => None })
-                }.collect().collect { case (f, Some(n)) => f -> n }.toMap
-            }
-          counts.keySet.filter { f =>
-            val p = new org.apache.hadoop.fs.Path(tbl.root, f)
-            val rows =
-              if (format == "graft-avro") avroRows.get(f)
-              else try graft.spark.FileStats.loadFor(
-                  tbl.fs, p, tbl.fs.getFileStatus(p).getLen).map(_.rows)
-                catch { case _: Exception => None }
-            rows.exists { r =>
-              val prior = state.getOrElse(f, null) match {
-                case null => 0L
-                case dvn => graft.spark.DeletionVectors.readMask(
-                  spark.sparkContext.hadoopConfiguration,
-                  graft.spark.DeletionVectors.artifactPath(tbl.root, dvn), f)
-                  .cardinality
-              }
-              r > 0L && (prior + counts(f)).toDouble / r > dvMaxRatio
-            }
-          }
-        }
-      val vectored = counts.keySet -- escalate
-      val pairs: Array[(String, String)] =
-        if (vectored.isEmpty) Array.empty
-        else {
-          val vecB = spark.sparkContext.broadcast(vectored)
-          val inVec = udf((f: String) => vecB.value.contains(f))
-          writeVectors(spark, dir, matches.filter(inVec($"_f")), state)
-        }
-      val dvBase: Map[String, String] =
-        pairs.map { case (f, _) => f -> state.getOrElse(f, null) }.toMap
-      if (escalate.isEmpty) {
-        log.appendEntry(spark.sparkContext.hadoopConfiguration, dir,
-          adds = Nil, removes = Nil,
-          dvs = pairs.toSeq.map { case (f, n) => (n, f) }, dvBase = dvBase)
-      } else {
-        // ONE atomic entry: the escalated files' post-delete survivors
-        // republish with the originals retired, AND the light files'
-        // vectors attach — a reader never sees the delete half-applied
-        val escalated = escalate.toSeq.sorted
-        val source = spark.read.format(format).schema(tbl.fullSchema)
-          .option("restrictfiles",
-            graft.spark.GraftSources.joinFileList(escalated, "restrictfiles"))
-          // pinned: an escalated file's PRIOR mask must stay applied
-          .option("versionasof", tbl.latest.toString).load(dir)
-        // CHANGE DATA FEED (round 16): the ESCALATED files' deletes are a
-        // COW retirement the feed cannot derive — record them as delete
-        // artifacts in the same atomic entry; the light files' deltas stay
-        // expressed by their `d` lines (readers compose both)
-        val cdcNames: Seq[(String, String)] =
-          if (!cdfOn(spark, changeDataFeed)) Nil
-          else writeChangeData(spark, tbl, format,
-            Seq("delete" -> source.filter(coalesce(expr(predicate), lit(false)))))
-        var w = source.filter(!coalesce(expr(predicate), lit(false)))
-          .write.format(format).mode("append")
-          .option("commitremovesversion", tbl.latest.toString)
-          .option("commitremoves",
-            graft.spark.GraftSources.joinFileList(escalated, "commitremoves"))
-        if (cdcNames.nonEmpty)
-          w = w.option("commitchangefiles",
-            cdcNames.map { case (ct, n) => s"$ct>$n" }.mkString(","))
-        if (pairs.nonEmpty)
-          w = w.option("commitdvs", graft.spark.GraftSources.joinDvList(
-              pairs.toSeq.map { case (f, n) => (n, f) }, "commitdvs"))
-            .option("commitdvsbase",
-              graft.spark.GraftSources.joinDvBase(dvBase, "commitdvsbase"))
-        (if (tbl.partCols.nonEmpty)
-           w.option("partitionby", tbl.partCols.mkString(","))
-         else w).save(dir)
-        if (!retainHistory) escalated.foreach { rel =>
-          val p = new org.apache.hadoop.fs.Path(tbl.root, rel)
-          tbl.fs.delete(graft.spark.FileStats.sidecarFor(p), false)
-          tbl.fs.delete(p, false)
-        }
+      .select(col(graft.spark.GraftSources.FilePathCol).as("_f"), col(idxCol).as("_i"))
+      .as[(String, Long)]
+    // (file, artifact) per affected file; a null artifact = escalated
+    val written = writeVectors(spark, dir, matches, tbl.state, dvMaxRatio,
+      rowCountOf(format))
+    if (written.isEmpty) return Nil
+    val pairs = written.filter(_._2 != null).toSeq.map { case (f, n) => (n, f) }
+    val dvBase: Map[String, String] =
+      pairs.map { case (_, f) => f -> tbl.state.getOrElse(f, null) }.toMap
+    val escalated = written.collect { case (f, null) => f }.toSeq.sorted
+    if (escalated.isEmpty) {
+      graft.spark.GraftCommitLog.appendEntry(spark.sparkContext.hadoopConfiguration,
+        dir, adds = Nil, removes = Nil, dvs = pairs, dvBase = dvBase)
+    } else {
+      // ONE atomic entry: the escalated files' post-delete survivors
+      // republish with the originals retired, AND the light files'
+      // vectors attach — a reader never sees the delete half-applied
+      val source = spark.read.format(format).schema(tbl.fullSchema)
+        .option("restrictfiles",
+          graft.spark.GraftSources.joinFileList(escalated, "restrictfiles"))
+        // pinned: an escalated file's PRIOR mask must stay applied
+        .option("versionasof", tbl.latest.toString).load(dir)
+      // CHANGE DATA FEED (round 16): the ESCALATED files' deletes are a
+      // COW retirement the feed cannot derive — record them as delete
+      // artifacts in the same atomic entry; the light files' deltas stay
+      // expressed by their `d` lines (readers compose both)
+      val cdcNames: Seq[(String, String)] =
+        if (!cdfOn(spark, changeDataFeed)) Nil
+        else writeChangeData(spark, tbl, format,
+          Seq("delete" -> source.filter(coalesce(expr(predicate), lit(false)))))
+      var w = source.filter(!coalesce(expr(predicate), lit(false)))
+        .write.format(format).mode("append")
+        .option("commitremovesversion", tbl.latest.toString)
+        .option("commitremoves",
+          graft.spark.GraftSources.joinFileList(escalated, "commitremoves"))
+      if (cdcNames.nonEmpty)
+        w = w.option("commitchangefiles",
+          cdcNames.map { case (ct, n) => s"$ct>$n" }.mkString(","))
+      if (pairs.nonEmpty)
+        w = w.option("commitdvs", graft.spark.GraftSources.joinDvList(pairs, "commitdvs"))
+          .option("commitdvsbase",
+            graft.spark.GraftSources.joinDvBase(dvBase, "commitdvsbase"))
+      (if (tbl.partCols.nonEmpty)
+         w.option("partitionby", tbl.partCols.mkString(","))
+       else w).save(dir)
+      if (!retainHistory) escalated.foreach { rel =>
+        val p = new org.apache.hadoop.fs.Path(tbl.root, rel)
+        tbl.fs.delete(graft.spark.FileStats.sidecarFor(p), false)
+        tbl.fs.delete(p, false)
       }
-      (vectored ++ escalate).toSeq.sorted
-    } finally matches.unpersist()
+    }
+    written.map(_._1).toSeq.sorted
   }
+
+  /** A data file's row count in the task that owns it, None when the
+    * file has none to give: avro files sum their block counts, the text
+    * formats read their stats sidecar.
+    */
+  private type RowCount = (org.apache.hadoop.fs.FileSystem,
+    org.apache.hadoop.conf.Configuration, org.apache.hadoop.fs.Path) => Option[Long]
+
+  private def rowCountOf(format: String): RowCount =
+    if (format == "graft-avro") { (fs, hc, p) =>
+      Some(graft.spark.GraftAvro.countRecords(hc, p, 0L, fs.getFileStatus(p).getLen))
+    } else { (fs, _, p) =>
+      graft.spark.FileStats.loadFor(fs, p, fs.getFileStatus(p).getLen).map(_.rows)
+    }
 
   /** One artifact per affected file, written where the matches are: each
     * task owns whole files (repartition by file) and streams ordinals in
     * ascending order (sortWithinPartitions) straight to its artifact,
     * merging the file's prior vector — driver traffic is one
     * (file, artifact-name) pair per affected file.
+    *
+    * Escalation (`maxRatio` < 1, [[deleteWhereDV]]'s dial) is decided in
+    * the same task, once the merged cardinality is known: `rowCount`
+    * gives the file's row count, and a file whose merged density exceeds
+    * `maxRatio` has its fresh artifact deleted and comes back with a null
+    * name. At 1.0 no row count is read.
     */
   private def writeVectors(spark: org.apache.spark.sql.SparkSession,
       dir: String, matches: org.apache.spark.sql.Dataset[(String, Long)],
-      state: Map[String, String]): Array[(String, String)] = {
+      state: Map[String, String], maxRatio: Double,
+      rowCount: RowCount): Array[(String, String)] = {
     import spark.implicits._
     val conf = graft.spark.GraftSources.broadcastHadoopConf(spark)
     val rootStr = dir
@@ -1091,8 +1051,12 @@ object TrainingData {
     matches
       .repartition(col("_f")).sortWithinPartitions(col("_f"), col("_i"))
       .mapPartitions { it =>
+        val hc = conf.value.value
         val root = new org.apache.hadoop.fs.Path(rootStr)
-        val fs = root.getFileSystem(conf.value.value)
+        val fs = root.getFileSystem(hc)
+        def rows(f: String): Option[Long] =
+          try rowCount(fs, hc, new org.apache.hadoop.fs.Path(root, f))
+          catch { case _: Exception => None }
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
         val bit = it.buffered
         while (bit.hasNext) {
@@ -1101,12 +1065,15 @@ object TrainingData {
             def hasNext: Boolean = bit.hasNext && bit.head._1 == f
             def next(): Long = bit.next()._2
           }
-          val name = graft.spark.DeletionVectors.write(fs, root, f, ords,
-            Option(stateB.value.getOrElse(f, null)),
-            formatVersion = conf.value.value.getInt(
-              graft.spark.DeletionVectors.FormatKey, 2),
-            conf = conf.value.value)
-          out += ((f, name))
+          val (name, merged) = graft.spark.DeletionVectors.write(fs, root,
+            f, ords, Option(stateB.value.getOrElse(f, null)),
+            formatVersion = hc.getInt(graft.spark.DeletionVectors.FormatKey, 2),
+            conf = hc)
+          val escalate = maxRatio < 1.0 &&
+            rows(f).exists(r => r > 0L && merged.toDouble / r > maxRatio)
+          if (escalate)
+            fs.delete(graft.spark.DeletionVectors.artifactPath(root, name), false)
+          out += ((f, if (escalate) null else name))
         }
         out.iterator
       }.collect()
@@ -1133,7 +1100,6 @@ object TrainingData {
       s"updateWhereDV supports graft-json/graft-csv/graft-avro, not $format")
     require(set.nonEmpty, "updateWhereDV needs at least one SET column")
     val tbl = resolveCow(spark, dir, schema)
-    val state = graft.spark.GraftCommitLog.liveStateAsOf(tbl.fs, tbl.root, tbl.latest)
     val fileCol = graft.spark.GraftSources.FilePathCol
     val idxCol = graft.spark.GraftSources.RowIndexCol
     val scanSchema = org.apache.spark.sql.types.StructType(
@@ -1153,10 +1119,10 @@ object TrainingData {
     try {
       val pairs = writeVectors(spark, dir,
         matched.select(col(fileCol).as("_f"), col(idxCol).as("_i"))
-          .as[(String, Long)], state)
+          .as[(String, Long)], tbl.state, maxRatio = 1.0, rowCountOf(format))
       if (pairs.isEmpty) return Nil
       val dvBase: Map[String, String] =
-        pairs.map { case (f, _) => f -> state.getOrElse(f, null) }.toMap
+        pairs.map { case (f, _) => f -> tbl.state.getOrElse(f, null) }.toMap
       // one select, so every SET expression sees the pre-update row
       val updated = matched.select(tbl.fullSchema.fieldNames.toSeq.map { c =>
         set.get(c).map(e => expr(e).cast(tbl.fullSchema(c).dataType).as(c))
@@ -1186,8 +1152,7 @@ object TrainingData {
       schema: String, format: String = "graft-json",
       retainHistory: Boolean = false): Seq[String] = {
     val tbl = resolveCow(spark, dir, schema)
-    val state = graft.spark.GraftCommitLog.liveStateAsOf(tbl.fs, tbl.root, tbl.latest)
-    val candidates = state.collect { case (f, dv) if dv != null => f }.toSeq.sorted
+    val candidates = tbl.state.collect { case (f, dv) if dv != null => f }.toSeq.sorted
     // `materialize` is a NO-LOGICAL-CHANGE rewrite for the feed: the
     // masked rows' deletes were already emitted by the DV commits that
     // masked them — this pass only folds the masks into bytes
@@ -1196,7 +1161,7 @@ object TrainingData {
         opTag = "materialize")(identity)
     if (!retainHistory) candidates.foreach { f =>
       tbl.fs.delete(
-        graft.spark.DeletionVectors.artifactPath(tbl.root, state(f)), false)
+        graft.spark.DeletionVectors.artifactPath(tbl.root, tbl.state(f)), false)
     }
     rewritten
   }
@@ -1683,13 +1648,17 @@ object TrainingData {
     restoreTable(spark, dir, target)
   }
 
-  /** Resolved COW-rewrite context: latest committed snapshot, layout
-    * partition columns, and the scan schemas both phases read with.
+  /** Resolved maintenance context: the latest committed snapshot (its
+    * version and live state — root-relative path -> deletion-vector
+    * artifact, null = no vector), its partition columns, and the scan
+    * schemas both COW phases read with. Resolved once per op; nothing
+    * outlives the op.
     */
   private final case class CowTable(
       root: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem,
       latest: Long,
+      state: Map[String, String],
       partCols: Seq[String],
       fullSchema: org.apache.spark.sql.types.StructType,
       phase1Schema: org.apache.spark.sql.types.StructType)
@@ -1699,41 +1668,48 @@ object TrainingData {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logVersions = graft.spark.GraftCommitLog.versions(fs, root)
-    require(logVersions.nonEmpty,
+    val log = new graft.spark.GraftCommitLog.LogListing(fs, root)
+    require(log.versions.nonEmpty,
       s"COW maintenance needs a graft commit log under $dir " +
         "(only graft batch sinks write .graft-log); for logless directories " +
         "rewrite to a new root instead")
-    val fileCol = graft.spark.GraftSources.FilePathCol
+    val latest = log.versions.max
+    val state = graft.spark.GraftCommitLog.liveStateAsOf(log, latest)
+    // the PARTITION LAYOUT of the snapshot the op works on, read off the
+    // state's root-relative paths: every scan of the op is pinned to that
+    // snapshot, so only its files can contribute partition columns — a
+    // raw walk of the tree would list every directory (retired originals
+    // and racers' not-yet-committed files included) to learn the same
+    // thing. An EMPTY snapshot carries no paths (a delete of every row
+    // commits one, and upsert's insert half resolves right after it), so
+    // only then the layout comes from a raw walk: its emptied k=v
+    // directories remain, and the walk of an empty table is cheap.
+    val layout =
+      if (state.nonEmpty) graft.spark.GraftSources.snapshotLayout(state.keys)
+      else graft.spark.GraftSources.resolvePartitioned(
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of("path", dir, "rawlisting", "true")))
     // `schema` is the DATA schema; hive-style partition columns (typed
     // from the layout) and the synthetic provenance column ride on top —
     // a user-specified schema must name every column the scan serves
-    // rawlisting: only the PARTITION LAYOUT is wanted here (no row reads,
-    // no state fold) — the raw walk keeps working even when the log holds
-    // a racer's not-yet-landed file the log-first lane would check
-    val listing = graft.spark.GraftSources.resolvePartitioned(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("path", dir, "rawlisting", "true")))
     val dataSchema = org.apache.spark.sql.types.StructType.fromDDL(schema)
-    requireCoversRecorded(fs, root, logVersions.max, dataSchema,
-      listing.partCols, dir)
+    val recorded = graft.spark.GraftCommitLog.schemaAsOf(log, latest)
+    requireCoversRecorded(recorded, dataSchema, layout.partCols, dir)
     // partition-column types: the RECORDED table schema is authoritative
     // (round 20, found by the lag-listing soak) — layout inference reads
-    // directory VALUES, and an eventually-consistent listing that shows a
-    // partition directory before its files degrades the inferred type to
-    // STRING, which the rewrite would then try to commit as a type change
-    // (loud refusal, but a livelock under lag). Inference remains the
-    // fallback for untracked tables.
-    val recorded = graft.spark.GraftCommitLog.schemaAsOf(fs, root, logVersions.max)
+    // directory VALUES, and a value set that happens to look numeric (or
+    // not) would otherwise decide the type the rewrite commits, which a
+    // type change refuses loudly. Inference remains the fallback for
+    // untracked tables.
     val fullSchema = org.apache.spark.sql.types.StructType(dataSchema.fields ++
-      graft.spark.GraftSources.partitionSchema(listing)
+      graft.spark.GraftSources.partitionSchema(layout)
         .filterNot(f => dataSchema.fieldNames.contains(f.name))
         .map(f => recorded.flatMap(_.fields.find(_.name == f.name))
           .map(r => f.copy(dataType = r.dataType)).getOrElse(f)))
     val phase1Schema = org.apache.spark.sql.types.StructType(fullSchema.fields :+
-      org.apache.spark.sql.types.StructField(fileCol,
+      org.apache.spark.sql.types.StructField(graft.spark.GraftSources.FilePathCol,
         org.apache.spark.sql.types.StringType))
-    CowTable(root, fs, logVersions.max, listing.partCols, fullSchema, phase1Schema)
+    CowTable(root, fs, latest, state, layout.partCols, fullSchema, phase1Schema)
   }
 
   /** SAFETY RAIL against silent column loss: a COW rewrite re-writes
@@ -1742,11 +1718,11 @@ object TrainingData {
     * later mergeschema append added) would drop that column's values
     * from every rewritten row — refuse loudly instead.
     */
-  private def requireCoversRecorded(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, latest: Long,
+  private def requireCoversRecorded(
+      recorded: Option[org.apache.spark.sql.types.StructType],
       dataSchema: org.apache.spark.sql.types.StructType,
       partCols: Seq[String], dir: String): Unit =
-    graft.spark.GraftCommitLog.schemaAsOf(fs, root, latest).foreach { recorded =>
+    recorded.foreach { recorded =>
       val missing = recorded.fieldNames
         .filterNot(n => dataSchema.fieldNames.contains(n) || partCols.contains(n))
       require(missing.isEmpty,
@@ -2022,6 +1998,21 @@ object TrainingData {
       .option("withfilepath", "true").option("versionasof", tbl.latest.toString)
       .load(dir)
 
+  /** The distinct source files of a phase-1 frame's rows, sorted — one
+    * job: each partition keeps its distinct names and the driver merges
+    * them; a shuffle `distinct()` would cost a second job. On a plain
+    * scan a file's rows share a split, so the traffic is one name per
+    * may-match file per split, the size class of the planning listing.
+    * After a SHUFFLED join (deleteMatching past the broadcast threshold)
+    * a file's names can come back from every shuffle partition: up to
+    * files × partitions names.
+    */
+  private def candidateFiles(phase1: DataFrame): Seq[String] = {
+    import phase1.sparkSession.implicits._
+    phase1.select(col(graft.spark.GraftSources.FilePathCol)).as[String]
+      .mapPartitions(_.toSet.iterator).collect().distinct.sorted.toSeq
+  }
+
   /** Phase-2 publish: re-read ONLY `candidates`, apply `rewrite`, and
     * commit adds + `r` removes in one atomic v2 log entry; unless
     * `retainHistory`, also physically reclaim the retired originals.
@@ -2076,15 +2067,10 @@ object TrainingData {
       changeRows: (DataFrame, Column) => Seq[(String, DataFrame)] = null)(
       rewrite: (DataFrame, Column) => DataFrame): Seq[String] = {
     val tbl = resolveCow(spark, dir, schema)
-    val fileCol = graft.spark.GraftSources.FilePathCol
     // phase 1: exact candidate files (predicate pushdown prunes
-    // definitely-clean files before any byte is read; the collect is one
-    // file name per may-match file — the same driver-size class as the
-    // planning listing itself)
-    val candidates = cowPhase1(spark, dir, format, tbl)
-      .filter(expr(predicate))
-      .select(col(fileCol)).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    // definitely-clean files before any byte is read)
+    val candidates = candidateFiles(cowPhase1(spark, dir, format, tbl)
+      .filter(expr(predicate)))
     cowRewrite(spark, dir, format, tbl, candidates, retainHistory,
       changeRows =
         if (changeRows == null) null
@@ -2219,12 +2205,9 @@ object TrainingData {
     // modest key sets broadcast (a micro-batch's keys under admission
     // control always are); past that, AQE plans the join
     val kSide = if (stats.getLong(0) <= 1000000L) broadcast(k) else k
-    val fileCol = graft.spark.GraftSources.FilePathCol
     val base = cowPhase1(spark, dir, format, tbl)
-    val candidates = rangePred.map(base.filter).getOrElse(base)
-      .join(kSide, keyCols, "left_semi")
-      .select(col(fileCol)).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    val candidates = candidateFiles(rangePred.map(base.filter).getOrElse(base)
+      .join(kSide, keyCols, "left_semi"))
     cowRewrite(spark, dir, format, tbl, candidates, retainHistory,
       changeRows =
         if (!cdfOn(spark, changeDataFeed)) null
@@ -2299,7 +2282,8 @@ object TrainingData {
         java.util.Map.of("path", dir, "versionasof", latest.toString)))
     val partCols = listing.partCols
     val dataSchema = org.apache.spark.sql.types.StructType.fromDDL(schema)
-    requireCoversRecorded(fs, root, latest, dataSchema, partCols, dir)
+    requireCoversRecorded(graft.spark.GraftCommitLog.schemaAsOf(fs, root, latest),
+      dataSchema, partCols, dir)
     val fullSchema = org.apache.spark.sql.types.StructType(dataSchema.fields ++
       graft.spark.GraftSources.partitionSchema(listing)
         .filterNot(f => dataSchema.fieldNames.contains(f.name)))

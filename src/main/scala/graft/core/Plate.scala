@@ -221,7 +221,10 @@ class NullPlate extends Plate[Unit] {
   */
 final class SkipAllCountPlate extends Plate[Long] {
   private[this] var count = 0L
+  private[this] var skippedTotal = 0L
   def total: Long = count
+  /** Bytes the parser skipped without tokenizing (every column value). */
+  def skippedBytes: Long = skippedTotal
   def nul(): Signal = Signal.Continue
   def fls(): Signal = Signal.Continue
   def tru(): Signal = Signal.Continue
@@ -235,7 +238,7 @@ final class SkipAllCountPlate extends Plate[Long] {
   def unnest(): Signal = Signal.Continue
   def finishRow(): Unit = count += 1
   def finishBatch(terminal: Boolean): Long = count
-  def skipped(bytes: Int): Unit = ()
+  def skipped(bytes: Int): Unit = skippedTotal += bytes
 }
 
 final class RowCountPlate extends Plate[Long] {

@@ -161,12 +161,14 @@ object DeletionVectors {
   /** Write one vector for `target` (root-relative): the sorted union of
     * `ordinals` (ascending, may contain duplicates) and, when `mergeFrom`
     * names a prior artifact, its ordinals (streamed — never materialized).
-    * Returns the new artifact's name. Executor-safe: unique staged name,
-    * atomic rename. Writes v2 (run-length) unless `formatVersion = 1`.
+    * Returns the new artifact's name and its cardinality (the size of the
+    * merged set, known once the stream ends). Executor-safe: unique
+    * staged name, atomic rename. Writes v2 (run-length) unless
+    * `formatVersion = 1`.
     */
   def write(fs: FileSystem, root: Path, target: String,
       ordinals: Iterator[Long], mergeFrom: Option[String],
-      formatVersion: Int = 2, conf: Configuration = null): String = {
+      formatVersion: Int = 2, conf: Configuration = null): (String, Long) = {
     require(formatVersion == 1 || formatVersion == 2,
       s"unknown deletion-vector format version $formatVersion")
     // seam resolution wants the CALLER's conf: the Hadoop FS cache can
@@ -179,6 +181,7 @@ object DeletionVectors {
     val out = new java.io.DataOutputStream(
       new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16))
     var ok = false
+    var cardinality = 0L
     try {
       out.write(s"graft-dv v$formatVersion\n$target\n".getBytes("UTF-8"))
       val prior: Iterator[Long] = mergeFrom match {
@@ -206,6 +209,7 @@ object DeletionVectors {
         else if (runStart >= 0 && v == runEnd) runEnd += 1
         else { flushRun(); runStart = v; runEnd = v + 1 }
         last = v
+        cardinality += 1
       }
       ordinals.foreach { v =>
         while (bprior.hasNext && bprior.head <= v) emit(bprior.next())
@@ -219,7 +223,7 @@ object DeletionVectors {
       if (!ok) fs.delete(tmp, false)
     }
     store.publish(fs, tmp, artifactPath(root, name), overwrite = false)
-    name
+    (name, cardinality)
   }
 
   // ------------------------------------------------------------- varints

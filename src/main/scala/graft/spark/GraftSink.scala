@@ -282,9 +282,9 @@ object GraftSink {
       path: String, schema: StructType): StructType = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val vs = GraftCommitLog.versions(fs, root)
-    if (vs.isEmpty) schema
-    else GraftCommitLog.schemaAsOfStrict(fs, root, vs.max)
+    val log = new GraftCommitLog.LogListing(fs, root)
+    if (log.versions.isEmpty) schema
+    else GraftCommitLog.schemaAsOfStrict(log, log.versions.max)
       .map(rec => toPhysicalSchema(schema, rec)).getOrElse(schema)
   }
 
@@ -324,9 +324,9 @@ object GraftSink {
       val fs = root.getFileSystem(conf)
       if (!fs.exists(root)) None
       else {
-        val vs = GraftCommitLog.versions(fs, root)
-        if (vs.isEmpty) None
-        else GraftCommitLog.schemaAsOfStrict(fs, root, vs.max)
+        val log = new GraftCommitLog.LogListing(fs, root)
+        if (log.versions.isEmpty) None
+        else GraftCommitLog.schemaAsOfStrict(log, log.versions.max)
       }
     }
     existing match {
@@ -859,7 +859,9 @@ private[graft] object GraftCommitLog {
     // the live set BEFORE taking a slot (so the unwritten-entry window
     // stays the single create→write step it always was); on losing a
     // slot race, fold only the DELTA entries and re-validate.
-    var base: Option[Long] = versions(fs, rootPath).lastOption
+    // one listing serves the base version and both validation folds below
+    val log = new LogListing(fs, rootPath)
+    var base: Option[Long] = log.versions.lastOption
     // LEGACY-DIRECTORY MARKER: the FIRST commit over a directory that
     // already holds visible data files this commit is not publishing
     // (an append to a pre-log legacy table) stamps `.graft-log/_partial`
@@ -939,7 +941,7 @@ private[graft] object GraftCommitLog {
     // path -> dv-artifact name (null = live with no deletion vector)
     var live: Map[String, String] =
       if (!needState) Map.empty
-      else try base.map(liveStateAsOf(fs, rootPath, _)).getOrElse(Map.empty)
+      else try base.map(liveStateAsOf(log, _)).getOrElse(Map.empty)
       catch { case e: Exception =>
         throw new java.io.IOException(
           s"commit log under $root: could not validate rewrite preconditions " +
@@ -953,7 +955,7 @@ private[graft] object GraftCommitLog {
     // version; only `live` refolds on lost slot races.
     val removesBaseState: Map[String, String] =
       if (removesBase < 0 || relRemoves.isEmpty) Map.empty
-      else try liveStateAsOf(fs, rootPath, removesBase)
+      else try liveStateAsOf(log, removesBase)
       catch { case e: Exception =>
         throw new java.io.IOException(
           s"commit log under $root: could not resolve the rewrite's read " +
@@ -1033,7 +1035,9 @@ private[graft] object GraftCommitLog {
       // abort the commit, never degrade to "no conflicting schema" (a
       // racer's ALTER/widen could then be silently overwritten by ours)
       val cur = prev.flatMap { p =>
-        try schemaAsOfStrict(fs, rootPath, p)
+        // the pre-claim listing covers p unless a lost race moved past it
+        try schemaAsOfStrict(
+            if (log.versions.lastOption.contains(p)) log else new LogListing(fs, rootPath), p)
         catch { case e: Exception =>
           throw new java.io.IOException(
             s"commit log under $root: could not read the predecessor " +
@@ -1324,29 +1328,80 @@ private[graft] object GraftCommitLog {
     * consistent (round 15, the lag-listing fake); the pointed-at version
     * is admitted only when its checkpoint file actually exists.
     */
-  def checkpointVersions(fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[Long] = try {
-    val d = logDir(root)
-    if (!fs.exists(d)) Nil
-    else {
-      val listed = fs.listStatus(d).toSeq.map(_.getPath.getName)
-        .filter(n => n.endsWith(".checkpoint"))
-        .map(_.stripSuffix(".checkpoint"))
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-      val pointed: Seq[Long] = try {
-        val p = lastCheckpointFile(root)
-        if (!fs.exists(p)) Nil
-        else {
-          val in = fs.open(p)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (txt.nonEmpty && txt.length <= 19 && txt.forall(_.isDigit) &&
-              fs.exists(checkpointFile(root, txt.toLong))) Seq(txt.toLong)
-          else Nil
-        }
-      } catch { case _: Exception => Nil }
-      (listed ++ pointed).distinct.sorted
+  def checkpointVersions(fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[Long] =
+    new LogListing(fs, root).checkpoints
+
+  /** One listing of `.graft-log`, taken on first use and shared by every
+    * version and checkpoint lookup made through it: a resolution that
+    * needs the versions, the live state and the recorded schema lists the
+    * log directory once instead of once per lookup. Each lookup keeps its
+    * eventual-listing rail ([[versions]]' exists()-probed gaps and tail,
+    * [[checkpointVersions]]' `_last_checkpoint` pointer). A listing is
+    * a snapshot of the directory: hold it for one resolution, not longer.
+    */
+  final class LogListing(val fs: org.apache.hadoop.fs.FileSystem, val root: Path) {
+    private lazy val names: Seq[String] = {
+      val d = logDir(root)
+      if (!fs.exists(d)) null else fs.listStatus(d).toSeq.map(_.getPath.getName)
     }
-  } catch { case _: Exception => Nil }
+
+    /** All committed versions, ascending; empty when unlogged. */
+    lazy val versions: Seq[Long] = try {
+      if (names == null) Nil
+      else {
+        val d = logDir(root)
+        val listed = names.filter(n => n.nonEmpty && n.forall(_.isDigit))
+          .map(_.toLong).sorted
+        // eventual-LISTING rail (round 15, lag-listing fake): object stores
+        // with lagging prefix listings can omit just-PUT entries while point
+        // reads stay consistent. Version numbers are contiguous from the
+        // earliest readable entry (claims that lose a race write nothing;
+        // expiry removes only a prefix), so (a) fill interior gaps and
+        // (b) extend the tail by exists()-probes — a reader must never
+        // resolve a STALE latest when the entry is already readable, and an
+        // all-lagged listing must not read as "no log".
+        val set = scala.collection.mutable.SortedSet(listed: _*)
+        def entryAt(v: Long): Boolean = fs.exists(new Path(d, f"$v%020d"))
+        if (set.isEmpty) {
+          var v = 0L
+          while (entryAt(v)) { set += v; v += 1 }
+        } else {
+          var v = set.min
+          while (v < set.max) {
+            if (!set.contains(v) && entryAt(v)) set += v
+            v += 1
+          }
+          v = set.max + 1
+          while (entryAt(v)) { set += v; v += 1 }
+        }
+        set.toSeq
+      }
+    } catch { case _: Exception => Nil }
+
+    /** All checkpoint versions, ascending. */
+    lazy val checkpoints: Seq[Long] = try {
+      if (names == null) Nil
+      else {
+        val listed = names
+          .filter(n => n.endsWith(".checkpoint"))
+          .map(_.stripSuffix(".checkpoint"))
+          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+        val pointed: Seq[Long] = try {
+          val p = lastCheckpointFile(root)
+          if (!fs.exists(p)) Nil
+          else {
+            val in = fs.open(p)
+            val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+              finally in.close()
+            if (txt.nonEmpty && txt.length <= 19 && txt.forall(_.isDigit) &&
+                fs.exists(checkpointFile(root, txt.toLong))) Seq(txt.toLong)
+            else Nil
+          }
+        } catch { case _: Exception => Nil }
+        (listed ++ pointed).distinct.sorted
+      }
+    } catch { case _: Exception => Nil }
+  }
 
   /** Parse one checkpoint's live-file set; None on any read/parse failure
     * (checkpoints are derived state — a bad one must only cost the
@@ -1452,42 +1507,17 @@ private[graft] object GraftCommitLog {
   /** [[checkpointAtOrBefore]] with deletion-vector attachments. */
   def checkpointStateAtOrBefore(fs: org.apache.hadoop.fs.FileSystem, root: Path,
       version: Long): Option[(Long, Map[String, String])] =
-    checkpointVersions(fs, root).filter(_ <= version).sorted(Ordering[Long].reverse)
-      .iterator.flatMap(v => readCheckpointState(fs, root, v).map((v, _)))
+    checkpointStateAtOrBefore(new LogListing(fs, root), version)
+
+  private def checkpointStateAtOrBefore(log: LogListing,
+      version: Long): Option[(Long, Map[String, String])] =
+    log.checkpoints.filter(_ <= version).sorted(Ordering[Long].reverse)
+      .iterator.flatMap(v => readCheckpointState(log.fs, log.root, v).map((v, _)))
       .nextOption()
 
   /** All committed versions under `root`, ascending; empty when unlogged. */
-  def versions(fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[Long] = try {
-    val d = logDir(root)
-    if (!fs.exists(d)) Nil
-    else {
-      val listed = fs.listStatus(d).toSeq.map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
-      // eventual-LISTING rail (round 15, lag-listing fake): object stores
-      // with lagging prefix listings can omit just-PUT entries while point
-      // reads stay consistent. Version numbers are contiguous from the
-      // earliest readable entry (claims that lose a race write nothing;
-      // expiry removes only a prefix), so (a) fill interior gaps and
-      // (b) extend the tail by exists()-probes — a reader must never
-      // resolve a STALE latest when the entry is already readable, and an
-      // all-lagged listing must not read as "no log".
-      val set = scala.collection.mutable.SortedSet(listed: _*)
-      def entryAt(v: Long): Boolean = fs.exists(new Path(d, f"$v%020d"))
-      if (set.isEmpty) {
-        var v = 0L
-        while (entryAt(v)) { set += v; v += 1 }
-      } else {
-        var v = set.min
-        while (v < set.max) {
-          if (!set.contains(v) && entryAt(v)) set += v
-          v += 1
-        }
-        v = set.max + 1
-        while (entryAt(v)) { set += v; v += 1 }
-      }
-      set.toSeq
-    }
-  } catch { case _: Exception => Nil }
+  def versions(fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[Long] =
+    new LogListing(fs, root).versions
 
   /** Root-relative live-file set as of `version`: entries ≤ v folded in
     * version order (adds union in, removes drop out). Fails loudly on an
@@ -1506,14 +1536,19 @@ private[graft] object GraftCommitLog {
     * — a snapshot read must never silently degrade to "whatever is there".
     */
   def liveStateAsOf(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      version: Long): Map[String, String] = {
-    val vs = versions(fs, root)
+      version: Long): Map[String, String] =
+    liveStateAsOf(new LogListing(fs, root), version)
+
+  /** [[liveStateAsOf]] over a listing the caller already holds. */
+  def liveStateAsOf(log: LogListing, version: Long): Map[String, String] = {
+    val (fs, root) = (log.fs, log.root)
+    val vs = log.versions
     require(vs.nonEmpty,
       s"versionAsOf=$version: no graft commit log under $root " +
         "(only graft batch sinks write .graft-log)")
     if (!vs.contains(version)) {
       // targeted error when the miss is expired history, not a typo
-      if (version < vs.min && checkpointVersions(fs, root).nonEmpty)
+      if (version < vs.min && log.checkpoints.nonEmpty)
         throw new IllegalArgumentException(
           s"versionAsOf=$version: log history before version ${vs.min} has been " +
             s"expired (expireLogHistory) — earliest readable version is ${vs.min}")
@@ -1522,7 +1557,7 @@ private[graft] object GraftCommitLog {
     }
     // seed from the newest readable checkpoint ≤ version and fold only the
     // suffix: O(suffix) entry reads instead of O(#commits)
-    val (seedV, seed) = checkpointStateAtOrBefore(fs, root, version)
+    val (seedV, seed) = checkpointStateAtOrBefore(log, version)
       .getOrElse((-1L, Map.empty[String, String]))
     // rail: with no usable seed the full fold must actually start at the
     // log's beginning — if the prefix was expired and the checkpoint is
@@ -2120,8 +2155,12 @@ private[graft] object GraftCommitLog {
     * None = untracked (callers fall back to sampling inference).
     */
   def schemaAsOf(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      version: Long): Option[StructType] = try {
-    schemaAsOfStrict(fs, root, version)
+      version: Long): Option[StructType] =
+    schemaAsOf(new LogListing(fs, root), version)
+
+  /** [[schemaAsOf]] over a listing the caller already holds. */
+  def schemaAsOf(log: LogListing, version: Long): Option[StructType] = try {
+    schemaAsOfStrict(log, version)
   } catch { case _: Exception => None }
 
   /** [[schemaAsOf]] with IO failures PROPAGATED — the commit path's
@@ -2133,10 +2172,15 @@ private[graft] object GraftCommitLog {
     * leniency); raw-entry read failures throw.
     */
   def schemaAsOfStrict(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      version: Long): Option[StructType] = {
-    val rawVs = versions(fs, root).filter(_ <= version).toSet
+      version: Long): Option[StructType] =
+    schemaAsOfStrict(new LogListing(fs, root), version)
+
+  /** [[schemaAsOfStrict]] over a listing the caller already holds. */
+  def schemaAsOfStrict(log: LogListing, version: Long): Option[StructType] = {
+    val (fs, root) = (log.fs, log.root)
+    val rawVs = log.versions.filter(_ <= version).toSet
     if (rawVs.isEmpty) return None
-    val ckVs = checkpointVersions(fs, root).filter(_ <= version).toSet
+    val ckVs = log.checkpoints.filter(_ <= version).toSet
     // ONE descending walk over raw-entry AND checkpoint versions merged:
     // the newest recorded schema wins regardless of which artifact holds
     // it (a stale older checkpoint must never shadow a newer surviving

@@ -335,6 +335,37 @@ object GraftSources {
     }
   }
 
+  /** The hive `k=v` pairs of a ROOT-RELATIVE directory path, in segment
+    * order (non-partition segments skipped). The log-mediated listing and
+    * [[snapshotLayout]] read partition values from the log's paths through
+    * here, without listing a directory.
+    */
+  def dirPartitions(relDir: String): Seq[(String, String)] =
+    if (relDir.isEmpty) Nil
+    else relDir.split('/').toSeq.flatMap(seg => Option(hiveSegment(seg)))
+
+  /** The partition layout of a snapshot, from its root-relative file
+    * paths alone: `partCols` in the order the log-mediated listing finds
+    * them (sorted directories, first seen), each file's values aligned to
+    * it. Files carry their relative path and no length — enough for
+    * [[partitionSchema]] and for a caller that needs only the columns.
+    */
+  def snapshotLayout(relPaths: Iterable[String]): Listing = {
+    val partCols = new mutable.LinkedHashSet[String]
+    val perFile = relPaths.toSeq.map { r =>
+      val i = r.lastIndexOf('/')
+      (if (i < 0) "" else r.substring(0, i), r)
+    }.sorted.map { case (d, r) =>
+      val kv = dirPartitions(d)
+      partCols ++= kv.map(_._1)
+      r -> kv.toMap
+    }
+    val cols = partCols.toSeq
+    Listing(cols, perFile.map { case (r, kv) =>
+      ListedFile(r, -1L, cols.map(c => kv.getOrElse(c, null)).toArray)
+    })
+  }
+
   /** Hive path unescaping: only %xx sequences decode ('+' stays literal —
     * URLDecoder semantics would corrupt it).
     */
@@ -474,6 +505,13 @@ object GraftSources {
 
     val rootPaths = splitRootPaths(raw)
     val roots = rootPaths.map(_.toString)
+    // ONE `.graft-log` listing per root for this whole resolution: the
+    // log-first check, the snapshot fold, the latest-state masks and the
+    // column-mapping schema read all look versions up through it
+    val logs = mutable.HashMap.empty[String, GraftCommitLog.LogListing]
+    def logOf(rootPath: Path): GraftCommitLog.LogListing =
+      logs.getOrElseUpdate(rootPath.toString,
+        new GraftCommitLog.LogListing(rootPath.getFileSystem(conf), rootPath))
 
     // ---- resolve the read MODE before any data-tree I/O: log-mediated
     // lanes never walk the directory tree at all ----
@@ -509,9 +547,7 @@ object GraftSources {
         "option(\"snapshot\") is redundant with versionAsOf/changesSinceVersion")
       require(roots.length == 1,
         s"snapshot needs exactly one root directory, got ${roots.length}")
-      val rootPath = new Path(roots.head)
-      val fs = rootPath.getFileSystem(conf)
-      val vs = GraftCommitLog.versions(fs, rootPath)
+      val vs = logOf(rootPaths.head).versions
       require(vs.nonEmpty,
         s"option(\"snapshot\"): no graft commit log under ${roots.head} " +
           "(only graft batch sinks write .graft-log)")
@@ -538,7 +574,7 @@ object GraftSources {
       val fs = rootPath.getFileSystem(conf)
       val isDir = try fs.getFileStatus(rootPath).isDirectory catch { case _: Exception => false }
       if (isDir) {
-        val vs = GraftCommitLog.versions(fs, rootPath)
+        val vs = logOf(rootPath).versions
         // a PARTIAL log (started by an append over a pre-log legacy
         // directory) does not cover every visible file: keep the raw walk
         // for it — TrainingData.adoptUnlogged upgrades the table
@@ -577,7 +613,7 @@ object GraftSources {
       // vector masks them); changesSinceVersion refuses dv history inside
       // filesSince, so its file set is always vector-free
       val state: Map[String, String] =
-        if (pinned.isDefined) GraftCommitLog.liveStateAsOf(fs, rootPath, version)
+        if (pinned.isDefined) GraftCommitLog.liveStateAsOf(logOf(rootPath), version)
         else GraftCommitLog.filesSince(fs, rootPath, version)
           .iterator.map(_ -> (null: String)).toMap
       val missing = Seq.newBuilder[String]
@@ -593,14 +629,8 @@ object GraftSources {
             catch { case _: java.io.FileNotFoundException => Map.empty }
           // hive partition values from the relative directory segments —
           // the same unescaping and null convention as the walk
-          val parts = mutable.LinkedHashMap.empty[String, String]
-          if (d.nonEmpty) d.split('/').foreach { seg =>
-            val kvp = hiveSegment(seg)
-            if (kvp != null) {
-              partCols += kvp._1
-              parts.addOne(kvp)
-            }
-          }
+          val parts = mutable.LinkedHashMap.from(dirPartitions(d))
+          partCols ++= parts.keys
           inDir.foreach { r =>
             val name = r.substring(r.lastIndexOf('/') + 1)
             present.get(name) match {
@@ -659,9 +689,9 @@ object GraftSources {
       val fs = rootPath.getFileSystem(conf)
       val isDir = try fs.getFileStatus(rootPath).isDirectory catch { case _: Exception => false }
       if (isDir && fs.exists(new Path(rootPath, DeletionVectors.DirName))) {
-        val vs = GraftCommitLog.versions(fs, rootPath)
+        val vs = logOf(rootPath).versions
         if (vs.nonEmpty) {
-          val state = GraftCommitLog.liveStateAsOf(fs, rootPath, vs.max)
+          val state = GraftCommitLog.liveStateAsOf(logOf(rootPath), vs.max)
           val rootQ = fs.makeQualified(rootPath).toString
           listed.foreach { f =>
             val q = fs.makeQualified(new Path(f._1)).toString
@@ -729,11 +759,11 @@ object GraftSources {
         val isDir = try fs.getFileStatus(rootPath).isDirectory catch { case _: Exception => false }
         if (!isDir) Map.empty
         else {
-          val vs = GraftCommitLog.versions(fs, rootPath)
+          val vs = logOf(rootPath).versions
           if (vs.isEmpty) Map.empty
           else {
             val v = pinned.map(_.toLong).getOrElse(vs.max)
-            GraftCommitLog.schemaAsOfStrict(fs, rootPath, v)
+            GraftCommitLog.schemaAsOfStrict(logOf(rootPath), v)
               .map(physicalMap).getOrElse(Map.empty)
           }
         }
@@ -2247,6 +2277,8 @@ final class GraftOffsetReaderFactory(
       }
       override def get(): InternalRow = r.get()
       override def close(): Unit = r.close()
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        r.currentMetricsValues()
     }
   }
 }
@@ -2335,6 +2367,8 @@ final class GraftTopNReaderFactory(
       }
       override def get(): InternalRow = current
       override def close(): Unit = r.close()
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        r.currentMetricsValues()
     }
   }
 }
@@ -2486,6 +2520,10 @@ final class GraftCountPartitionReader(
   private var currentRow: InternalRow = _
   override def get(): InternalRow = currentRow
   override def close(): Unit = if (jsonFeeder != null) jsonFeeder.close()
+
+  // 0 when the sidecar answered: nothing was parsed, so nothing skipped
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(plate.skippedBytes)
 }
 
 /** Sequential range input shared by the feeders. Plain files delegate to

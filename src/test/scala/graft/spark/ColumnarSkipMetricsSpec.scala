@@ -11,8 +11,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 /** graftSkippedBytes on the readers scans actually take: the vectorized
-  * JSON reader (ColumnarPlate) and the pushed-aggregate wrapper, which
-  * forwards its inner parse's accounting. Each reports
+  * JSON reader (ColumnarPlate), the pushed-aggregate, OFFSET and top-N
+  * wrappers, which forward their inner parse's accounting, the pushed
+  * COUNT(*) reader, and the CSV reader. Each reports
   * 0 < skipped <= file bytes on the scan node.
   */
 class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
@@ -21,6 +22,8 @@ class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Ad
   private val dir = Files.createTempDirectory("graft-skip-metrics")
   private var path: String = _
   private var fileBytes: Long = _
+  private var csvPath: String = _
+  private var csvBytes: Long = _
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -37,6 +40,12 @@ class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Ad
     }.mkString("\n").getBytes(UTF_8))
     path = p.toString
     fileBytes = Files.size(p)
+    val c = dir.resolve("wide.csv")
+    Files.write(c, ("id,v,note,w,z\n" + (1 to 500).map { i =>
+      s"$i,${i % 17},${"y" * (i % 40)},$i.5,z$i"
+    }.mkString("\n")).getBytes(UTF_8))
+    csvPath = c.toString
+    csvBytes = Files.size(c)
   }
 
   override def afterAll(): Unit = {
@@ -71,5 +80,40 @@ class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Ad
     assert(df.collect().head.getLong(1) == (1 to 500).map(_ % 17).sum)
     val n = skipped(df)
     assert(n > 0 && n <= fileBytes, s"graftSkippedBytes = $n of $fileBytes file bytes")
+  }
+
+  private def assertSkipped(df: DataFrame, bytes: Long): Unit = {
+    val n = skipped(df)
+    assert(n > 0 && n <= bytes, s"graftSkippedBytes = $n of $bytes file bytes")
+  }
+
+  test("an OFFSET scan forwards its inner reader's skipped bytes") {
+    val df = table.select("v").offset(10)
+    assert(scan(df).scan.description().contains("offset=10"), scan(df).scan.description())
+    assert(df.collect().length == 490)
+    assertSkipped(df, fileBytes)
+  }
+
+  test("a top-N scan forwards its inner reader's skipped bytes") {
+    val df = table.select("id", "v").orderBy(col("v").desc, col("id")).limit(5)
+    assert(scan(df).scan.description().contains("topN="), scan(df).scan.description())
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(16L, 33L, 50L, 67L, 84L))
+    assertSkipped(df, fileBytes)
+  }
+
+  test("a pushed COUNT(*) that parses reports the bytes it skipped") {
+    // the file was written raw (no stats sidecar), so the count parses
+    val df = table.agg(count(lit(1)))
+    assert(scan(df).scan.description().contains("countStar"), scan(df).scan.description())
+    assert(df.collect().head.getLong(0) == 500L)
+    assertSkipped(df, fileBytes)
+  }
+
+  test("a graft-csv 1-of-N projection reports the bytes its parse skipped") {
+    val df = spark.read.format("graft-csv")
+      .schema("id LONG, v LONG, note STRING, w DOUBLE, z STRING").load(csvPath)
+      .select("v")
+    assert(df.collect().map(_.getLong(0)).sum == (1 to 500).map(_ % 17).sum)
+    assertSkipped(df, csvBytes)
   }
 }

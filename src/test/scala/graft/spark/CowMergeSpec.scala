@@ -173,6 +173,32 @@ class CowMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head().getDouble(1) === 400.0)
   }
 
+  test("partitioned layout: an upsert that replaces every row keeps the layout") {
+    val dir = root.resolve("partall").toString
+    val s = spark; import s.implicits._
+    val readSchema = "id BIGINT, v DOUBLE, k STRING"
+    (0 until 6).map(i => (i.toLong, i * 1.0, s"k${i % 2}")).toDF("id", "v", "k")
+      .coalesce(1).write.format("graft-json").partitionBy("k")
+      .mode("overwrite").save(dir)
+    def state() = spark.read.format("graft-json").schema(readSchema).load(dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
+    // the delete half empties the snapshot; the insert half must still
+    // find the table's k=v layout
+    val batch1 = (0 until 6).map(i => (i.toLong, i * 10.0, s"k${i % 2}")).toDF("id", "v", "k")
+    TrainingData.upsert(spark, dir, "id BIGINT, v DOUBLE", batch1, Seq("id"))
+    assert(state() === (0 until 6).map(i => (i.toLong, i * 10.0, s"k${i % 2}")).toSet)
+    val batch2 = Seq((1L, 7.0, "k1"), (9L, 9.0, "k0")).toDF("id", "v", "k")
+    TrainingData.upsert(spark, dir, "id BIGINT, v DOUBLE", batch2, Seq("id"))
+    val got = state()
+    assert(got.size === 7 && got.contains((1L, 7.0, "k1")) && got.contains((9L, 9.0, "k0")))
+    // every live file sits under its k=v directory
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = GraftCommitLog.liveStateAsOf(fs, p, versionsOf(dir).max).keys
+    assert(live.nonEmpty && live.forall(f => f.startsWith("k=k0/") || f.startsWith("k=k1/")),
+      live.mkString(", "))
+  }
+
   test("a 20k-key merge runs through the join path") {
     val dir = root.resolve("big").toString
     val s = spark; import s.implicits._

@@ -38,6 +38,17 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def dir(name: String): String = root.resolve(name).toString
+
+  /** The table's `.graft-dv/` artifacts: name -> the file each targets. */
+  private def artifacts(d: String): Map[String, String] = {
+    val dvDir = java.nio.file.Paths.get(d, DeletionVectors.DirName)
+    if (!Files.exists(dvDir)) Map.empty
+    else Files.list(dvDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".dv"))
+      .map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), "UTF-8").split("\n", 3)(1))
+      .toMap
+  }
   private val schema = "id BIGINT, v STRING"
 
   private def writeTable(d: String, n: Long = 100L, parts: Int = 3): Unit = {
@@ -136,7 +147,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a racer: attach a new vector claiming it merged from NO
     // prior vector (stale base) — must abort, not silently drop dv1
     val name = DeletionVectors.write(fs, new org.apache.hadoop.fs.Path(d),
-      file, Iterator(5L), None)
+      file, Iterator(5L), None)._1
     val e = intercept[java.util.ConcurrentModificationException] {
       GraftCommitLog.appendEntry(spark.sparkContext.hadoopConfiguration, d,
         adds = Nil, dvs = Seq((name, file)), dvBase = Map(file -> null))
@@ -283,7 +294,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rootP = new org.apache.hadoop.fs.Path(d)
     fs.mkdirs(rootP)
     val target = "nation=日本/part-00000-España.jsonl"
-    val name = DeletionVectors.write(fs, rootP, target, Iterator(2L, 5L), None)
+    val name = DeletionVectors.write(fs, rootP, target, Iterator(2L, 5L), None)._1
     val got = DeletionVectors.readOrdinals(
       spark.sparkContext.hadoopConfiguration,
       DeletionVectors.artifactPath(rootP, name), target)
@@ -421,7 +432,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = fs.listStatus(root)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
       .map(_.getPath.getName).head
-    val art = DeletionVectors.write(fs, root, target, Iterator(999L), None)
+    val art = DeletionVectors.write(fs, root, target, Iterator(999L), None)._1
     GraftCommitLog.appendEntry(spark.sparkContext.hadoopConfiguration, d,
       adds = Nil, removes = Nil, dvs = Seq((art, target)),
       dvBase = Map(target -> null))
@@ -446,7 +457,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).map(_.toSeq)
     for (pat <- patterns; ver <- Seq(1, 2)) {
       val name = DeletionVectors.write(fs, rootP, "t.jsonl",
-        pat.iterator, None, formatVersion = ver)
+        pat.iterator, None, formatVersion = ver)._1
       val got = DeletionVectors.readOrdinals(conf,
         DeletionVectors.artifactPath(rootP, name), "t.jsonl").toSeq
       assert(got === pat, s"pattern round-trip failed (v$ver): $pat")
@@ -461,9 +472,9 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // cross-format cumulative merge: v1 prior ∪ new ordinals → v2
     val v1 = DeletionVectors.write(fs, rootP, "m.jsonl",
-      Iterator(1L, 5L, 6L), None, formatVersion = 1)
+      Iterator(1L, 5L, 6L), None, formatVersion = 1)._1
     val merged = DeletionVectors.write(fs, rootP, "m.jsonl",
-      Iterator(0L, 5L, 7L), Some(v1), formatVersion = 2)
+      Iterator(0L, 5L, 7L), Some(v1), formatVersion = 2)._1
     assert(DeletionVectors.readOrdinals(conf,
       DeletionVectors.artifactPath(rootP, merged), "m.jsonl").toSeq ===
       Seq(0L, 1L, 5L, 6L, 7L))
@@ -476,9 +487,9 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val contiguous = (0L until 1000000L)
     val v1 = DeletionVectors.write(fs, rootP, "big.jsonl",
-      contiguous.iterator, None, formatVersion = 1)
+      contiguous.iterator, None, formatVersion = 1)._1
     val v2 = DeletionVectors.write(fs, rootP, "big.jsonl",
-      contiguous.iterator, None, formatVersion = 2)
+      contiguous.iterator, None, formatVersion = 2)._1
     val s1 = fs.getFileStatus(DeletionVectors.artifactPath(rootP, v1)).getLen
     val s2 = fs.getFileStatus(DeletionVectors.artifactPath(rootP, v2)).getLen
     assert(s1 >= 8L * 1000000L)
@@ -512,7 +523,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val conf = spark.sparkContext.hadoopConfiguration
     def mk(ords: Seq[Long]): DeletionVectors.Mask = {
-      val n = DeletionVectors.write(fs, rootP, "x.jsonl", ords.iterator, None)
+      val n = DeletionVectors.write(fs, rootP, "x.jsonl", ords.iterator, None)._1
       DeletionVectors.readMask(conf, DeletionVectors.artifactPath(rootP, n), "x.jsonl")
     }
     def diff(a: Seq[Long], b: Seq[Long]): Seq[Long] =
@@ -654,6 +665,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rootP = new org.apache.hadoop.fs.Path(d)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v0 = GraftCommitLog.versions(fs, rootP).max
+    val before = GraftCommitLog.liveFilesAsOf(fs, rootP, v0)
     val affected = TrainingData.deleteWhereDV(spark, d, schema,
       "id < 9 OR id % 20 = 19", dvMaxRatio = 0.5)
     assert(affected.length === 2)
@@ -663,15 +675,24 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       GraftCommitLog.versions(fs, rootP).max)
     val dvCount = state.values.count(_ != null)
     assert(dvCount === 1, s"expected exactly the light file vectored: $state")
+    // the escalating file's task withdrew its vector: `.graft-dv/` holds
+    // exactly the artifacts the log references, none for that file
+    val escalated = before -- state.keySet
+    assert(escalated.size === 1, s"$before -> $state")
+    assert(artifacts(d).keySet === GraftCommitLog.allReferenced(fs, rootP)._2)
+    assert(!artifacts(d).values.exists(escalated.contains), artifacts(d))
     // the dense file was rewritten: survivors live in a NEW file, no mask
     val got = snap(d).collect().map(_.getLong(0)).sorted
     val want = ((0L until 10L) ++ (100L until 200L))
       .filterNot(i => i < 9 || i % 20 == 19).sorted
     assert(got.toSeq === want)
     // cumulative escalation: a second delete pushing the light file's
-    // cumulative density over the bar escalates IT too
+    // cumulative density over the bar escalates IT too — and, every match
+    // escalating, writes no artifact
+    val artifactsBefore = artifacts(d)
     TrainingData.deleteWhereDV(spark, d, schema,
       "id >= 100 AND id < 155", dvMaxRatio = 0.5)
+    assert(artifacts(d) === artifactsBefore)
     val state2 = GraftCommitLog.liveStateAsOf(fs, rootP,
       GraftCommitLog.versions(fs, rootP).max)
     assert(state2.values.forall(_ == null),

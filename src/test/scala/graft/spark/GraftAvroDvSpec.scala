@@ -38,6 +38,17 @@ class GraftAvroDvSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def dir(name: String): String = root.resolve(name).toString
+
+  /** The table's `.graft-dv/` artifacts: name -> the file each targets. */
+  private def artifacts(d: String): Map[String, String] = {
+    val dvDir = java.nio.file.Paths.get(d, DeletionVectors.DirName)
+    if (!Files.exists(dvDir)) Map.empty
+    else Files.list(dvDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".dv"))
+      .map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), "UTF-8").split("\n", 3)(1))
+      .toMap
+  }
   private val schema = "id BIGINT, v STRING"
 
   private def writeTable(d: String, n: Long = 100L, parts: Int = 3): Unit = {
@@ -171,6 +182,7 @@ class GraftAvroDvSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootP = new org.apache.hadoop.fs.Path(d)
     val v0 = GraftCommitLog.versions(fs, rootP).max
+    val before = GraftCommitLog.liveFilesAsOf(fs, rootP, v0)
     TrainingData.deleteWhereDV(spark, d, schema,
       "id < 40 OR id = 60", dvMaxRatio = 0.5, format = "graft-avro")
     assert(GraftCommitLog.versions(fs, rootP).max === v0 + 1,
@@ -179,6 +191,21 @@ class GraftAvroDvSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(state.values.exists(_ != null), "sparse file must carry a vector")
     assert(state.values.exists(_ == null), "dense file must have escalated to COW")
     assert(snapIds(d) === (40L until 100L).filterNot(_ == 60L))
+    // the escalating file's task withdrew its vector: `.graft-dv/` holds
+    // exactly the artifacts the log references, none for that file
+    val escalated = before -- state.keySet
+    assert(escalated.size === 1, s"$before -> $state")
+    assert(artifacts(d).keySet === GraftCommitLog.allReferenced(fs, rootP)._2)
+    assert(!artifacts(d).values.exists(escalated.contains), artifacts(d))
+    // a delete whose every match escalates (the vectored file's density
+    // crosses the bar) writes no artifact
+    val artifactsBefore = artifacts(d)
+    TrainingData.deleteWhereDV(spark, d, schema,
+      "id >= 50 AND id < 90", dvMaxRatio = 0.5, format = "graft-avro")
+    assert(artifacts(d) === artifactsBefore)
+    val state2 = GraftCommitLog.liveStateAsOf(fs, rootP, v0 + 2)
+    assert(state2.values.forall(_ == null), s"expected a clean rewrite: $state2")
+    assert(snapIds(d) === (40L until 50L) ++ (90L until 100L))
   }
 
   test("avro sink refuses partitionby loudly (no k=v layout path)") {
