@@ -1253,9 +1253,7 @@ object TrainingData {
 
     val conf = spark.sparkContext.hadoopConfiguration
     def mask(name: String, target: String): graft.spark.DeletionVectors.Mask =
-      if (name == null) graft.spark.DeletionVectors.Mask.Empty
-      else graft.spark.DeletionVectors.readMask(conf,
-        graft.spark.DeletionVectors.artifactPath(tbl.root, name), target)
+      graft.spark.DeletionVectors.maskOf(conf, tbl.root, name, target)
 
     // per processed file, BOTH directions of the mask diff: ordinals
     // deleted since (the cumulative-delete case) and ordinals UN-deleted
@@ -1399,9 +1397,7 @@ object TrainingData {
       StructField(idxCol, LongType))
 
     def mask(name: String, target: String): graft.spark.DeletionVectors.Mask =
-      if (name == null) graft.spark.DeletionVectors.Mask.Empty
-      else graft.spark.DeletionVectors.readMask(conf,
-        graft.spark.DeletionVectors.artifactPath(tbl.root, name), target)
+      graft.spark.DeletionVectors.maskOf(conf, tbl.root, name, target)
 
     // exact-ordinal read of specific rows in specific files, pinned where
     // those ordinals are visible (the endpoint path's ordinalRows twin)

@@ -422,6 +422,21 @@ object DeletionVectors {
     }
   }
 
+  /** The mask a scan partition reads under: the planner's keep-only runs
+    * (the CDF streaming read), else its deletion-vector artifact, else
+    * null — the partition masks nothing.
+    */
+  def partitionMask(conf: Configuration, part: GraftInputPartition): Mask =
+    if (part.dvKeepRuns != null) Mask.keepOnly(part.dvKeepRuns)
+    else if (part.dv == null) null
+    else readMask(conf, new Path(part.dv), part.dvTarget)
+
+  /** The mask of the artifact `name` under table `root`; a null name (the
+    * file has no vector) is the empty mask.
+    */
+  def maskOf(conf: Configuration, root: Path, name: String, target: String): Mask =
+    if (name == null) Mask.Empty else readMask(conf, artifactPath(root, name), target)
+
   /** All deleted ordinals of the artifact at `p` (absolute), ascending —
     * O(cardinality) memory; production read paths use [[readMask]].
     */

@@ -224,7 +224,7 @@ final class GraftAggPartitionReader(
     inner: PartitionReader[InternalRow],
     parseSchema: StructType,
     spec: GraftAgg.Spec,
-    maxGroups: Int) extends PartitionReader[InternalRow] {
+    maxGroups: Int) extends ForwardingReader(inner) {
   import GraftAgg._
 
   private val groupIdx: Array[(Int, DataType)] =
@@ -464,11 +464,6 @@ final class GraftAggPartitionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = inner.close()
-  // the inner parse's skip accounting reaches the scan node's metrics
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.currentMetricsValues()
 }
 
 /** Metadata answers for pushed aggregates: a MIN / MAX / COUNT(col) /

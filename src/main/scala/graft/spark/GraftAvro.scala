@@ -1116,10 +1116,7 @@ final class GraftAvroPartitionReader(
       row.update(i, GraftAvroPartitionReader.typedPartValue(f,
         if (pc < part.partValues.length) part.partValues(pc) else null))
   }
-  private val mask =
-    if (part.dvKeepRuns != null) DeletionVectors.Mask.keepOnly(part.dvKeepRuns)
-    else if (part.dv == null) DeletionVectors.Mask.Empty
-    else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
+  private val mask = DeletionVectors.partitionMask(conf, part)
   // whole-file record ordinal of the LAST returned record: whole-file
   // partitions count from 0; block-aligned ranges start at the planner-
   // derived base (exact per-block row counts from the sidecar recording)
@@ -1134,7 +1131,7 @@ final class GraftAvroPartitionReader(
       if (!reader.hasNext || reader.pastSync(part.end)) { done = true; return false }
       reuse = reader.next(reuse)
       ord += 1
-      if (!mask.masked(ord)) {
+      if (mask == null || !mask.masked(ord)) {
         var j = 0
         while (j < convs.length) {
           val v = reuse.get(j)
@@ -1180,8 +1177,8 @@ final class GraftAvroCountReader(
   override def next(): Boolean = {
     if (emitted) return false
     var total = GraftAvro.countRecords(conf, new Path(part.path), part.start, part.end)
-    if (part.dv != null) {
-      val m = DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
+    val m = DeletionVectors.partitionMask(conf, part)
+    if (m != null) {
       require(m.cardinality <= total && m.last < total,
         s"graft-avro count: deletion vector for '${part.dvTarget}' addresses " +
           s"ordinal ${m.last} but the file holds $total records — artifact/" +

@@ -418,10 +418,6 @@ final class GraftCdfMicroBatchStream(
     // history refuses loudly through liveStateAsOf's rail (batch parity)
     var state: Map[String, String] =
       if (s < 0) Map.empty else log.liveStateAsOf(fs, root, s)
-    def maskOf(name: String, target: String): DeletionVectors.Mask =
-      if (name == null) DeletionVectors.Mask.Empty
-      else DeletionVectors.readMask(conf,
-        DeletionVectors.artifactPath(root, name), target)
     val parts = Array.newBuilder[InputPartition]
     vs.filter(v => v > s && v <= e).foreach { v =>
       val acts = log.entryActionsAwait(fs, root, v)
@@ -447,8 +443,9 @@ final class GraftCdfMicroBatchStream(
         }
         acts.foreach { a =>
           if (a.isDv && state.contains(a.path)) {
-            val prevMask = maskOf(state.getOrElse(a.path, null), a.path)
-            val newMask = maskOf(a.dv, a.path)
+            val prevMask =
+              DeletionVectors.maskOf(conf, root, state.getOrElse(a.path, null), a.path)
+            val newMask = DeletionVectors.maskOf(conf, root, a.dv, a.path)
             val delta = newMask.minus(prevMask)
             if (delta.nonEmpty) {
               val p = fs.makeQualified(new org.apache.hadoop.fs.Path(root, a.path))
@@ -478,8 +475,9 @@ final class GraftCdfMicroBatchStream(
             parts += GraftSources.wholeFilePartition(
               p.toString, len, pvFor(p.toString, "insert"))
           case 'd' =>
-            val prevMask = maskOf(state.getOrElse(a.path, null), a.path)
-            val newMask = maskOf(a.dv, a.path)
+            val prevMask =
+              DeletionVectors.maskOf(conf, root, state.getOrElse(a.path, null), a.path)
+            val newMask = DeletionVectors.maskOf(conf, root, a.dv, a.path)
             require(prevMask.minus(newMask).isEmpty,
               s"readChangeFeed: the deletion vector for '${a.path}' SHRANK " +
                 s"at commit $v with no restore — vectors are cumulative " +

@@ -2116,12 +2116,15 @@ final class GraftScan(
       .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("true")
     val saturate = satOpt != "false"
     val fastSatTail = satOpt == "fast"
+    // byte-range splits past 0 cannot re-read a CSV file's header row:
+    // hand them the column order (the data part of the table schema)
+    val dataCols = fullSchema.fieldNames.filterNot(partNames.contains).map(physName)
     if (countStar)
       new GraftCountReaderFactory(conf,
         if (isJson) Some(GraftSources.jsonMode(options.asCaseSensitiveMap())) else None,
         GraftSources.csvConfig(options.asCaseSensitiveMap()),
         dropMalformed = dropMalformed, countMalformed = keepMalformed,
-        useStats = options.getBoolean("dataskipping", true))
+        useStats = options.getBoolean("dataskipping", true), fullDataCols = dataCols)
     else {
       val rowFactory: PartitionReaderFactory =
         if (isJson)
@@ -2133,17 +2136,12 @@ final class GraftScan(
             saturate = saturate, rowIdxSlot = rowIdxSlot,
             vectorized = options.getBoolean("vectorized", true),
             fastSatTail = fastSatTail)
-        else {
-          // byte-range splits past 0 cannot re-read the file's header row:
-          // hand them the column order (the data part of the table schema)
-          val dataCols = fullSchema.fieldNames.filterNot(partNames.contains)
-            .map(physName)
+        else
           new GraftCsvReaderFactory(parseRowSchema, plateFilters, conf,
             GraftSources.csvConfig(options.asCaseSensitiveMap()), limit = limit,
             partSpec = partSpec, fullDataCols = dataCols,
             rowIdxSlot = rowIdxSlot,
             vectorized = options.getBoolean("vectorized", true))
-        }
       aggSpec match {
         case Some(spec) =>
           new GraftAggReaderFactory(rowFactory, rowSchema, spec,
@@ -2243,7 +2241,7 @@ final class GraftCsvReaderFactory(
       partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, config,
       limit, partSpec, fullDataCols, rowIdxSlot)
 
-  // byte-range splits vectorize too (CsvRangeFeeder + providedHeader);
+  // byte-range splits vectorize too (RangeFeeder.csv);
   // row-index stamping is a row-path concept; deletion-vector masks drop
   // inside the plate (see the JSON factory's twin comment)
   override def supportColumnarReads(partition: InputPartition): Boolean =
@@ -2266,7 +2264,7 @@ final class GraftOffsetReaderFactory(
     offset: Int) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val r = inner.createReader(partition)
-    new PartitionReader[InternalRow] {
+    new ForwardingReader(r) {
       private var dropped = 0
       override def next(): Boolean = {
         while (dropped < offset) {
@@ -2276,11 +2274,19 @@ final class GraftOffsetReaderFactory(
         r.next()
       }
       override def get(): InternalRow = r.get()
-      override def close(): Unit = r.close()
-      override def currentMetricsValues(): Array[CustomTaskMetric] =
-        r.currentMetricsValues()
     }
   }
+}
+
+/** A reader that reshapes an inner reader's rows (OFFSET, top-N, pushed
+  * aggregates). Closing and the task metrics are the inner reader's, and
+  * final: a wrapper cannot drop the inner parse's skip accounting.
+  */
+private[spark] abstract class ForwardingReader(inner: PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  final override def close(): Unit = inner.close()
+  final override def currentMetricsValues(): Array[CustomTaskMetric] =
+    inner.currentMetricsValues()
 }
 
 /** Partial TopN pushdown executor: each partition drains its inner reader
@@ -2346,7 +2352,7 @@ final class GraftTopNReaderFactory(
     val r = inner.createReader(partition)
     if (!usable) return r
     GraftTopNReaderFactory.engaged.incrementAndGet()
-    new PartitionReader[InternalRow] {
+    new ForwardingReader(r) {
       private var out: java.util.Iterator[InternalRow] = _
       private var current: InternalRow = _
       override def next(): Boolean = {
@@ -2366,9 +2372,6 @@ final class GraftTopNReaderFactory(
         if (out.hasNext) { current = out.next(); true } else false
       }
       override def get(): InternalRow = current
-      override def close(): Unit = r.close()
-      override def currentMetricsValues(): Array[CustomTaskMetric] =
-        r.currentMetricsValues()
     }
   }
 }
@@ -2416,8 +2419,8 @@ object GraftTopNReaderFactory {
 }
 
 /** COUNT(*) pushdown: parse-only partial counts, one row per partition.
-  * JSON ranges go through the standard realignment protocol; CSV counts a
-  * whole file per task. All values are byte-skipped (SkipAllCountPlate).
+  * JSON and CSV ranges alike go through [[RangeFeeder]]. All values are
+  * byte-skipped (SkipAllCountPlate).
   */
 final class GraftCountReaderFactory(
     conf: Broadcast[SerializableConfiguration],
@@ -2425,11 +2428,12 @@ final class GraftCountReaderFactory(
     csvConfig: CsvParser.Config,
     dropMalformed: Boolean,
     countMalformed: Boolean = false,
-    useStats: Boolean = true) extends PartitionReaderFactory {
+    useStats: Boolean = true,
+    fullDataCols: Array[String] = Array.empty) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftCountPartitionReader(
       partition.asInstanceOf[GraftInputPartition], conf.value.value, jsonMode, csvConfig,
-      dropMalformed, countMalformed, useStats)
+      dropMalformed, countMalformed, useStats, fullDataCols)
 }
 
 final class GraftCountPartitionReader(
@@ -2439,11 +2443,12 @@ final class GraftCountPartitionReader(
     csvConfig: CsvParser.Config,
     dropMalformed: Boolean,
     countMalformed: Boolean = false,
-    useStats: Boolean = true) extends PartitionReader[InternalRow] {
+    useStats: Boolean = true,
+    fullDataCols: Array[String] = Array.empty) extends PartitionReader[InternalRow] {
 
   private val plate = new graft.core.SkipAllCountPlate
   private var served = false
-  private var jsonFeeder: JsonRangeFeeder[Long] = null
+  private var feeder: RangeFeeder[Long] = null
 
   private def count(): Long = {
     // a deletion vector deletes EXACTLY its ordinal count from this file
@@ -2451,9 +2456,7 @@ final class GraftCountPartitionReader(
     // masked COUNT is base − |mask|, with the sidecar fast path intact.
     // Cross-check the last ordinal against the base count — a mask
     // addressing rows the file doesn't have must fail loudly, not skew.
-    val deleted: DeletionVectors.Mask =
-      if (part.dv == null) null
-      else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
+    val deleted = DeletionVectors.partitionMask(conf, part)
     val base = baseCount()
     if (deleted == null) base
     else {
@@ -2485,32 +2488,16 @@ final class GraftCountPartitionReader(
     parsedCount()
   }
 
-  private def parsedCount(): Long = jsonMode match {
-    case Some(mode) =>
-      jsonFeeder = new JsonRangeFeeder[Long](
-        part, conf, () => new JsonParser(plate, mode), dropMalformed)
-      while (!jsonFeeder.isExhausted) jsonFeeder.step()
-      // PERMISSIVE emits one (null-filled) row per corrupt line, so a
-      // pushed-down COUNT(*) must count them too
-      plate.total + (if (countMalformed) jsonFeeder.droppedRecords else 0L)
-    case None =>
-      val in = new RangeInput(new Path(part.path), conf)
-      try {
-        val parser = new CsvParser(plate, csvConfig)
-        val chunk = new Array[Byte](256 * 1024)
-        var eof = false
-        def raise(r: ParseResult[Long]): Unit = r match {
-          case ParseResult.Failure(e) => throw e
-          case ParseResult.Partial(_, _) => raise(parser.continueParse())
-          case _ => ()
-        }
-        while (!eof) {
-          val n = in.read(chunk)
-          if (n < 0) { raise(parser.finish()); eof = true }
-          else raise(parser.absorb(chunk, 0, n))
-        }
-        plate.total
-      } finally in.close()
+  private def parsedCount(): Long = {
+    feeder = jsonMode match {
+      case Some(mode) =>
+        new RangeFeeder[Long](part, conf, () => new JsonParser(plate, mode), '\n', dropMalformed)
+      case None => RangeFeeder.csv(part, conf, plate, csvConfig, fullDataCols)
+    }
+    while (!feeder.isExhausted) feeder.step()
+    // PERMISSIVE emits one (null-filled) row per corrupt line, so a
+    // pushed-down COUNT(*) must count them too
+    plate.total + (if (countMalformed) feeder.droppedRecords else 0L)
   }
 
   override def next(): Boolean =
@@ -2519,14 +2506,14 @@ final class GraftCountPartitionReader(
 
   private var currentRow: InternalRow = _
   override def get(): InternalRow = currentRow
-  override def close(): Unit = if (jsonFeeder != null) jsonFeeder.close()
+  override def close(): Unit = if (feeder != null) feeder.close()
 
   // 0 when the sidecar answered: nothing was parsed, so nothing skipped
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     GraftSources.skippedBytesMetric(plate.skippedBytes)
 }
 
-/** Sequential range input shared by the feeders. Plain files delegate to
+/** Sequential range input of [[RangeFeeder]]. Plain files delegate to
   * the FS stream (native seek / positioned read). Compressed files (gzip,
   * zstd) decompress on the fly and expose DECOMPRESSED coordinates: `seek`
   * and `readFully` — used only on malformed-record recovery paths — are
@@ -2588,19 +2575,42 @@ private[spark] final class RangeInput(path: Path, conf: Configuration) {
   def close(): Unit = in.close()
 }
 
-/** Feeds one byte range of a JSON-lines file into a parser, handling the
-  * row-realignment protocol (shared by the row and columnar readers).
+/** Feeds one byte range of a line-delimited file into a parser: the one
+  * loop that drives the resumable parser (`absorb`/`continueParse`/
+  * `finish`, PAPER.md §0) for every graft JSON and CSV scan — the row,
+  * columnar and COUNT(*) readers all read their range through it.
+  *
+  * Range protocol (the Hadoop text-split convention): a range with
+  * start > 0 first discards bytes through the first `alignByte` at/after
+  * `start` (that row belongs to the previous range), and every range
+  * keeps consuming past `end` until the first `alignByte` at/after `end`.
+  * Adjacent ranges therefore partition rows exactly. A block-pruned
+  * (`aligned`) range is exact instead: the writer guaranteed that `start`
+  * and `end` are row boundaries, so it starts without realignment and
+  * stops at `end` — reading on would parse a sibling block's rows. The
+  * alignment byte is '\n' for JSON lines and the row terminator's last
+  * byte for CSV (splitting CSV is sound only when no value contains a row
+  * delimiter — the `splittable` option's contract).
   *
   * With `dropMalformed`, a parse error triggers line resync: the parser's
   * positioned exception gives the bad byte's offset in its stream (which
-  * started at `streamStartAbs`), the feeder seeks past the next newline,
-  * and `mkParser` builds a fresh parser/plate — one corrupt record costs
-  * one line, not the split (DROPMALFORMED semantics at 100 TB).
+  * started at `streamStartAbs`), the feeder seeks past the next alignment
+  * byte, and `mkParser` builds a fresh parser — one corrupt record costs
+  * one line, not the split (DROPMALFORMED semantics at 100 TB). When
+  * `onCorrupt` is set it receives each dropped line's bytes (PERMISSIVE).
+  * Without `dropMalformed` a bad record fails the task.
+  *
+  * `graft.core.StreamParser` is the same drive loop as an
+  * `Iterator[Array[Byte]]` transducer (the fs2-pipe analogue). Scans do
+  * not route through it: it absorbs whole arrays, so every chunk — and
+  * every partial chunk at a range edge — would be copied out of the one
+  * reused 256 KiB buffer this loop reads into.
   */
-private[spark] final class JsonRangeFeeder[A](
+private[spark] final class RangeFeeder[A](
     part: GraftInputPartition,
     conf: Configuration,
-    mkParser: () => graft.core.json.JsonParser[A],
+    mkParser: () => graft.core.BaseParser[A],
+    alignByte: Byte,
     dropMalformed: Boolean = false,
     onCorrupt: Array[Byte] => Unit = null) {
 
@@ -2616,7 +2626,6 @@ private[spark] final class JsonRangeFeeder[A](
   private var resynced = false // a recovery happened inside the current step
 
   if (part.start > 0) in.seek(part.start)
-  else streamStartAbs = 0L
 
   def isExhausted: Boolean = exhausted
   def droppedRecords: Long = dropped
@@ -2634,7 +2643,7 @@ private[spark] final class JsonRangeFeeder[A](
       case pe: graft.core.ParseException => streamStartAbs + math.max(pe.index, 0).toLong
       case _ => pos // incomplete at EOF etc.: resync from the read position
     }
-    // resync: skip the bad record by seeking past the next newline
+    // resync: skip the bad record by seeking past the next row end
     var resume = errAbs + 1
     in.seek(math.min(resume, part.fileLen))
     var found = resume >= part.fileLen
@@ -2643,7 +2652,7 @@ private[spark] final class JsonRangeFeeder[A](
       val n = in.read(chunk)
       if (n < 0) { resume = part.fileLen; found = true }
       else {
-        val nl = indexOfNl(chunk, 0, n)
+        val nl = indexOfAlign(chunk, 0, n)
         if (nl >= 0) { resume = resume + nl + 1; found = true; sawNl = true }
         else resume += n
       }
@@ -2659,7 +2668,7 @@ private[spark] final class JsonRangeFeeder[A](
         // bytes there belong to a sibling block (possibly a skipped one)
         (part.aligned && resume >= part.end)) {
       // the bad record ran past this range's end (or the file's): done —
-      // the next range aligns to the same newline and owns what follows
+      // the next range aligns to the same row end and owns what follows
       exhausted = true
       return
     }
@@ -2671,7 +2680,7 @@ private[spark] final class JsonRangeFeeder[A](
     resynced = true
   }
 
-  /** Rebuild the corrupt line's bytes: from the last '\n' before the error
+  /** Rebuild the corrupt line's bytes: from the last row end before the error
     * (or the parser stream's start) to `lineEndExcl`. Positioned reads, so
     * the main stream's seek pointer is untouched. Errors are rare; the
     * backward window scan is off the hot path. Capture is capped at 8 MiB
@@ -2686,7 +2695,7 @@ private[spark] final class JsonRangeFeeder[A](
     if (lineEndExcl > streamStartAbs) {
       val last = new Array[Byte](1)
       in.readFully(lineEndExcl - 1, last, 0, 1)
-      if (last(0) == '\n') lineEndExcl -= 1
+      if (last(0) == alignByte) lineEndExcl -= 1
     }
     val lo = streamStartAbs
     var found = -1L
@@ -2697,7 +2706,7 @@ private[spark] final class JsonRangeFeeder[A](
       val n = (cur - start).toInt
       in.readFully(start, win, 0, n)
       var i = n - 1
-      while (i >= 0 && found < 0) { if (win(i) == '\n') found = start + i; i -= 1 }
+      while (i >= 0 && found < 0) { if (win(i) == alignByte) found = start + i; i -= 1 }
       cur = start
     }
     val ls = if (found < 0) lo else found + 1
@@ -2721,12 +2730,12 @@ private[spark] final class JsonRangeFeeder[A](
     pos += n
     var off = 0
     if (!aligned) {
-      // discard through the first '\n' at/after start (previous range's row)
-      val nl = indexOfNl(chunk, 0, n)
+      // discard through the first row end at/after start (previous range's row)
+      val nl = indexOfAlign(chunk, 0, n)
       if (nl < 0) return
       if (chunkStartAbs + nl >= part.end) {
         // no row starts inside this range: the previous range owns the
-        // boundary row and the next range aligns to this same newline
+        // boundary row and the next range aligns to this same row end
         exhausted = true
         return
       }
@@ -2741,36 +2750,51 @@ private[spark] final class JsonRangeFeeder[A](
       // exact (block-pruned) range: `end` IS a row boundary, so absorb
       // strictly up to it and finish — reading on would re-parse the next
       // block's rows (another partition's, or a skipped block's)
-      val upto = (part.end - chunkStartAbs).toInt
-      if (upto > off) raise(parser.absorb(chunk, off, upto - off))
-      if (resynced) { resynced = false; return } // recovery restarted the stream
-      if (!exhausted) raise(parser.finish())
-      exhausted = true
+      absorbLast(off, (part.end - chunkStartAbs).toInt)
     } else {
-      // past the range end: stop after the first '\n' at/after `end`
+      // past the range end: stop after the first row end at/after `end`
       val fromRel = math.max(off, math.max(0L, part.end - chunkStartAbs).toInt)
-      val nl = indexOfNl(chunk, fromRel, n)
-      if (nl < 0) {
-        raise(parser.absorb(chunk, off, n - off)) // boundary row continues
-      } else {
-        raise(parser.absorb(chunk, off, nl + 1 - off))
-        if (resynced) { resynced = false; return } // recovery restarted the stream
-        if (!exhausted) raise(parser.finish())
-        exhausted = true
-      }
+      val nl = indexOfAlign(chunk, fromRel, n)
+      if (nl < 0) raise(parser.absorb(chunk, off, n - off)) // boundary row continues
+      else absorbLast(off, nl + 1)
     }
   }
 
-  private def indexOfNl(buf: Array[Byte], from: Int, until: Int): Int = {
+  /** Absorb chunk[off, until) as the range's last bytes and finish. */
+  private def absorbLast(off: Int, until: Int): Unit = {
+    if (until > off) raise(parser.absorb(chunk, off, until - off))
+    if (resynced) { resynced = false; return } // recovery restarted the stream
+    if (!exhausted) raise(parser.finish())
+    exhausted = true
+  }
+
+  private def indexOfAlign(buf: Array[Byte], from: Int, until: Int): Int = {
     var i = from
     while (i < until) {
-      if (buf(i) == '\n') return i
+      if (buf(i) == alignByte) return i
       i += 1
     }
     -1
   }
 
   def close(): Unit = in.close()
+}
+
+private[spark] object RangeFeeder {
+  /** A CSV range's feeder over one parser. A range past byte 0 never sees
+    * the file's header row, so a header-mode config gets the column order
+    * instead (`dataCols`, the data part of the table schema). Rows align
+    * on the row terminator's last byte.
+    */
+  def csv[A](part: GraftInputPartition, conf: Configuration, plate: graft.core.Plate[A],
+      config: CsvParser.Config, dataCols: Array[String]): RangeFeeder[A] = {
+    val rangeConfig =
+      if (part.start > 0 && config.header && config.providedHeader.isEmpty)
+        config.copy(providedHeader = dataCols.toSeq)
+      else config
+    new RangeFeeder[A](part, conf, () => new CsvParser(plate, rangeConfig),
+      if (config.row2 != 0) config.row2 else config.row1)
+  }
 }
 
 /** Partition-column constant vectors for the vectorized readers: each
@@ -2817,7 +2841,51 @@ private[spark] object PartitionVectors {
   }
 }
 
-/** Vectorized JSON reader: same range protocol, ColumnarBatch output. */
+/** Base of the vectorized JSON and CSV readers: steps the [[RangeFeeder]]
+  * until the plate holds rows, then hands them out as one batch with the
+  * partition's constant vectors swapped in. A pushed limit stops the
+  * parse at batch granularity.
+  */
+private[spark] abstract class GraftColumnarReader(
+    part: GraftInputPartition,
+    conf: Configuration,
+    limit: Int,
+    partSpec: Array[(Int, Int, org.apache.spark.sql.types.DataType)])
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+
+  // deletion-vector mask for the plate, which drops masked ordinals at
+  // finishRow — merge-on-read tables stay vectorized. Plate filters run
+  // under the mask too (round 11): the plate counts filter-skipped rows'
+  // ordinals itself, so SkipRow parse pushdown and merge-on-read deletes
+  // compose; the scan pinned badrecords=fail for dv snapshots (a
+  // malformed-row drop has no such accounting).
+  protected final val dvMask: DeletionVectors.Mask = DeletionVectors.partitionMask(conf, part)
+  protected val plate: ColumnarPlate
+  protected val feeder: RangeFeeder[Long]
+  private val partTyped = PartitionVectors.typed(partSpec, part.partValues)
+  private var emitted = 0L
+  private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
+
+  final override def next(): Boolean = {
+    // pushed limit satisfied (batch granularity): stop parsing bytes
+    if (limit >= 0 && emitted >= limit) return false
+    while (plate.pendingRows == 0 && !feeder.isExhausted) feeder.step()
+    if (plate.pendingRows > 0) {
+      current = PartitionVectors.wrap(plate.takeBatch(), partTyped)
+      emitted += current.numRows; true
+    } else false
+  }
+
+  final override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
+  final override def close(): Unit = feeder.close()
+
+  final override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(plate.totalSkippedBytes)
+}
+
+/** Vectorized JSON reader: one byte range (see [[RangeFeeder]]),
+  * ColumnarBatch output.
+  */
 final class GraftJsonColumnarReader(
     part: GraftInputPartition,
     schema: StructType,
@@ -2830,59 +2898,24 @@ final class GraftJsonColumnarReader(
     saturate: Boolean = true,
     fastSatTail: Boolean = false,
     tz: String = "UTC")
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    extends GraftColumnarReader(part, conf, limit, partSpec) {
 
-  // deletion-vector mask (whole-file partition): the plate drops masked
-  // ordinals at finishRow — merge-on-read tables stay vectorized. Plate
-  // filters RUN under the mask too (round 11): the plate counts
-  // filter-skipped rows' ordinals itself, so SkipRow parse pushdown and
-  // merge-on-read deletes compose; the scan pinned badrecords=fail for
-  // dv snapshots (a malformed-row drop has no such accounting).
-  private val dvMask: DeletionVectors.Mask =
-    if (part.dvKeepRuns != null) DeletionVectors.Mask.keepOnly(part.dvKeepRuns)
-    else if (part.dv == null) null
-    else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
+  // drop mode needs full per-row validation: no saturation elision
+  protected val plate = new ColumnarPlate(schema, filters,
+    saturate = saturate && !dropMalformed, mask = dvMask,
+    maskStartOrd = part.startOrd, fastSatTail = fastSatTail,
+    strictTokens = true, timeZoneId = tz,
+    dropDiscarded = dropMalformed)
   // recovery keeps the SAME plate (its buffered batch holds completed
-  // rows); only the parser restarts — the plate's row state resets via
-  // the columnar plate's own finishRow bookkeeping being per-row
-  private var plate: ColumnarPlate = null
-  private def mkParser(): JsonParser[Long] = {
-    if (plate == null)
-      // drop mode needs full per-row validation: no saturation elision
-      plate = new ColumnarPlate(schema, filters,
-        saturate = saturate && !dropMalformed, mask = dvMask,
-        maskStartOrd = part.startOrd, fastSatTail = fastSatTail,
-        strictTokens = true, timeZoneId = tz,
-        dropDiscarded = dropMalformed)
-    else plate.abandonPartialRow()
-    new JsonParser(plate, mode)
-  }
-  private val feeder = new JsonRangeFeeder(part, conf, () => mkParser(), dropMalformed)
-  private val partTyped = PartitionVectors.typed(partSpec, part.partValues)
-  private var emitted = 0L
-  private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
-
-  override def next(): Boolean = {
-    // pushed limit satisfied (batch granularity): stop parsing bytes
-    if (limit >= 0 && emitted >= limit) return false
-    while (plate.pendingRows == 0 && !feeder.isExhausted) feeder.step()
-    if (plate.pendingRows > 0) {
-      current = PartitionVectors.wrap(plate.takeBatch(), partTyped)
-      emitted += current.numRows; true
-    } else false
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
-  override def close(): Unit = feeder.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftSources.skippedBytesMetric(if (plate == null) 0L else plate.totalSkippedBytes)
+  // rows) and restarts only the parser, after dropping the abandoned
+  // row's partial state (nothing to drop on the first parser)
+  protected val feeder = new RangeFeeder[Long](part, conf,
+    () => { plate.abandonPartialRow(); new JsonParser(plate, mode) }, '\n', dropMalformed)
 }
 
-/** Vectorized CSV reader: one byte range per task (whole file when the
-  * scan is unsplit), ColumnarBatch output through the same
-  * [[CsvRangeFeeder]] realignment protocol as the row reader — so opt-in
-  * splittable CSV scans stay vectorized.
+/** Vectorized CSV reader: one byte range per task (the whole file unless
+  * the scan is `splittable`; see [[RangeFeeder]]), ColumnarBatch output —
+  * so opt-in splittable CSV scans stay vectorized.
   */
 final class GraftCsvColumnarReader(
     part: GraftInputPartition,
@@ -2893,53 +2926,97 @@ final class GraftCsvColumnarReader(
     limit: Int = -1,
     partSpec: Array[(Int, Int, org.apache.spark.sql.types.DataType)] = Array.empty,
     fullDataCols: Array[String] = Array.empty)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    extends GraftColumnarReader(part, conf, limit, partSpec) {
 
-  // see GraftJsonColumnarReader's twin: masked ordinals drop in the
-  // plate, and plate filters run under the mask (the plate counts
-  // filter-skipped rows' ordinals itself)
-  private val dvMask: DeletionVectors.Mask =
-    if (part.dvKeepRuns != null) DeletionVectors.Mask.keepOnly(part.dvKeepRuns)
-    else if (part.dv == null) null
-    else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
-  private val plate =
+  protected val plate =
     new ColumnarPlate(schema, filters,
       emptyCellsAsNull = true, mask = dvMask,
       maskStartOrd = part.startOrd) // CSV: empty cell = NULL
-  // a mid-file range never sees the header row: hand it the column order
-  private val effConfig =
-    if (part.start > 0 && config.header && config.providedHeader.isEmpty)
-      config.copy(providedHeader = fullDataCols.toSeq)
-    else config
-  private val parser = new CsvParser(plate, effConfig)
-  private val feeder = new CsvRangeFeeder(
-    part, conf, parser, if (config.row2 != 0) config.row2 else config.row1)
-  private val partTyped = PartitionVectors.typed(partSpec, part.partValues)
-  private var emitted = 0L
-  private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (plate.pendingRows == 0 && !feeder.isExhausted) feeder.step()
-    if (plate.pendingRows > 0) {
-      current = PartitionVectors.wrap(plate.takeBatch(), partTyped)
-      emitted += current.numRows; true
-    } else false
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
-  override def close(): Unit = feeder.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftSources.skippedBytesMetric(plate.totalSkippedBytes)
+  protected val feeder = RangeFeeder.csv(part, conf, plate, config, fullDataCols)
 }
 
-/** Streams one byte range of a JSON-lines file through the core parser.
-  * Range protocol (Hadoop text-split convention): a reader with start > 0
-  * first discards bytes through the first '\n' at/after `start`; every
-  * reader keeps consuming past `end` until the first '\n' at/after `end`.
-  * Adjacent ranges therefore partition rows exactly.
+/** Base of the row-delivering JSON and CSV readers: steps the
+  * [[RangeFeeder]] until the queue holds a row. Plates hand rows to
+  * [[emit]], the one gate that numbers each row with its file ordinal,
+  * drops deletion-masked rows and stamps survivors.
   */
+private[spark] abstract class GraftRowReader(
+    part: GraftInputPartition,
+    conf: Configuration,
+    limit: Int,
+    partSpec: Array[(Int, Int, org.apache.spark.sql.types.DataType)],
+    rowIdxSlot: Int) extends PartitionReader[InternalRow] {
+
+  protected final val queue = new mutable.ArrayDeque[InternalRow]
+  // typed partition values for this split, stamped into every row (hive
+  // semantics: the directory value wins over any same-named data field)
+  private val partTyped = PartitionVectors.typed(partSpec, part.partValues)
+  // deletion vector: the file's deleted ordinals as validated runs —
+  // O(runs) memory however many rows are masked; rows arrive in file
+  // order, so the mask's pointer walk is O(1) amortized
+  private val dvMask = DeletionVectors.partitionMask(conf, part)
+  // row ordinal within the FILE: whole-file partitions count from 0;
+  // block-pruned aligned ranges start at the planner-derived ordinal
+  private var rowOrdinal = part.startOrd
+  private var emitted = 0L
+  private var current: InternalRow = _
+  /** The schema-driven plate: it pools rows and counts the rows its
+    * filters drop. Null for the variant plates, which do neither.
+    */
+  protected var rowPlate: RowPlate = null
+  protected val feeder: RangeFeeder[Long]
+  /** Bytes the reader's plate skipped without tokenizing. */
+  protected def skippedBytes: Long
+
+  protected final def stamp(row: InternalRow): InternalRow = {
+    var i = 0
+    while (i < partTyped.length) {
+      row.asInstanceOf[GenericInternalRow].update(partTyped(i)._1, partTyped(i)._2)
+      i += 1
+    }
+    row
+  }
+
+  // count the TRUE file ordinal — folding in the rows the PLATE dropped
+  // before this one (SkipRow pushdown / null-demand checks; each occupied
+  // an ordinal), so parse-level filtering composes with masks and
+  // provenance — then drop masked rows (recycling them to the plate's row
+  // pool) and stamp partition values + the provenance ordinal on survivors
+  protected final def emit(row: InternalRow): Unit = {
+    if (rowPlate != null) rowOrdinal += rowPlate.drainSkippedRows()
+    val ord = rowOrdinal; rowOrdinal += 1
+    if (dvMask != null && dvMask.masked(ord)) {
+      if (rowPlate != null) rowPlate.recycle(row)
+      return
+    }
+    stamp(row)
+    if (rowIdxSlot >= 0)
+      row.asInstanceOf[GenericInternalRow].update(rowIdxSlot, ord)
+    queue.append(row)
+  }
+
+  final override def next(): Boolean = {
+    // pushed limit satisfied: stop parsing bytes entirely (Terminate analog)
+    if (limit >= 0 && emitted >= limit) return false
+    // the previously returned row is dead once the consumer advances
+    // (DSv2 row-reuse contract): hand it back to the plate's row pool
+    if (current != null && rowPlate != null) {
+      rowPlate.recycle(current)
+      current = null
+    }
+    while (queue.isEmpty && !feeder.isExhausted) feeder.step()
+    if (queue.nonEmpty) { current = queue.removeHead(); emitted += 1; true }
+    else false
+  }
+
+  final override def get(): InternalRow = current
+  final override def close(): Unit = feeder.close()
+
+  final override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(skippedBytes)
+}
+
+/** Row-delivering JSON reader over one byte range (see [[RangeFeeder]]). */
 final class GraftJsonPartitionReader(
     part: GraftInputPartition,
     schema: StructType,
@@ -2954,64 +3031,14 @@ final class GraftJsonPartitionReader(
     rowIdxSlot: Int = -1,
     fastSatTail: Boolean = false,
     tz: String = "UTC")
-    extends PartitionReader[InternalRow] {
+    extends GraftRowReader(part, conf, limit, partSpec, rowIdxSlot) {
 
-  private var emitted = 0L
-  private val queue = new mutable.ArrayDeque[InternalRow]
-  // typed partition values for this split, stamped into every row (hive
-  // semantics: the directory value wins over any same-named data field)
-  private val partTyped: Array[(Int, Any)] = partSpec.map { case (ri, pi, dt) =>
-    val raw = part.partValues(pi)
-    (ri, if (raw == null) null else Conversions.fromString(dt, raw))
-  }
-  // row ordinal within the FILE: whole-file partitions count from 0;
-  // block-pruned aligned ranges start at the planner-derived ordinal
-  private var rowOrdinal = part.startOrd
-  // deletion vector: the file's deleted ordinals as validated runs —
-  // O(runs) memory however many rows are masked; rows arrive in file
-  // order, so the mask's pointer walk is O(1) amortized
-  private val dvMask: DeletionVectors.Mask =
-    if (part.dvKeepRuns != null) DeletionVectors.Mask.keepOnly(part.dvKeepRuns)
-    else if (part.dv == null) null
-    else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
-  @inline private def masked(ord: Long): Boolean =
-    dvMask != null && dvMask.masked(ord)
-  @inline private def stamp(row: InternalRow): InternalRow = {
-    var i = 0
-    while (i < partTyped.length) {
-      row.asInstanceOf[GenericInternalRow].update(partTyped(i)._1, partTyped(i)._2)
-      i += 1
-    }
-    row
-  }
-  // single emission gate for schema-driven rows: count the TRUE file
-  // ordinal — folding in the rows the PLATE dropped before this one
-  // (SkipRow pushdown / null-demand checks; each occupied an ordinal),
-  // so parse-level filtering composes with masks and provenance — then
-  // drop masked rows (recycling them to the plate's row pool) and stamp
-  // partition values + the provenance ordinal on survivors
-  private def emit(row: InternalRow): Unit = {
-    if (rowPlate != null) rowOrdinal += rowPlate.drainSkippedRows()
-    val ord = rowOrdinal; rowOrdinal += 1
-    if (masked(ord)) {
-      if (rowPlate != null) rowPlate.recycle(row)
-      return
-    }
-    val s = stamp(row)
-    if (rowIdxSlot >= 0)
-      s.asInstanceOf[GenericInternalRow].update(rowIdxSlot, ord)
-    queue.append(s)
-  }
-  // variant plates never stamped partition values — keep that, add the gate
-  // (they carry no plate filters, so there is nothing to drain)
-  private def emitRaw(row: InternalRow): Unit = {
-    val ord = rowOrdinal; rowOrdinal += 1
-    if (!masked(ord)) queue.append(row)
-  }
   // VARIANT columns select open-typed ingestion: shredded path-extraction
   // columns (pushed variant_get, metadata-tagged) parse only the requested
   // subtrees; a bare single VARIANT column captures whole rows; any other
-  // schema takes the schema-driven pushdown plate
+  // schema takes the schema-driven pushdown plate. A variant schema holds
+  // no partition or row-index column, so `emit` only numbers and masks
+  // the variant plates' rows.
   private val shreddedPaths: Option[Array[Array[String]]] =
     if (schema.nonEmpty && schema.forall(_.dataType == org.apache.spark.sql.types.VariantType) &&
         schema.exists(_.metadata.contains(GraftSources.VariantMetadataKey)))
@@ -3020,16 +3047,22 @@ final class GraftJsonPartitionReader(
     else None
   private val variantMode = schema.length == 1 &&
     schema.head.dataType == org.apache.spark.sql.types.VariantType
-  // recovery replaces parser AND plate; completed rows already sit in queue
-  private var rowPlate: RowPlate = null
+  // recovery replaces parser AND plate; completed rows already sit in
+  // queue, and the replaced plate's skipped bytes carry over
   private var pathPlate: PathVariantPlate = null
   private var parserRef: JsonParser[Long] = null
+  private var retiredSkipped = 0L
+  private def plateSkipped: Long =
+    if (rowPlate != null) rowPlate.totalSkippedBytes
+    else if (pathPlate != null) pathPlate.totalSkippedBytes
+    else 0L
   private def mkParser(): JsonParser[Long] = {
+    retiredSkipped += plateSkipped
     val plate: graft.core.Plate[Long] = shreddedPaths match {
       case Some(paths) =>
-        pathPlate = new PathVariantPlate(paths, emitRaw(_))
+        pathPlate = new PathVariantPlate(paths, emit(_))
         pathPlate
-      case None if variantMode => new VariantRowPlate(emitRaw(_))
+      case None if variantMode => new VariantRowPlate(emit(_))
       case None =>
         // corrupt-capture / drop modes need full per-row validation, which
         // the saturation skip's error-check elision would subvert.
@@ -3069,118 +3102,15 @@ final class GraftJsonPartitionReader(
         row.update(corruptIdx, org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes))
       queue.append(stamp(row))
     }
-  private val feeder =
-    new JsonRangeFeeder(part, conf, () => mkParser(), dropMalformed, onCorrupt)
-  private var current: InternalRow = _
+  protected val feeder =
+    new RangeFeeder[Long](part, conf, () => mkParser(), '\n', dropMalformed, onCorrupt)
 
-  override def next(): Boolean = {
-    // pushed limit satisfied: stop parsing bytes entirely (Terminate analog)
-    if (limit >= 0 && emitted >= limit) return false
-    // the previously returned row is dead once the consumer advances
-    // (DSv2 row-reuse contract): hand it back to the plate's row pool
-    if (current != null && rowPlate != null) {
-      rowPlate.recycle(current)
-      current = null
-    }
-    while (queue.isEmpty && !feeder.isExhausted) feeder.step()
-    if (queue.nonEmpty) { current = queue.removeHead(); emitted += 1; true }
-    else false
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = feeder.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftSources.skippedBytesMetric(
-      if (rowPlate != null) rowPlate.totalSkippedBytes
-      else if (pathPlate != null) pathPlate.totalSkippedBytes
-      else 0L)
+  protected def skippedBytes: Long = retiredSkipped + plateSkipped
 }
 
-/** Feeds one byte range of a splittable CSV file into a parser, using the
-  * same Hadoop text-split realignment protocol as [[JsonRangeFeeder]]:
-  * ranges with start > 0 discard through the first row-delimiter byte
-  * at/after `start`, every range consumes past `end` to the next
-  * delimiter. Sound only when values contain no row delimiters — the
-  * `splittable` option's contract.
-  */
-private[spark] final class CsvRangeFeeder[A](
-    part: GraftInputPartition,
-    conf: Configuration,
-    parser: graft.core.BaseParser[A],
-    alignByte: Byte) {
-
-  private val path = new Path(part.path)
-  private val in = new RangeInput(path, conf)
-  private val chunk = new Array[Byte](256 * 1024)
-  private var pos = part.start
-  private var aligned = part.start == 0 || part.aligned
-  private var exhausted = false
-
-  if (part.start > 0) in.seek(part.start)
-
-  def isExhausted: Boolean = exhausted
-
-  private def raise(r: ParseResult[A]): Unit = r match {
-    case ParseResult.Failure(e) => throw e
-    case ParseResult.Partial(_, _) => raise(parser.continueParse())
-    case _ => ()
-  }
-
-  private def indexOf(b: Byte, buf: Array[Byte], from: Int, until: Int): Int = {
-    var i = from
-    while (i < until) {
-      if (buf(i) == b) return i
-      i += 1
-    }
-    -1
-  }
-
-  def step(): Unit = {
-    if (exhausted) return
-    val n = in.read(chunk)
-    if (n < 0) {
-      raise(parser.finish())
-      exhausted = true
-      return
-    }
-    val chunkStart = pos
-    pos += n
-    var off = 0
-    if (!aligned) {
-      val nl = indexOf(alignByte, chunk, 0, n)
-      if (nl < 0) return
-      if (chunkStart + nl >= part.end) { exhausted = true; return }
-      off = nl + 1
-      aligned = true
-    }
-    if (chunkStart + n <= part.end || part.end == part.fileLen) {
-      raise(parser.absorb(chunk, off, n - off))
-    } else if (part.aligned) {
-      // exact (block-pruned) range: `end` is a writer-guaranteed row
-      // boundary — absorb strictly up to it and finish
-      val upto = (part.end - chunkStart).toInt
-      if (upto > off) raise(parser.absorb(chunk, off, upto - off))
-      raise(parser.finish())
-      exhausted = true
-    } else {
-      val fromRel = math.max(off, math.max(0L, part.end - chunkStart).toInt)
-      val nl = indexOf(alignByte, chunk, fromRel, n)
-      if (nl < 0) raise(parser.absorb(chunk, off, n - off)) // boundary row continues
-      else {
-        raise(parser.absorb(chunk, off, nl + 1 - off))
-        raise(parser.finish())
-        exhausted = true
-      }
-    }
-  }
-
-  def close(): Unit = in.close()
-}
-
-/** Streams one whole CSV file through the core parser (quoted row
-  * delimiters make byte-range splits unsound; parallelism is per file).
+/** Row-delivering CSV reader over one byte range: the whole file unless
+  * the scan is `splittable` (quoted row delimiters make byte-range splits
+  * unsound; see [[RangeFeeder]]).
   */
 final class GraftCsvPartitionReader(
     part: GraftInputPartition,
@@ -3192,63 +3122,11 @@ final class GraftCsvPartitionReader(
     partSpec: Array[(Int, Int, org.apache.spark.sql.types.DataType)] = Array.empty,
     fullDataCols: Array[String] = Array.empty,
     rowIdxSlot: Int = -1)
-    extends PartitionReader[InternalRow] {
+    extends GraftRowReader(part, conf, limit, partSpec, rowIdxSlot) {
 
-  private var emitted = 0L
-  private val queue = new mutable.ArrayDeque[InternalRow]
-  private val partTyped: Array[(Int, Any)] = partSpec.map { case (ri, pi, dt) =>
-    val raw = part.partValues(pi)
-    (ri, if (raw == null) null else Conversions.fromString(dt, raw))
-  }
-  // file ordinal: whole files count from 0, aligned block ranges from
-  // the planner-derived starting ordinal
-  private var rowOrdinal = part.startOrd
-  // deletion vector (see the JSON reader): ascending mask + one pointer
-  private val dvMask: DeletionVectors.Mask =
-    if (part.dvKeepRuns != null) DeletionVectors.Mask.keepOnly(part.dvKeepRuns)
-    else if (part.dv == null) null
-    else DeletionVectors.readMask(conf, new Path(part.dv), part.dvTarget)
-  // plate filters run under masks/provenance too: the plate counts the
-  // rows it drops and the emission folds them into the ordinal (each
-  // dropped row still occupied a file ordinal)
-  private val plate: RowPlate = new RowPlate(schema, filters, { r =>
-    rowOrdinal += plate.drainSkippedRows()
-    val ord = rowOrdinal; rowOrdinal += 1
-    var drop = false
-    if (dvMask != null) drop = dvMask.masked(ord)
-    if (!drop) {
-      var i = 0
-      while (i < partTyped.length) {
-        r.asInstanceOf[GenericInternalRow].update(partTyped(i)._1, partTyped(i)._2)
-        i += 1
-      }
-      if (rowIdxSlot >= 0)
-        r.asInstanceOf[GenericInternalRow].update(rowIdxSlot, ord)
-      queue.append(r)
-    }
-  }, emptyCellsAsNull = true) // CSV: empty cell = NULL (Spark/DuckDB parity)
-  // a mid-file range never sees the header row: hand it the column order
-  private val effConfig =
-    if (part.start > 0 && config.header && config.providedHeader.isEmpty)
-      config.copy(providedHeader = fullDataCols.toSeq)
-    else config
-  private val parser = new CsvParser(plate, effConfig)
-  private val feeder = new CsvRangeFeeder(
-    part, conf, parser, if (config.row2 != 0) config.row2 else config.row1)
-  private var current: InternalRow = _
+  // CSV: empty cell = NULL (Spark/DuckDB parity)
+  rowPlate = new RowPlate(schema, filters, emit(_), emptyCellsAsNull = true)
+  protected val feeder = RangeFeeder.csv(part, conf, rowPlate, config, fullDataCols)
 
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    // DSv2 row-reuse contract: the previous row is dead once we advance
-    if (current != null) { plate.recycle(current); current = null }
-    while (queue.isEmpty && !feeder.isExhausted) feeder.step()
-    if (queue.nonEmpty) { current = queue.removeHead(); emitted += 1; true }
-    else false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = feeder.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftSources.skippedBytesMetric(plate.totalSkippedBytes)
+  protected def skippedBytes: Long = rowPlate.totalSkippedBytes
 }

@@ -1,7 +1,6 @@
 package graft.spark
 
 import graft.core._
-import graft.core.json.JsonParser
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
@@ -136,22 +135,5 @@ object SchemaInference {
 
     def finishBatch(terminal: Boolean): T = acc
     def skipped(bytes: Int): Unit = ()
-  }
-
-  /** Infer from raw bytes (sampled prefix of the input). Rows that end
-    * beyond the sample are dropped by the parser's incompleteness handling:
-    * we absorb and take whatever completed.
-    */
-  def inferJson(bytes: Array[Byte], mode: JsonParser.Mode): StructType = {
-    val plate = new InferencePlate
-    val parser = new JsonParser[T](plate, mode)
-    var res = parser.absorb(bytes)
-    var continue = true
-    while (continue) res match {
-      case ParseResult.Partial(_, _) => res = parser.continueParse()
-      case _ => continue = false
-    }
-    parser.finish() // terminal type (errors tolerated: partial sample)
-    toStructType(plate.finishBatch(true))
   }
 }

@@ -10,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-/** graftSkippedBytes on the readers scans actually take: the vectorized
-  * JSON reader (ColumnarPlate), the pushed-aggregate, OFFSET and top-N
-  * wrappers, which forward their inner parse's accounting, the pushed
-  * COUNT(*) reader, and the CSV reader. Each reports
+/** graftSkippedBytes on every reader class a scan can take: the
+  * vectorized and row JSON readers (the row one also in PERMISSIVE mode),
+  * the pushed-aggregate, OFFSET and top-N wrappers, which forward their
+  * inner parse's accounting, the pushed COUNT(*) reader, and the
+  * vectorized and row CSV readers. Each reports
   * 0 < skipped <= file bytes on the scan node.
   */
 class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
@@ -115,5 +116,49 @@ class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Ad
       .select("v")
     assert(df.collect().map(_.getLong(0)).sum == (1 to 500).map(_ % 17).sum)
     assertSkipped(df, csvBytes)
+  }
+
+  test("the row CSV reader reports the bytes its parse skipped") {
+    val df = spark.read.format("graft-csv").option("vectorized", "false")
+      .schema("id LONG, v LONG, note STRING, w DOUBLE, z STRING").load(csvPath)
+      .select("v")
+    assert(df.collect().map(_.getLong(0)).sum == (1 to 500).map(_ % 17).sum)
+    assert(!scan(df).supportsColumnar, "vectorized=false must take the row reader")
+    assertSkipped(df, csvBytes)
+  }
+
+  test("the row JSON reader reports the bytes its parse skipped") {
+    val df = spark.read.format("graft-json").option("vectorized", "false")
+      .schema("id LONG, v LONG, note STRING, tags ARRAY<STRING>, w STRUCT<p: LONG, q: STRING>")
+      .load(path).select("v")
+    assert(df.collect().length == 500)
+    assert(!scan(df).supportsColumnar, "vectorized=false must take the row reader")
+    assertSkipped(df, fileBytes)
+  }
+
+  test("the row JSON reader keeps its skipped bytes across a drop-malformed resync") {
+    val lines = (1 to 1000).map(i => s"""{"id": $i, "note": "${"x" * 50}"}""")
+      .updated(900, """{"id": oops, "note": "y"}""")
+    val p = dir.resolve("resync.json")
+    Files.write(p, lines.mkString("\n").getBytes(UTF_8))
+    def read(vectorized: Boolean): DataFrame = spark.read.format("graft-json")
+      .option("badrecords", "drop").option("vectorized", vectorized.toString)
+      .schema("id LONG, note STRING").load(p.toString).select("id")
+    val (row, columnar) = (read(vectorized = false), read(vectorized = true))
+    assert(row.collect().length == 999 && columnar.collect().length == 999)
+    assert(!scan(row).supportsColumnar && scan(columnar).supportsColumnar)
+    // the rows after the resync are a tenth of the file: the row reader
+    // must count the replaced plate's skips too, as the columnar one does
+    assert(skipped(row) == skipped(columnar), (skipped(row), skipped(columnar)))
+    assertSkipped(row, Files.size(p))
+  }
+
+  test("the row JSON reader reports skipped bytes under badrecords=keep") {
+    val df = spark.read.format("graft-json").option("badrecords", "keep")
+      .schema("id LONG, v LONG, note STRING, tags ARRAY<STRING>, w STRUCT<p: LONG, q: STRING>")
+      .load(path).select("id", "note")
+    assert(df.collect().length == 500)
+    assert(!scan(df).supportsColumnar, "PERMISSIVE must take the row reader")
+    assertSkipped(df, fileBytes)
   }
 }

@@ -179,6 +179,22 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.queryExecution.executedPlan.toString)
   }
 
+  test("splittable CSV: a pushed COUNT(*) counts every row once") {
+    // each range counts only its own rows, and a mid-file range does not
+    // take its first row for the header
+    val p = write("split-count.csv",
+      "id,name,grp\n" + (1 to 400).map(i => s"$i,name-$i,${i % 7}").mkString("\n") + "\n")
+    val df = spark.read.format("graft-csv").option("linesep", "\n")
+      .option("header", "true").option("splittable", "true")
+      .option("maxsplitbytes", "1023").load(p)
+    val scans = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }
+    assert(scans.head.scan.toBatch.planInputPartitions().length >= 4)
+    assert(df.collect().length == 400)
+    assert(df.count() == 400L)
+  }
+
   test("hive-partitioned directories: columns, values, and file pruning") {
     val base = Files.createTempDirectory("graft-part")
     def writePart(date: String, region: Long, ids: Range): Unit = {
