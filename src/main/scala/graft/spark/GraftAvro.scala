@@ -467,38 +467,21 @@ final class GraftAvroTable(
     new GraftAvroScanBuilder(tblSchema, GraftSources.mergeTableProps(properties, options))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // these write options are honored by the json/csv sinks; silently
-    // dropping them here would void the guarantees they advertise.
     // mergeschema: the avro read path resolves each file's embedded
     // schema, not the log's merged one, so accepting the merge would
     // record a schema the reader cannot yet serve — refuse.
-    // partitionby included: the avro writer has no k=v layout path, and
-    // silently flattening a partitioned rewrite would null the partition
-    // column on read-back (the reader serves partCols from the listing)
+    // check / partitionby: the shared write path would honour both, but
+    // no avro spec covers CHECK failures or a partitioned avro read-back
+    // yet, so they stay refused until one does
     Seq("check", "mergeschema", "partitionby").foreach { opt =>
       require(info.options.get(opt) == null,
         s"graft-avro does not support option('$opt', ...) yet — " +
           "use graft-json/graft-csv for CHECK constraints, schema evolution, " +
           "and partitioned layouts")
     }
-    new GraftAvroWriteBuilder(
-      Option(info.options.get("path")).orElse(Option(properties.get("path")))
-        .orElse(Option(properties.get("location"))).orNull,
-      info.schema(),
-      GraftSources.broadcastHadoopConf(),
-      Option(info.options.get("codec"))
-        .orElse(Option(properties.get("codec"))).getOrElse("none")
-        .toLowerCase(java.util.Locale.ROOT),
-      info.queryId(),
-      GraftSink.blockBytesFrom(info.options),
-      // COW rewrite / merge-on-read commit riders (same contract as the
-      // json/csv sinks: adds, removes, and dv attachments in ONE entry)
-      GraftSources.commitRemoves(info.options),
-      GraftSources.commitRemovesBase(info.options),
-      GraftSources.commitDvs(info.options),
-      GraftSources.commitDvBase(info.options),
-      GraftSources.commitChangeFiles(info.options),
-      GraftSources.commitOpTag(info.options))
+    GraftSink.newWriteBuilder(info, properties, Array.empty) { opt =>
+      AvroEncoding(opt("codec").getOrElse("none").toLowerCase(java.util.Locale.ROOT))
+    }
   }
 }
 
@@ -1195,217 +1178,48 @@ final class GraftAvroCountReader(
 
 // ====================================================================== write
 
-final class GraftAvroWriteBuilder(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    queryId: String,
-    blockBytes: Long = GraftSink.DefaultBlockBytes,
-    removes: Seq[String] = Nil,
-    removesBase: Long = -1L,
-    dvs: Seq[(String, String)] = Nil,
-    dvBase: Map[String, String] = Map.empty,
-    changeFiles: Seq[(String, String)] = Nil,
-    opTag: String = null)
-    extends WriteBuilder with SupportsTruncate {
-
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new GraftAvroBatchWrite(path, schema, conf, codec, doTruncate, queryId,
-        blockBytes, removes, removesBase, dvs, dvBase, changeFiles, opTag)
-    override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      // commit riders are batch COW/merge concepts; a stream never
-      // carries them — refuse loudly rather than silently dropping
-      require(removes.isEmpty && dvs.isEmpty,
-        "commitremoves/commitdvs are batch rewrite riders — " +
-          "meaningless on a streaming write")
-      // complete output mode truncates the builder; the epoch files
-      // APPEND, so honoring it silently would stack every epoch's full
-      // result — refuse (aggregate streams upsert via foreachBatch)
-      require(!doTruncate,
-        "graft-avro streaming appends epoch files; Complete output mode " +
-          "(per-epoch truncation) is not supported — use update/append, " +
-          "or foreachBatch + TrainingData.upsert for full-result refresh")
-      new GraftAvroStreamingWrite(path, schema, conf, codec, blockBytes)
-    }
-  }
-}
-
-/** Avro streaming sink (text-sink parity): one container file per
-  * (epoch, partition) with a DETERMINISTIC name, so replayed epochs
-  * overwrite their own output (the delete-then-publish in the data
-  * writer's commit makes the replay idempotent). Streaming epochs stay
-  * OUT of the commit log, exactly like the text sinks — followLog
-  * tails batch commits only; raw/whole-file streams discover epoch
-  * files by listing.
+/** `format("graft-avro")` rows: one Avro object container per part file,
+  * compressed per container block by `codec`. A zero-row part is a
+  * header-only container.
   */
-final class GraftAvroStreamingWrite(
-    path: String,
+final case class AvroEncoding(codec: String) extends RowEncoding {
+  GraftAvro.codecFor(codec) // refuse an unknown codec before any task runs
+
+  override def ext: String = "avro"
+
+  // a BINARY format: int and long encode differently, so the text
+  // widening lattice cannot apply to a recorded schema
+  override def widen: Boolean = false
+
+  override def open(out: org.apache.hadoop.fs.FSDataOutputStream, dataSchema: StructType,
+      blockBytes: Long): RowEncoder = new AvroEncoder(out, dataSchema, codec, blockBytes)
+}
+
+// the SAME value-level stats the text sinks record (min/max/nulls/blooms —
+// format-independent facts about the rows), so avro scans get file pruning
+// and the manifest's one-read-per-directory planning. Intra-file blocks
+// ride avro's OWN framing: the writer forces a container sync boundary
+// about every `blockBytes` bytes and records each range's rows +
+// per-column min/max/nulls as `blk` lanes. Boundaries are PRE-marker byte
+// positions (`DataFileWriter.sync()` returns the post-marker position), so
+// the reader's standard sync(start)/pastSync(end) range protocol realigns
+// exactly at block edges: per-range ROW COUNTS are exact (splits over
+// deletion-vector-masked / row-indexed files carry starting ordinals, the
+// q213 fix) and selective scans prune blocks (the q199 lane for avro).
+// Unlike the text lanes, compression keeps blocks usable — positions are
+// real file offsets; avro compresses per container block.
+private final class AvroEncoder(
+    out: org.apache.hadoop.fs.FSDataOutputStream,
     schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
     codec: String,
     blockBytes: Long)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  // column mapping: a stream appending to a renamed table must write
-  // PHYSICAL keys or readers would see nulls — resolved ONCE at stream
-  // start (this class is constructed per query; the factory method below
-  // runs PER EPOCH, where a log read would be wasted I/O and a mid-stream
-  // ALTER RENAME could silently flip later epochs' keys)
-  private val physSchema: StructType = {
-    val dir = new Path(path)
-    dir.getFileSystem(conf.value.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
-  }
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftAvroStreamingWriterFactory(path, physSchema, conf, codec, blockBytes)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class GraftAvroStreamingWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    blockBytes: Long)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new GraftAvroDataWriter(path, schema, conf.value.value, codec,
-      f"part-$epochId%05d", partitionId, taskId, blockBytes,
-      includeTaskId = false)
-}
-
-final class GraftAvroBatchWrite(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    doTruncate: Boolean,
-    queryId: String,
-    blockBytes: Long,
-    removes: Seq[String],
-    removesBase: Long,
-    dvs: Seq[(String, String)],
-    dvBase: Map[String, String],
-    changeFiles: Seq[(String, String)] = Nil,
-    opTag: String = null)
-    extends BatchWrite {
-
-  require(removes.isEmpty || !doTruncate,
-    "option(\"commitremoves\", ...) is meaningless with mode(\"overwrite\") — " +
-      "the truncate wipes the commit log the removes would amend")
-  require(dvs.isEmpty || !doTruncate,
-    "option(\"commitdvs\", ...) is meaningless with mode(\"overwrite\") — " +
-      "the truncate wipes the commit log the vectors would amend")
-
-  private var commitSchema: GraftSink.ResolvedSchema =
-    GraftSink.ResolvedSchema(schema, null)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // mergeSchema hard-false (the provider refuses the option — the avro
-    // read path resolves per-file embedded schemas and cannot serve a
-    // merged one) and widen = false: avro is a BINARY format — int and
-    // long encode differently, so the text widening lattice cannot apply
-    commitSchema = GraftSink.resolveCommitSchema(
-      conf.value.value, path, schema, doTruncate, mergeSchema = false, widen = false)
-    if (doTruncate) {
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value.value)
-      if (fs.exists(dir))
-        fs.listStatus(dir).foreach(s => fs.delete(s.getPath, true))
-      else fs.mkdirs(dir)
-    } else {
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf.value.value)
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-    }
-    // column mapping: serialize under PHYSICAL field names (see
-    // GraftSink.toPhysicalSchema — avro resolves reader fields by name)
-    new GraftAvroWriterFactory(path,
-      GraftSink.toPhysicalSchema(schema, commitSchema.record), conf, codec,
-      GraftSink.batchNamePrefix(queryId), blockBytes)
-  }
-  // same put-if-absent commit log as the json/csv sinks (docs/
-  // TABLE_FORMAT.md): avro tables get versionAsOf / changesSinceVersion
-  // / vacuum safety for free through the shared listing, and the
-  // removes/dv riders make COW rewrites and merge-on-read atomic. The
-  // manifest compaction folds every task's rendered stats into one
-  // per-directory read, exactly like the text sinks.
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    GraftManifest.write(conf.value.value, messages)
-    GraftCommitLog.append(conf.value.value, path, messages, removes,
-      commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
-      changeFiles, opTag)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class GraftAvroWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    namePrefix: String,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftAvroDataWriter(path, schema, conf.value.value, codec, namePrefix,
-      partitionId, taskId, blockBytes)
-}
-
-final class GraftAvroDataWriter(
-    dir: String,
-    schema: StructType,
-    conf: org.apache.hadoop.conf.Configuration,
-    codec: String,
-    namePrefix: String,
-    partitionId: Int,
-    taskId: Long,
-    blockBytes: Long = GraftSink.DefaultBlockBytes,
-    // streaming epochs need DETERMINISTIC final names (epoch+partition)
-    // so a replayed epoch overwrites its own files instead of duplicating
-    // rows; batch names stay task-unique under the query-scoped prefix
-    includeTaskId: Boolean = true)
-    extends DataWriter[InternalRow] {
+    extends RowEncoder(new FileStatsCollector(schema, blockBytes = blockBytes)) {
 
   private val avroSchema = GraftAvro.toAvroSchema(schema)
   private val convs: Array[GraftAvro.WConv] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       GraftAvro.writerConv(f.dataType, avroSchema.getFields.get(i).schema())
     }
-  // the SAME value-level stats the text sinks record (min/max/nulls/
-  // blooms — format-independent facts about the rows), so avro scans get
-  // file pruning and the manifest's one-read-per-directory planning.
-  // Intra-file blocks (round 11) ride avro's OWN framing: the writer
-  // forces a container sync boundary about every `blockBytes` bytes and
-  // records each range's rows + per-column min/max/nulls as `blk` lanes.
-  // Boundaries are PRE-marker byte positions (`DataFileWriter.sync()`
-  // returns the post-marker position), so the reader's standard
-  // sync(start)/pastSync(end) range protocol realigns exactly at block
-  // edges: per-range ROW COUNTS are exact (splits over deletion-vector-
-  // masked / row-indexed files carry starting ordinals, the q213 fix) and
-  // selective scans prune blocks (the q199 lane for avro). Unlike the
-  // text lanes, compression keeps blocks usable — positions are real
-  // file offsets; avro compresses per container block.
-  private val stats = new FileStatsCollector(schema, blockBytes = blockBytes)
-  // task-attempt-unique temp name, atomically renamed at commit — retried
-  // tasks can never leave a half-written visible file
-  private val finalPath = new Path(dir,
-    if (includeTaskId) f"$namePrefix-$partitionId%05d-$taskId.avro"
-    else f"$namePrefix-$partitionId%05d.avro")
-  private val tmpPath = new Path(dir, f".$namePrefix-$partitionId%05d-$taskId.avro.inprogress")
-  private val fs = finalPath.getFileSystem(conf)
-  private val out = fs.create(tmpPath, true)
   private val writer = {
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avroSchema))
     w.setCodec(GraftAvro.codecFor(codec))
@@ -1420,7 +1234,6 @@ final class GraftAvroDataWriter(
       w.setSyncInterval(math.max(32L, blockBytes).toInt)
     w.create(avroSchema, out)
   }
-  private var rows = 0L
   // last recorded block boundary (pre-marker). The budget check reads the
   // UNDERLYING stream position, which lags the logical position by at
   // most the writer's in-memory block buffer (~64 KB) — boundaries land
@@ -1437,7 +1250,6 @@ final class GraftAvroDataWriter(
     }
     writer.append(rec)
     stats.observe(row)
-    rows += 1
     if (blockBytes > 0 && out.getPos - lastBoundary >= blockBytes) {
       // force the container boundary: flushes the pending block (+ its
       // sync marker) and returns the post-marker position — even when the
@@ -1449,43 +1261,13 @@ final class GraftAvroDataWriter(
     }
   }
 
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    if (rows == 0L) {
-      fs.delete(tmpPath, false)
-      // deterministic (streaming-epoch) names: a replayed epoch that now
-      // routes ZERO rows to this partition must remove the prior
-      // attempt's file — leaving it would resurrect its rows. Sidecar
-      // drops first (no-stats beats stale-stats on a crash between).
-      if (!includeTaskId) {
-        fs.delete(FileStats.sidecarFor(finalPath), false)
-        fs.delete(finalPath, false)
-      }
-      new WriterCommitMessage {}
-    } else {
-      // a prior file's sidecar must not outlive its data: drop it BEFORE
-      // the rename so a crash between the two steps leaves no-stats
-      // (pruning disabled) rather than wrong-stats (wrong results)
-      fs.delete(FileStats.sidecarFor(finalPath), false)
-      fs.delete(finalPath, false)
-      GraftLogStore.forConf(conf).publish(fs, tmpPath, finalPath, overwrite = false)
-      val dataLen = fs.getFileStatus(finalPath).getLen
-      // final block: everything since the last forced boundary, ending at
-      // the published length (rows-less when close() flushed nothing new —
-      // the previous block then extends over the trailing marker bytes)
-      stats.closeBlockAt(dataLen)
-      val rendered = FileStats.render(stats.snapshot(dataLen))
-      try {
-        val sout = fs.create(FileStats.sidecarFor(finalPath), true)
-        try sout.write(rendered.getBytes("UTF-8")) finally sout.close()
-      } catch { case _: Exception => () } // stats are best-effort
-      GraftCommit(finalPath.toString, rendered)
-    }
+  override def close(): Unit = writer.close()
+
+  // final block: everything since the last forced boundary, ending at the
+  // published length (rows-less when close() flushed nothing new — the
+  // previous block then extends over the trailing marker bytes)
+  override def snapshot(len: Long): FileStats.Stats = {
+    stats.closeBlockAt(len)
+    stats.snapshot(len)
   }
-  override def abort(): Unit = {
-    try writer.close() catch { case _: Throwable => () }
-    fs.delete(tmpPath, false)
-    ()
-  }
-  override def close(): Unit = ()
 }

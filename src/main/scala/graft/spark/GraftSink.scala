@@ -9,6 +9,8 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
+import scala.jdk.CollectionConverters._
+
 /** Shared sink helpers: hive-style partition path handling for the
   * `partitionBy(...)` write path (the layout [[GraftSources.resolvePartitioned]]
   * already lists, prunes, and reads back).
@@ -87,6 +89,72 @@ object GraftSink {
     if (queryId == null || queryId.isEmpty) "part"
     else "part-" + queryId.replaceAll("[^0-9a-zA-Z]", "").take(12)
 
+  /** Text part-file extension for a `compression` codec. */
+  def textExt(base: String, codec: String, format: String): String = codec match {
+    case "gzip" => base + ".gz"
+    case "zstd" => base + ".zst"
+    case "none" => base
+    case other => throw new IllegalArgumentException(
+      s"$format compression '$other' (supported: none, gzip, zstd)")
+  }
+
+  /** (published file, rendered stats) for every file the task commit
+    * messages name; null messages (tasks that never committed) name none.
+    */
+  def committedFiles(messages: Array[WriterCommitMessage]): Seq[(String, String)] =
+    messages.toSeq.flatMap {
+      case GraftCommit(f, s) => Seq(f -> s)
+      case GraftPartitionedCommit(es) => es
+      case _ => Nil
+    }
+
+  /** Hidden marker a failed batch job's abort leaves in the table root,
+    * or null when the part names are not query-scoped (no query id).
+    */
+  def abortMarker(root: String, namePrefix: String): Path =
+    if (namePrefix == batchNamePrefix(null)) null
+    else new Path(root, s".$namePrefix.aborted")
+
+  /** Delete a published part file and, first, its sidecar. */
+  def deletePart(fs: org.apache.hadoop.fs.FileSystem, file: Path): Unit = {
+    fs.delete(FileStats.sidecarFor(file), false)
+    fs.delete(file, false)
+  }
+
+  /** The one `newWriteBuilder` of the graft tables: the write options all
+    * formats share, plus the table's row encoding, built by `encoding`
+    * from `opt` (a write option, falling back to the table's properties).
+    * A `check` or `blockbytes` table property binds every write (the
+    * Delta table-constraint semantics); a per-write option overrides.
+    */
+  def newWriteBuilder(info: LogicalWriteInfo, properties: java.util.Map[String, String],
+      partTransforms: Array[org.apache.spark.sql.connector.expressions.Transform])(
+      encoding: (String => Option[String]) => RowEncoding): WriteBuilder = {
+    def opt(k: String): Option[String] =
+      Option(info.options.get(k)).orElse(Option(properties.get(k)))
+    val merged = GraftSources.mergeTableProps(properties, info.options)
+    val enc = encoding(opt)
+    enc.checkSchema(info.schema())
+    new GraftWriteBuilder(
+      GraftWriteSpec(
+        opt("path").orElse(Option(properties.get("location"))).orNull, // location: catalog DDL tables
+        info.schema(),
+        GraftSources.broadcastHadoopConf(),
+        enc,
+        writePartCols(partTransforms, info.options),
+        checkFromOptions(merged, info.schema()),
+        blockBytesFrom(merged)),
+      info.queryId(),
+      info.options.getBoolean("mergeschema", false),
+      CommitRiders(
+        GraftSources.commitRemoves(info.options),
+        GraftSources.commitRemovesBase(info.options),
+        GraftSources.commitDvs(info.options),
+        GraftSources.commitDvBase(info.options),
+        GraftSources.commitChangeFiles(info.options),
+        GraftSources.commitOpTag(info.options)))
+  }
+
   /** A bound write-time CHECK constraint (expression + original SQL for
     * error messages); ships to the DataWriters.
     */
@@ -143,8 +211,8 @@ object GraftSink {
   }
 
   /** Evaluate a bound CHECK against one row; throw with the rendered row
-    * on violation (task fails → job fails → the atomic-rename protocol
-    * publishes nothing from failed tasks).
+    * on violation (task fails → job fails → the batch abort deletes what
+    * the job's other tasks published).
     */
   def enforceCheck(check: org.apache.spark.sql.catalyst.expressions.Expression,
       checkSql: String, row: InternalRow, schema: StructType): Unit = {
@@ -405,59 +473,147 @@ object GraftSink {
   }
 }
 
-/** DSv2 write path for `format("graft-json")`: each task streams its rows
-  * as JSON lines to a uniquely-named staging file and RENAMES it into
-  * place on task commit — rename is the atomic primitive, so speculative
-  * or retried tasks never double-publish (the loser's stage file is
-  * deleted on abort). `mode("overwrite")` maps to SupportsTruncate: the
-  * driver clears prior output before launching tasks. `partitionBy(cols)`
-  * routes rows to hive-style `col=value/` subdirectories (values %xx-
-  * escaped, nulls as __HIVE_DEFAULT_PARTITION__), with partition columns
-  * stripped from the written data — exactly the layout the graft scan
-  * lists, partition-prunes, and reads back.
-  *
-  * The reference has no sink (the Plate IS its sink, SURVEY §2.11 row
-  * "Sinks"); this is the Spark-native counterpart so a graft pipeline can
-  * round-trip JSONL without leaving the DSv2 surface.
+/** The per-format half of the graft write path: how rows become one part
+  * file's bytes and stats. Built on the driver from the write options and
+  * shipped to the tasks inside the writer factory; everything else about
+  * a write — naming, staging, publishing, partition routing, CHECK
+  * enforcement, the commit log — is shared ([[GraftDataWriter]]).
   */
-final class GraftWriteBuilder(
+trait RowEncoding extends Serializable {
+  /** File extension, compression suffix included. */
+  def ext: String
+
+  /** Whether an append may widen a recorded numeric type: text values
+    * re-parse identically under the wider type, binary encodings do not.
+    */
+  def widen: Boolean = true
+
+  /** Refuse, before any task runs, a schema this format cannot write. */
+  def checkSchema(schema: StructType): Unit = ()
+
+  /** An encoder writing rows laid out as `dataSchema` into `out`, a
+    * freshly created stage file.
+    */
+  def open(out: org.apache.hadoop.fs.FSDataOutputStream, dataSchema: StructType,
+      blockBytes: Long): RowEncoder
+}
+
+/** One part file being encoded: owns its stream and its rows' stats. */
+abstract class RowEncoder(val stats: FileStatsCollector) {
+  def write(row: InternalRow): Unit
+
+  /** Flush and close the stream. */
+  def close(): Unit
+
+  /** The stats of the published file, `len` bytes long. */
+  def snapshot(len: Long): FileStats.Stats = stats.snapshot(len)
+}
+
+/** One line per row (JSON lines, CSV) with gzip/zstd over the stream.
+  * Intra-file blocks are recorded only uncompressed, where byte offsets
+  * are file offsets (the collector's length binding would drop them for
+  * compressed members anyway, so don't pay the accounting).
+  */
+private abstract class TextEncoder(raw: java.io.OutputStream, codec: String,
+    dataSchema: StructType, blockBytes: Long, nonFiniteAsNull: Boolean = false,
+    emptyStringsAsNull: Boolean = false)
+    extends RowEncoder(new FileStatsCollector(dataSchema, nonFiniteAsNull,
+      emptyStringsAsNull, if (codec == "none") blockBytes else 0L)) {
+
+  protected val sb = new java.lang.StringBuilder(4096)
+  private val out: java.io.OutputStream = {
+    val base = new java.io.BufferedOutputStream(raw, 1 << 16)
+    codec match {
+      case "gzip" => new java.util.zip.GZIPOutputStream(base, 1 << 16)
+      case "zstd" => new java.io.BufferedOutputStream(
+        new com.github.luben.zstd.ZstdOutputStream(base), 1 << 16)
+      case _ => base
+    }
+  }
+
+  /** Append `row`'s line, terminator included, to `sb`. */
+  protected def render(row: InternalRow): Unit
+
+  /** Write `sb` out; returns its byte length. */
+  protected def emit(): Int = {
+    val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    out.write(bytes)
+    bytes.length
+  }
+
+  final override def write(row: InternalRow): Unit = {
+    sb.setLength(0)
+    render(row)
+    val n = emit()
+    stats.observe(row)
+    stats.noteBytes(n)
+  }
+
+  override def close(): Unit = out.close()
+}
+
+/** What every task of one write needs: the target, the row layout (the
+  * PHYSICAL schema under column mapping, so stats sidecars carry the
+  * physical keys too) and how rows are encoded, routed and checked.
+  */
+final case class GraftWriteSpec(
     path: String,
     schema: StructType,
     conf: Broadcast[SerializableConfiguration],
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    queryId: String = "",
-    removes: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    mergeSchema: Boolean = false,
-    blockBytes: Long = GraftSink.DefaultBlockBytes,
-    removesBase: Long = -1L,
-    dvs: Seq[(String, String)] = Nil,
-    dvBase: Map[String, String] = Map.empty,
-    changeFiles: Seq[(String, String)] = Nil,
-    opTag: String = null)
+    encoding: RowEncoding,
+    partCols: Seq[String],
+    check: GraftSink.CheckSpec,
+    blockBytes: Long)
+
+/** The batch-commit riders a COW rewrite or merge-on-read update attaches
+  * to its log entry: removes, deletion vectors, change files, op tag.
+  */
+final case class CommitRiders(
+    removes: Seq[String],
+    removesBase: Long,
+    dvs: Seq[(String, String)],
+    dvBase: Map[String, String],
+    changeFiles: Seq[(String, String)],
+    opTag: String)
+
+/** DSv2 write path for the graft formats: each task streams its rows to a
+  * hidden, task-attempt-unique stage file and RENAMES it into place on
+  * task commit — rename is the atomic primitive, so speculative or retried
+  * tasks never double-publish (the loser's stage file is deleted on
+  * abort). `mode("overwrite")` maps to SupportsTruncate: the driver clears
+  * prior output before launching tasks. `partitionBy(cols)` routes rows to
+  * hive-style `col=value/` subdirectories (values %xx-escaped, nulls as
+  * __HIVE_DEFAULT_PARTITION__), with partition columns stripped from the
+  * written data — exactly the layout the graft scan lists,
+  * partition-prunes, and reads back.
+  *
+  * The reference has no sink (the Plate IS its sink, SURVEY §2.11 row
+  * "Sinks"); this is the Spark-native counterpart so a graft pipeline can
+  * round-trip its data without leaving the DSv2 surface.
+  */
+final class GraftWriteBuilder(
+    spec: GraftWriteSpec,
+    queryId: String,
+    mergeSchema: Boolean,
+    riders: CommitRiders)
     extends WriteBuilder with SupportsTruncate {
 
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
   override def build(): Write = new Write {
-    require(dvs.isEmpty || !doTruncate,
-      "option(\"commitdvs\", ...) is meaningless with mode(\"overwrite\") — " +
-        "the truncate wipes the files the vectors would mask")
     override def toBatch: BatchWrite =
-      new GraftBatchWrite(path, schema, conf, doTruncate, codec, partCols,
-        GraftSink.batchNamePrefix(queryId), removes, check, mergeSchema, blockBytes,
-        removesBase, dvs, dvBase, changeFiles, opTag)
+      new GraftBatchWrite(spec, doTruncate, GraftSink.batchNamePrefix(queryId),
+        mergeSchema, riders)
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
       // a streaming epoch commit never touches the commit log, so removes
       // would be accepted-and-ignored — the one outcome a COW rewrite must
       // never have (adds published, retirements lost = doubled rows)
-      require(removes.isEmpty,
+      require(riders.removes.isEmpty,
         "option(\"commitremoves\", ...) is batch-only: streaming epoch commits " +
           "do not write the commit log, so the removes would be silently lost — " +
           "route COW rewrites through foreachBatch + batch mode(\"append\")")
-      require(dvs.isEmpty,
+      require(riders.dvs.isEmpty,
         "option(\"commitdvs\", ...) is batch-only: streaming epoch commits " +
           "do not write the commit log, so the masks would be silently lost")
       // complete output mode truncates the builder; epoch files APPEND,
@@ -466,7 +622,7 @@ final class GraftWriteBuilder(
         "graft streaming sinks append epoch files; Complete output mode " +
           "(per-epoch truncation) is not supported — use update/append, " +
           "or foreachBatch + TrainingData.upsert for full-result refresh")
-      new GraftStreamingWrite(path, schema, conf, codec, partCols, check, blockBytes)
+      new GraftStreamingWrite(spec)
     }
   }
 }
@@ -475,18 +631,11 @@ final class GraftWriteBuilder(
   * epoch after failure re-publishes the SAME names — idempotent, which is
   * what makes the file sink exactly-once under micro-batch re-execution.
   * `partitionBy` routes each epoch's rows into the same hive-style
-  * layout as batch writes (epoch-stable names per leaf directory keep
-  * the idempotency property; manifests stay batch-only — per-file
-  * sidecars cover streaming output).
+  * layout as batch writes. Epochs stay out of the commit log and the
+  * manifests (per-file sidecars cover streaming output); followLog tails
+  * batch commits only, raw streams discover epoch files by listing.
   */
-final class GraftStreamingWrite(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
+final class GraftStreamingWrite(spec: GraftWriteSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   // column mapping: a stream appending to a renamed table must write
@@ -494,89 +643,237 @@ final class GraftStreamingWrite(
   // start (this class is constructed per query; the factory method runs
   // PER EPOCH, where the log read would be wasted I/O and a mid-stream
   // ALTER RENAME could silently flip later epochs' keys)
-  private val physSchema: StructType = {
-    val dir = new Path(path)
-    dir.getFileSystem(conf.value.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
+  private val physSpec: GraftWriteSpec = {
+    val dir = new Path(spec.path)
+    dir.getFileSystem(spec.conf.value.value).mkdirs(dir)
+    spec.copy(schema =
+      GraftSink.streamingPhysicalSchema(spec.conf.value.value, spec.path, spec.schema))
   }
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftStreamingWriterFactory(path, physSchema, conf,
-      codec, partCols, check, blockBytes)
+    new GraftWriterFactory(physSpec, "part")
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final class GraftStreamingWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new GraftJsonDataWriter(path, schema, conf, partitionId, taskId,
-      namePrefix = f"part-$epochId%05d", codec = codec, partCols = partCols,
-      check = check, blockBytes = blockBytes)
-}
-
 final class GraftBatchWrite(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
+    spec: GraftWriteSpec,
     truncate: Boolean,
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    namePrefix: String = "part",
-    removes: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    mergeSchema: Boolean = false,
-    blockBytes: Long = GraftSink.DefaultBlockBytes,
-    removesBase: Long = -1L,
-    dvs: Seq[(String, String)] = Nil,
-    dvBase: Map[String, String] = Map.empty,
-    changeFiles: Seq[(String, String)] = Nil,
-    opTag: String = null)
+    namePrefix: String,
+    mergeSchema: Boolean,
+    riders: CommitRiders)
     extends BatchWrite {
 
-  require(removes.isEmpty || !truncate,
+  require(riders.removes.isEmpty || !truncate,
     "option(\"commitremoves\", ...) is meaningless with mode(\"overwrite\") — " +
       "the truncate wipes the commit log the removes would amend")
+  require(riders.dvs.isEmpty || !truncate,
+    "option(\"commitdvs\", ...) is meaningless with mode(\"overwrite\") — " +
+      "the truncate wipes the files the vectors would mask")
+
+  private def conf = spec.conf.value.value
 
   // the table schema this commit records + the recorded schema it
   // resolved against: enforced on the driver BEFORE any task launches
   private var commitSchema: GraftSink.ResolvedSchema =
-    GraftSink.ResolvedSchema(schema, null)
+    GraftSink.ResolvedSchema(spec.schema, null)
+
+  // set once commit starts: from then on a log entry may name this job's
+  // files, so a failed commit must leave them (as unlogged orphans for
+  // vacuumOrphans) rather than delete files a reader may resolve
+  @volatile private var committing = false
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    commitSchema =
-      GraftSink.resolveCommitSchema(conf.value.value, path, schema, truncate, mergeSchema)
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value.value)
+    commitSchema = GraftSink.resolveCommitSchema(conf, spec.path, spec.schema, truncate,
+      mergeSchema, spec.encoding.widen)
+    val dir = new Path(spec.path)
+    val fs = dir.getFileSystem(conf)
     if (truncate && fs.exists(dir)) {
       // recursive: partitioned layouts nest their part files in k=v dirs
       fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
     }
     fs.mkdirs(dir)
-    // column mapping: tasks serialize under PHYSICAL keys (stats sidecars
-    // inherit them too, so pruning lookups stay consistent)
-    new GraftJsonWriterFactory(path,
-      GraftSink.toPhysicalSchema(schema, commitSchema.record), conf, codec,
-      partCols, namePrefix, check, blockBytes)
+    new GraftWriterFactory(
+      spec.copy(schema = GraftSink.toPhysicalSchema(spec.schema, commitSchema.record)),
+      namePrefix)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    GraftManifest.write(conf.value.value, messages)
-    GraftCommitLog.append(conf.value.value, path, messages, removes,
-      commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
-      changeFiles, opTag)
+    committing = true
+    GraftManifest.write(conf, messages)
+    GraftCommitLog.append(conf, spec.path, messages, riders.removes,
+      commitSchema.record, commitSchema.base, riders.removesBase, riders.dvs,
+      riders.dvBase, riders.changeFiles, riders.opTag)
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+
+  /** Delete the files (and sidecars) this job's tasks published. Spark
+    * drops the commit message of a task that finishes while the job
+    * fails, so the query-scoped part names, not the messages, say which
+    * files are this job's; the marker, written before the listing, makes
+    * a task that publishes after it take its own files back. A driver
+    * crash leaves the files for vacuumOrphans.
+    */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    if (!committing) {
+      val root = new Path(spec.path)
+      val fs = root.getFileSystem(conf)
+      def ours(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { st =>
+        val p = st.getPath
+        if (st.isDirectory) {
+          if (spec.partCols.nonEmpty && !p.getName.startsWith(".")) ours(p) else Nil
+        } else if (p.getName.startsWith(namePrefix + "-")) Seq(p)
+        else Nil
+      }
+      val marker = GraftSink.abortMarker(spec.path, namePrefix)
+      val listed = if (marker == null) Nil else {
+        fs.create(marker, true).close()
+        ours(root)
+      }
+      (GraftSink.committedFiles(messages).map(f => new Path(f._1)) ++ listed)
+        .foreach(GraftSink.deletePart(fs, _))
+    }
+}
+
+/** Batch and streaming tasks share one factory: batch part names are
+  * `<namePrefix>-<partition>`, streaming ones `<namePrefix>-<epoch>-<partition>`
+  * — epoch names must be stable across query restarts for exactly-once.
+  */
+final class GraftWriterFactory(spec: GraftWriteSpec, namePrefix: String)
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new GraftDataWriter(spec, namePrefix, GraftSink.abortMarker(spec.path, namePrefix),
+      partitionId, taskId)
+  // streaming epochs have no job-level abort: a replay re-publishes them
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] =
+    new GraftDataWriter(spec, f"$namePrefix-$epochId%05d", null, partitionId, taskId)
+}
+
+/** One task's writes: routes each row to its partition directory's part
+  * file, stages it under a hidden task-attempt name, and publishes it on
+  * commit. A zero-row unpartitioned task still publishes an empty root
+  * part, under the name a retry or a replayed epoch would use, so a
+  * replay that now routes no rows here replaces the earlier attempt's file.
+  */
+final class GraftDataWriter(
+    spec: GraftWriteSpec,
+    namePrefix: String,
+    abortMarker: Path,
+    partitionId: Int,
+    taskId: Long)
+    extends DataWriter[InternalRow] {
+  import spec._
+
+  private val fs = new Path(path).getFileSystem(conf.value.value)
+
+  // partitioned writes strip the partition columns from the data rows
+  private val partIdx: Array[Int] = partCols.map(schema.fieldIndex).toArray
+  private val partDts: Array[DataType] = partIdx.map(schema.fields(_).dataType)
+  private val dataFieldIdx: Array[Int] =
+    schema.fields.indices.filterNot(partIdx.contains).toArray
+  private val dataSchema: StructType =
+    if (partIdx.isEmpty) schema else StructType(dataFieldIdx.map(schema.fields(_)))
+  private val projVals: Array[Any] =
+    if (partIdx.isEmpty) null else new Array[Any](dataFieldIdx.length)
+  private val projRow: GenericInternalRow =
+    if (partIdx.isEmpty) null else new GenericInternalRow(projVals)
+
+  /** One staged output file (a partition directory's, or the root's). */
+  private final class StagedPart(dir: Path) {
+    val finalFile = new Path(dir, f"$namePrefix-$partitionId%05d.${encoding.ext}")
+    val stageFile = new Path(dir, f".$namePrefix-$partitionId%05d-$taskId.${encoding.ext}.stage")
+    val enc: RowEncoder = {
+      fs.mkdirs(dir)
+      encoding.open(fs.create(stageFile, true), dataSchema, blockBytes)
+    }
+
+    /** Atomic publish + bound sidecar; returns (file, rendered stats). */
+    def publish(): (String, String) = {
+      enc.close()
+      // a prior file's sidecar must not outlive its data: drop it BEFORE
+      // the rename so a crash between the two steps leaves no-stats
+      // (pruning disabled) rather than wrong-stats (wrong results)
+      GraftSink.deletePart(fs, finalFile)
+      GraftLogStore.forConf(conf.value.value).publish(fs, stageFile, finalFile, overwrite = false)
+      val rendered = FileStats.render(enc.snapshot(fs.getFileStatus(finalFile).getLen))
+      try {
+        val sout = fs.create(FileStats.sidecarFor(finalFile), true)
+        try sout.write(rendered.getBytes("UTF-8")) finally sout.close()
+      } catch { case _: Exception => () } // stats are best-effort
+      (finalFile.toString, rendered)
+    }
+
+    def drop(): Unit = {
+      try enc.close() catch { case _: Exception => () }
+      fs.delete(stageFile, false)
+    }
+  }
+
+  private val parts = new java.util.LinkedHashMap[String, StagedPart]()
+  private def partFor(row: InternalRow): StagedPart = {
+    if (partIdx.isEmpty) {
+      var s = parts.get("")
+      if (s == null) { s = new StagedPart(new Path(path)); parts.put("", s) }
+      return s
+    }
+    val rel = {
+      val sb = new java.lang.StringBuilder(64)
+      var k = 0
+      while (k < partIdx.length) {
+        if (k > 0) sb.append('/')
+        sb.append(partCols(k)).append('=')
+          .append(GraftSink.partitionDirValue(row, partIdx(k), partDts(k)))
+        k += 1
+      }
+      sb.toString
+    }
+    var s = parts.get(rel)
+    if (s == null) {
+      if (parts.size >= GraftSink.MaxOpenPartitions)
+        throw new IllegalStateException(
+          s"task $taskId holds ${parts.size} open partition files; repartition " +
+          "by the partitionBy columns so each task writes fewer partitions")
+      s = new StagedPart(new Path(path, rel))
+      parts.put(rel, s)
+    }
+    s
+  }
+
+  override def write(row: InternalRow): Unit = {
+    if (check != null) GraftSink.enforceCheck(check.expr, check.sql, row, schema)
+    val part = partFor(row)
+    if (partIdx.isEmpty) part.enc.write(row)
+    else {
+      var k = 0
+      while (k < dataFieldIdx.length) {
+        val i = dataFieldIdx(k)
+        projVals(k) = if (row.isNullAt(i)) null else row.get(i, dataSchema.fields(k).dataType)
+        k += 1
+      }
+      part.enc.write(projRow)
+    }
+  }
+
+  override def commit(): WriterCommitMessage = {
+    val published =
+      if (partIdx.isEmpty) Seq(partFor(null).publish()) // the root part, rows or not
+      else parts.values().asScala.toSeq.map(_.publish())
+    // the job failed while this task published, and its abort may have
+    // listed the table before the rename: take the files back
+    if (abortMarker != null && fs.exists(abortMarker)) {
+      published.foreach(p => GraftSink.deletePart(fs, new Path(p._1)))
+      throw new IllegalStateException(s"batch write to $path was aborted")
+    }
+    if (partIdx.isEmpty) GraftCommit(published.head._1, published.head._2)
+    else GraftPartitionedCommit(published)
+  }
+
+  override def abort(): Unit = parts.values().forEach(_.drop())
+
+  override def close(): Unit = ()
 }
 
 /** `stats` is the rendered sidecar content (null when unavailable): the
@@ -600,11 +897,7 @@ private object GraftManifest {
     */
   def write(conf: org.apache.hadoop.conf.Configuration,
       messages: Array[WriterCommitMessage]): Unit = try {
-    val entries: Seq[(String, String)] = messages.toSeq.flatMap {
-      case GraftCommit(f, s) if s != null => Seq(f -> s)
-      case GraftPartitionedCommit(es) => es
-      case _ => Nil
-    }
+    val entries = GraftSink.committedFiles(messages).filter(_._2 != null)
     if (entries.isEmpty) return
     // one manifest per leaf directory; partitioned writes can touch many
     // directories, so the driver-side writes run in parallel
@@ -780,11 +1073,7 @@ private[graft] object GraftCommitLog {
       removesBase: Long = -1L, dvs: Seq[(String, String)] = Nil,
       dvBase: Map[String, String] = Map.empty,
       changeFiles: Seq[(String, String)] = Nil, opTag: String = null): Unit = {
-    val files: Seq[String] = messages.toSeq.flatMap {
-      case GraftCommit(f, _) => Seq(f)
-      case GraftPartitionedCommit(es) => es.map(_._1)
-      case _ => Nil
-    }
+    val files = GraftSink.committedFiles(messages).map(_._1)
     if (files.isEmpty && removes.isEmpty && dvs.isEmpty) return
     try {
       appendEntry(conf, root, files, removes, schema, schemaBase,
@@ -2268,183 +2557,23 @@ private[graft] object GraftCommitLog {
   }
 }
 
-final class GraftJsonWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    namePrefix: String = "part",
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftJsonDataWriter(path, schema, conf, partitionId, taskId,
-      namePrefix = namePrefix, codec = codec, partCols = partCols, check = check,
-      blockBytes = blockBytes)
+/** `format("graft-json")` rows: one JSON object per line. */
+final case class JsonEncoding(codec: String) extends RowEncoding {
+  val ext: String = GraftSink.textExt("jsonl", codec, "graft-json")
+
+  // nonFiniteAsNull: this encoder serializes NaN/±Inf as JSON null — the
+  // stats must describe the file, not the in-memory rows
+  override def open(out: org.apache.hadoop.fs.FSDataOutputStream, dataSchema: StructType,
+      blockBytes: Long): RowEncoder =
+    new TextEncoder(out, codec, dataSchema, blockBytes, nonFiniteAsNull = true) {
+      override protected def render(row: InternalRow): Unit = {
+        JsonEncoding.writeStruct(sb, row, dataSchema)
+        sb.append('\n')
+      }
+    }
 }
 
-final class GraftJsonDataWriter(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    partitionId: Int,
-    taskId: Long,
-    namePrefix: String = "part",
-    codec: String = "none",
-    partCols: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(path).getFileSystem(conf.value.value)
-  private val ext = codec match {
-    case "gzip" => "jsonl.gz"
-    case "zstd" => "jsonl.zst"
-    case "none" => "jsonl"
-    case other => throw new IllegalArgumentException(
-      s"graft-json compression '$other' (supported: none, gzip, zstd)")
-  }
-
-  // partitioned writes strip the partition columns from the data lines
-  private val partIdx: Array[Int] = partCols.map(schema.fieldIndex).toArray
-  private val partDts: Array[DataType] = partIdx.map(schema.fields(_).dataType)
-  private val dataFieldIdx: Array[Int] =
-    schema.fields.indices.filterNot(partIdx.contains).toArray
-  private val dataSchema: StructType =
-    if (partIdx.isEmpty) schema else StructType(dataFieldIdx.map(schema.fields(_)))
-  private val projVals: Array[Any] =
-    if (partIdx.isEmpty) null else new Array[Any](dataFieldIdx.length)
-  private val projRow: GenericInternalRow =
-    if (partIdx.isEmpty) null else new GenericInternalRow(projVals)
-
-  /** One staged output file (a partition directory's, or the root's). */
-  private final class Sink1(dir: Path) {
-    val finalFile = new Path(dir, f"$namePrefix-$partitionId%05d.$ext")
-    val stageFile = new Path(dir, f".$namePrefix-$partitionId%05d-$taskId.$ext.stage")
-    val out: java.io.OutputStream = {
-      fs.mkdirs(dir)
-      val base = new java.io.BufferedOutputStream(fs.create(stageFile, true), 1 << 16)
-      codec match {
-        case "gzip" => new java.util.zip.GZIPOutputStream(base, 1 << 16)
-        case "zstd" => new java.io.BufferedOutputStream(
-          new com.github.luben.zstd.ZstdOutputStream(base), 1 << 16)
-        case _ => base
-      }
-    }
-    // nonFiniteAsNull: this writer serializes NaN/±Inf as JSON null —
-    // the stats must describe the file, not the in-memory rows.
-    // blocks only make sense where byte offsets are file offsets
-    // (uncompressed) — the collector's length binding would drop them
-    // for compressed members anyway, so don't pay the accounting
-    val stats = new FileStatsCollector(dataSchema, nonFiniteAsNull = true,
-      blockBytes = if (codec == "none") blockBytes else 0L)
-
-    /** Atomic publish + bound sidecar; returns (file, rendered stats). */
-    def publish(): (String, String) = {
-      out.close()
-      // a prior file's sidecar must not outlive its data: drop it BEFORE
-      // the rename so a crash between the two steps leaves no-stats
-      // (pruning disabled) rather than wrong-stats (wrong results)
-      fs.delete(FileStats.sidecarFor(finalFile), false)
-      fs.delete(finalFile, false)
-      GraftLogStore.forConf(conf.value.value).publish(fs, stageFile, finalFile, overwrite = false)
-      val rendered = FileStats.render(
-        stats.snapshot(fs.getFileStatus(finalFile).getLen))
-      try {
-        val sout = fs.create(FileStats.sidecarFor(finalFile), true)
-        try sout.write(rendered.getBytes("UTF-8")) finally sout.close()
-      } catch { case _: Exception => () } // stats are best-effort
-      (finalFile.toString, rendered)
-    }
-
-    def drop(): Unit = {
-      try out.close() catch { case _: Exception => () }
-      fs.delete(stageFile, false)
-    }
-  }
-
-  private val sinks = new java.util.LinkedHashMap[String, Sink1]()
-  private def sinkFor(row: InternalRow): Sink1 = {
-    if (partIdx.isEmpty) {
-      var s = sinks.get("")
-      if (s == null) { s = new Sink1(new Path(path)); sinks.put("", s) }
-      return s
-    }
-    val rel = {
-      val sb = new java.lang.StringBuilder(64)
-      var k = 0
-      while (k < partIdx.length) {
-        if (k > 0) sb.append('/')
-        sb.append(partCols(k)).append('=')
-          .append(GraftSink.partitionDirValue(row, partIdx(k), partDts(k)))
-        k += 1
-      }
-      sb.toString
-    }
-    var s = sinks.get(rel)
-    if (s == null) {
-      if (sinks.size >= GraftSink.MaxOpenPartitions)
-        throw new IllegalStateException(
-          s"task $taskId holds ${sinks.size} open partition files; repartition " +
-          "by the partitionBy columns so each task writes fewer partitions")
-      s = new Sink1(new Path(path, rel))
-      sinks.put(rel, s)
-    }
-    s
-  }
-
-  private val sb = new java.lang.StringBuilder(4096)
-
-  override def write(row: InternalRow): Unit = {
-    if (check != null) GraftSink.enforceCheck(check.expr, check.sql, row, schema)
-    val sink = sinkFor(row)
-    val (r, sch): (InternalRow, StructType) =
-      if (partIdx.isEmpty) (row, schema)
-      else {
-        var k = 0
-        while (k < dataFieldIdx.length) {
-          val i = dataFieldIdx(k)
-          projVals(k) = if (row.isNullAt(i)) null else row.get(i, dataSchema.fields(k).dataType)
-          k += 1
-        }
-        (projRow, dataSchema)
-      }
-    sb.setLength(0)
-    GraftJsonDataWriter.writeStruct(sb, r, sch)
-    sb.append('\n')
-    val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    sink.out.write(bytes)
-    sink.stats.observe(r)
-    sink.stats.noteBytes(bytes.length)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val it = sinks.values().iterator()
-    if (partIdx.isEmpty) {
-      if (!it.hasNext) {
-        // zero-row task still publishes its (empty) part for layout parity
-        val (f, s) = sinkFor(null).publish() // sinkFor("" key) ignores the row
-        GraftCommit(f, s)
-      } else {
-        val (f, s) = it.next().publish()
-        GraftCommit(f, s)
-      }
-    } else {
-      val entries = Seq.newBuilder[(String, String)]
-      while (it.hasNext) entries += it.next().publish()
-      GraftPartitionedCommit(entries.result())
-    }
-  }
-
-  override def abort(): Unit = {
-    val it = sinks.values().iterator()
-    while (it.hasNext) it.next().drop()
-  }
-
-  override def close(): Unit = ()
-}
-
-object GraftJsonDataWriter {
+object JsonEncoding {
 
   def writeStruct(sb: java.lang.StringBuilder, row: InternalRow, st: StructType): Unit = {
     sb.append('{')
@@ -2533,35 +2662,16 @@ object GraftJsonDataWriter {
   }
 }
 
-/** DSv2 write path for `format("graft-csv")`: flat schemas only (CSV has
-  * no nesting), header row per file, quote-doubling when a value contains
-  * the delimiter, a quote, or a row-delimiter byte — the same dialect the
-  * graft-csv reader and its Config parse. Shares the staged-file
-  * atomic-rename commit protocol and hive-style partitionBy layout with
-  * the JSON writer.
+/** `format("graft-csv")` rows: flat schemas only (CSV has no nesting), a
+  * header row per file, quote-doubling when a value contains the
+  * delimiter, a quote, or a row-delimiter byte — the same dialect the
+  * graft-csv reader and its Config parse.
   */
-final class GraftCsvWriteBuilder(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    header: Boolean,
-    delim: String,
-    linesep: String,
-    partCols: Seq[String] = Nil,
-    queryId: String = "",
-    removes: Seq[String] = Nil,
-    check: GraftSink.CheckSpec = null,
-    mergeSchema: Boolean = false,
-    blockBytes: Long = GraftSink.DefaultBlockBytes,
-    removesBase: Long = -1L,
-    dvs: Seq[(String, String)] = Nil,
-    dvBase: Map[String, String] = Map.empty,
-    changeFiles: Seq[(String, String)] = Nil,
-    opTag: String = null)
-    extends WriteBuilder with SupportsTruncate {
+final case class CsvEncoding(codec: String, header: Boolean, delim: String, linesep: String)
+    extends RowEncoding {
+  val ext: String = GraftSink.textExt("csv", codec, "graft-csv")
 
-  schema.fields.foreach { f =>
+  override def checkSchema(schema: StructType): Unit = schema.fields.foreach { f =>
     f.dataType match {
       case _: StructType | _: ArrayType | _: MapType =>
         throw new IllegalArgumentException(
@@ -2575,309 +2685,60 @@ final class GraftCsvWriteBuilder(
     }
   }
 
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
+  // emptyStringsAsNull: this dialect's reader parses empty cells as NULL,
+  // and empty strings write as empty cells — stats must agree
+  override def open(out: org.apache.hadoop.fs.FSDataOutputStream, dataSchema: StructType,
+      blockBytes: Long): RowEncoder =
+    new TextEncoder(out, codec, dataSchema, blockBytes, emptyStringsAsNull = true) {
+      private val mustQuote: Set[Char] = (delim.toSet ++ linesep.toSet) + '"'
 
-  override def build(): Write = new Write {
-    require(removes.isEmpty || !doTruncate,
-      "option(\"commitremoves\", ...) is meaningless with mode(\"overwrite\") — " +
-        "the truncate wipes the commit log the removes would amend")
-    require(dvs.isEmpty || !doTruncate,
-      "option(\"commitdvs\", ...) is meaningless with mode(\"overwrite\") — " +
-        "the truncate wipes the files the vectors would mask")
-    override def toBatch: BatchWrite = new BatchWrite {
-      private var commitSchema: GraftSink.ResolvedSchema =
-        GraftSink.ResolvedSchema(schema, null)
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-        commitSchema = GraftSink.resolveCommitSchema(
-          conf.value.value, path, schema, doTruncate, mergeSchema)
-        val dir = new Path(path)
-        val fs = dir.getFileSystem(conf.value.value)
-        if (doTruncate && fs.exists(dir))
-          fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
-        fs.mkdirs(dir)
-        new GraftCsvWriterFactory(path,
-          GraftSink.toPhysicalSchema(schema, commitSchema.record), conf, codec,
-          header, delim, linesep,
-          partCols, GraftSink.batchNamePrefix(queryId), check, blockBytes)
+      private def appendCell(s: String): Unit = {
+        if (s.exists(mustQuote)) {
+          sb.append('"')
+          var i = 0
+          while (i < s.length) {
+            val c = s.charAt(i)
+            if (c == '"') sb.append("\"\"") else sb.append(c)
+            i += 1
+          }
+          sb.append('"')
+        } else sb.append(s)
       }
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        GraftManifest.write(conf.value.value, messages)
-        GraftCommitLog.append(conf.value.value, path, messages, removes,
-          commitSchema.record, commitSchema.base, removesBase, dvs, dvBase,
-          changeFiles, opTag)
-      }
-      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-    }
 
-    // streaming: epoch-named files, same replay-idempotent protocol as the
-    // JSON streaming sink (manifests stay batch-only)
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      require(removes.isEmpty,
-        "option(\"commitremoves\", ...) is batch-only: streaming epoch commits " +
-          "do not write the commit log, so the removes would be silently lost — " +
-          "route COW rewrites through foreachBatch + batch mode(\"append\")")
-      require(dvs.isEmpty,
-        "option(\"commitdvs\", ...) is batch-only: streaming epoch commits " +
-          "do not write the commit log, so the masks would be silently lost")
-      // complete output mode truncates the builder; epoch files APPEND
-      require(!doTruncate,
-        "graft streaming sinks append epoch files; Complete output mode " +
-          "(per-epoch truncation) is not supported — use update/append, " +
-          "or foreachBatch + TrainingData.upsert for full-result refresh")
-      new GraftCsvStreamingWrite(path, schema, conf, codec, header, delim, linesep,
-        partCols, check, blockBytes)
-    }
-  }
-}
-
-final class GraftCsvStreamingWrite(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    header: Boolean,
-    delim: String,
-    linesep: String,
-    partCols: Seq[String],
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  // resolved ONCE at stream start — see GraftStreamingWrite's twin note
-  private val physSchema: StructType = {
-    val dir = new Path(path)
-    dir.getFileSystem(conf.value.value).mkdirs(dir)
-    GraftSink.streamingPhysicalSchema(conf.value.value, path, schema)
-  }
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftCsvStreamingWriterFactory(path, physSchema, conf,
-      codec, header, delim, linesep,
-      partCols, check, blockBytes)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class GraftCsvStreamingWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    header: Boolean,
-    delim: String,
-    linesep: String,
-    partCols: Seq[String],
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new GraftCsvDataWriter(path, schema, conf, partitionId, taskId, codec,
-      header, delim, linesep, partCols, namePrefix = f"part-$epochId%05d",
-      check = check, blockBytes = blockBytes)
-}
-
-final class GraftCsvWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    codec: String,
-    header: Boolean,
-    delim: String,
-    linesep: String,
-    partCols: Seq[String] = Nil,
-    namePrefix: String = "part",
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftCsvDataWriter(path, schema, conf, partitionId, taskId, codec, header,
-      delim, linesep, partCols, namePrefix, check, blockBytes)
-}
-
-final class GraftCsvDataWriter(
-    path: String,
-    schema: StructType,
-    conf: Broadcast[SerializableConfiguration],
-    partitionId: Int,
-    taskId: Long,
-    codec: String,
-    header: Boolean,
-    delim: String,
-    linesep: String,
-    partCols: Seq[String] = Nil,
-    namePrefix: String = "part",
-    check: GraftSink.CheckSpec = null,
-    blockBytes: Long = GraftSink.DefaultBlockBytes)
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(path).getFileSystem(conf.value.value)
-  private val ext = codec match {
-    case "gzip" => "csv.gz"
-    case "zstd" => "csv.zst"
-    case "none" => "csv"
-    case other => throw new IllegalArgumentException(
-      s"graft-csv compression '$other' (supported: none, gzip, zstd)")
-  }
-
-  private val partIdx: Array[Int] = partCols.map(schema.fieldIndex).toArray
-  private val partDts: Array[DataType] = partIdx.map(schema.fields(_).dataType)
-  private val dataFieldIdx: Array[Int] =
-    schema.fields.indices.filterNot(partIdx.contains).toArray
-  private val dataSchema: StructType =
-    if (partIdx.isEmpty) schema else StructType(dataFieldIdx.map(schema.fields(_)))
-
-  private val sb = new java.lang.StringBuilder(1024)
-  private val mustQuote: Set[Char] =
-    (delim.toSet ++ linesep.toSet) + '"'
-
-  private final class Sink1(dir: Path) {
-    val finalFile = new Path(dir, f"$namePrefix-$partitionId%05d.$ext")
-    val stageFile = new Path(dir, f".$namePrefix-$partitionId%05d-$taskId.$ext.stage")
-    val out: java.io.OutputStream = {
-      fs.mkdirs(dir)
-      val base = new java.io.BufferedOutputStream(fs.create(stageFile, true), 1 << 16)
-      codec match {
-        case "gzip" => new java.util.zip.GZIPOutputStream(base, 1 << 16)
-        case "zstd" => new java.io.BufferedOutputStream(
-          new com.github.luben.zstd.ZstdOutputStream(base), 1 << 16)
-        case _ => base
-      }
-    }
-    // emptyStringsAsNull: this dialect's reader parses empty cells as
-    // NULL, and empty strings write as empty cells — stats must agree
-    val stats = new FileStatsCollector(dataSchema, emptyStringsAsNull = true,
-      blockBytes = if (codec == "none") blockBytes else 0L)
-    if (header) {
-      sb.setLength(0)
-      var i = 0
-      while (i < dataSchema.length) {
-        if (i > 0) sb.append(delim)
-        appendCell(dataSchema.fields(i).name)
-        i += 1
-      }
-      sb.append(linesep)
-      val hb = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.write(hb)
-      stats.noteBytes(hb.length) // block 0 includes the header bytes
-    }
-
-    def publish(): (String, String) = {
-      out.close()
-      fs.delete(FileStats.sidecarFor(finalFile), false)
-      fs.delete(finalFile, false)
-      GraftLogStore.forConf(conf.value.value).publish(fs, stageFile, finalFile, overwrite = false)
-      val rendered = FileStats.render(
-        stats.snapshot(fs.getFileStatus(finalFile).getLen))
-      try {
-        val sout = fs.create(FileStats.sidecarFor(finalFile), true)
-        try sout.write(rendered.getBytes("UTF-8")) finally sout.close()
-      } catch { case _: Exception => () }
-      (finalFile.toString, rendered)
-    }
-
-    def drop(): Unit = {
-      try out.close() catch { case _: Exception => () }
-      fs.delete(stageFile, false)
-    }
-  }
-
-  private val sinks = new java.util.LinkedHashMap[String, Sink1]()
-  private def sinkFor(row: InternalRow): Sink1 = {
-    if (partIdx.isEmpty) {
-      var s = sinks.get("")
-      if (s == null) { s = new Sink1(new Path(path)); sinks.put("", s) }
-      return s
-    }
-    val rel = {
-      val rb = new java.lang.StringBuilder(64)
-      var k = 0
-      while (k < partIdx.length) {
-        if (k > 0) rb.append('/')
-        rb.append(partCols(k)).append('=')
-          .append(GraftSink.partitionDirValue(row, partIdx(k), partDts(k)))
-        k += 1
-      }
-      rb.toString
-    }
-    var s = sinks.get(rel)
-    if (s == null) {
-      if (sinks.size >= GraftSink.MaxOpenPartitions)
-        throw new IllegalStateException(
-          s"task $taskId holds ${sinks.size} open partition files; repartition " +
-          "by the partitionBy columns so each task writes fewer partitions")
-      s = new Sink1(new Path(path, rel))
-      sinks.put(rel, s)
-    }
-    s
-  }
-
-  private def appendCell(s: String): Unit = {
-    if (s.exists(mustQuote)) {
-      sb.append('"')
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '"') sb.append("\"\"") else sb.append(c)
-        i += 1
-      }
-      sb.append('"')
-    } else sb.append(s)
-  }
-
-  override def write(row: InternalRow): Unit = {
-    if (check != null) GraftSink.enforceCheck(check.expr, check.sql, row, schema)
-    val sink = sinkFor(row)
-    sb.setLength(0)
-    var k = 0
-    while (k < dataFieldIdx.length) {
-      val i = dataFieldIdx(k)
-      if (k > 0) sb.append(delim)
-      if (!row.isNullAt(i)) {
-        val dt = schema.fields(i).dataType
-        dt match {
-          case StringType => appendCell(row.getUTF8String(i).toString)
-          case LongType => sb.append(row.getLong(i))
-          case IntegerType => sb.append(row.getInt(i))
-          case DoubleType => sb.append(row.getDouble(i))
-          case FloatType => sb.append(row.getFloat(i))
-          case BooleanType => sb.append(row.getBoolean(i))
-          case ShortType => sb.append(row.getShort(i))
-          case ByteType => sb.append(row.getByte(i))
-          case TimestampType | TimestampNTZType | DateType =>
-            appendCell(GraftSink.temporalString(row.get(i, dt), dt))
-          case _ => appendCell(row.get(i, dt).toString)
+      if (header) {
+        var i = 0
+        while (i < dataSchema.length) {
+          if (i > 0) sb.append(delim)
+          appendCell(dataSchema.fields(i).name)
+          i += 1
         }
+        sb.append(linesep)
+        stats.noteBytes(emit()) // block 0 includes the header bytes
       }
-      k += 1
-    }
-    sb.append(linesep)
-    val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    sink.out.write(bytes)
-    sink.stats.observeProjected(row, dataFieldIdx)
-    sink.stats.noteBytes(bytes.length)
-  }
 
-  override def commit(): WriterCommitMessage = {
-    val it = sinks.values().iterator()
-    if (partIdx.isEmpty) {
-      if (!it.hasNext) {
-        val (f, s) = sinkFor(null).publish()
-        GraftCommit(f, s)
-      } else {
-        val (f, s) = it.next().publish()
-        GraftCommit(f, s)
+      override protected def render(row: InternalRow): Unit = {
+        var i = 0
+        while (i < dataSchema.length) {
+          if (i > 0) sb.append(delim)
+          if (!row.isNullAt(i)) {
+            val dt = dataSchema.fields(i).dataType
+            dt match {
+              case StringType => appendCell(row.getUTF8String(i).toString)
+              case LongType => sb.append(row.getLong(i))
+              case IntegerType => sb.append(row.getInt(i))
+              case DoubleType => sb.append(row.getDouble(i))
+              case FloatType => sb.append(row.getFloat(i))
+              case BooleanType => sb.append(row.getBoolean(i))
+              case ShortType => sb.append(row.getShort(i))
+              case ByteType => sb.append(row.getByte(i))
+              case TimestampType | TimestampNTZType | DateType =>
+                appendCell(GraftSink.temporalString(row.get(i, dt), dt))
+              case _ => appendCell(row.get(i, dt).toString)
+            }
+          }
+          i += 1
+        }
+        sb.append(linesep)
       }
-    } else {
-      val entries = Seq.newBuilder[(String, String)]
-      while (it.hasNext) entries += it.next().publish()
-      GraftPartitionedCommit(entries.result())
     }
-  }
-
-  override def abort(): Unit = {
-    val it = sinks.values().iterator()
-    while (it.hasNext) it.next().drop()
-  }
-
-  override def close(): Unit = ()
 }

@@ -1169,32 +1169,9 @@ final class GraftJsonTable(
       GraftSources.mergeTableProps(properties, options), isJson = true)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GraftWriteBuilder(
-      Option(info.options.get("path"))
-        .orElse(Option(properties.get("path")))
-        .orElse(Option(properties.get("location"))) // catalog DDL tables
-        .orNull,
-      info.schema(),
-      GraftSources.broadcastHadoopConf(),
-      codec = Option(info.options.get("compression"))
-        .orElse(Option(properties.get("compression"))).getOrElse("none")
-        .toLowerCase(java.util.Locale.ROOT),
-      partCols = GraftSink.writePartCols(partTransforms, info.options),
-      queryId = info.queryId(),
-      removes = GraftSources.commitRemoves(info.options),
-      // table-level constraint: a `check` TBLPROPERTY on a catalog table
-      // binds EVERY insert (the Delta table-constraint semantics); a
-      // per-write option overrides
-      check = GraftSink.checkFromOptions(
-        GraftSources.mergeTableProps(properties, info.options), info.schema()),
-      mergeSchema = info.options.getBoolean("mergeschema", false),
-      blockBytes = GraftSink.blockBytesFrom(
-        GraftSources.mergeTableProps(properties, info.options)),
-      removesBase = GraftSources.commitRemovesBase(info.options),
-      dvs = GraftSources.commitDvs(info.options),
-      dvBase = GraftSources.commitDvBase(info.options),
-      changeFiles = GraftSources.commitChangeFiles(info.options),
-      opTag = GraftSources.commitOpTag(info.options))
+    GraftSink.newWriteBuilder(info, properties, partTransforms) { opt =>
+      JsonEncoding(opt("compression").getOrElse("none").toLowerCase(java.util.Locale.ROOT))
+    }
 }
 
 // ======================================================================= CSV
@@ -1287,34 +1264,14 @@ final class GraftCsvTable(
     new GraftScanBuilder(schema,
       GraftSources.mergeTableProps(properties, options), isJson = false)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    def opt(k: String, dflt: String): String =
-      Option(info.options.get(k)).orElse(Option(properties.get(k))).getOrElse(dflt)
-    new GraftCsvWriteBuilder(
-      Option(info.options.get("path"))
-        .orElse(Option(properties.get("path")))
-        .orElse(Option(properties.get("location"))) // catalog DDL tables
-        .orNull,
-      info.schema(),
-      GraftSources.broadcastHadoopConf(),
-      codec = opt("compression", "none").toLowerCase(java.util.Locale.ROOT),
-      header = opt("header", "true").toBoolean,
-      delim = opt("delimiter", opt("sep", ",")), // both names accepted
-      linesep = opt("linesep", "\n"),
-      partCols = GraftSink.writePartCols(partTransforms, info.options),
-      queryId = info.queryId(),
-      removes = GraftSources.commitRemoves(info.options),
-      check = GraftSink.checkFromOptions(
-        GraftSources.mergeTableProps(properties, info.options), info.schema()),
-      mergeSchema = info.options.getBoolean("mergeschema", false),
-      blockBytes = GraftSink.blockBytesFrom(
-        GraftSources.mergeTableProps(properties, info.options)),
-      removesBase = GraftSources.commitRemovesBase(info.options),
-      dvs = GraftSources.commitDvs(info.options),
-      dvBase = GraftSources.commitDvBase(info.options),
-      changeFiles = GraftSources.commitChangeFiles(info.options),
-      opTag = GraftSources.commitOpTag(info.options))
-  }
+      : org.apache.spark.sql.connector.write.WriteBuilder =
+    GraftSink.newWriteBuilder(info, properties, partTransforms) { opt =>
+      CsvEncoding(
+        codec = opt("compression").getOrElse("none").toLowerCase(java.util.Locale.ROOT),
+        header = opt("header").getOrElse("true").toBoolean,
+        delim = opt("delimiter").orElse(opt("sep")).getOrElse(","), // both names accepted
+        linesep = opt("linesep").getOrElse("\n"))
+    }
 }
 
 // ============================================================ scan machinery

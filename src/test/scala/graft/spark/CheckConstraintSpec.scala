@@ -8,8 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** Write-time CHECK constraints (`option("check", "<bool expr>")`, the
-  * Delta table-constraint shape): violating rows fail the JOB before
-  * anything publishes (atomic-rename protocol), null predicates pass
+  * Delta table-constraint shape): violating rows fail the JOB and its
+  * abort deletes what the other tasks published, null predicates pass
   * (SQL CHECK semantics), arbitrary deterministic expressions resolve
   * through the full analyzer, and malformed constraints are refused at
   * build time.
@@ -82,6 +82,27 @@ class CheckConstraintSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((3L, "this-name-is-way-too-long")).toDF("id", "name").coalesce(1)
         .write.format("graft-csv").option("check", "length(name) <= 10")
         .mode("append").save(dir)
+    }
+  }
+
+  // the last partition fails after tasks 0-1 committed: the driver's
+  // abort must delete what they published to the new path
+  test("a failed batch write to a new path leaves no part file or sidecar") {
+    def rows(fails: Boolean) = spark.range(0, 4000, 1, 4)
+      .selectExpr(if (fails) "if(id = 3999, raise_error('boom'), id) AS id" else "id")
+    val cases = Seq(
+      ("graft-json", rows(fails = true), Map.empty[String, String]),
+      ("graft-csv", rows(fails = true), Map.empty[String, String]),
+      ("graft-avro", rows(fails = true), Map.empty[String, String]),
+      ("graft-json", rows(fails = false), Map("check" -> "id < 3999")))
+    cases.zipWithIndex.foreach { case ((format, df, opts), i) =>
+      val dir = root.resolve(s"aborted-$i").toString
+      intercept[Exception](df.write.format(format).options(opts).mode("append").save(dir))
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val left = fs.listStatus(p).map(_.getPath.getName)
+        .filter(n => n.startsWith("part-") || n.endsWith(".stats")).toList
+      assert(left.isEmpty, s"$format ${opts.mkString}: left $left")
     }
   }
 

@@ -96,19 +96,23 @@ class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll with Adaptive
     assert(readerFactory(cases(3)._2).isInstanceOf[GraftAggReaderFactory])
   }
 
-  test("the graft-json write's DataWriterFactory stays under 8 KB") {
-    val out = dir.resolve("payload_write").toString
-    val props = Map("path" -> out).asJava
-    val table = new GraftJsonTableProvider().getTable(jsonSchema, Array.empty, props)
-    val info = new LogicalWriteInfo {
-      override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(props)
-      override def queryId(): String = "conf-broadcast-spec"
-      override def schema(): StructType = jsonSchema
+  test("the graft-json, graft-csv and graft-avro writes' DataWriterFactory stays under 8 KB") {
+    Seq(new GraftJsonTableProvider, new GraftCsvTableProvider, new GraftAvroTableProvider)
+        .foreach { provider =>
+      val out = dir.resolve(s"payload_write_${provider.shortName}").toString
+      val props = Map("path" -> out).asJava
+      val table = provider.getTable(jsonSchema, Array.empty, props)
+      val info = new LogicalWriteInfo {
+        override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(props)
+        override def queryId(): String = "conf-broadcast-spec"
+        override def schema(): StructType = jsonSchema
+      }
+      val factory = table.asInstanceOf[SupportsWrite].newWriteBuilder(info).build().toBatch
+        .createBatchWriterFactory(new PhysicalWriteInfo { def numPartitions(): Int = 1 })
+      val n = serializedBytes(factory)
+      assert(n < TaskBudget,
+        s"${provider.shortName}: ${factory.getClass.getSimpleName} serializes to $n bytes")
     }
-    val factory = table.asInstanceOf[SupportsWrite].newWriteBuilder(info).build().toBatch
-      .createBatchWriterFactory(new PhysicalWriteInfo { def numPartitions(): Int = 1 })
-    val n = serializedBytes(factory)
-    assert(n < TaskBudget, s"${factory.getClass.getSimpleName} serializes to $n bytes")
   }
 
   test("an unchanged conf reuses its broadcast; any change ships a fresh one") {

@@ -171,6 +171,26 @@ class GraftAvroSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back(1).getSeq[Float](1) === Seq.empty)
   }
 
+  test("more tasks than rows: header-only parts, exact COUNT, task-id-free names") {
+    val p = path("empty-tasks")
+    spark.range(0, 3, 1, 6).selectExpr("id", "cast(id as string) as s")
+      .write.format("graft-avro").mode("overwrite").save(p)
+    val df = spark.read.format("graft-avro").load(p)
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ===
+      Seq((0L, "0"), (1L, "1"), (2L, "2")))
+    val q = df.agg(count(lit(1)))
+    assert(scansOf(q).head.scan.description().contains("count-only"))
+    assert(q.collect()(0) === Row(3L))
+    val root = new org.apache.hadoop.fs.Path(p)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(root).map(_.getPath).filterNot(_.getName.startsWith("."))
+    assert(parts.length === 6, parts.mkString(", "))
+    parts.foreach { f =>
+      assert(f.getName.matches("part-[0-9a-zA-Z]{1,12}-\\d{5}\\.avro"), f.getName)
+      assert(fs.exists(FileStats.sidecarFor(f)), s"no sidecar for ${f.getName}")
+    }
+  }
+
   test("append mode adds files without clobbering") {
     val sp = spark; import sp.implicits._
     val p = path("append")
