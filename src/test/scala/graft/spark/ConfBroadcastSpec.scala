@@ -3,11 +3,12 @@ package graft.spark
 import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.SupportsWrite
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, TableProvider}
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -96,22 +97,29 @@ class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll with Adaptive
     assert(readerFactory(cases(3)._2).isInstanceOf[GraftAggReaderFactory])
   }
 
-  test("the graft-json, graft-csv and graft-avro writes' DataWriterFactory stays under 8 KB") {
-    Seq(new GraftJsonTableProvider, new GraftCsvTableProvider, new GraftAvroTableProvider)
-        .foreach { provider =>
-      val out = dir.resolve(s"payload_write_${provider.shortName}").toString
-      val props = Map("path" -> out).asJava
-      val table = provider.getTable(jsonSchema, Array.empty, props)
-      val info = new LogicalWriteInfo {
-        override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(props)
-        override def queryId(): String = "conf-broadcast-spec"
-        override def schema(): StructType = jsonSchema
-      }
-      val factory = table.asInstanceOf[SupportsWrite].newWriteBuilder(info).build().toBatch
-        .createBatchWriterFactory(new PhysicalWriteInfo { def numPartitions(): Int = 1 })
-      val n = serializedBytes(factory)
-      assert(n < TaskBudget,
-        s"${provider.shortName}: ${factory.getClass.getSimpleName} serializes to $n bytes")
+  private def writerFactoryBytes(provider: TableProvider with DataSourceRegister): (String, Int) = {
+    val out = dir.resolve(s"payload_write_${provider.shortName}").toString
+    val props = Map("path" -> out).asJava
+    val table = provider.getTable(jsonSchema, Array.empty, props)
+    val info = new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(props)
+      override def queryId(): String = "conf-broadcast-spec"
+      override def schema(): StructType = jsonSchema
+    }
+    val factory = table.asInstanceOf[SupportsWrite].newWriteBuilder(info).build().toBatch
+      .createBatchWriterFactory(new PhysicalWriteInfo { def numPartitions(): Int = 1 })
+    (factory.getClass.getSimpleName, serializedBytes(factory))
+  }
+
+  test("the graft-json write's DataWriterFactory stays under 8 KB") {
+    val (cls, n) = writerFactoryBytes(new GraftJsonTableProvider)
+    assert(n < TaskBudget, s"$cls serializes to $n bytes")
+  }
+
+  test("graft-csv and graft-avro write factories stay under 8 KB") {
+    Seq(new GraftCsvTableProvider, new GraftAvroTableProvider).foreach { provider =>
+      val (cls, n) = writerFactoryBytes(provider)
+      assert(n < TaskBudget, s"${provider.shortName}: $cls serializes to $n bytes")
     }
   }
 
