@@ -712,10 +712,11 @@ object TrainingData {
     * failed/abandoned jobs and out-of-band copies that would otherwise be
     * picked up by un-pinned reads forever. The inverse guarantee is the
     * important one: a file named by ANY log entry, every hidden
-    * planning artifact (sidecars, manifests, the log itself), and
-    * anything under a dot/underscore name is never touched. Returns the
-    * root-relative paths removed (empty in `dryRun`). Driver-side
-    * listing + deletes — the same cost class as the planning listing
+    * planning artifact (a live file's sidecar, manifests, the log
+    * itself), and anything under a dot/underscore name is never touched;
+    * an orphan's own stats sidecar goes with it. Returns the root-relative
+    * paths of the data files removed (in `dryRun`, those it would remove).
+    * Driver-side listing + deletes — the same cost class as the planning listing
     * itself; at 100 TB this runs per-partition-directory.
     */
   def vacuumOrphans(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -762,7 +763,12 @@ object TrainingData {
       val q = fs.makeQualified(p).toString
       if (q.startsWith(rootQ)) q.substring(rootQ.length).stripPrefix("/") else q
     }
-    if (!dryRun) orphans.foreach(p => fs.delete(p, false))
+    // an orphan's stats sidecar goes with it: the walk skips dot-names,
+    // so nothing else would ever reclaim it
+    if (!dryRun) orphans.foreach { p =>
+      fs.delete(p, false)
+      fs.delete(graft.spark.FileStats.sidecarFor(p), false)
+    }
     // deletion-vector debris rides the same sweep: artifacts no surviving
     // entry or checkpoint references (replaced vectors, aborted commits);
     // the reference set came from the single fold above

@@ -9,19 +9,14 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.ByteBuffer
-import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 /** Avro container-file lane: `spark.read.format("graft-avro")` /
@@ -42,12 +37,14 @@ import scala.jdk.CollectionConverters._
   *  - COUNT(*) with no filters is answered from block headers alone
   *    (`nextBlock()` + `getBlockCount()`): object counts are stored per
   *    block, so the count never decompresses or decodes a single datum.
-  *  - the full text-lane acceleration surface rides along (round 11):
-  *    file-level stats/bloom pruning, sync-edge BLOCK recording (split
-  *    parallelism with exact ordinals for masked/row-indexed files +
-  *    intra-file block skipping), parse-folded aggregate batteries with
-  *    sidecar metadata answers, LIMIT/TopN/OFFSET pushdown, and
-  *    reported per-partition ordering from the sorted sidecar flag.
+  *  - the scan is the text lanes' own [[GraftScan]] (through
+  *    `GraftFormat.Avro`), so their acceleration surface applies:
+  *    file-level stats/bloom pruning, runtime (DPP) file pruning,
+  *    sync-edge BLOCK recording (split parallelism with exact ordinals
+  *    for masked/row-indexed files + intra-file block skipping),
+  *    parse-folded aggregate batteries with sidecar metadata answers,
+  *    LIMIT/TopN/OFFSET pushdown, and reported per-partition ordering
+  *    from the sorted sidecar flag.
   *  - the writer emits one container file per task with a deterministic
   *    task-unique name; `codec` option selects null/deflate/snappy/zstd
   *    block compression.
@@ -423,665 +420,68 @@ object GraftAvro {
   }
 }
 
-// ==================================================================== provider
-
-class GraftAvroTableProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-avro"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val data = GraftAvro.toSparkSchema(GraftAvro.headerSchema(options))
-    // CDF reads append the synthetic change-type column (Delta's shape)
-    if (GraftSources.readChangeFeed(options) &&
-        !data.fieldNames.contains(GraftSources.ChangeTypeCol))
-      StructType(data.fields :+ org.apache.spark.sql.types.StructField(
-        GraftSources.ChangeTypeCol, org.apache.spark.sql.types.StringType,
-        nullable = false))
-    else data
-  }
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new GraftAvroTable(schema, properties)
-}
-
-final class GraftAvroTable(
-    tblSchema: StructType,
-    properties: java.util.Map[String, String])
-    extends Table with SupportsRead with SupportsWrite
-    with GraftDeletableTable {
-  override def name(): String = s"graft-avro:${properties.get("path")}"
-  override def schema(): StructType = tblSchema
-  // `DELETE FROM <catalog table>` / TRUNCATE → merge-on-read vectors
-  override protected def deleteFormat: String = "graft-avro"
-  override protected def deleteProperties: java.util.Map[String, String] = properties
-  override protected def declaredSchema: StructType = tblSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftAvroScanBuilder(tblSchema, GraftSources.mergeTableProps(properties, options))
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // mergeschema: the avro read path resolves each file's embedded
-    // schema, not the log's merged one, so accepting the merge would
-    // record a schema the reader cannot yet serve — refuse.
-    // check / partitionby: the shared write path would honour both, but
-    // no avro spec covers CHECK failures or a partitioned avro read-back
-    // yet, so they stay refused until one does
-    Seq("check", "mergeschema", "partitionby").foreach { opt =>
-      require(info.options.get(opt) == null,
-        s"graft-avro does not support option('$opt', ...) yet — " +
-          "use graft-json/graft-csv for CHECK constraints, schema evolution, " +
-          "and partitioned layouts")
-    }
-    GraftSink.newWriteBuilder(info, properties, Array.empty) { opt =>
-      AvroEncoding(opt("codec").getOrElse("none").toLowerCase(java.util.Locale.ROOT))
-    }
-  }
-}
-
-// ======================================================================= scan
-
-final class GraftAvroScanBuilder(
-    fullSchema: StructType,
-    options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters
-    with SupportsPushDownAggregates
-    with SupportsPushDownLimit
-    with SupportsPushDownOffset
-    with SupportsPushDownTopN {
-
-  private var required: StructType = fullSchema
-  private var countStar = false
-  private var aggSpec: Option[GraftAgg.Spec] = None
-  private var pruneFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit = -1
-  private var offset = -1
-  private var topN: Array[(String, Boolean, Boolean)] = null // (col, asc, nullsFirst)
-  private var topNLimit = -1
-  // build-time listing (column-mapping / offset gates); the scan
-  // resolves its own
-  private lazy val builderListing = GraftSources.resolvePartitioned(options)
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** LIMIT n stops each partition's decode once it has produced n rows —
-    * partial push, Spark applies the global limit on top (text parity).
-    */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-
-  /** COMPLETE offset: sound only over one unsplit file in record order —
-    * the same single-file / no-filters / no-reorder gates as the text
-    * builder (deletion vectors are fine: the wrapper trims the POST-mask
-    * stream, which is the table's row order).
-    */
-  override def pushOffset(n: Int): Boolean = {
-    if (countStar || aggSpec.isDefined || topN != null) return false
-    if (pruneFilters.nonEmpty) return false
-    if (builderListing.files.length != 1) return false
-    offset = n
-    true
-  }
-
-  /** Partial TopN: each partition drains through a bounded heap and ships
-    * its local best n rows (the text builder's shape — one shared order
-    * translator, same bounds and column-mapping gate).
-    */
-  override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
-      n: Int): Boolean = {
-    if (countStar || aggSpec.isDefined || offset >= 0) return false
-    if (n <= 0 || n > (1 << 16)) return false // bounded per-task memory
-    GraftTopNReaderFactory.translateOrders(orders, fullSchema) match {
-      case Some(spec)
-          // renamed sort columns stay unpushed (the heaps compare against
-          // decoded physical rows; Spark's global sort still runs)
-          if !spec.exists(t => builderListing.physMap.contains(t._1)) =>
-        topN = spec
-        topNLimit = n
-        true
-      case _ => false
-    }
-  }
-
-  override def isPartiallyPushed(): Boolean = true
-
-  /** Filters are used ONLY to prune files against their stats sidecars —
-    * every filter is returned as residual, so Spark re-evaluates them
-    * all (zero correctness exposure; pruning is pure acceleration).
-    */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    pruneFilters = filters
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-
-  /** Aggregate pushdown, refused when a filter pushed (the answer must
-    * reflect the filtered rows, which neither block headers nor sidecars
-    * can know). Ungrouped COUNT(*) keeps its decode-free BLOCK-HEADER
-    * lane (object counts live in the container framing — works with or
-    * without sidecars); every other supported battery (grouped/ungrouped
-    * MIN/MAX/COUNT/SUM — round 11) takes the same parse-folding wrapper
-    * as the text lanes, with whole-file sidecar metadata answers when
-    * the recording covers the battery.
-    */
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (pruneFilters.nonEmpty) return false
-    // the row-index column is stamped by the readers; a pruned aggregate
-    // decode would fold nulls in its place (the text builder's rule)
-    if (options.getBoolean("withrowindex", false)) return false
-    if (agg.groupByExpressions().isEmpty &&
-        agg.aggregateExpressions().length == 1 &&
-        agg.aggregateExpressions()(0).isInstanceOf[CountStar]) {
-      countStar = true
-      return true
-    }
-    GraftAgg.translate(agg, fullSchema) match {
-      case Some(spec) =>
-        // column mapping: sidecar metadata lookups key on PHYSICAL names —
-        // a battery touching a renamed column stays unpushed (Spark
-        // aggregates the full scan; correct, unaccelerated — text's rule)
-        if (spec.parseSchema(fullSchema).fieldNames.exists(
-            builderListing.physMap.contains)) return false
-        aggSpec = Some(spec); true
-      case None => false
-    }
-  }
-  override def supportCompletePushDown(agg: Aggregation): Boolean = false
-
-  override def build(): Scan =
-    new GraftAvroScan(fullSchema, required, countStar, options, pruneFilters,
-      aggSpec, limit, offset, topN, topNLimit)
-}
-
-final class GraftAvroScan(
-    fullSchema: StructType,
-    required: StructType,
-    countStar: Boolean,
-    options: CaseInsensitiveStringMap,
-    pruneFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    aggSpec: Option[GraftAgg.Spec] = None,
-    limit: Int = -1,
-    offset: Int = -1,
-    topN: Array[(String, Boolean, Boolean)] = null,
-    topNLimit: Int = -1)
-    extends Scan with Batch with SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsReportOrdering {
-
-  override def readSchema(): StructType =
-    if (countStar) StructType(Seq(StructField("count(*)", LongType, nullable = false)))
-    else aggSpec.map(_.outputSchema).getOrElse(required)
-
-  override def description(): String =
-    s"graft-avro ${if (countStar) "count-only" else required.fieldNames.mkString(",")}" +
-      aggSpec.map(s => s", pushedAgg=[$s]").getOrElse("") +
-      (if (limit >= 0) s", limit=$limit" else "") +
-      (if (offset >= 0) s", offset=$offset" else "") +
-      (if (topN != null && topNLimit > 0) s", topN=$topNLimit" else "")
-
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // per-file partition values (hive k=v and withFilePath provenance)
-    // ride the stream: whole-file admission knows each file's path, so
-    // the values derive exactly like the batch walk (round 11; previously
-    // a loud refusal). Partition-served columns keep LOGICAL names.
-    // column mapping: the streaming reader resolves avro fields BY NAME,
-    // so renamed DATA columns stream under their PHYSICAL keys (rows are
-    // positional — Spark still sees the logical schema). listing.physMap
-    // is the already-resolved table — no second log read.
-    val phys = listing.physMap
-    val synthetic = listing.partCols.toSet
-    val streamSchema =
-      if (phys.isEmpty) required
-      else StructType(required.fields.map(f =>
-        if (synthetic.contains(f.name)) f
-        else phys.get(f.name).map(ph => f.copy(name = ph)).getOrElse(f)))
-    if (GraftSources.readChangeFeed(options)) {
-      // CDF streaming (round 15): the change-type column rides the
-      // partition-value machinery — see GraftCdfMicroBatchStream
-      require(streamSchema.fieldNames.contains(GraftSources.ChangeTypeCol),
-        s"readChangeFeed: the schema must include the synthetic " +
-          s"'${GraftSources.ChangeTypeCol} STRING' column (or omit the " +
-          "schema to take the table's recorded one)")
-      val cdfPartCols = listing.partCols :+ GraftSources.ChangeTypeCol
-      return new GraftCdfMicroBatchStream(options, checkpointLocation,
-        new GraftAvroReaderFactory(streamSchema, cdfPartCols,
-          countStar = false, absentOkFields(phys),
-          GraftSources.broadcastHadoopConf()),
-        listing.partCols)
-    }
-    new GraftAvroMicroBatchStream(streamSchema, absentOkFields(phys),
-      options, checkpointLocation, listing.partCols)
-  }
-
-  /** Physical names of columns the table's RECORDED schema knows —
-    * the set a reader may serve as NULL when a file's writer schema
-    * lacks them (an ALTER added the column after the file was written).
-    * Anything else absent is a loud error: a typo'd user schema or a
-    * degraded column-mapping resolution must never silently read as
-    * all-NULL. Untracked tables have no record, so every absence is loud.
-    */
-  private def absentOkFields(phys: Map[String, String]): Set[String] =
-    GraftSources.logSchema(options) match {
-      case Some(recorded) =>
-        recorded.fieldNames.map(n => phys.getOrElse(n, n)).toSet
-      case None => Set.empty
-    }
-
-  private val maxSplit =
-    Option(options.get("maxsplitbytes")).map(_.toLong).getOrElse(32L << 20)
-  private val withRowIndex = options.getBoolean("withrowindex", false)
-
-  // one listing serves planInputPartitions AND createReaderFactory (the
-  // partCols carry withFilePath's synthetic provenance column)
-  private lazy val listing = GraftSources.resolvePartitioned(options)
-
-  /** Hive-partition pruning from the pushed filters (the text scan's
-    * partitionPruned shape): a filter on a partition column whose typed
-    * directory value definitely fails drops the file at planning time.
-    */
-  private def partitionPruned(files: Seq[GraftSources.ListedFile])
-      : Seq[GraftSources.ListedFile] = {
-    if (listing.partCols.isEmpty || pruneFilters.isEmpty) return files
-    val partIdx = listing.partCols.zipWithIndex.toMap
-    val partTypes: Map[String, DataType] =
-      GraftSources.partitionSchema(listing).map(f => f.name -> f.dataType).toMap
-    val relevant = FilterEval.normalize(pruneFilters.filter(f =>
-      f.references.length == 1 && partIdx.contains(f.references.head)))
-    if (relevant.isEmpty) return files
-    files.filterNot { f =>
-      relevant.exists { flt =>
-        val c = flt.references.head
-        val raw =
-          if (partIdx(c) < f.partValues.length) f.partValues(partIdx(c)) else null
-        val typed = if (raw == null) null else Conversions.fromString(partTypes(c), raw)
-        FilterEval.definitelyFails(flt, typed)
-      }
-    }
-  }
-
-  // pushed single-column data filters, normalized once — shared by
-  // file-level stats pruning and the intra-file block lanes
-  private lazy val dataFilters: Array[org.apache.spark.sql.sources.Filter] =
-    if (pruneFilters.isEmpty || !options.getBoolean("dataskipping", true))
-      Array.empty
-    else FilterEval.normalize(pruneFilters.filter(f =>
-      f.references.length == 1 && !listing.partCols.contains(f.references.head)))
-
-  private def physName(c: String): String = listing.physMap.getOrElse(c, c)
-
-  // planning-time sidecar/manifest caches, shared by file-level pruning
-  // and the block lanes — never a second read for the same artifact
-  private val manifestCache =
-    scala.collection.mutable.Map.empty[String, Option[Map[String, FileStats.Stats]]]
-  private val sidecarCache =
-    scala.collection.mutable.Map.empty[String, Option[FileStats.Stats]]
-  /** Complete per-file sidecar read (blooms + blocks included), cached —
-    * serves the manifest-miss fallback, the bloom probes, and the block
-    * lanes (manifests strip both by design).
-    */
-  private def sidecarOnly(p: String): Option[FileStats.Stats] =
-    sidecarCache.getOrElseUpdate(p, {
-      val path = new Path(p)
-      FileStats.load(path.getFileSystem(GraftSources.activeHadoopConf()), path)
-    })
-  private def fileStats(p: String, len: Long): Option[FileStats.Stats] = {
-    val path = new Path(p)
-    manifestCache.getOrElseUpdate(path.getParent.toString,
-        FileStats.loadManifest(
-          path.getFileSystem(GraftSources.activeHadoopConf()), path.getParent))
-      .flatMap(_.get(path.getName))
-      .filter(st => st.dataLen >= 0 && st.dataLen == len)
-      .orElse(sidecarOnly(p))
-  }
-
-  /** File-level stats pruning (min/max/null/bloom against the sidecars
-    * the avro sink writes): one manifest read per leaf directory (entries
-    * trusted only with a matching recorded length — the same binding the
-    * text scan enforces), per-file sidecar fallback through the shared
-    * cache. Masks never matter here — a deletion vector only SHRINKS a
-    * file's row set, so "definitely empty" stays definitely empty.
-    * KEEP IN SYNC with the text scan's statsPruned
-    * (GraftSources.scala GraftScan) — same length binding, same
-    * definitelyEmpty/bloom probe rules.
-    */
-  private def statsPruned(files: Seq[GraftSources.ListedFile])
-      : Seq[GraftSources.ListedFile] = {
-    if (dataFilters.isEmpty) return files
-    val kept = files.filterNot { f =>
-      fileStats(f.path, f.len).exists { st =>
-        dataFilters.exists { flt =>
-          val colName = physName(flt.references.head)
-          st.cols.get(colName).exists(c =>
-            FilterEval.definitelyEmpty(flt, c.min, c.max, c.nulls, st.rows)) ||
-            // blooms ride only the per-file sidecar (manifests are
-            // bloom-less by design) — probed lazily, point filters only
-            (FileStats.bloomEligible(flt) &&
-              sidecarOnly(f.path).flatMap(_.cols.get(colName))
-                .filter(_.bloom != null)
-                .exists(FileStats.bloomExcludes(_, flt)))
-        }
-      }
-    }
-    GraftAvroScan.lastStatsPruned.set(files.length - kept.length)
-    kept
-  }
-
-  private var blocksPrunedCount = 0
-
-  /** Intra-file block lanes from the sidecar's `blk` recording (the q199
-    * lane for avro, round 11): boundaries are sync-marker EDGES the avro
-    * sink forced (pre-marker byte positions; block 0 starts at 0, the
-    * last block ends at the file length), so the reader's standard
-    * sync(start)/pastSync(end) range protocol starts exactly at block
-    * edges and per-range row counts are exact. Blocks must provably tile
-    * the listed length ([[FileStats.Stats.validBlocks]]); `needOrdinals`
-    * additionally demands the block row counts sum to the file's recorded
-    * rows (deletion-vector masks and withRowIndex address whole-file
-    * ordinals — an inconsistent recording would corrupt them).
-    * `splitWhenUnpruned` returns block-aligned maxSplit-chopped ranges
-    * covering the whole file even when nothing prunes — task parallelism
-    * for masked/row-indexed files, which cannot split on raw byte offsets
-    * (a sync-realigned split has no ordinal base). Returns None when no
-    * usable recording exists. KEEP IN SYNC with the text scan's
-    * blockRanges (GraftSources.scala GraftScan).
-    */
-  private def blockRanges(p: String, len: Long, needOrdinals: Boolean,
-      splitWhenUnpruned: Boolean): Option[Seq[(Long, Long, Long)]] = {
-    // dataskipping=false means "don't trust sidecars"; a split derived
-    // from a stale recording is as wrong as a prune, so it honors the
-    // same opt-out (the text lanes' rule)
-    if (!options.getBoolean("dataskipping", true)) return None
-    if (dataFilters.isEmpty && !splitWhenUnpruned) return None
-    val st = sidecarOnly(p)
-    val blocks = st.map(_.validBlocks(len)).getOrElse(Nil)
-    if (blocks.isEmpty) return None
-    if (needOrdinals && blocks.iterator.map(_.rows).sum != st.get.rows)
-      return None // inconsistent recording: ordinals would be wrong
-    val startOrds = blocks.scanLeft(0L)(_ + _.rows)
-    val surviving = blocks.zip(startOrds).filterNot { case (b, _) =>
-      dataFilters.exists { flt =>
-        b.cols.get(physName(flt.references.head)).exists(c =>
-          FilterEval.definitelyEmpty(flt, c.min, c.max, c.nulls, b.rows))
-      }
-    }
-    if (surviving.length == blocks.length && !splitWhenUnpruned)
-      return None // nothing pruned
-    blocksPrunedCount += blocks.length - surviving.length
-    // merge contiguous survivors into runs, chopped near maxSplit so a
-    // big surviving region still parallelizes across tasks
-    val runs = Seq.newBuilder[(Long, Long, Long)]
-    var rs = -1L
-    var re = -1L
-    var ro = 0L
-    surviving.foreach { case (b, ord) =>
-      if (re == b.start && re - rs < maxSplit) re = b.end
-      else {
-        if (rs >= 0) runs += ((rs, re, ro))
-        rs = b.start; re = b.end; ro = ord
-      }
-    }
-    if (rs >= 0) runs += ((rs, re, ro))
-    Some(runs.result())
-  }
-
-  // a pushed aggregate battery keeps a file WHOLE when its sidecar can
-  // answer it from metadata (the GraftAggReaderFactory fast path needs a
-  // whole-file partition); sidecar-less files still split for parse-fold
-  // parallelism — the text scan's metaAggCandidate shape
-  private def metaAggCandidate: Boolean =
-    aggSpec.exists(GraftAggMeta.eligible(_, listing.partCols.toSet)) &&
-      options.getBoolean("dataskipping", true)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    blocksPrunedCount = 0
-    val parts: Array[InputPartition] =
-      statsPruned(partitionPruned(listing.files)).flatMap[InputPartition] { lf =>
-        if (lf.dv != null || withRowIndex) {
-          // a deletion vector masks WHOLE-FILE record ordinals and
-          // withRowIndex stamps them. With a sidecar `blk` recording the
-          // file still block-skips AND splits for task parallelism —
-          // each range carries its exact starting ordinal (per-block row
-          // counts), so a big masked file no longer serializes into one
-          // task. Without a recording it reads as one partition (a sync-
-          // realigned byte split cannot know how many records precede
-          // it). Pushed COUNT(*) keeps the file whole: mask cardinality
-          // subtracts from whole-file block-header sums only; so do
-          // aggregate batteries (the text lanes' per-file fold contract).
-          val ranges =
-            if (countStar || aggSpec.isDefined || offset >= 0) None
-            else blockRanges(lf.path, lf.len, needOrdinals = true,
-              splitWhenUnpruned = lf.len > maxSplit)
-          ranges match {
-            case Some(rs) => rs.map { case (s0, e0, ord) =>
-              GraftInputPartition(lf.path, s0, e0, lf.len, lf.partValues,
-                aligned = true, dv = lf.dv, dvTarget = lf.dvTarget,
-                startOrd = ord)
-            }
-            case None =>
-              Seq(GraftInputPartition(lf.path, 0, lf.len, lf.len,
-                lf.partValues, dv = lf.dv, dvTarget = lf.dvTarget))
-          }
-        }
-        else if (metaAggCandidate && sidecarOnly(lf.path).isDefined)
-          Seq(GraftInputPartition(lf.path, 0, lf.len, lf.len, lf.partValues))
-        else blockRanges(lf.path, lf.len, needOrdinals = false,
-            splitWhenUnpruned = false) match {
-          case Some(rs) => rs.map { case (s0, e0, _) =>
-            GraftInputPartition(lf.path, s0, e0, lf.len, lf.partValues,
-              aligned = true)
-          }
-          case None =>
-            // a pushed COMPLETE offset needs ONE partition in record
-            // order (the builder already pinned a single-file listing)
-            if (offset >= 0)
-              Seq(GraftInputPartition(lf.path, 0, lf.len, lf.len, lf.partValues))
-            else {
-              // container files realign on sync markers, so ranges are
-              // safe; the header (read per task) is tiny next to a split
-              val n = math.max(1L, (lf.len + maxSplit - 1) / maxSplit)
-              (0L until n).map { i =>
-                GraftInputPartition(lf.path, i * maxSplit,
-                  math.min(lf.len, (i + 1) * maxSplit), lf.len, lf.partValues)
-              }
-            }
-        }
-      }.toArray
-    GraftAvroScan.lastBlocksPruned.set(blocksPrunedCount)
-    parts
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // with a pushed aggregate battery the reader decodes only the
-    // referenced columns; the aggregating wrapper folds their rows
-    val parseLogical = aggSpec.map(_.parseSchema(fullSchema)).getOrElse(required)
-    // column mapping (ALTER RENAME): avro resolves reader fields BY NAME
-    // against the file's embedded schema, so the pruned reader schema
-    // must carry PHYSICAL names — output rows are positional, so Spark
-    // still sees the logical readSchema. Synthetic/partition-served
-    // columns (withFilePath provenance, withRowIndex ordinals, hive k=v
-    // values) are never in the data files, so they keep logical names.
-    // listing.physMap is the already-resolved table — no second log read.
-    val phys = listing.physMap
-    val synthetic = listing.partCols.toSet + GraftSources.RowIndexCol
-    val parseRequired =
-      if (phys.isEmpty) parseLogical
-      else StructType(parseLogical.fields.map(f =>
-        if (synthetic.contains(f.name)) f
-        else phys.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
-    val conf = GraftSources.broadcastHadoopConf()
-    // a pushed LIMIT stops each partition's decode early; when pushed
-    // alongside OFFSET, Spark pushes limit+offset, so the wrapped stream
-    // is exactly rows [offset, offset+limit) — the text lanes' contract
-    val rowFactory = new GraftAvroReaderFactory(parseRequired,
-      listing.partCols, countStar, absentOkFields(phys), conf, limit)
-    aggSpec match {
-      case Some(spec) =>
-        // the SAME parse-folding wrapper the text lanes use: per-partition
-        // partial rows, whole-file sidecar metadata answers when the
-        // recording covers the battery (zero data bytes), mask-carrying
-        // partitions always parse
-        new GraftAggReaderFactory(rowFactory, parseLogical, spec,
-          maxGroups = options.getInt("aggmaxgroups", 1 << 16),
-          conf = conf,
-          metadataOk = options.getBoolean("dataskipping", true),
-          partSpec = GraftSources.partSpecFor(parseLogical, listing.partCols))
-      case None =>
-        if (offset >= 0) new GraftOffsetReaderFactory(rowFactory, offset)
-        else if (topN != null && topNLimit > 0)
-          new GraftTopNReaderFactory(rowFactory, parseLogical, topN, topNLimit)
-        else rowFactory
-    }
-  }
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = GraftSources.resolveFiles(options).map(_._2).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-    override def numRows(): OptionalLong = OptionalLong.empty()
-  }
-
-  /** Reported per-partition ordering (the text scan's shape): partition
-    * columns are constant within every input partition, and a data
-    * column whose sidecars ALL carry the write-order `sorted` flag
-    * extends the lexicographic prefix — sorted avro sink output elides
-    * the local sorts merge-joins would insert. Conservative: any file
-    * without a trusted sidecar, or any unsorted column, drops the claim.
-    * Sound over splits and masks alike — every byte range of a sorted
-    * file is sorted, and a mask only removes rows.
-    */
-  override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, NullOrdering}
-    if (!options.getBoolean("reportordering", true)) return Array.empty
-    if (aggSpec.isDefined || countStar || topN != null) return Array.empty
-    val pf = statsPruned(partitionPruned(listing.files))
-    if (pf.isEmpty) return Array.empty
-    def asc(c: String) = Expressions.sort(
-      Expressions.column(c), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)
-    val partOrd: Seq[String] =
-      if (listing.partCols.nonEmpty &&
-          listing.partCols.forall(c => required.fieldNames.contains(c)) &&
-          pf.forall(_.partValues.length == listing.partCols.length))
-        listing.partCols
-      else Nil
-    val dataOrd: Option[String] = {
-      var stats = List.empty[FileStats.Stats]
-      var covered = true
-      val it = pf.iterator
-      while (covered && it.hasNext) {
-        val f = it.next()
-        fileStats(f.path, f.len) match {
-          case Some(s) => stats ::= s
-          case None => covered = false
-        }
-      }
-      if (!covered) None
-      else required.fields.iterator.map(_.name)
-        .filterNot(listing.partCols.contains)
-        .find(c => stats.forall(_.cols.get(physName(c)).exists(_.sorted)))
-    }
-    (partOrd ++ dataOrd.toSeq).map(asc).toArray
-  }
-}
-
-object GraftAvroScan {
-  /** Files dropped by the latest stats-pruned avro planning in this JVM —
-    * test/debug observability only (the GraftScan.lastStatsPruned shape).
-    */
-  val lastStatsPruned = new java.util.concurrent.atomic.AtomicInteger(-1)
-  /** Intra-file blocks dropped by the latest avro planning in this JVM —
-    * test/debug observability only (the GraftScan.lastBlocksPruned shape).
-    */
-  val lastBlocksPruned = new java.util.concurrent.atomic.AtomicInteger(-1)
-}
-
-/** Avro micro-batch streaming — whole-file admission (binary blocks
-  * preclude mid-stream byte splits); `followLog` tails the commit log
-  * through the SAME StreamFileRegistry the text lanes use, so
-  * dv-carrying and remove-carrying history refuses identically.
-  */
-final class GraftAvroMicroBatchStream(
-    required: StructType,
-    absentOk: Set[String],
-    options: CaseInsensitiveStringMap,
-    checkpointLocation: String,
-    partCols: Seq[String] = Nil)
-    extends WholeFileMicroBatchStream(options, checkpointLocation, partCols) {
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftAvroReaderFactory(required, partCols, countStar = false, absentOk, conf)
-}
+// ======================================================================= read
 
 final class GraftAvroReaderFactory(
-    required: StructType,
-    partCols: Seq[String],
-    countStar: Boolean,
+    schema: StructType,
+    partSpec: Array[(Int, Int, DataType)],
+    rowIdxSlot: Int,
     absentOk: Set[String],
     conf: Broadcast[SerializableConfiguration],
     limit: Int = -1)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    if (countStar) new GraftAvroCountReader(p, conf.value.value)
-    else new GraftAvroPartitionReader(p, required, partCols, absentOk, conf.value.value,
-      limit)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftAvroPartitionReader(partition.asInstanceOf[GraftInputPartition], schema,
+      partSpec, rowIdxSlot, absentOk, conf.value.value, limit)
+}
+
+final class GraftAvroCountReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftAvroCountReader(partition.asInstanceOf[GraftInputPartition], conf.value.value)
 }
 
 /** Range reader: sync to the first marker at/after `start`, stop once past
-  * `end`. Projection rides the reader schema (decoder-level skip).
-  * Partition-served columns (hive k=v values and withFilePath's synthetic
-  * provenance) fill from the listing's per-file values; `withRowIndex`
-  * stamps whole-file record ordinals; a deletion vector drops masked
-  * ordinals before they surface (the planner guarantees such partitions
-  * either cover the whole file or are block-aligned ranges carrying an
-  * exact starting ordinal, so ordinals are exact either way).
+  * `end`. Projection rides the reader schema (decoder-level skip, which
+  * counts no skipped bytes). Each decoded record goes through the row
+  * base's emit gate, which stamps partition values and whole-file
+  * ordinals and drops deletion-masked records (the planner guarantees
+  * such partitions either cover the whole file or are block-aligned
+  * ranges carrying an exact starting ordinal, so ordinals are exact
+  * either way).
   */
 final class GraftAvroPartitionReader(
     part: GraftInputPartition,
-    required: StructType,
-    partCols: Seq[String],
+    schema: StructType,
+    partSpec: Array[(Int, Int, DataType)],
+    rowIdxSlot: Int,
     absentOk: Set[String],
     conf: org.apache.hadoop.conf.Configuration,
     limit: Int = -1)
-    extends PartitionReader[InternalRow] {
-
-  // slot plan: avro-decoded fields vs partition-served vs the ordinal
-  private val idxSlot = required.fieldNames.indexOf(GraftSources.RowIndexCol)
-  private val dataFields: Array[(org.apache.spark.sql.types.StructField, Int)] =
-    required.fields.zipWithIndex.filterNot { case (f, i) =>
-      i == idxSlot || partCols.contains(f.name)
-    }
+    extends GraftRowReader(part, conf, limit, partSpec, rowIdxSlot) {
 
   private val in = new FsInput(new Path(part.path), conf)
   private val datumReader = new GenericDatumReader[GenericRecord]()
   private val reader = new DataFileReader[GenericRecord](in, datumReader)
+  // slots the emit gate stamps are never decoded
+  private val stamped = partSpec.map(_._1).toSet + rowIdxSlot
   // fields present in THIS file's writer schema decode; fields an ALTER
   // added after the file was written (absentOk = the recorded schema's
   // physical names) read as null — the text formats' missing-key
-  // semantic (slots of a fresh GenericInternalRow are null and absent
-  // slots are never written). Anything ELSE absent is a loud error: a
-  // typo'd user schema or a degraded column-mapping resolution must
-  // never silently read as all-NULL.
-  private val presentFields: Array[(org.apache.spark.sql.types.StructField, Int)] =
-    dataFields.filter { case (f, _) =>
-      val present = reader.getSchema.getField(f.name) != null
-      require(present || absentOk.contains(f.name),
-        s"graft-avro: column '${f.name}' not in '${part.path}''s writer " +
-          "schema and not in the table's recorded schema — misspelled " +
-          "column, or a column-mapped read resolved without its rename " +
-          "table")
-      present
+  // semantic (absent slots of the row are never written). Anything ELSE
+  // absent is a loud error: a typo'd user schema or a degraded
+  // column-mapping resolution must never silently read as all-NULL.
+  private val presentFields: Array[(StructField, Int)] =
+    schema.fields.zipWithIndex.filter { case (f, i) =>
+      !stamped(i) && {
+        val present = reader.getSchema.getField(f.name) != null
+        require(present || absentOk.contains(f.name),
+          s"graft-avro: column '${f.name}' not in '${part.path}''s writer " +
+            "schema and not in the table's recorded schema — misspelled " +
+            "column, or a column-mapped read resolved without its rename " +
+            "table")
+        present
+      }
     }
   // single open: header gives the writer schema, then the pruned reader
   // schema is installed before any datum decodes (setExpected)
@@ -1090,58 +490,29 @@ final class GraftAvroPartitionReader(
   reader.sync(part.start)
   private val convs: Array[GraftAvro.Conv] =
     presentFields.map { case (f, _) => GraftAvro.readerConv(f.dataType) }
-  private var reuse: GenericRecord = _
-  private val row = new GenericInternalRow(required.length)
-  // partition-served slots are per-file constants: fill once
-  required.fields.zipWithIndex.foreach { case (f, i) =>
-    val pc = partCols.indexOf(f.name)
-    if (pc >= 0)
-      row.update(i, GraftAvroPartitionReader.typedPartValue(f,
-        if (pc < part.partValues.length) part.partValues(pc) else null))
-  }
-  private val mask = DeletionVectors.partitionMask(conf, part)
-  // whole-file record ordinal of the LAST returned record: whole-file
-  // partitions count from 0; block-aligned ranges start at the planner-
-  // derived base (exact per-block row counts from the sidecar recording)
-  private var ord = part.startOrd - 1L
-  private var done = false
-  private var emitted = 0
+  private var record: GenericRecord = _
+  private val row = new GenericInternalRow(schema.length)
 
-  override def next(): Boolean = {
-    while (!done) {
-      // pushed LIMIT satisfied: stop decoding bytes entirely
-      if (limit >= 0 && emitted >= limit) { done = true; return false }
-      if (!reader.hasNext || reader.pastSync(part.end)) { done = true; return false }
-      reuse = reader.next(reuse)
-      ord += 1
-      if (mask == null || !mask.masked(ord)) {
-        var j = 0
-        while (j < convs.length) {
-          val v = reuse.get(j)
-          row.update(presentFields(j)._2, if (v == null) null else convs(j)(v))
-          j += 1
-        }
-        if (idxSlot >= 0) row.update(idxSlot, ord)
-        emitted += 1
-        return true
-      }
+  protected val source: RowSource = new RowSource {
+    private var done = false
+    override def isExhausted: Boolean = done || {
+      done = !reader.hasNext || reader.pastSync(part.end)
+      done
     }
-    false
+    override def step(): Unit = {
+      record = reader.next(record)
+      var j = 0
+      while (j < convs.length) {
+        val v = record.get(j)
+        row.update(presentFields(j)._2, if (v == null) null else convs(j)(v))
+        j += 1
+      }
+      emit(row)
+    }
+    override def close(): Unit = reader.close()
   }
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-}
 
-object GraftAvroPartitionReader {
-  /** Partition-directory values are strings; serve them under the
-    * reader's declared type through the SAME parser the json/csv readers
-    * use (`Conversions.fromString` — full type lattice, permissive null
-    * on a malformed value), so a hive layout reads identically across
-    * formats.
-    */
-  private[spark] def typedPartValue(
-      f: org.apache.spark.sql.types.StructField, raw: String): Any =
-    if (raw == null) null else Conversions.fromString(f.dataType, raw)
+  protected def skippedBytes: Long = 0L
 }
 
 /** Decode-free COUNT(*): walk block headers in the range, sum counts. A
@@ -1174,6 +545,8 @@ final class GraftAvroCountReader(
   }
   override def get(): InternalRow = row
   override def close(): Unit = ()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GraftSources.skippedBytesMetric(0L)
 }
 
 // ====================================================================== write

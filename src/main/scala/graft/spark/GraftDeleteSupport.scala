@@ -20,41 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (A v1-filter lane rides along for SupportsDelete's abstract member
   * and direct v1 callers, with the same refuse-on-doubt rules.)
   */
-/** Mixin for the three catalog table classes: `DELETE FROM t [WHERE]` /
-  * `TRUNCATE TABLE t` via the DSv2 hook. The V2-level overrides are
-  * LOAD-BEARING — Spark's SupportsDelete defaults convert V2 predicates
-  * to v1 filters with a conversion that can silently NARROW a
-  * partially-convertible condition (an under-delete); the strict
-  * renderer also expresses general scalar conditions (arithmetic, CASE)
-  * that v1 filters cannot.
-  */
-trait GraftDeletableTable
-    extends org.apache.spark.sql.connector.catalog.SupportsDelete {
-  /** The graft format name routed to deleteWhereDV. */
-  protected def deleteFormat: String
-  /** The table's property map (path/location resolution). */
-  protected def deleteProperties: java.util.Map[String, String]
-  /** The declared catalog schema (k=v columns included; resolveCow
-    * dedups them against its own listing).
-    */
-  protected def declaredSchema: StructType
-
-  private def tablePath: String =
-    Option(deleteProperties.get("path"))
-      .orElse(Option(deleteProperties.get("location"))).orNull
-
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    GraftDeleteSupport.canDelete(filters)
-  override def deleteWhere(filters: Array[Filter]): Unit =
-    GraftDeleteSupport.deleteWhere(tablePath, declaredSchema, deleteFormat, filters)
-  override def canDeleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Boolean =
-    GraftDeleteSupport.canDeleteV2(predicates)
-  override def deleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    GraftDeleteSupport.deleteWhereV2(tablePath, declaredSchema, deleteFormat, predicates)
-}
-
 object GraftDeleteSupport {
   import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Literal => V2Literal}
   import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}

@@ -1,11 +1,7 @@
 package graft.spark
 
-import graft.core.json.JsonParser
-
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Micro-batch streaming over JSON-lines files: the engine's mapping of the
@@ -114,11 +110,9 @@ private[spark] final class StreamFileRegistry(
 }
 
 final class GraftJsonMicroBatchStream(
-    schema: StructType,
-    filters: Array[Filter],
     options: CaseInsensitiveStringMap,
-    mode: JsonParser.Mode,
     checkpointLocation: String,
+    factory: PartitionReaderFactory,
     partCols: Seq[String] = Nil)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
@@ -178,8 +172,6 @@ final class GraftJsonMicroBatchStream(
   // the drain wait for the next run (the AvailableNow contract)
   private var availableNowCap: Long = -1L
 
-  private val conf = GraftSources.broadcastHadoopConf()
-
   override def initialOffset(): Offset = GraftStreamOffset(0L)
 
   override def deserializeOffset(json: String): Offset = {
@@ -237,9 +229,7 @@ final class GraftJsonMicroBatchStream(
     parts.result().toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftJsonReaderFactory(schema, filters, conf, mode,
-      partSpec = GraftSources.partSpecFor(schema, partCols))
+  override def createReaderFactory(): PartitionReaderFactory = factory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -249,12 +239,13 @@ final class GraftJsonMicroBatchStream(
   * cannot byte-offset split mid-stream (CSV's quoted row delimiters,
   * avro's binary blocks): the offset is a FILE index into the (snapshot,
   * name-ordered) list — each trigger admits up to `maxfilespertrigger`
-  * whole files (the classic file-source admission model). Subclasses
-  * supply only the reader factory.
+  * whole files (the classic file-source admission model), read by the
+  * format's `factory`.
   */
-abstract class WholeFileMicroBatchStream(
+final class WholeFileMicroBatchStream(
     options: CaseInsensitiveStringMap,
     checkpointLocation: String,
+    factory: PartitionReaderFactory,
     partCols: Seq[String] = Nil)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
@@ -264,8 +255,6 @@ abstract class WholeFileMicroBatchStream(
   private val maxFilesPerTrigger: Int =
     Option(options.get("maxfilespertrigger")).map(_.toInt).getOrElse(Int.MaxValue)
   private var availableNowCap: Long = -1L
-
-  protected val conf = GraftSources.broadcastHadoopConf()
 
   override def initialOffset(): Offset = GraftStreamOffset(0L)
 
@@ -304,6 +293,7 @@ abstract class WholeFileMicroBatchStream(
     }.toArray
   }
 
+  override def createReaderFactory(): PartitionReaderFactory = factory
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -510,21 +500,4 @@ final class GraftCdfMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory = factory
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** CSV micro-batch streaming — whole-file admission (quoted row
-  * delimiters preclude byte-offset splits).
-  */
-final class GraftCsvMicroBatchStream(
-    schema: StructType,
-    filters: Array[Filter],
-    options: CaseInsensitiveStringMap,
-    config: graft.core.csv.CsvParser.Config,
-    checkpointLocation: String,
-    partCols: Seq[String] = Nil)
-    extends WholeFileMicroBatchStream(options, checkpointLocation, partCols) {
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftCsvReaderFactory(schema, filters, conf, config,
-      partSpec = GraftSources.partSpecFor(schema, partCols))
 }

@@ -11,12 +11,15 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table,
+  TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -26,7 +29,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 integration for the graft parser core (SURVEY §7.1):
-  * `spark.read.format("graft-json")` / `format("graft-csv")`.
+  * `spark.read.format("graft-json")` / `format("graft-csv")`, and the
+  * scan `format("graft-avro")` shares with them — one [[GraftTable]],
+  * [[GraftScanBuilder]] and [[GraftScan]], with what differs per format
+  * behind [[GraftFormat]].
   *
   * Scale design (100 TB stance):
   *  - JSON-lines files are split into byte ranges at
@@ -265,9 +271,11 @@ object GraftSources {
     * COLUMN-MAPPING rename table (logical name -> physical key in data
     * files, only where they differ) from the recorded schema as of the
     * resolved version — empty for unmapped/untracked tables.
+    * `recordedCols` holds the physical names of every column that
+    * recorded schema knows (empty when the table records none).
     */
   final case class Listing(partCols: Seq[String], files: Seq[ListedFile],
-      physMap: Map[String, String] = Map.empty)
+      physMap: Map[String, String] = Map.empty, recordedCols: Set[String] = Set.empty)
 
   /** StructField-metadata key holding a column's PHYSICAL name (the key
     * data files store it under). Assigned by ALTER RENAME COLUMN — the
@@ -290,32 +298,6 @@ object GraftSources {
   def physicalName(f: org.apache.spark.sql.types.StructField): String =
     if (f.metadata.contains(PhysicalNameKey)) f.metadata.getString(PhysicalNameKey)
     else f.name
-
-  /** The rename table for a single-root read WITHOUT a directory walk —
-    * one versions() listing + one bounded schema read — for scans that
-    * already resolved their listing separately (the avro reader factory).
-    * Resolves versionAsOf/timestampAsOf pinning like the main listing.
-    */
-  def physMapFor(options: CaseInsensitiveStringMap): Map[String, String] = {
-    val raw = Option(options.get("path")).orElse(Option(options.get("paths")))
-      .orElse(Option(options.get("location"))).getOrElse(return Map.empty)
-    val roots = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (roots.length != 1) return Map.empty
-    val rootPath = new Path(roots.head
-      .stripPrefix("[\"").stripSuffix("\"]").stripPrefix("\"").stripSuffix("\""))
-    val conf = activeHadoopConf()
-    val fs = rootPath.getFileSystem(conf)
-    val isDir = try fs.getFileStatus(rootPath).isDirectory catch { case _: Exception => false }
-    if (!isDir) return Map.empty
-    val vs = GraftCommitLog.versions(fs, rootPath)
-    if (vs.isEmpty) return Map.empty
-    val pinned = Option(options.get("versionasof")).map(_.trim).filter(_.nonEmpty)
-      .map(_.toLong)
-      .orElse(Option(options.get("timestampasof")).map(_.trim).filter(_.nonEmpty)
-        .map(t => GraftCommitLog.versionForTimestamp(fs, rootPath, t.toLong)))
-    GraftCommitLog.schemaAsOfStrict(fs, rootPath, pinned.getOrElse(vs.max))
-      .map(physicalMap).getOrElse(Map.empty)
-  }
 
   private def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
@@ -750,29 +732,27 @@ object GraftSources {
     // rest of the pinning machinery): silently losing the map would make
     // renamed columns read as null. One small log read for tracked
     // tables; zero extra I/O for unlogged directories.
-    val physMap: Map[String, String] =
-      if (roots.length != 1) Map.empty
+    val recorded: Option[StructType] =
+      if (roots.length != 1) None
       else {
         val rootPath = new Path(roots.head
           .stripPrefix("[\"").stripSuffix("\"]").stripPrefix("\"").stripSuffix("\""))
         val fs = rootPath.getFileSystem(conf)
         val isDir = try fs.getFileStatus(rootPath).isDirectory catch { case _: Exception => false }
-        if (!isDir) Map.empty
+        if (!isDir) None
         else {
           val vs = logOf(rootPath).versions
-          if (vs.isEmpty) Map.empty
-          else {
-            val v = pinned.map(_.toLong).getOrElse(vs.max)
-            GraftCommitLog.schemaAsOfStrict(logOf(rootPath), v)
-              .map(physicalMap).getOrElse(Map.empty)
-          }
+          if (vs.isEmpty) None
+          else GraftCommitLog.schemaAsOfStrict(logOf(rootPath),
+            pinned.map(_.toLong).getOrElse(vs.max))
         }
       }
 
     Listing(allCols, listed.map { case (p, l, m) =>
       val (dv, dvTarget) = dvByPath.getOrElse(p, (null, null))
       ListedFile(p, l, allCols.map(c => m.getOrElse(c, null)).toArray, dv, dvTarget)
-    }, physMap)
+    }, recorded.map(physicalMap).getOrElse(Map.empty),
+      recorded.map(_.fields.map(physicalName).toSet).getOrElse(Set.empty))
   }
 
   /** Synthetic per-file provenance column surfaced by `withFilePath`. */
@@ -1008,6 +988,21 @@ object GraftSources {
   def corruptColumn(options: CaseInsensitiveStringMap): String =
     options.getOrDefault("corruptcolumn", "_corrupt_record")
 
+  /** `badrecords=keep` (or `permissive`): a corrupt record reads as a row
+    * carrying its raw line in the [[corruptColumn]].
+    */
+  def keepMalformed(options: CaseInsensitiveStringMap): Boolean = {
+    val bad = options.getOrDefault("badrecords", "fail")
+    "keep".equalsIgnoreCase(bad) || "permissive".equalsIgnoreCase(bad)
+  }
+
+  /** Whether corrupt records leave the parse (`badrecords=drop`, or keep,
+    * which re-emits them as corrupt rows).
+    */
+  def dropMalformed(options: CaseInsensitiveStringMap): Boolean =
+    "drop".equalsIgnoreCase(options.getOrDefault("badrecords", "fail")) ||
+      keepMalformed(options)
+
   def jsonMode(options: java.util.Map[String, String]): JsonParser.Mode =
     Option(options.get("mode")).map(_.toLowerCase).getOrElse("lines") match {
       case "lines" | "valuestream"  => JsonParser.ValueStream
@@ -1036,6 +1031,10 @@ object GraftSources {
   }
 }
 
+/** Bytes a scan's parse skipped without tokenizing (SkipColumn, SkipRow).
+  * Avro readers report 0: their projection skips fields inside the Avro
+  * decoder, which counts no bytes.
+  */
 final class SkippedBytesMetric extends CustomSumMetric {
   override def name(): String = GraftSources.SkippedBytesMetricName
   override def description(): String = "bytes pruned by parser pushdown"
@@ -1074,89 +1073,26 @@ final case class GraftInputPartition(
   override def partitionKey(): InternalRow = partKey
 }
 
-// ====================================================================== JSON
+// ===================================================================== table
 
-class GraftJsonTableProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-json"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    // open-typed mode: one VARIANT column, no inference pass at all —
-    // heterogeneous rows and exact decimal scale survive ingestion
-    if (options.getBoolean("variant", false))
-      return StructType(Seq(org.apache.spark.sql.types.StructField(
-        "value", org.apache.spark.sql.types.VariantType)))
-    val listing = GraftSources.resolvePartitioned(options)
-    // a commit-log-recorded schema is authoritative: the writer's types
-    // (dates stay dates) with zero data bytes sampled — the piece that
-    // keeps schemaless planning O(log) instead of O(#files) prefix reads
-    val data0 = GraftSources.logSchema(options).getOrElse {
-      val conf = GraftSources.activeHadoopConf()
-      val sampleBytes = Option(options.get("samplebytes")).map(_.toLong).getOrElse(4L << 20)
-      val mode = GraftSources.jsonMode(options.asCaseSensitiveMap())
-      // sample a bounded prefix of each file on the driver
-      val merged = listing.files.foldLeft[SchemaInference.T](SchemaInference.TUnknown) {
-        case (acc, GraftSources.ListedFile(p, len, _, _, _)) =>
-          val (buf, whole) = GraftSources.readPrefix(new Path(p), conf, len, sampleBytes)
-          val plate = new SchemaInference.InferencePlate
-          val parser = new JsonParser(plate, mode)
-          parser.absorb(buf)
-          if (whole) parser.finish()
-          SchemaInference.merge(acc, plate.finishBatch(true))
-      }
-      SchemaInference.toStructType(merged)
-    }
-    // PERMISSIVE (badrecords=keep): the corrupt-record column is part of
-    // the inferred schema (always appended — deterministic, all-null when
-    // the data is clean; Spark only adds it when the sample has bad rows)
-    val badrecords = options.getOrDefault("badrecords", "fail")
-    val data =
-      if (("keep".equalsIgnoreCase(badrecords) || "permissive".equalsIgnoreCase(badrecords)) &&
-          !data0.fieldNames.contains(GraftSources.corruptColumn(options)))
-        StructType(data0.fields :+ org.apache.spark.sql.types.StructField(
-          GraftSources.corruptColumn(options), org.apache.spark.sql.types.StringType))
-      else data0
-    // hive-style partition columns ride at the end (data fields win ties)
-    val partExtra = GraftSources.partitionSchema(listing)
-      .filterNot(f => data.fieldNames.contains(f.name))
-    val withIdx =
-      if (options.getBoolean("withrowindex", false) &&
-          !data.fieldNames.contains(GraftSources.RowIndexCol))
-        Seq(org.apache.spark.sql.types.StructField(
-          GraftSources.RowIndexCol, org.apache.spark.sql.types.LongType))
-      else Nil
-    // CDF reads append the synthetic change-type column (Delta's shape);
-    // schemaless readStream over a logged table gets writer types + it
-    val withCdf =
-      if (GraftSources.readChangeFeed(options) &&
-          !data.fieldNames.contains(GraftSources.ChangeTypeCol))
-        Seq(org.apache.spark.sql.types.StructField(
-          GraftSources.ChangeTypeCol, org.apache.spark.sql.types.StringType,
-          nullable = false))
-      else Nil
-    StructType(data.fields ++ partExtra ++ withIdx ++ withCdf)
-  }
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new GraftJsonTable(schema, partitioning, properties)
-}
-
-final class GraftJsonTable(
+/** The one table of graft-json, graft-csv and graft-avro: reads through
+  * [[GraftScanBuilder]], writes through the shared sink, and takes
+  * `DELETE FROM <catalog table>` / `TRUNCATE` as merge-on-read deletion
+  * vectors. The V2-level delete hooks are LOAD-BEARING — Spark's
+  * SupportsDelete defaults convert V2 predicates to v1 filters with a
+  * conversion that can silently NARROW a partially-convertible condition
+  * (an under-delete); the strict renderer of [[GraftDeleteSupport]] also
+  * expresses general scalar conditions (arithmetic, CASE) that v1 filters
+  * cannot.
+  */
+final class GraftTable(
+    format: GraftFormat,
     schema: StructType,
     partTransforms: Array[Transform],
     properties: java.util.Map[String, String])
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with GraftDeletableTable {
-  override def name(): String = s"graft-json:${properties.get("path")}"
+    extends Table with SupportsRead with SupportsWrite with SupportsDelete {
+  override def name(): String = s"${format.name}:${properties.get("path")}"
   override def schema(): StructType = schema
-  // `DELETE FROM <catalog table>` / TRUNCATE → merge-on-read vectors
-  override protected def deleteFormat: String = "graft-json"
-  override protected def deleteProperties: java.util.Map[String, String] = properties
-  override protected def declaredSchema: StructType = schema
   // reporting the user's partitionBy transforms back is what admits a
   // partitioned write (Spark checks provided == table partitioning)
   override def partitioning(): Array[Transform] = partTransforms
@@ -1165,121 +1101,29 @@ final class GraftJsonTable(
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(schema,
-      GraftSources.mergeTableProps(properties, options), isJson = true)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    GraftSink.newWriteBuilder(info, properties, partTransforms) { opt =>
-      JsonEncoding(opt("compression").getOrElse("none").toLowerCase(java.util.Locale.ROOT))
-    }
-}
+    new GraftScanBuilder(format, schema, GraftSources.mergeTableProps(properties, options))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    GraftSink.newWriteBuilder(info, properties, partTransforms)(
+      format.encoding(info, partTransforms, _))
 
-// ======================================================================= CSV
-
-class GraftCsvTableProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-csv"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val listing = GraftSources.resolvePartitioned(options)
-    // commit-log-recorded schema wins (typed columns, not all-string
-    // header inference) — see the JSON provider's note
-    def withIdx(fields: Array[org.apache.spark.sql.types.StructField]) =
-      if (options.getBoolean("withrowindex", false) &&
-          !fields.exists(_.name == GraftSources.RowIndexCol))
-        fields :+ org.apache.spark.sql.types.StructField(
-          GraftSources.RowIndexCol, org.apache.spark.sql.types.LongType)
-      else fields
-    GraftSources.logSchema(options).foreach { data =>
-      val partExtra = GraftSources.partitionSchema(listing)
-        .filterNot(f => data.fieldNames.contains(f.name))
-      return StructType(withIdx(data.fields ++ partExtra))
-    }
-    val conf = GraftSources.activeHadoopConf()
-    val config = GraftSources.csvConfig(options.asCaseSensitiveMap())
-    val GraftSources.ListedFile(p, len, _, _, _) = listing.files.headOption.getOrElse(
-      throw new IllegalArgumentException("no input files"))
-    val (buf, whole) = GraftSources.readPrefix(new Path(p), conf, len, 1L << 20)
-    locally {
-      // capture the first data row's keys (header names or inferred A..Z)
-      val keys = new mutable.LinkedHashSet[String]
-      val plate = new graft.core.Plate[Unit] {
-        import graft.core.Signal
-        var rows = 0
-        def nul() = Signal.Continue
-        def fls() = Signal.Continue
-        def tru() = Signal.Continue
-        def map() = Signal.Continue
-        def arr() = Signal.Continue
-        def num(s: CharSequence, d: Int, e: Int) = Signal.Continue
-        def str(s: CharSequence) = Signal.Continue
-        def nestMap(k: CharSequence) = {
-          if (rows == 0) keys += k.toString
-          Signal.Continue
-        }
-        def nestArr() = Signal.Continue
-        def nestMeta(k: CharSequence) = Signal.Continue
-        def unnest() = Signal.Continue
-        def finishRow(): Unit = rows += 1
-        def finishBatch(terminal: Boolean): Unit = ()
-        def skipped(bytes: Int): Unit = ()
-      }
-      val parser = new CsvParser(plate, config)
-      parser.absorb(buf)
-      if (whole) parser.finish()
-      val data = StructType(keys.toSeq.map(k =>
-        org.apache.spark.sql.types.StructField(k, org.apache.spark.sql.types.StringType)))
-      val partExtra = GraftSources.partitionSchema(listing)
-        .filterNot(f => data.fieldNames.contains(f.name))
-      StructType(withIdx(data.fields ++ partExtra))
-    }
-  }
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new GraftCsvTable(schema, partitioning, properties)
-}
-
-final class GraftCsvTable(
-    schema: StructType,
-    partTransforms: Array[Transform],
-    properties: java.util.Map[String, String])
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with GraftDeletableTable {
-  override def name(): String = s"graft-csv:${properties.get("path")}"
-  override def schema(): StructType = schema
-  // `DELETE FROM <catalog table>` / TRUNCATE → merge-on-read vectors
-  override protected def deleteFormat: String = "graft-csv"
-  override protected def deleteProperties: java.util.Map[String, String] = properties
-  override protected def declaredSchema: StructType = schema
-  override def partitioning(): Array[Transform] = partTransforms
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(schema,
-      GraftSources.mergeTableProps(properties, options), isJson = false)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    GraftSink.newWriteBuilder(info, properties, partTransforms) { opt =>
-      CsvEncoding(
-        codec = opt("compression").getOrElse("none").toLowerCase(java.util.Locale.ROOT),
-        header = opt("header").getOrElse("true").toBoolean,
-        delim = opt("delimiter").orElse(opt("sep")).getOrElse(","), // both names accepted
-        linesep = opt("linesep").getOrElse("\n"))
-    }
+  private def tablePath: String =
+    Option(properties.get("path")).orElse(Option(properties.get("location"))).orNull
+  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    GraftDeleteSupport.canDelete(filters)
+  override def deleteWhere(filters: Array[Filter]): Unit =
+    GraftDeleteSupport.deleteWhere(tablePath, schema, format.name, filters)
+  override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
+    GraftDeleteSupport.canDeleteV2(predicates)
+  override def deleteWhere(predicates: Array[Predicate]): Unit =
+    GraftDeleteSupport.deleteWhereV2(tablePath, schema, format.name, predicates)
 }
 
 // ============================================================ scan machinery
 
 final class GraftScanBuilder(
+    format: GraftFormat,
     fullSchema: StructType,
-    options: CaseInsensitiveStringMap,
-    isJson: Boolean)
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
@@ -1308,10 +1152,11 @@ final class GraftScanBuilder(
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // accept single-column filters for byte-level SkipRow — including
-    // dotted nested references that resolve through struct fields; return
-    // every filter as residual so Spark re-evaluates (our eval is
-    // conservative, never dropping rows a correct filter would keep)
+    // accept single-column filters for file, block and partition pruning
+    // and, where the format's reader takes them, byte-level SkipRow —
+    // including dotted nested references that resolve through struct
+    // fields; return every filter as residual so Spark re-evaluates (our
+    // eval is conservative, never dropping rows a correct filter would keep)
     pushed = filters.filter(f =>
       f.references.length == 1 && {
         val ref = f.references.head
@@ -1322,7 +1167,8 @@ final class GraftScanBuilder(
     filters
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] =
+    if (format.filtersReachReader) pushed else Array.empty
 
   /** LIMIT n reaches the parser (the Terminate analog, SURVEY §2.5): each
     * partition stops parsing bytes once it has produced n rows. Partial
@@ -1454,16 +1300,16 @@ final class GraftScanBuilder(
 
 
   override def build(): Scan =
-    new GraftScan(required, pushed, options, isJson, limit, countStar,
+    new GraftScan(format, required, pushed, options, limit, countStar,
       fullSchema = fullSchema, aggSpec = aggSpec, offset = offset,
       topN = topN, topNLimit = topNLimit)
 }
 
 final class GraftScan(
+    format: GraftFormat,
     schema: StructType,
     filters: Array[Filter],
     options: CaseInsensitiveStringMap,
-    isJson: Boolean,
     limit: Int = -1,
     countStar: Boolean = false,
     fullSchema: StructType = StructType(Nil),
@@ -1656,14 +1502,13 @@ final class GraftScan(
     // are positional); renamed-column filters stay residual-only.
     // Partition-column filters are planning/residual concerns — the
     // plate must not see them (the column is null until stamped).
-    val streamSchema =
-      if (physMap.isEmpty) schema
-      else org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-        if (streamPartCols.contains(f.name)) f
-        else physMap.get(f.name).map(ph => f.copy(name = ph)).getOrElse(f)))
+    val streamSchema = physical(schema, streamPartCols.toSet)
     val streamFilters = filters
       .filterNot(_.references.exists(physMap.contains))
       .filterNot(_.references.exists(streamPartCols.contains))
+    val factory = format.streamReaderFactory(ReadSpec(options,
+      GraftSources.broadcastHadoopConf(), streamSchema, streamFilters,
+      GraftSources.partSpecFor(streamSchema, streamPartCols), listing.recordedCols))
     if (cdf) {
       // the change-type column rides the partition-value machinery: the
       // CDF stream appends 'insert'/'delete' to each partition's values
@@ -1671,33 +1516,30 @@ final class GraftScan(
         s"readChangeFeed: the schema must include the synthetic " +
           s"'${GraftSources.ChangeTypeCol} STRING' column (or omit the " +
           "schema to take the table's recorded one)")
-      val partSpec = GraftSources.partSpecFor(streamSchema, streamPartCols)
-      val conf = GraftSources.broadcastHadoopConf()
-      val factory: PartitionReaderFactory =
-        if (isJson) new GraftJsonReaderFactory(streamSchema, streamFilters, conf,
-          GraftSources.jsonMode(options.asCaseSensitiveMap()), partSpec = partSpec)
-        else new GraftCsvReaderFactory(streamSchema, streamFilters, conf,
-          GraftSources.csvConfig(options.asCaseSensitiveMap()), partSpec = partSpec)
       return new GraftCdfMicroBatchStream(options, checkpointLocation, factory,
         listing.partCols)
     }
-    if (isJson)
-      new GraftJsonMicroBatchStream(streamSchema, streamFilters, options,
-        GraftSources.jsonMode(options.asCaseSensitiveMap()), checkpointLocation,
-        streamPartCols)
-    else
-      new GraftCsvMicroBatchStream(streamSchema, streamFilters, options,
-        GraftSources.csvConfig(options.asCaseSensitiveMap()), checkpointLocation,
-        streamPartCols)
+    format.microBatchStream(options, checkpointLocation, factory, streamPartCols)
   }
+
+  /** `s` with renamed data columns under their PHYSICAL keys (column
+    * mapping: data files and their stats carry physical names). Columns
+    * in `synthetic` are never in data files and keep their names.
+    */
+  private def physical(s: StructType, synthetic: Set[String]): StructType =
+    if (physMap.isEmpty) s
+    else StructType(s.fields.map(f =>
+      if (synthetic.contains(f.name)) f
+      else physMap.get(f.name).map(ph => f.copy(name = ph)).getOrElse(f)))
+
   override def description(): String =
-    s"GraftScan(${if (isJson) "json" else "csv"}, columns=${schema.fieldNames.mkString(",")}," +
+    s"GraftScan(${format.name}, columns=${schema.fieldNames.mkString(",")}," +
       s" pushed=[${filters.mkString(", ")}]" +
       (if (limit >= 0) s", limit=$limit" else "") +
       (if (offset >= 0) s", offset=$offset" else "") +
-      (if (countStar) ", countStar" else "") +
+      (if (countStar) ", countStar (count-only)" else "") +
       (if (topN != null && topNLimit > 0)
-        s", topN=[${topN.map { case (c, asc, nf) =>
+        s", topN=$topNLimit, topN=[${topN.map { case (c, asc, nf) =>
           s"$c ${if (asc) "ASC" else "DESC"} ${if (nf) "NULLS FIRST" else "NULLS LAST"}"
         }.mkString(", ")} LIMIT $topNLimit]"
       else "") +
@@ -1713,6 +1555,10 @@ final class GraftScan(
   // their stats carry PHYSICAL keys)
   private lazy val physMap: Map[String, String] = listing.physMap
   @inline private def physName(n: String): String = physMap.getOrElse(n, n)
+  // the data part of the table schema, physical names in order — what a
+  // CSV range past byte 0 maps cells by (it cannot re-read the header row)
+  private lazy val dataCols: Seq[String] =
+    fullSchema.fieldNames.toSeq.filterNot(listing.partCols.contains).map(physName)
   private lazy val partTypes: Map[String, org.apache.spark.sql.types.DataType] = {
     val inferred = GraftSources.partitionSchema(listing)
     // the required schema's type wins (user-supplied schemas may retype)
@@ -1802,9 +1648,6 @@ final class GraftScan(
           .flatMap(_.cols.get(colName)).filter(_.bloom != null)
       }
   }
-  // KEEP IN SYNC with GraftAvroScan.statsPruned (GraftAvro.scala) — the
-  // avro lane mirrors the length binding and probe rules with its own
-  // scan-local caches
   private def statsPruned(files: Seq[GraftSources.ListedFile])
       : Seq[GraftSources.ListedFile] = {
     if (!options.getBoolean("dataskipping", true)) return files
@@ -1843,7 +1686,6 @@ final class GraftScan(
   private lazy val anyDv = listing.files.exists(_.dv != null)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
     val pf = prunedFiles
     require(!anyDv ||
         "fail".equalsIgnoreCase(options.getOrDefault("badrecords", "fail")),
@@ -1857,12 +1699,8 @@ final class GraftScan(
     if (runtimeFilters.nonEmpty) // observability for tests / debugging
       GraftScan.lastRuntimePruned.set(listing.files.length - pf.length)
     val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-    // CSV splits are sound only when values contain no row delimiters —
-    // the user asserts that with option("splittable","true")
-    val splittable =
-      (isJson && GraftSources.jsonMode(options.asCaseSensitiveMap()) == JsonParser.ValueStream) ||
-      (!isJson && options.getBoolean("splittable", false))
+      .getOrElse(format.defaultSplitBytes)
+    val splittable = format.splitsOnOffsets(options)
     // a pushed COUNT(*) or metadata-eligible aggregate battery keeps a
     // file whole WHEN its sidecar exists, so the reader answers from
     // metadata without reading data bytes; sidecar-less files still split
@@ -1881,30 +1719,20 @@ final class GraftScan(
     // blocks, plan only the byte ranges whose block stats may match. The
     // writer guaranteed block boundaries are exact row starts, so the
     // surviving ranges read with no realignment and stop exactly — rows
-    // in pruned blocks are never parsed. JSON engages in lines mode (the
-    // only mode the sink writes); CSV engages regardless of `splittable`
-    // (exact boundaries need no delimiter-in-value assumption).
-    // one dial for EVERY consumer of recorded block boundaries — pruning
-    // AND the masked-file parallelism split below. dataskipping=false
+    // in pruned blocks are never parsed; the format says where its
+    // blocks read right as ranges. Avro block edges are sync-marker edges
+    // the sink forced, so its sync(start)/pastSync(end) protocol starts
+    // exactly at them. One dial for EVERY consumer of recorded block
+    // boundaries — pruning AND the masked-file parallelism split below. dataskipping=false
     // means "don't trust sidecars"; a split derived from a stale sidecar's
     // boundaries is as wrong as a prune, so it honors the same opt-out.
     val blockLanesUsable: Boolean =
-      options.getBoolean("dataskipping", true) &&
-        (!isJson ||
-          GraftSources.jsonMode(options.asCaseSensitiveMap()) == JsonParser.ValueStream)
+      options.getBoolean("dataskipping", true) && format.blockLanesUsable(options)
     val blockFilters: Array[Filter] =
       if (!blockLanesUsable) Array.empty
       else FilterEval.normalize((filters ++ runtimeFilters).filter(f =>
         f.references.length == 1 && !listing.partCols.contains(f.references.head)))
     var blocksPruned = 0
-    // a mid-file CSV range maps cells POSITIONALLY (it cannot re-read the
-    // file's header row), so block pruning is sound only when the file's
-    // recorded column order equals the table's — schema evolution legally
-    // admits appends that omit or reorder columns, and such a file must
-    // read whole (name-keyed), never range-split
-    lazy val expectedCsvOrder: Seq[String] =
-      fullSchema.fieldNames.toSeq.filterNot(listing.partCols.contains)
-        .map(physName)
     // `needOrdinals`: the caller will derive each range's STARTING ROW
     // ORDINAL from the preceding blocks' exact row counts (deletion-vector
     // masks and withRowIndex address whole-file ordinals) — engage only
@@ -1931,7 +1759,7 @@ final class GraftScan(
           fileSidecarCache.getOrElseUpdate(p,
             FileStats.load(path.getFileSystem(GraftSources.activeHadoopConf()), path))
         }
-      if (!isJson && !st.exists(_.header.contains(expectedCsvOrder))) return None
+      if (!st.exists(format.blocksUsable(_, dataCols))) return None
       val blocks = st.map(_.validBlocks(len)).getOrElse(Nil)
       if (blocks.isEmpty) return None
       if (needOrdinals && blocks.iterator.map(_.rows).sum != st.get.rows)
@@ -2049,62 +1877,22 @@ final class GraftScan(
     val rowIdxSlot =
       if (withRowIndex) rowSchema.fieldNames.indexOf(GraftSources.RowIndexCol)
       else -1
-    // column mapping: plates and CSV headers match PHYSICAL keys; rows
-    // are positional, so Spark still sees the logical readSchema
-    val parseRowSchema =
-      if (physMap.isEmpty) rowSchema
-      else org.apache.spark.sql.types.StructType(rowSchema.fields.map(f =>
-        physMap.get(f.name).map(ph => f.copy(name = ph)).getOrElse(f)))
-    val badrecords = options.getOrDefault("badrecords", "fail")
-    val keepMalformed = "keep".equalsIgnoreCase(badrecords) ||
-      "permissive".equalsIgnoreCase(badrecords)
-    val dropMalformed = "drop".equalsIgnoreCase(badrecords) || keepMalformed
-    // saturation pushdown (skip the row tail once every schema column is
-    // bound). Since round 15 the DEFAULT tail is consumed by the chained
-    // key cruise — duplicate keys stay last-wins (spark parity) and
-    // key-position structure is validated; container values under
-    // unwanted keys still byte-skip unvalidated (SkipColumn's documented
-    // elision). option("saturation","fast") restores the pre-round-15
-    // BLIND one-scan tail (max skip throughput; dup keys after saturation
-    // keep the FIRST value — measured ~12% on the paired skip ratio);
-    // option("saturation","false") disables the pushdown entirely
-    // (strict tail validation at full-parse cost).
-    val satOpt = Option(options.get("saturation"))
-      .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("true")
-    val saturate = satOpt != "false"
-    val fastSatTail = satOpt == "fast"
-    // byte-range splits past 0 cannot re-read a CSV file's header row:
-    // hand them the column order (the data part of the table schema)
-    val dataCols = fullSchema.fieldNames.filterNot(partNames.contains).map(physName)
-    if (countStar)
-      new GraftCountReaderFactory(conf,
-        if (isJson) Some(GraftSources.jsonMode(options.asCaseSensitiveMap())) else None,
-        GraftSources.csvConfig(options.asCaseSensitiveMap()),
-        dropMalformed = dropMalformed, countMalformed = keepMalformed,
-        useStats = options.getBoolean("dataskipping", true), fullDataCols = dataCols)
+    // column mapping: plates, CSV headers and avro reader schemas match
+    // PHYSICAL keys; rows are positional, so Spark still sees the logical
+    // readSchema
+    val spec = ReadSpec(options, conf,
+      physical(rowSchema, partNames + GraftSources.RowIndexCol), plateFilters,
+      partSpec, listing.recordedCols, dataCols.toArray, limit, rowIdxSlot)
+    if (countStar) format.countReaderFactory(spec)
     else {
-      val rowFactory: PartitionReaderFactory =
-        if (isJson)
-          new GraftJsonReaderFactory(parseRowSchema, plateFilters, conf,
-            GraftSources.jsonMode(options.asCaseSensitiveMap()),
-            dropMalformed = dropMalformed,
-            limit = limit, partSpec = partSpec,
-            corruptCol = if (keepMalformed) GraftSources.corruptColumn(options) else null,
-            saturate = saturate, rowIdxSlot = rowIdxSlot,
-            vectorized = options.getBoolean("vectorized", true),
-            fastSatTail = fastSatTail)
-        else
-          new GraftCsvReaderFactory(parseRowSchema, plateFilters, conf,
-            GraftSources.csvConfig(options.asCaseSensitiveMap()), limit = limit,
-            partSpec = partSpec, fullDataCols = dataCols,
-            rowIdxSlot = rowIdxSlot,
-            vectorized = options.getBoolean("vectorized", true))
+      val rowFactory = format.rowReaderFactory(spec)
       aggSpec match {
-        case Some(spec) =>
-          new GraftAggReaderFactory(rowFactory, rowSchema, spec,
+        case Some(agg) =>
+          new GraftAggReaderFactory(rowFactory, rowSchema, agg,
             maxGroups = options.getInt("aggmaxgroups", 1 << 16),
             conf = conf,
-            metadataOk = !dropMalformed && options.getBoolean("dataskipping", true),
+            metadataOk = !GraftSources.dropMalformed(options) &&
+              options.getBoolean("dataskipping", true),
             partSpec = partSpec)
         case None =>
           if (offset > 0) new GraftOffsetReaderFactory(rowFactory, offset)
@@ -2569,7 +2357,7 @@ private[spark] final class RangeFeeder[A](
     mkParser: () => graft.core.BaseParser[A],
     alignByte: Byte,
     dropMalformed: Boolean = false,
-    onCorrupt: Array[Byte] => Unit = null) {
+    onCorrupt: Array[Byte] => Unit = null) extends RowSource {
 
   private val path = new Path(part.path)
   private val in = new RangeInput(path, conf)
@@ -2892,10 +2680,21 @@ final class GraftCsvColumnarReader(
   protected val feeder = RangeFeeder.csv(part, conf, plate, config, fullDataCols)
 }
 
-/** Base of the row-delivering JSON and CSV readers: steps the
-  * [[RangeFeeder]] until the queue holds a row. Plates hand rows to
+/** What a row reader steps: a [[RangeFeeder]] driving a parser over one
+  * byte range, or a format's own record decoder. Each step hands the rows
+  * it completes to the reader's emit gate.
+  */
+private[spark] trait RowSource {
+  def isExhausted: Boolean
+  def step(): Unit
+  def close(): Unit
+}
+
+/** Base of the row-delivering JSON, CSV and Avro readers: steps the
+  * [[RowSource]] until the queue holds a row. Sources hand rows to
   * [[emit]], the one gate that numbers each row with its file ordinal,
-  * drops deletion-masked rows and stamps survivors.
+  * drops deletion-masked rows and stamps survivors. A pushed limit stops
+  * the stepping.
   */
 private[spark] abstract class GraftRowReader(
     part: GraftInputPartition,
@@ -2921,7 +2720,7 @@ private[spark] abstract class GraftRowReader(
     * filters drop. Null for the variant plates, which do neither.
     */
   protected var rowPlate: RowPlate = null
-  protected val feeder: RangeFeeder[Long]
+  protected val source: RowSource
   /** Bytes the reader's plate skipped without tokenizing. */
   protected def skippedBytes: Long
 
@@ -2961,13 +2760,13 @@ private[spark] abstract class GraftRowReader(
       rowPlate.recycle(current)
       current = null
     }
-    while (queue.isEmpty && !feeder.isExhausted) feeder.step()
+    while (queue.isEmpty && !source.isExhausted) source.step()
     if (queue.nonEmpty) { current = queue.removeHead(); emitted += 1; true }
     else false
   }
 
   final override def get(): InternalRow = current
-  final override def close(): Unit = feeder.close()
+  final override def close(): Unit = source.close()
 
   final override def currentMetricsValues(): Array[CustomTaskMetric] =
     GraftSources.skippedBytesMetric(skippedBytes)
@@ -3059,7 +2858,7 @@ final class GraftJsonPartitionReader(
         row.update(corruptIdx, org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes))
       queue.append(stamp(row))
     }
-  protected val feeder =
+  protected val source =
     new RangeFeeder[Long](part, conf, () => mkParser(), '\n', dropMalformed, onCorrupt)
 
   protected def skippedBytes: Long = retiredSkipped + plateSkipped
@@ -3083,7 +2882,7 @@ final class GraftCsvPartitionReader(
 
   // CSV: empty cell = NULL (Spark/DuckDB parity)
   rowPlate = new RowPlate(schema, filters, emit(_), emptyCellsAsNull = true)
-  protected val feeder = RangeFeeder.csv(part, conf, rowPlate, config, fullDataCols)
+  protected val source = RangeFeeder.csv(part, conf, rowPlate, config, fullDataCols)
 
   protected def skippedBytes: Long = rowPlate.totalSkippedBytes
 }

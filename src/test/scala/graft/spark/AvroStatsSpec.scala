@@ -52,35 +52,35 @@ class AvroStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("range filters prune whole avro files from sidecar min/max; results exact") {
     val d = dir("prune")
     writeSorted(d)
-    GraftAvroScan.lastStatsPruned.set(-1)
+    GraftScan.lastStatsPruned.set(-1)
     val got = spark.read.format("graft-avro").schema(schema)
       .option("snapshot", "true").load(d)
       .filter("id < 500")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got === (0L until 500L))
-    assert(GraftAvroScan.lastStatsPruned.get >= 2,
-      s"expected most of the 4 range files pruned, got ${GraftAvroScan.lastStatsPruned.get}")
+    assert(GraftScan.lastStatsPruned.get >= 2,
+      s"expected most of the 4 range files pruned, got ${GraftScan.lastStatsPruned.get}")
   }
 
   test("pruning stays sound under deletion vectors; dataskipping=false disables it") {
     val d = dir("dvprune")
     writeSorted(d)
     TrainingData.deleteWhereDV(spark, d, schema, "id % 7 = 0", format = "graft-avro")
-    GraftAvroScan.lastStatsPruned.set(-1)
+    GraftScan.lastStatsPruned.set(-1)
     val got = spark.read.format("graft-avro").schema(schema)
       .option("snapshot", "true").load(d)
       .filter("id >= 3000")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got === (3000L until 4000L).filterNot(_ % 7 == 0))
-    assert(GraftAvroScan.lastStatsPruned.get >= 2,
+    assert(GraftScan.lastStatsPruned.get >= 2,
       "masked tables must still prune definitely-clean files")
-    GraftAvroScan.lastStatsPruned.set(-1)
+    GraftScan.lastStatsPruned.set(-1)
     val off = spark.read.format("graft-avro").schema(schema)
       .option("snapshot", "true").option("dataskipping", "false").load(d)
       .filter("id >= 3000")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(off === got)
-    assert(GraftAvroScan.lastStatsPruned.get <= 0,
+    assert(GraftScan.lastStatsPruned.get <= 0,
       "dataskipping=false must disable stats pruning")
   }
 
@@ -275,12 +275,12 @@ class AvroStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.format("graft-avro").mode("overwrite").save(d)
     (500L until 1000L).map(i => (i, s"beta-$i")).toDF("id", "v").repartition(1)
       .write.format("graft-avro").mode("append").save(d)
-    GraftAvroScan.lastStatsPruned.set(-1)
+    GraftScan.lastStatsPruned.set(-1)
     val got = spark.read.format("graft-avro").schema(schema)
       .option("snapshot", "true").load(d)
       .filter("v = 'beta-777'").collect()
     assert(got.map(_.getLong(0)).toSeq === Seq(777L))
-    assert(GraftAvroScan.lastStatsPruned.get === 1,
+    assert(GraftScan.lastStatsPruned.get === 1,
       "the alpha file must prune (min/max or bloom)")
     // stale sidecar: replace a data file out-of-band with different bytes
     // of a DIFFERENT length — the length binding must void its stats

@@ -15,7 +15,9 @@ import java.nio.file.Files
   * the pushed-aggregate, OFFSET and top-N wrappers, which forward their
   * inner parse's accounting, the pushed COUNT(*) reader, and the
   * vectorized and row CSV readers. Each reports
-  * 0 < skipped <= file bytes on the scan node.
+  * 0 < skipped <= file bytes on the scan node. The Avro reader reports 0:
+  * its projection skips fields inside the Avro decoder, which counts
+  * nothing.
   */
 class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
@@ -160,5 +162,16 @@ class ColumnarSkipMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Ad
     assert(df.collect().length == 500)
     assert(!scan(df).supportsColumnar, "PERMISSIVE must take the row reader")
     assertSkipped(df, fileBytes)
+  }
+
+  test("the graft-avro reader reports graftSkippedBytes, 0 for a decoder-level projection") {
+    val out = dir.resolve("avro").toString
+    spark.range(0, 500, 1, 1).selectExpr("id", "id % 17 AS v", "repeat('x', 40) AS note")
+      .write.format("graft-avro").mode("overwrite").save(out)
+    val df = spark.read.format("graft-avro").load(out).select("v")
+    assert(df.collect().map(_.getLong(0)).sum == (0 until 500).map(_ % 17).sum)
+    assert(scan(df).metrics.contains(GraftSources.SkippedBytesMetricName),
+      scan(df).metrics.keys.mkString(", "))
+    assert(skipped(df) == 0L)
   }
 }

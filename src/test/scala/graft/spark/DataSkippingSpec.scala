@@ -463,13 +463,13 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
     * whole [0, 7998] range — min/max prunes nothing for an equality
     * probe, so any pruning below is the bloom's doing.
     */
-  private def writeHashed(): String = {
+  private def writeHashed(format: String = "graft-json"): String = {
     val s = spark; import s.implicits._
-    val out = dir.resolve("hashed").toString
+    val out = dir.resolve(s"hashed-$format").toString
     (0L until 4000L).map(i => (i * 2, s"name-${i * 2}", i / 10.0))
       .toDF("id", "name", "score")
       .repartition(4, $"id")
-      .write.format("graft-json").mode("overwrite").save(out)
+      .write.format(format).mode("overwrite").save(out)
     out
   }
 
@@ -753,24 +753,24 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("runtime file pruning: a join's key set prunes data files via sidecar blooms") {
     val s = spark; import s.implicits._
-    val out = writeHashed()
-    val fact = spark.read.format("graft-json").load(out)
     // the dim must be a real scan + Filter for DPP's selectivity check
     val dimPath = dir.resolve("bloom-dim").toString
     Seq((2468L, "keep"), (4000L, "keep"), (9999L, "other"))
       .toDF("k", "tag").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
-    GraftScan.lastRuntimePruned.set(-1)
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "100000")
-    try {
+    try for (format <- Seq("graft-json", "graft-avro")) {
+      val fact = spark.read.format(format).load(writeHashed(format))
+      GraftScan.lastRuntimePruned.set(-1)
       val joined = fact.join(broadcast(dim), col("id") === col("k"))
       val ids = joined.select("id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(ids == Seq(2468L, 4000L))
+      assert(ids == Seq(2468L, 4000L), format)
       // 2 keys live in at most 2 of the 4 files: the rest were dropped at
       // execution time without a task
       assert(GraftScan.lastRuntimePruned.get >= 2,
-        s"runtime file pruning did not engage (got ${GraftScan.lastRuntimePruned.get}):\n" +
+        s"$format: runtime file pruning did not engage " +
+          s"(got ${GraftScan.lastRuntimePruned.get}):\n" +
           joined.queryExecution.executedPlan)
     } finally {
       spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")

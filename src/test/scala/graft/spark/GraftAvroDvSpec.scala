@@ -272,22 +272,22 @@ class GraftAvroDvSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(1).sortWithinPartitions("id")
       .write.format("graft-avro").mode("overwrite")
       .option("blockbytes", "2048").save(d)
-    GraftAvroScan.lastBlocksPruned.set(-1)
+    GraftScan.lastBlocksPruned.set(-1)
     val got = spark.read.format("graft-avro").schema(schema).load(d)
       .filter(org.apache.spark.sql.functions.col("id") >= 5000L)
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq === (5000L until 6000L))
-    assert(GraftAvroScan.lastBlocksPruned.get > 0,
+    assert(GraftScan.lastBlocksPruned.get > 0,
       "a selective filter over a sorted avro file should prune blocks")
     // block skipping composes with a mask: pruned ranges carry exact
     // starting ordinals, so survivors keep their addresses
     TrainingData.deleteWhereDV(spark, d, schema, "id % 7 = 0", format = "graft-avro")
-    GraftAvroScan.lastBlocksPruned.set(-1)
+    GraftScan.lastBlocksPruned.set(-1)
     val masked = snap(d)
       .filter(org.apache.spark.sql.functions.col("id") >= 5000L)
       .collect().map(_.getLong(0)).sorted
     assert(masked.toSeq === (5000L until 6000L).filterNot(_ % 7 == 0))
-    assert(GraftAvroScan.lastBlocksPruned.get > 0,
+    assert(GraftScan.lastBlocksPruned.get > 0,
       "a masked sorted avro file should still block-skip")
   }
 
@@ -299,12 +299,12 @@ class GraftAvroDvSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(1).sortWithinPartitions("id")
       .write.format("graft-avro").mode("overwrite")
       .option("codec", "deflate").option("blockbytes", "2048").save(d)
-    GraftAvroScan.lastBlocksPruned.set(-1)
+    GraftScan.lastBlocksPruned.set(-1)
     val got = spark.read.format("graft-avro").schema(schema).load(d)
       .filter(org.apache.spark.sql.functions.col("id") >= 5000L)
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq === (5000L until 6000L))
-    assert(GraftAvroScan.lastBlocksPruned.get > 0,
+    assert(GraftScan.lastBlocksPruned.get > 0,
       "compressed avro blocks are still sync-edge addressable — unlike " +
         "the text lanes, compression must not void the recording")
     // and the masked-parallelism split works on the compressed file too

@@ -106,4 +106,23 @@ class MaintenanceCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.rootListings == 0, c)
     assert(c.logListings == 5, c)
   }
+
+  test("a filtered read lists the log once per resolution, graft-avro as graft-json") {
+    def read(format: String): Cost = {
+      val root = tmp.resolve(s"read_$format").toString
+      spark.range(0, 40, 1, 2).selectExpr("id", "concat('r', id) AS v")
+        .write.format(format).mode("overwrite").save(s"${CountingFs.Scheme}://$root")
+      cost(root) { d =>
+        assert(spark.read.format(format).schema(schema).load(d)
+          .filter("id >= 30").collect().length == 10)
+      }
+    }
+    val a = read("graft-avro")
+    val j = read("graft-json")
+    info(s"graft-avro $a, graft-json $j")
+    // one resolution each: the scan's listing serves planning, statistics
+    // and the avro reader's recorded columns
+    assert(a.logListings == 1, a)
+    assert(j.logListings == 1, j)
+  }
 }
