@@ -298,7 +298,9 @@ object GraftFormat {
     }
 
     // container files realign on sync markers, so any byte range is safe;
-    // the header (read per task) is tiny next to a split
+    // the header (read per task) is tiny next to a split. Recorded block
+    // edges are sync-marker edges the sink forced, so a block range's
+    // sync(start)/pastSync(end) starts and stops exactly at them
     override def splitsOnOffsets(options: CaseInsensitiveStringMap): Boolean = true
     override def defaultSplitBytes: Long = 32L << 20
 

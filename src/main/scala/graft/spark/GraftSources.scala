@@ -1720,12 +1720,11 @@ final class GraftScan(
     // writer guaranteed block boundaries are exact row starts, so the
     // surviving ranges read with no realignment and stop exactly — rows
     // in pruned blocks are never parsed; the format says where its
-    // blocks read right as ranges. Avro block edges are sync-marker edges
-    // the sink forced, so its sync(start)/pastSync(end) protocol starts
-    // exactly at them. One dial for EVERY consumer of recorded block
-    // boundaries — pruning AND the masked-file parallelism split below. dataskipping=false
-    // means "don't trust sidecars"; a split derived from a stale sidecar's
-    // boundaries is as wrong as a prune, so it honors the same opt-out.
+    // blocks read right as ranges. One dial for EVERY consumer of
+    // recorded block boundaries — pruning AND the masked-file parallelism
+    // split below. dataskipping=false means "don't trust sidecars"; a
+    // split derived from a stale sidecar's boundaries is as wrong as a
+    // prune, so it honors the same opt-out.
     val blockLanesUsable: Boolean =
       options.getBoolean("dataskipping", true) && format.blockLanesUsable(options)
     val blockFilters: Array[Filter] =

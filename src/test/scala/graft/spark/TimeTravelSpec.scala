@@ -177,6 +177,23 @@ class TimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val removed = graft.api.TrainingData.vacuumOrphans(spark, dir.toString)
     assert(removed === Seq("rogue.json", "stray.bin"))
     assert(!Files.exists(dir.resolve("rogue.json")))
+
+    // an unlogged copy of a committed part, stats sidecar included: the
+    // sidecar goes with the orphan, and a dry run deletes neither
+    val part = Files.list(dir).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get()
+    def sidecar(p: java.nio.file.Path) = dir.resolve(s".${p.getFileName}.stats")
+    val orphan = dir.resolve(s"copy-${part.getFileName}")
+    Files.copy(part, orphan)
+    Files.copy(sidecar(part), sidecar(orphan))
+    assert(graft.api.TrainingData.vacuumOrphans(spark, dir.toString, dryRun = true) ===
+      Seq(orphan.getFileName.toString))
+    assert(Files.exists(orphan) && Files.exists(sidecar(orphan)))
+    assert(graft.api.TrainingData.vacuumOrphans(spark, dir.toString) ===
+      Seq(orphan.getFileName.toString))
+    assert(!Files.exists(orphan) && !Files.exists(sidecar(orphan)))
+    assert(Files.exists(part) && Files.exists(sidecar(part)))
+
     // all committed rows still read back, pinned reads still work
     assert(readLatest(dir.toString).count() === 9)
     assert(readAsOf(dir.toString, 0).count() === 5)
@@ -184,30 +201,6 @@ class TimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.exists(dir.resolve(".graft-log")))
     // idempotent: second vacuum finds nothing
     assert(graft.api.TrainingData.vacuumOrphans(spark, dir.toString) === Nil)
-  }
-
-  test("vacuum deletes an orphan part's stats sidecar with it") {
-    val dir = root.resolve("vacside")
-    df(0 until 6).write.format("graft-json").mode("overwrite").save(dir.toString)
-    val part = Files.list(dir).filter(_.getFileName.toString.startsWith("part-"))
-      .findFirst().get()
-    def sidecar(p: java.nio.file.Path) = dir.resolve(s".${p.getFileName}.stats")
-    assert(Files.exists(sidecar(part)))
-    // an unlogged copy of a committed part, sidecar included
-    val orphan = dir.resolve(s"copy-${part.getFileName}")
-    Files.copy(part, orphan)
-    Files.copy(sidecar(part), sidecar(orphan))
-
-    // dry run deletes neither
-    val dry = graft.api.TrainingData.vacuumOrphans(spark, dir.toString, dryRun = true)
-    assert(dry === Seq(orphan.getFileName.toString))
-    assert(Files.exists(orphan) && Files.exists(sidecar(orphan)))
-
-    val removed = graft.api.TrainingData.vacuumOrphans(spark, dir.toString)
-    assert(removed === Seq(orphan.getFileName.toString))
-    assert(!Files.exists(orphan) && !Files.exists(sidecar(orphan)))
-    assert(Files.exists(part) && Files.exists(sidecar(part)))
-    assert(readLatest(dir.toString).collect().length === 6)
   }
 
   test("vacuum in a partitioned layout spares k=v-nested committed files") {
