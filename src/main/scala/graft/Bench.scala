@@ -281,14 +281,10 @@ object Sf1Rung {
   }
 }
 
-/** Nested (struct-lane) columnar vs row path, end to end and PAIRED
-  * (round 13): a wide one-level-struct corpus — the reference's ugh10k
-  * headline shape — reads through the SAME scan twice, vectorized
-  * (struct child lanes into ColumnarBatch) vs `option("vectorized",
-  * "false")` (InternalRow assembly), best of 5 each. Nested schema
-  * pruning applies to both sides, so the ratio isolates exactly what the
-  * struct lanes buy: no per-row InternalRow/GenericInternalRow
-  * allocation and whole-stage codegen consuming vectors.
+/** Nested (one-level struct) lane, PAIRED: a wide one-level-struct
+  * corpus — the reference's ugh10k headline shape — reads through the
+  * SAME scan twice on a nested projection. See [[VectorizedAbBench]]:
+  * both sides take the row path, so the ratio reads ~1.0.
   */
 object NestedColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -310,10 +306,14 @@ object NestedColumnarBench {
   }
 }
 
-/** Shared harness for the paired vectorized-vs-row lanes: write the
-  * corpus once, run the SAME scan + shape through both paths (the
-  * `vectorized` dial is the only difference), best of 5 per side after
-  * one warmup each — host noise largely cancels inside the pair.
+/** Shared harness for the eight paired `*_columnar_speedup` lanes: write
+  * the corpus once, run the SAME scan + shape with `vectorized` on and
+  * off, best of `passes` per side after one warmup each. Every lane
+  * schema is nested and [[graft.spark.ColumnarPlate]] serves flat schemas
+  * only, so BOTH sides read through RowPlate and each ratio reads ~1.0
+  * by construction: a lane now measures the spread between two identical
+  * row scans. The lanes stay because the headline line carries eight
+  * ratios (BenchLineSpec).
   */
 object VectorizedAbBench {
   def run(spark: SparkSession, label: String, dir: String, passes: Int,
@@ -339,16 +339,10 @@ object VectorizedAbBench {
   }
 }
 
-/** Array-lane columnar vs row path, end to end and PAIRED (round 13):
-  * an embedding-shaped corpus — one BIGINT key plus an 8-element
-  * ARRAY<DOUBLE> per row, the ANN/embedding-column shape — reads through
-  * the SAME scan twice, vectorized (elements streamed into the parent
-  * vector's child at a running offset) vs `option("vectorized","false")`
-  * (per-row GenericArrayData assembly), best of 5 each, on the DELIVERY
-  * shape (select the array column into the noop sink). Like the nested
-  * lane, delivery is where vectors win; lambda-consuming shapes
-  * (aggregate element sums) measure ~1.0 — the higher-order eval
-  * dominates both sides (isolation series recorded in COVERAGE.md).
+/** Array lane, PAIRED: an embedding-shaped corpus — one BIGINT key plus
+  * an 8-element ARRAY<DOUBLE> per row — on the delivery shape (select
+  * the array column into the noop sink). Both sides take the row path
+  * ([[VectorizedAbBench]]).
   */
 object ArrayColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -365,11 +359,10 @@ object ArrayColumnarBench {
   }
 }
 
-/** Two-level struct columnar vs row path, end to end and PAIRED
-  * (round 14): a user.geo.lat-shaped corpus — metadata object with a
-  * nested coordinate/source struct per row — reads through the SAME
-  * scan twice on the grand-lane projection shape (extract two
-  * grandchildren and one child).
+/** Two-level struct lane, PAIRED: a user.geo.lat-shaped corpus —
+  * metadata object with a nested coordinate/source struct per row — on
+  * the projection shape (two grandchildren and one child). Both sides
+  * take the row path ([[VectorizedAbBench]]).
   */
 object TwoLevelColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -387,14 +380,10 @@ object TwoLevelColumnarBench {
   }
 }
 
-/** ARRAY<STRUCT> (element-struct) columnar vs row path, end to end and
-  * PAIRED (round 14): a delivery/log-record-shaped corpus — one BIGINT
-  * key plus a 3-element array of tagged records per row, the most common
-  * real corpus shape that used to fall to the row path — reads through
-  * the SAME scan twice, vectorized (elements as rows of the array's
-  * struct child) vs `option("vectorized","false")` (per-row
-  * GenericArrayData-of-GenericInternalRow assembly), best of `passes`
-  * each, on the DELIVERY shape.
+/** ARRAY<STRUCT> lane, PAIRED: a delivery/log-record-shaped corpus —
+  * one BIGINT key plus a 3-element array of tagged records per row — on
+  * the delivery shape. Both sides take the row path
+  * ([[VectorizedAbBench]]).
   */
 object ArrayStructColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -412,11 +401,11 @@ object ArrayStructColumnarBench {
   }
 }
 
-/** STRUCT<…, ARRAY<atomic>> (struct-child array) columnar vs row path,
-  * end to end and PAIRED (round 15): a user.tags-shaped corpus — a
+/** STRUCT<…, ARRAY<atomic>> lane, PAIRED: a user.tags-shaped corpus — a
   * metadata struct holding one scalar plus a numeric array child and a
-  * string tag-list child per row — reads through the SAME scan twice on
-  * the delivery shape (extract the scalar and both array children).
+  * string tag-list child per row — on the delivery shape (the scalar and
+  * both array children). Both sides take the row path
+  * ([[VectorizedAbBench]]).
   */
 object StructArrayColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -436,11 +425,10 @@ object StructArrayColumnarBench {
   }
 }
 
-/** ARRAY<STRUCT<…, ARRAY<atomic>, STRUCT<atomic>>> (element-container)
-  * columnar vs row path, end to end and PAIRED (round 16): an
+/** ARRAY<STRUCT<…, ARRAY<atomic>, STRUCT<atomic>>> lane, PAIRED: an
   * order.items[].sku-shaped corpus — each row an array of item records
-  * carrying a scalar, a numeric array, and a coordinate struct — reads
-  * through the SAME scan twice on the delivery shape.
+  * carrying a scalar, a numeric array, and a coordinate struct — on the
+  * delivery shape. Both sides take the row path ([[VectorizedAbBench]]).
   */
 object ElemContainersColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -462,11 +450,10 @@ object ElemContainersColumnarBench {
   }
 }
 
-/** THREE-LEVEL struct columnar vs row path, end to end and PAIRED
-  * (round 17): an event.context.device.id-shaped corpus — a context
-  * struct nesting a device struct nesting an os struct — reads through
-  * the SAME scan twice on the delivery shape (extract leaves from all
-  * three levels).
+/** Three-level struct lane, PAIRED: an event.context.device.id-shaped
+  * corpus — a context struct nesting a device struct nesting an os
+  * struct — on the delivery shape (leaves from all three levels). Both
+  * sides take the row path ([[VectorizedAbBench]]).
   */
 object ThreeLevelColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {
@@ -486,12 +473,11 @@ object ThreeLevelColumnarBench {
   }
 }
 
-/** STRUCT<…, ARRAY<STRUCT<atomic…>>, MAP<STRING, atomic>> (struct-child
-  * container) columnar vs row path, end to end and PAIRED (round 17): a
-  * user.addresses[].city-shaped corpus — a user struct holding a scalar,
-  * an array of address records, AND a string-keyed header map — reads
-  * through the SAME scan twice on the delivery shape, covering both
-  * round-17 lane families in one paired lane.
+/** STRUCT<…, ARRAY<STRUCT<atomic…>>, MAP<STRING, atomic>> lane, PAIRED:
+  * a user.addresses[].city-shaped corpus — a user struct holding a
+  * scalar, an array of address records, and a string-keyed header map —
+  * on the delivery shape. Both sides take the row path
+  * ([[VectorizedAbBench]]).
   */
 object ChildStructArrColumnarBench {
   def run(spark: SparkSession, sfDir: String, passes: Int = 5): (Double, Double, Double) = {

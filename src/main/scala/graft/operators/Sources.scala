@@ -61,6 +61,22 @@ object Sources {
     math.max(floor, dataBytes(dir) / 4 + 1).toString
   }
 
+  /** Nested-schema gates (q229–q240): the graft scan must read ROWS.
+    * ColumnarPlate serves flat schemas only; every struct, array and map
+    * shape reads through RowPlate, whose pathology semantics (poison,
+    * duplicate bindings, conversion failures, raw capture) are pinned by
+    * RowPlateSpec, ColumnarPlateSpec's nested split-point cases (which
+    * run on RowPlate), RawCaptureSpec and the JSON source fuzzers.
+    */
+  private def requireRowScan(df: DataFrame, gate: String): Unit = {
+    val scans = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    require(scans.nonEmpty && scans.forall(!_.supportsColumnar),
+      s"$gate: nested schema must read through the row scan:\n" +
+        df.queryExecution.executedPlan)
+  }
+
   /** Write both fixtures (driver-side, 30 rows total, SF-independent). */
   private def ensureFixtures(spark: SparkSession, dir: String): Unit = {
     Files.createDirectories(Paths.get(fixtureDir))
@@ -3067,15 +3083,13 @@ object Sources {
             WHERE c_custkey < 450 ORDER BY c_custkey"""))
 
   // ---------------------------------------------------------------- q229
-  // Array-of-atomic COLUMNAR lanes (round 13): an embedding/tags-shaped
-  // corpus (ARRAY<LONG> + ARRAY<STRING> columns with empty arrays, null
-  // arrays, and null elements) reads through the vectorized path —
-  // elements stream into the parent vector's child at a running offset,
-  // the parquet ColumnarArray shape — and must match DuckDB's read_json
-  // over the same file. The gate asserts the plan actually went columnar.
+  // Array-of-atomic reads: an embedding/tags-shaped corpus (ARRAY<LONG>
+  // + ARRAY<STRING> columns with empty arrays, null arrays, and null
+  // elements) must match DuckDB's read_json over the same file.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q229 = GQuery(
     "q229_json_array_columnar_scan",
-    "graft-json ARRAY lanes go columnar: higher-order agg over array columns vs DuckDB",
+    "graft-json ARRAY columns (row scan): higher-order agg over array columns vs DuckDB",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q229_arrays.jsonl"
@@ -3104,8 +3118,7 @@ object Sources {
       val df = s.read.format("graft-json")
         .schema("n_nationkey LONG, votes ARRAY<LONG>, tags ARRAY<STRING>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "array-of-atomic schema must ride the ColumnarBatch path")
+      requireRowScan(df, "q229")
       df.select(
           col("n_nationkey"),
           aggregate(col("votes"), lit(0L),
@@ -3127,15 +3140,13 @@ object Sources {
              ORDER BY n_nationkey"""))
 
   // ---------------------------------------------------------------- q230
-  // MAP<STRING, atomic> COLUMNAR lanes (round 13): a map-shaped corpus
-  // (per-row string-keyed attribute bags with empty maps, null maps, and
-  // null values) reads through the vectorized path — keys stream into the
-  // map vector's keys child, values into its values child, at a shared
-  // running offset — and must match DuckDB's read_json with a
-  // MAP(VARCHAR, BIGINT) column. The gate asserts the plan went columnar.
+  // MAP<STRING, atomic> reads: a map-shaped corpus (per-row string-keyed
+  // attribute bags with empty maps, null maps, and null values) must
+  // match DuckDB's read_json with a MAP(VARCHAR, BIGINT) column.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q230 = GQuery(
     "q230_json_map_columnar_scan",
-    "graft-json MAP lanes go columnar: per-key lookups + key sets vs DuckDB",
+    "graft-json MAP columns (row scan): per-key lookups + key sets vs DuckDB",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q230_maps.jsonl"
@@ -3160,8 +3171,7 @@ object Sources {
       val df = s.read.format("graft-json")
         .schema("n_nationkey LONG, attrs MAP<STRING, LONG>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "MAP<STRING, atomic> schema must ride the ColumnarBatch path")
+      requireRowScan(df, "q230")
       df.select(
           col("n_nationkey"),
           element_at(col("attrs"), "reg").as("reg"),
@@ -3184,18 +3194,14 @@ object Sources {
              ORDER BY n_nationkey"""))
 
   // ---------------------------------------------------------------- q231
-  // ARRAY<STRUCT<atomic…>> COLUMNAR lanes (round 14): the delivery/
-  // log-record shape — a list of tagged records per row, with null
-  // arrays, empty arrays, null elements, missing/null fields, and
-  // shuffled field order — reads through the vectorized path (elements
-  // are rows of the array's struct child; fields write at element
-  // offsets) and must match DuckDB's read_json with a STRUCT(...)[]
-  // column. The gate asserts the plan actually went columnar; the
-  // pathology matrix (poison, dup keys, conversion failures) is pinned
-  // by ColumnarPlateSpec and the three-way fuzz.
+  // ARRAY<STRUCT<atomic…>> reads: the delivery/log-record shape — a list
+  // of tagged records per row, with null arrays, empty arrays, null
+  // elements, missing/null fields, and shuffled field order — must
+  // match DuckDB's read_json with a STRUCT(...)[] column.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q231 = GQuery(
     "q231_json_array_struct_columnar_scan",
-    "graft-json ARRAY<STRUCT> lanes go columnar: element-field aggs vs DuckDB",
+    "graft-json ARRAY<STRUCT> columns (row scan): element-field aggs vs DuckDB",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q231_arraystruct.jsonl"
@@ -3221,8 +3227,7 @@ object Sources {
       val df = s.read.format("graft-json")
         .schema("n_nationkey LONG, recs ARRAY<STRUCT<x: LONG, y: STRING>>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "ARRAY<STRUCT<atomic>> schema must ride the ColumnarBatch path")
+      requireRowScan(df, "q231")
       df.select(
           col("n_nationkey"),
           when(col("recs").isNull, lit(null))
@@ -3248,17 +3253,13 @@ object Sources {
              ORDER BY n_nationkey"""))
 
   // ---------------------------------------------------------------- q232
-  // TWO-LEVEL struct COLUMNAR lanes (round 14): the user.geo.lat /
-  // metadata.source.id shape — a struct column whose children include a
-  // nested STRUCT<atomic…> — reads through the vectorized path (grand
-  // lanes are row-offset vectors under the inner struct's child vector)
-  // and must match DuckDB's read_json with a nested STRUCT column. The
-  // gate asserts the plan actually went columnar; the pathology matrix
-  // (mismatches, per-field partials, duplicate bindings at every level)
-  // is pinned by ColumnarPlateSpec and the three-way fuzz.
+  // TWO-LEVEL struct reads: the user.geo.lat / metadata.source.id shape —
+  // a struct column whose children include a nested STRUCT<atomic…> —
+  // must match DuckDB's read_json with a nested STRUCT column.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q232 = GQuery(
     "q232_json_two_level_struct_columnar_scan",
-    "graft-json two-level struct lanes go columnar: nested projections vs DuckDB",
+    "graft-json two-level structs (row scan): nested projections vs DuckDB",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q232_twolevel.jsonl"
@@ -3290,8 +3291,7 @@ object Sources {
         .schema("n_nationkey LONG, nm STRING, " +
           "meta STRUCT<geo: STRUCT<lat: LONG, src: STRING>, score: LONG>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "two-level struct schema must ride the ColumnarBatch path")
+      requireRowScan(df, "q232")
       df.select(
           col("n_nationkey"),
           col("meta.geo.lat").as("lat"),
@@ -3314,17 +3314,13 @@ object Sources {
              ORDER BY n_nationkey"""))
 
   // ---------------------------------------------------------------- q233
-  // STRUCT<…, ARRAY<atomic>> COLUMNAR lanes (round 15): the user.tags /
-  // metadata.labels shape — a struct column with array-of-atomic children
-  // — reads through the vectorized path (elements stream into the child
-  // array vector's element child at a per-(col,child) running offset) and
-  // must match DuckDB's read_json with a STRUCT(... BIGINT[] ...) column.
-  // The gate asserts the plan actually went columnar; the pathology
-  // matrix (poison, failed-dup bindings, capture of string elements) is
-  // pinned by ColumnarPlateSpec and the three-way fuzz.
+  // STRUCT<…, ARRAY<atomic>> reads: the user.tags / metadata.labels
+  // shape — a struct column with array-of-atomic children — must match
+  // DuckDB's read_json with a STRUCT(... BIGINT[] ...) column.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q233 = GQuery(
     "q233_json_struct_array_child_columnar_scan",
-    "graft-json STRUCT<…,ARRAY<atomic>> lanes go columnar: child-array aggs vs DuckDB",
+    "graft-json STRUCT<…,ARRAY<atomic>> columns (row scan): child-array aggs vs DuckDB",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q233_structarray.jsonl"
@@ -3360,8 +3356,7 @@ object Sources {
       val df = s.read.format("graft-json")
         .schema("n_nationkey LONG, s STRUCT<a: LONG, tags: ARRAY<LONG>, lbl: ARRAY<STRING>>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "STRUCT<…,ARRAY<atomic>> schema must ride the ColumnarBatch path")
+      requireRowScan(df, "q233")
       df.select(
           col("n_nationkey"),
           col("s.a").as("a"),
@@ -3437,18 +3432,14 @@ object Sources {
             ORDER BY c_custkey"""))
 
   // ---------------------------------------------------------------- q235
-  // CONTAINERS INSIDE ARRAY<STRUCT> ELEMENTS vectorize (round 16) — the
-  // order.items[].sku / items[].tags shape, the last high-frequency real
-  // corpus shape that fell to the row path: element-struct fields that
-  // are ARRAY<atomic> write inner elements at per-(col,field) running
-  // offsets; STRUCT<atomic> fields write grand lanes at element offsets.
-  // The gate writes a delivery-records corpus through the graft sink,
-  // ASSERTS the plan is columnar, and explodes/flattens both container
-  // fields; the every-split plate matrix and the probe-pinned pathology
-  // semantics live in ColumnarPlateSpec + JsonSourceFuzzSpec.
+  // CONTAINERS INSIDE ARRAY<STRUCT> ELEMENTS — the order.items[].sku /
+  // items[].tags shape: element-struct fields that are ARRAY<atomic> or
+  // STRUCT<atomic>. The gate writes a delivery-records corpus through
+  // the graft sink and explodes/flattens both container fields.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q235 = GQuery(
     "q235_json_elem_container_columnar_scan",
-    "ARRAY<STRUCT> element fields with ARRAY/STRUCT types vectorize (plan-asserted)",
+    "ARRAY<STRUCT> element fields with ARRAY/STRUCT types (row scan, plan-asserted)",
     (s, d) => {
       import s.implicits._
       val path = s"$fixtureDir/q235_elemcontainers.jsonl"
@@ -3468,10 +3459,7 @@ object Sources {
         .repartition(2)
         .write.format("graft-json").mode("overwrite").save(path)
       val df = s.read.format("graft-json").schema(ddl).load(path)
-      // the scan must be COLUMNAR (ColumnarToRow present = vectors flow)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "q235: element-container schema fell off the columnar path:\n" +
-          df.queryExecution.executedPlan)
+      requireRowScan(df, "q235")
       df.select($"o_orderkey", explode($"items").as("it"))
         .select($"o_orderkey", $"it.sku".as("sku"),
           expr("aggregate(it.qtys, CAST(0 AS BIGINT), (a, x) -> a + x)").as("qty_sum"),
@@ -3493,20 +3481,13 @@ object Sources {
             ORDER BY o_orderkey, sku"""))
 
   // ---------------------------------------------------------------- q238
-  // ARRAY<STRUCT> STRUCT CHILDREN vectorize (round 17) — the
-  // user.addresses[].city shape, the next real-corpus shape that fell to
-  // the row path after round 16 closed the element-container ones:
-  // elements are rows of the child array's struct element vector, fields
-  // write at the per-(col,child) running element offset, the element's
-  // close stamps unwritten fields null, the binding's close stamps
-  // putArray at the row offset. The gate writes a user-records corpus
-  // through the graft sink, ASSERTS the plan is columnar, and
-  // explodes/flattens the child array; the every-split plate matrix and
-  // the probe-pinned pathology semantics (23 shapes) live in
-  // ColumnarPlateSpec + JsonSourceFuzzSpec.
+  // ARRAY<STRUCT> STRUCT CHILDREN — the user.addresses[].city shape. The
+  // gate writes a user-records corpus through the graft sink and
+  // explodes/flattens the child array.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q238 = GQuery(
     "q238_json_struct_child_struct_array_columnar_scan",
-    "ARRAY<STRUCT> children of STRUCT columns vectorize (plan-asserted)",
+    "ARRAY<STRUCT> children of STRUCT columns (row scan, plan-asserted)",
     (s, d) => {
       import s.implicits._
       val path = s"$fixtureDir/q238_childstructarr.jsonl"
@@ -3523,10 +3504,7 @@ object Sources {
         .repartition(2)
         .write.format("graft-json").mode("overwrite").save(path)
       val df = s.read.format("graft-json").schema(ddl).load(path)
-      // the scan must be COLUMNAR (ColumnarToRow present = vectors flow)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "q238: struct-child ARRAY<STRUCT> schema fell off the columnar path:\n" +
-          df.queryExecution.executedPlan)
+      requireRowScan(df, "q238")
       df.select($"o_orderkey", $"user.name".as("name"),
           explode($"user.addresses").as("a"))
         .select($"o_orderkey", $"name",
@@ -3546,18 +3524,14 @@ object Sources {
             ORDER BY o_orderkey, city, zip"""))
 
   // ---------------------------------------------------------------- q239
-  // MAP STRUCT CHILDREN vectorize (round 17) — the payload.headers
-  // shape: keys/values lanes under the child map vector at the
-  // per-(col,child) running offset; the binding's close stamps putArray
-  // at the row offset. The gate writes a payload corpus with empty maps,
-  // null maps, and null values through raw JSONL, ASSERTS the plan is
-  // columnar, and compares per-key lookups + key sets against DuckDB's
-  // read_json with a STRUCT(... MAP(VARCHAR, BIGINT)) column; the
-  // every-split plate matrix and the probe-pinned pathology semantics
-  // (20 shapes) live in ColumnarPlateSpec + JsonSourceFuzzSpec.
+  // MAP STRUCT CHILDREN — the payload.headers shape. The gate writes a
+  // payload corpus with empty maps, null maps, and null values through
+  // raw JSONL and compares per-key lookups + key sets against DuckDB's
+  // read_json with a STRUCT(... MAP(VARCHAR, BIGINT)) column.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q239 = GQuery(
     "q239_json_struct_child_map_columnar_scan",
-    "MAP<STRING, atomic> children of STRUCT columns vectorize (plan-asserted)",
+    "MAP<STRING, atomic> children of STRUCT columns (row scan, plan-asserted)",
     (s, d) => {
       ensureFixtures(s, d)
       val path = s"$fixtureDir/q239_childmaps.jsonl"
@@ -3584,9 +3558,7 @@ object Sources {
       val df = s.read.format("graft-json")
         .schema("n_nationkey LONG, payload STRUCT<nm: STRING, attrs: MAP<STRING, LONG>>")
         .load(path)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "q239: struct-child MAP schema fell off the columnar path:\n" +
-          df.queryExecution.executedPlan)
+      requireRowScan(df, "q239")
       df.select(
           col("n_nationkey"),
           col("payload.nm").as("nm"),
@@ -3612,18 +3584,13 @@ object Sources {
              ORDER BY n_nationkey"""))
 
   // ---------------------------------------------------------------- q240
-  // THREE-LEVEL STRUCTS vectorize (round 17) — the
-  // event.context.device.id telemetry shape: inner-struct children may
-  // hold STRUCT<atomic…> fields, great lanes are row-offset vectors like
-  // child/grand lanes, and the two-level binding discipline repeats one
-  // more level down. The gate writes an events-like corpus through the
-  // graft sink, ASSERTS the plan is columnar, and extracts leaves from
-  // all three levels; the every-split plate matrix and the 16-shape
-  // probe-pinned pathology semantics live in ColumnarPlateSpec +
-  // JsonSourceFuzzSpec.
+  // THREE-LEVEL STRUCTS — the event.context.device.id telemetry shape.
+  // The gate writes an events-like corpus through the graft sink and
+  // extracts leaves from all three levels.
+  // The gate asserts the scan reads rows (requireRowScan).
   private val q240 = GQuery(
     "q240_json_three_level_struct_columnar_scan",
-    "THREE-LEVEL structs vectorize: leaves at depths 1-3 (plan-asserted)",
+    "THREE-LEVEL structs (row scan): leaves at depths 1-3 (plan-asserted)",
     (s, d) => {
       import s.implicits._
       val path = s"$fixtureDir/q240_threelevel.jsonl"
@@ -3640,10 +3607,7 @@ object Sources {
         .repartition(2)
         .write.format("graft-json").mode("overwrite").save(path)
       val df = s.read.format("graft-json").schema(ddl).load(path)
-      // the scan must be COLUMNAR (ColumnarToRow present = vectors flow)
-      require(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "q240: three-level struct schema fell off the columnar path:\n" +
-          df.queryExecution.executedPlan)
+      requireRowScan(df, "q240")
       df.select($"o_orderkey",
           $"ctx.device.os.name".as("os_name"),
           $"ctx.device.os.build".as("os_build"),

@@ -1951,9 +1951,9 @@ final class GraftJsonReaderFactory(
       dropMalformed, limit, partSpec, corruptCol, saturate, rowIdxSlot,
       fastSatTail = fastSatTail, tz = tz)
 
-  // flat atomic schemas — plus one-level structs, arrays of atomics, and
-  // MAP<STRING, atomic> (ColumnarPlate.supports) — take the vectorized
-  // path (ColumnarBatch out);
+  // flat atomic schemas (ColumnarPlate.supports) take the vectorized
+  // path (ColumnarBatch out); a struct, array or map column anywhere in
+  // the read schema takes the row reader (RowPlate reads every shape);
   // partition columns become constant vectors per batch. PERMISSIVE mode
   // stays row-based (corrupt-row emission is a row-queue concept), and so
   // does row-index stamping. Deletion-vector masking VECTORIZES: the
@@ -1985,6 +1985,7 @@ final class GraftCsvReaderFactory(
       partition.asInstanceOf[GraftInputPartition], schema, filters, conf.value.value, config,
       limit, partSpec, fullDataCols, rowIdxSlot)
 
+  // flat schemas only, like the JSON factory (CSV cells are atomic);
   // byte-range splits vectorize too (RangeFeeder.csv);
   // row-index stamping is a row-path concept; deletion-vector masks drop
   // inside the plate (see the JSON factory's twin comment)
@@ -2571,8 +2572,9 @@ private[spark] object PartitionVectors {
         case s: org.apache.spark.unsafe.types.UTF8String => cv.setUtf8String(s)
         // DATE partition values arrive as boxed epoch-day Integers
         // (Conversions.fromString), and user schemas may type partition
-        // columns INT/BOOLEAN/FLOAT — every type the columnar path serves
-        // (ColumnarPlate.supports) must have a constant-vector case
+        // columns INT/BOOLEAN/FLOAT — every atomic type the flat columnar
+        // path serves (ColumnarPlate.supports) must have a constant-vector
+        // case
         case i: java.lang.Integer => cv.setInt(i)
         case b: java.lang.Boolean => cv.setBoolean(b)
         case f: java.lang.Float => cv.setFloat(f)

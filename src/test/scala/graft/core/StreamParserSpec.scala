@@ -60,8 +60,10 @@ class StreamParserSpec extends AnyFunSuite {
 
   test("countRowsFile drives a real file end to end") {
     val p = java.nio.file.Files.createTempFile("rows", ".jsonl")
-    java.nio.file.Files.write(p, (1 to 42).map(i => s"""{"i": $i}""").mkString("\n").getBytes(UTF_8))
-    assert(RowCountHarness.countRowsFile(p, chunkSize = 16) == 42L)
+    try {
+      java.nio.file.Files.write(p, (1 to 42).map(i => s"""{"i": $i}""").mkString("\n").getBytes(UTF_8))
+      assert(RowCountHarness.countRowsFile(p, chunkSize = 16) == 42L)
+    } finally java.nio.file.Files.deleteIfExists(p)
   }
 
   // ------------------------------------------------------- ParseResult

@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
@@ -13,7 +12,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * answers match spark.read.json on the same fixture, and unsupported
   * shapes are refused (parity with the unpushed plan either way).
   */
-class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AggPushdownSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var dir: java.nio.file.Path = _
@@ -27,10 +26,13 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("graft-aggpush")
+    dir = tempDir("graft-aggpush")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   private def write(name: String, content: String): String = {
     val p = dir.resolve(name)
@@ -255,7 +257,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("grouped battery over a hive partition column is pushed and exact") {
-    val root = Files.createTempDirectory("graft-aggpart")
+    val root = tempDir("graft-aggpart")
     for (r <- Seq("eu", "us")) {
       val d = root.resolve(s"region=$r")
       Files.createDirectories(d)
@@ -273,7 +275,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partition-grouped battery answers from metadata alone (poisoned, temporal)") {
     val s = spark; import s.implicits._
-    val root = Files.createTempDirectory("graft-aggmeta-grp").toString
+    val root = tempDir("graft-aggmeta-grp").toString
     // sink-written day-partitioned layout: sidecars carry the temporal
     // 't' lanes; the group key d (DATE) is a per-file directory constant
     val rows = (0 until 200).map { i =>

@@ -4,7 +4,6 @@ import graft.plans.{AsOfJoin, AsOfJoinExec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import scala.util.Random
 
@@ -13,7 +12,7 @@ import scala.util.Random
   * model, null/tolerance/tiebreak semantics, and the plan shape the
   * operator exists for (one exchange per side, merge with O(1) state).
   */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AsOfJoinSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -27,7 +26,10 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   private def leftDf(rows: Seq[(java.lang.Long, java.lang.Long, String)]): DataFrame = {
     val s = spark; import s.implicits._
@@ -152,7 +154,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plan shape: AsOfJoinExec with one exchange per side") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("asof-plan").toString
+    val dir = tempDir("asof-plan").toString
     Seq((1L, 1L, "a"), (2L, 3L, "b")).toDF("k", "t", "lv")
       .write.mode("overwrite").parquet(dir + "/l")
     Seq((1L, 1L, 2.0), (2L, 2L, 4.0)).toDF("k", "rt", "rv")

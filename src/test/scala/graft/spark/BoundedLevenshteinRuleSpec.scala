@@ -3,14 +3,13 @@ package graft.spark
 import graft.functions.{GraftFunctions, LevenshteinBounded}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The BoundedLevenshteinRule optimizer rule: every literal-threshold
   * comparison shape against the built-in levenshtein rewrites to the
   * banded levenshtein_bounded with VALUE-IDENTICAL results; non-literal
   * thresholds and the builtin's own 3-arg form stay untouched.
   */
-class BoundedLevenshteinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BoundedLevenshteinRuleSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -27,7 +26,7 @@ class BoundedLevenshteinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a REAL source (parquet), not a LocalRelation — the local-relation
     // optimization would eagerly evaluate the filter and leave no plan
     // for the rule to rewrite
-    val dir = java.nio.file.Files.createTempDirectory("lev-rule").toString
+    val dir = tempDir("lev-rule").toString
     // k0/k2/k3: per-row COLUMNS holding the same constants the rewritten
     // queries use as literals — a column threshold is not rewritten, so
     // these give the untouched-builtin reference results
@@ -39,7 +38,10 @@ class BoundedLevenshteinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.read.parquet(dir).createOrReplaceTempView("lev_pairs")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   private def usesBounded(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collect {

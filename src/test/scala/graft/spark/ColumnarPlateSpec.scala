@@ -2,20 +2,94 @@ package graft.spark
 
 import graft.core.ParseResult
 import graft.core.json.JsonParser
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.collection.mutable
 
 /** Direct unit coverage for the event→ColumnarBatch bridge, in particular
   * the chunk-boundary protocol: the columnar readers call takeBatch()
   * whenever complete rows are pending after a 256 KB chunk, which can
   * happen with a row IN FLIGHT — its already-written cells must carry over
   * into the fresh vectors.
+  *
+  * ColumnarPlate reads flat schemas only; every nested shape reads
+  * through RowPlate. The nested cases below keep their inputs, expected
+  * values and split points and run on RowPlate: a split that fell
+  * between two takeBatch calls is a chunk boundary of the RowPlate parse.
   */
 class ColumnarPlateSpec extends AnyFunSuite {
 
   private def raise[A](r: ParseResult[A]): Unit = r match {
     case ParseResult.Failure(e) => throw e
     case _ => ()
+  }
+
+  /** Feed `chunks` to a RowPlate-backed parser; the rows it pushed. */
+  private def rowsOf(schema: StructType, chunks: Seq[String],
+      filters: Array[Filter] = Array.empty, saturate: Boolean = true,
+      dropDiscarded: Boolean = false): Seq[InternalRow] =
+    rowsOfBytes(schema, chunks.map(_.getBytes("UTF-8")), filters, saturate, dropDiscarded)
+
+  private def rowsOfBytes(schema: StructType, chunks: Seq[Array[Byte]],
+      filters: Array[Filter] = Array.empty, saturate: Boolean = true,
+      dropDiscarded: Boolean = false): Seq[InternalRow] = {
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    val plate = new RowPlate(schema, filters, r => out += r.copy(),
+      saturate = saturate, dropDiscarded = dropDiscarded)
+    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
+    chunks.foreach(c => raise(p.absorb(c)))
+    raise(p.finish())
+    out.toSeq
+  }
+
+  /** RowPlate at every byte split of `input`: `f` of each row == `want`. */
+  private def assertEverySplit(schema: StructType, input: String, want: Seq[Any])(
+      f: InternalRow => Any): Unit = {
+    val bytes = input.getBytes("UTF-8")
+    (0 to bytes.length).foreach { i =>
+      val rows = rowsOfBytes(schema, Seq(bytes.slice(0, i), bytes.slice(i, bytes.length)))
+      assert(rows.map(f) == want, s"split $i")
+    }
+  }
+
+  private val L = (v: Long) => java.lang.Long.valueOf(v)
+  private val D = (v: Double) => java.lang.Double.valueOf(v)
+  private def lng(g: SpecializedGetters, i: Int): Any = if (g.isNullAt(i)) null else L(g.getLong(i))
+  private def str(g: SpecializedGetters, i: Int): String =
+    if (g.isNullAt(i)) null else g.getUTF8String(i).toString
+  private def longs(g: SpecializedGetters, i: Int): Seq[Any] =
+    if (g.isNullAt(i)) null
+    else {
+      val ad = g.getArray(i)
+      (0 until ad.numElements()).map(j => if (ad.isNullAt(j)) null else ad.getLong(j))
+    }
+  private def strs(g: SpecializedGetters, i: Int): Seq[Any] =
+    if (g.isNullAt(i)) null
+    else {
+      val ad = g.getArray(i)
+      (0 until ad.numElements()).map(j => str(ad, j))
+    }
+  private def mapOf(g: SpecializedGetters, i: Int, strValues: Boolean): Seq[(String, Any)] =
+    if (g.isNullAt(i)) null
+    else {
+      val md = g.getMap(i)
+      (0 until md.numElements()).map { j =>
+        md.keyArray().getUTF8String(j).toString ->
+          (if (strValues) str(md.valueArray(), j) else lng(md.valueArray(), j))
+      }
+    }
+
+  test("the constructor rejects nested schemas") {
+    Seq("id LONG, n STRUCT<x: LONG>", "id LONG, a ARRAY<LONG>",
+        "id LONG, m MAP<STRING, LONG>").foreach { ddl =>
+      val schema = StructType.fromDDL(ddl)
+      assert(!ColumnarPlate.supports(schema), ddl)
+      intercept[IllegalArgumentException](new ColumnarPlate(schema, Array.empty))
+    }
   }
 
   test("takeBatch mid-row carries the partial row's cells into the new batch") {
@@ -80,6 +154,8 @@ class ColumnarPlateSpec extends AnyFunSuite {
     }
   }
 
+  // ------------------------------------------- nested shapes: RowPlate
+
   test("every split point of a struct-lane input yields identical batches") {
     val schema = StructType.fromDDL("id LONG, n STRUCT<x: LONG, y: STRING>")
     val input =
@@ -88,31 +164,15 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 3}""" + "\n" +
       """{"id": 4, "n": {}}""" + "\n" +
       """{"id": 5, "n": null}"""
-    val bytes = input.getBytes("UTF-8")
-    def structOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int) =
-      if (b.column(1).isNullAt(r)) null
-      else (if (b.column(1).getChild(0).isNullAt(r)) null
-            else java.lang.Long.valueOf(b.column(1).getChild(0).getLong(r)),
-        if (b.column(1).getChild(1).isNullAt(r)) null
-        else b.column(1).getChild(1).getUTF8String(r).toString)
     val want = Seq(
-      (1L, (java.lang.Long.valueOf(10L), "a")),
+      (1L, (L(10L), "a")),
       (2L, (null, "b")),
       (3L, null),
       (4L, (null, null)), // {} = PRESENT struct with null children
       (5L, null))
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), structOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null else { val n = r.getStruct(1, 2); (lng(n, 0), str(n, 1)) })
     }
   }
 
@@ -133,14 +193,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 9, "a": [1], "a": [8, 9]}""" + "\n" +
       """{"id": 10, "a": [6, "noparse", 7]}""" + "\n" +
       """{"id": 11, "a": [12, 13]}"""
-    val bytes = input.getBytes("UTF-8")
-    def arrOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Seq[Any] =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val ad = b.column(1).getArray(r)
-        (0 until ad.numElements).map(j =>
-          if (ad.isNullAt(j)) null else ad.getLong(j))
-      }
     val want = Seq(
       (1L, Seq(10L, 20L, 30L)),
       (2L, Seq(null, 7L)),
@@ -156,19 +208,7 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (9L, Seq(8L, 9L)),
       (10L, null), // conversion-failure element poisons too
       (11L, Seq(12L, 13L))) // ...and the next row's array is unaffected
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), arrOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
-    }
+    assertEverySplit(schema, input, want)(r => (r.getLong(0), longs(r, 1)))
   }
 
   test("every split point of a TWO-LEVEL struct input yields identical batches") {
@@ -196,19 +236,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 13, "n": 5}""" + "\n" +
       """{"id": 14, "n": {"g": {"x": 0.5, "z": "f"}}}""" + "\n" +
       """{"id": 15, "n": {"z0": {"deep": 1}, "g": {"z": "g", "x": 9}, "y": 9}}"""
-    val bytes = input.getBytes("UTF-8")
-    val L = (v: Long) => java.lang.Long.valueOf(v)
-    def rowOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Any =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val n = b.column(1)
-        val g = n.getChild(0)
-        val inner =
-          if (g.isNullAt(r)) null
-          else (if (g.getChild(0).isNullAt(r)) null else L(g.getChild(0).getLong(r)),
-                if (g.getChild(1).isNullAt(r)) null else g.getChild(1).getUTF8String(r).toString)
-        (inner, if (n.getChild(1).isNullAt(r)) null else L(n.getChild(1).getLong(r)))
-      }
     val want = Seq(
       (1L, ((L(1), "a"), L(2))),
       (2L, (null, L(3))),              // scalar under the inner struct
@@ -225,18 +252,15 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (13L, null),
       (14L, ((null, "f"), null)),      // float→long grand failure: field null
       (15L, ((L(9), "g"), L(9))))      // unknown child w/ deep value pruned
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), rowOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val n = r.getStruct(1, 2)
+          val inner =
+            if (n.isNullAt(0)) null else { val g = n.getStruct(0, 2); (lng(g, 0), str(g, 1)) }
+          (inner, lng(n, 1))
+        })
     }
   }
 
@@ -268,21 +292,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 17, "xs": {"x": 1}}""" + "\n" +
       """{"id": 18, "xs": [{"x": 1, "zz": "ignored", "y": "j"}]}""" + "\n" +
       """{"id": 19, "xs": [{"y": "tail", "x": 5}]}"""
-    val bytes = input.getBytes("UTF-8")
-    def elemsOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Seq[Any] =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val ad = b.column(1).getArray(r)
-        (0 until ad.numElements).map { j =>
-          if (ad.isNullAt(j)) null
-          else {
-            val st = ad.getStruct(j, 2)
-            (if (st.isNullAt(0)) null else java.lang.Long.valueOf(st.getLong(0)),
-             if (st.isNullAt(1)) null else st.getUTF8String(1).toString)
-          }
-        }
-      }
-    val L = (v: Long) => java.lang.Long.valueOf(v)
     val want = Seq(
       (1L, Seq((L(1), "a"), (L(2), "b"))),
       (2L, Seq((L(3), null), (null, "c"))),
@@ -305,34 +314,30 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (17L, null),
       (18L, Seq((L(1), "j"))),          // unknown field keys prune
       (19L, Seq((L(5), "tail"))))       // field order immaterial
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), elemsOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val ad = r.getArray(1)
+          (0 until ad.numElements()).map { j =>
+            if (ad.isNullAt(j)) null
+            else { val st = ad.getStruct(j, 2); (lng(st, 0), str(st, 1)) }
+          }
+        })
     }
   }
 
   test("every split point of an ARRAY<STRUCT> with CONTAINER fields yields identical batches") {
     // round 16 (order.items[].sku / items[].tags shape): element-struct
-    // fields may be ARRAY<atomic> (inner elements at per-(col,field)
-    // running offsets) or STRUCT<atomic> (grand lanes at element
-    // offsets). The full pathology matrix is pinned against
-    // spark.read.json by the round-16 probe: a failed/container inner
-    // element poisons the INNER array cell only; scalar/object where the
-    // inner array (or struct) was expected nulls the FIELD only; null
-    // inner elements are kept; [] is present-empty; {} and unknown-key
-    // objects are present inner structs with all-null grandfields; dup
-    // inner bindings are last-wins with failed-dup-never-overwrites; dup
-    // grandfield keys are last-wins; a scalar OUTER element still
-    // poisons the whole outer array.
+    // fields may be ARRAY<atomic> or STRUCT<atomic>. The full pathology
+    // matrix is pinned against spark.read.json by the round-16 probe: a
+    // failed/container inner element poisons the INNER array cell only;
+    // scalar/object where the inner array (or struct) was expected nulls
+    // the FIELD only; null inner elements are kept; [] is present-empty;
+    // {} and unknown-key objects are present inner structs with all-null
+    // grandfields; dup inner bindings are last-wins with
+    // failed-dup-never-overwrites; dup grandfield keys are last-wins; a
+    // scalar OUTER element still poisons the whole outer array.
     val schema = StructType.fromDDL(
       "id LONG, xs ARRAY<STRUCT<sku: LONG, tags: ARRAY<LONG>, " +
         "geo: STRUCT<lat: DOUBLE, src: STRING>>>")
@@ -359,36 +364,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 20, "xs": [{"geo": {"lat": 2.5, "lat": 3.5}}]}""",
       """{"id": 21, "xs": [{"sku": [], "tags": [1]}]}""",
       """{"id": 22, "xs": [{"tags": [[], 1]}]}""").mkString("\n")
-    val bytes = input.getBytes("UTF-8")
-    val L = (v: Long) => java.lang.Long.valueOf(v)
-    val D = (v: Double) => java.lang.Double.valueOf(v)
-    def elemsOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Seq[Any] =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val ad = b.column(1).getArray(r)
-        (0 until ad.numElements).map { j =>
-          if (ad.isNullAt(j)) null
-          else {
-            val st = ad.getStruct(j, 3)
-            val sku = if (st.isNullAt(0)) null else L(st.getLong(0))
-            val tags =
-              if (st.isNullAt(1)) null
-              else {
-                val td = st.getArray(1)
-                (0 until td.numElements).map(k =>
-                  if (td.isNullAt(k)) null else L(td.getLong(k)))
-              }
-            val geo =
-              if (st.isNullAt(2)) null
-              else {
-                val g = st.getStruct(2, 2)
-                ((if (g.isNullAt(0)) null else D(g.getDouble(0))),
-                 (if (g.isNullAt(1)) null else g.getUTF8String(1).toString))
-              }
-            (sku, tags, geo)
-          }
-        }
-      }
     val want = Seq[(Long, Any)](
       (1L, Seq((L(1), Seq(L(1), L(2)), (D(0.5), "a")))),
       (2L, Seq((null, null, null))),            // mixed inner: inner cell null
@@ -413,25 +388,31 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (20L, Seq((null, null, (D(3.5), null)))), // dup grand key: last-wins
       (21L, Seq((null, Seq(L(1)), null))),      // [] under scalar field: field null
       (22L, Seq((null, null, null))))           // [] inner element poisons inner cell
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), elemsOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val ad = r.getArray(1)
+          (0 until ad.numElements()).map { j =>
+            if (ad.isNullAt(j)) null
+            else {
+              val st = ad.getStruct(j, 3)
+              val geo =
+                if (st.isNullAt(2)) null
+                else {
+                  val g = st.getStruct(2, 2)
+                  (if (g.isNullAt(0)) null else D(g.getDouble(0)), str(g, 1))
+                }
+              (lng(st, 0), longs(st, 1), geo)
+            }
+          }
+        })
     }
   }
 
   test("every split point of a STRUCT<…, ARRAY<atomic>> input yields identical batches") {
     // round 15 (user.tags shape): the full pathology matrix, pinned
-    // against spark.read.json by the round-15 probe — elements stream
-    // into the child array vector's element child; null elements kept;
+    // against spark.read.json by the round-15 probe — null elements kept;
     // scalar/object under the array child nulls the FIELD only (failed
     // binding, struct survives); a conversion-failure or container
     // element poisons the ARRAY CELL only; `[]` is present-empty;
@@ -461,22 +442,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 19, "s": {"tags": [7], "a": 20}}""" + "\n" +
       """{"id": 20, "s": {"a": 1, "tags": [8]}, "s": {"tags": [9]}}""" + "\n" +
       """{"id": 21, "s": {"a": 21, "tags": [100, 200], "junk": 1}}"""
-    val bytes = input.getBytes("UTF-8")
-    val L = (v: Long) => java.lang.Long.valueOf(v)
-    def rowOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Any =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val s = b.column(1)
-        val a = if (s.getChild(0).isNullAt(r)) null else L(s.getChild(0).getLong(r))
-        val tags =
-          if (s.getChild(1).isNullAt(r)) null
-          else {
-            val ad = s.getChild(1).getArray(r)
-            (0 until ad.numElements).map(j =>
-              if (ad.isNullAt(j)) null else ad.getLong(j))
-          }
-        (a, tags)
-      }
     val want = Seq(
       (1L, (L(5), Seq(10L, 20L))),
       (2L, (L(6), Seq.empty)),
@@ -499,33 +464,22 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (19L, (L(20), Seq(7L))),          // field order immaterial
       (20L, (null, Seq(9L))),           // dup STRUCT binding replaces wholesale
       (21L, (L(21), Seq(100L, 200L))))  // unknown sibling keys prune
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), rowOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null else { val s = r.getStruct(1, 2); (lng(s, 0), longs(s, 1)) })
     }
   }
 
   test("every split point of a STRUCT<…, ARRAY<STRUCT>> input yields identical batches") {
-    // round 17 (user.addresses[].city shape): ARRAY<STRUCT<atomic…>>
-    // struct children ride the columnar path — elements are rows of the
-    // child array's struct element vector, fields write at the running
-    // element offset. The pathology matrix is pinned against
-    // spark.read.json by the round-17 probe (23 shapes): scalar/array
-    // elements poison the whole cell; {}/unknown-key elements read
-    // present-all-null; field failures null the FIELD only (the element
-    // and array survive); null elements are kept; [] is present-empty;
-    // dup bindings are last-wins with failed-dup-never-overwrites; dup
-    // element-field keys are last-wins; container values under a STRING
-    // field capture as verbatim source text.
+    // round 17 (user.addresses[].city shape). The pathology matrix is
+    // pinned against spark.read.json by the round-17 probe (23 shapes):
+    // scalar/array elements poison the whole cell; {}/unknown-key
+    // elements read present-all-null; field failures null the FIELD only
+    // (the element and array survive); null elements are kept; [] is
+    // present-empty; dup bindings are last-wins with
+    // failed-dup-never-overwrites; dup element-field keys are last-wins;
+    // container values under a STRING field capture as verbatim source
+    // text.
     val schema = StructType.fromDDL(
       "id LONG, u STRUCT<name: STRING, addresses: ARRAY<STRUCT<city: STRING, zip: LONG>>>")
     val input = Seq(
@@ -557,29 +511,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 26, "u": {"addresses": [[]]}}""",
       """{"id": 27, "u": {"addresses": {}}}""",
       """{"id": 28, "u": {"name": "h", "addresses": [{"city": "z", "zip": 9}]}}""").mkString("\n")
-    val bytes = input.getBytes("UTF-8")
-    val L = (v: Long) => java.lang.Long.valueOf(v)
-    def rowOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Any =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val s = b.column(1)
-        val name = if (s.getChild(0).isNullAt(r)) null
-                   else s.getChild(0).getUTF8String(r).toString
-        val addrs =
-          if (s.getChild(1).isNullAt(r)) null
-          else {
-            val ad = s.getChild(1).getArray(r)
-            (0 until ad.numElements).map { j =>
-              if (ad.isNullAt(j)) null
-              else {
-                val st = ad.getStruct(j, 2)
-                ((if (st.isNullAt(0)) null else st.getUTF8String(0).toString),
-                 (if (st.isNullAt(1)) null else L(st.getLong(1))))
-              }
-            }
-          }
-        (name, addrs)
-      }
     val want = Seq[(Long, Any)](
       (1L, ("a", Seq(("x", L(1)), ("y", L(2))))),
       (2L, ("b", Seq.empty)),
@@ -609,30 +540,34 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (26L, (null, null)),                    // [] element poisons the cell
       (27L, (null, null)),                    // {} where array: field null
       (28L, ("h", Seq(("z", L(9))))))         // clean row after the pathologies
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), rowOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val s = r.getStruct(1, 2)
+          val addrs =
+            if (s.isNullAt(1)) null
+            else {
+              val ad = s.getArray(1)
+              (0 until ad.numElements()).map { j =>
+                if (ad.isNullAt(j)) null
+                else { val st = ad.getStruct(j, 2); (str(st, 0), lng(st, 1)) }
+              }
+            }
+          (str(s, 0), addrs)
+        })
     }
   }
 
   test("every split point of a THREE-LEVEL struct input yields identical batches") {
     // round 17 (event.context.device.id shape): inner-struct children may
-    // themselves hold STRUCT<atomic…> fields — great lanes are row-offset
-    // vectors like child/grand lanes, and the whole two-level discipline
-    // repeats one more level down. Pinned against spark.read.json by the
-    // round-17 probe (16 shapes): dup grand bindings replace wholesale
-    // with failed-dup-never-overwrites, per-field partials, {} reads
-    // present-all-null, containers under atomic great lanes are failed
-    // bindings, raw-text capture for string great-fields.
+    // themselves hold STRUCT<atomic…> fields, and the whole two-level
+    // discipline repeats one more level down. Pinned against
+    // spark.read.json by the round-17 probe (16 shapes): dup grand
+    // bindings replace wholesale with failed-dup-never-overwrites,
+    // per-field partials, {} reads present-all-null, containers under
+    // atomic great fields are failed bindings, raw-text capture for
+    // string great-fields.
     val schema = StructType.fromDDL(
       "id LONG, t STRUCT<a: STRUCT<b: STRUCT<x: LONG, y: STRING>, c: LONG>, d: STRING>")
     val input = Seq(
@@ -655,30 +590,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 17, "t": {"a": {"b": {"x": 4}, "b": null}}}""",
       """{"id": 18, "t": {"a": {"b": null, "b": {"x": 6}}}}""",
       """{"id": 19, "t": {"a": {"b": {"x": 9, "y": "z"}, "c": 4}, "d": "e"}}""").mkString("\n")
-    val bytes = input.getBytes("UTF-8")
-    val L = (v: Long) => java.lang.Long.valueOf(v)
-    def rowOf(bt: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Any =
-      if (bt.column(1).isNullAt(r)) null
-      else {
-        val t = bt.column(1)
-        val a = t.getChild(0)
-        val d = if (t.getChild(1).isNullAt(r)) null
-                else t.getChild(1).getUTF8String(r).toString
-        if (a.isNullAt(r)) (null, d)
-        else {
-          val b = a.getChild(0)
-          val c = if (a.getChild(1).isNullAt(r)) null else L(a.getChild(1).getLong(r))
-          val bv =
-            if (b.isNullAt(r)) null
-            else {
-              val x = if (b.getChild(0).isNullAt(r)) null else L(b.getChild(0).getLong(r))
-              val y = if (b.getChild(1).isNullAt(r)) null
-                      else b.getChild(1).getUTF8String(r).toString
-              (x, y)
-            }
-          ((bv, c), d)
-        }
-      }
     val want = Seq[(Long, Any)](
       (1L, (((L(1), "u"), L(2)), "v")),
       (2L, (((null, null), L(2)), null)),     // {} = present, all-null greats
@@ -699,47 +610,36 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (17L, ((null, null), null)),            // explicit null over valid wins
       (18L, (((L(6), null), null), null)),    // valid over explicit null wins
       (19L, (((L(9), "z"), L(4)), "e")))      // clean row after the pathologies
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), rowOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val t = r.getStruct(1, 2)
+          if (t.isNullAt(0)) (null, str(t, 1))
+          else {
+            val a = t.getStruct(0, 2)
+            val bv =
+              if (a.isNullAt(0)) null else { val b = a.getStruct(0, 2); (lng(b, 0), str(b, 1)) }
+            ((bv, lng(a, 1)), str(t, 1))
+          }
+        })
     }
   }
 
   test("{} under a GREAT-GRANDCHILD lane is a failed binding (DROPMALFORMED parity)") {
-    // the tGr-guard bug class one level down, fixed preemptively in the
-    // same round: map()'s inner-struct branch must not fire for great
-    // targets either
     val schema = StructType.fromDDL(
       "id LONG, t STRUCT<a: STRUCT<b: STRUCT<x: LONG>>>")
     val input =
       """{"id": 1, "t": {"a": {"b": {"x": 5}}}}""" + "\n" +
       """{"id": 2, "t": {"a": {"b": {"x": {}}}}}""" + "\n" +
       """{"id": 3, "t": {"a": {"b": {"x": null}}}}"""
-    val plate = new ColumnarPlate(schema, Array.empty, dropDiscarded = true)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(input.getBytes("UTF-8")))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    val kept = (0 until b.numRows).map(r => b.column(0).getLong(r))
+    val kept = rowsOf(schema, Seq(input), dropDiscarded = true).map(_.getLong(0))
     assert(kept == Seq(1L, 3L))
   }
 
   test("{} under a GRANDCHILD lane is a failed binding (DROPMALFORMED parity)") {
-    // latent since round 14, caught by the round-17 audit: map()'s
-    // inner-struct branch fired for GRAND targets too, so an empty
-    // object bound to an atomic grandchild never marked the row
-    // malformed — DROPMALFORMED kept it where spark and the row path
-    // drop it (non-empty objects/arrays were already correct via the
-    // nestMap/nestArr fallbacks)
+    // an empty object bound to an atomic grandchild marks the row
+    // malformed, like non-empty objects and arrays do
     val schema = StructType.fromDDL("id LONG, n STRUCT<g: STRUCT<x: LONG, y: STRING>>")
     val input =
       """{"id": 1, "n": {"g": {"x": 5, "y": "a"}}}""" + "\n" +
@@ -748,26 +648,18 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 4, "n": {"g": {"x": [], "y": "d"}}}""" + "\n" +
       """{"id": 5, "n": {"g": {}}}""" + "\n" +
       """{"id": 6, "n": {"g": {"x": null}}}"""
-    val plate = new ColumnarPlate(schema, Array.empty, dropDiscarded = true)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(input.getBytes("UTF-8")))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    val kept = (0 until b.numRows).map(r => b.column(0).getLong(r))
+    val kept = rowsOf(schema, Seq(input), dropDiscarded = true).map(_.getLong(0))
     assert(kept == Seq(1L, 5L, 6L)) // spark DROPMALFORMED keeps exactly these
   }
 
   test("every split point of a STRUCT<…, MAP> input yields identical batches") {
-    // round 17 (payload.headers shape): MAP<STRING, atomic> struct
-    // children ride the columnar path — keys/values lanes under the
-    // child map vector at the per-(col,child) running offset. The
-    // pathology matrix is pinned against spark.read.json by the
-    // round-17 probe (20 shapes): null values kept; conversion-failure/
-    // container/object values poison the cell; scalar/array where the
-    // map was expected nulls the FIELD only; duplicate keys BOTH
-    // append; dup bindings last-wins with failed-dup-never-overwrites;
-    // container values under a STRING-valued map capture as verbatim
-    // source text (file-based spark parity).
+    // round 17 (payload.headers shape). The pathology matrix is pinned
+    // against spark.read.json by the round-17 probe (20 shapes): null
+    // values kept; conversion-failure/container/object values poison the
+    // cell; scalar/array where the map was expected nulls the FIELD
+    // only; duplicate keys BOTH append; dup bindings last-wins with
+    // failed-dup-never-overwrites; container values under a STRING-valued
+    // map capture as verbatim source text (file-based spark parity).
     val schema = StructType.fromDDL(
       "id LONG, p STRUCT<name: STRING, hdrs: MAP<STRING, LONG>, lbls: MAP<STRING, STRING>>")
     val input = Seq(
@@ -791,29 +683,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 18, "p": {"name": "q", "hdrs": {"x": 1}}, "p": {"hdrs": {"y": 2}}}""",
       """{"id": 19, "p": {"hdrs": {"z": 3}, "name": "g"}}""",
       """{"id": 20, "p": {"name": "h", "hdrs": {"w": 4}, "lbls": {"c": "v"}}}""").mkString("\n")
-    val bytes = input.getBytes("UTF-8")
-    def mapOf(v: org.apache.spark.sql.vectorized.ColumnVector, r: Int,
-        str: Boolean): Seq[(String, Any)] =
-      if (v.isNullAt(r)) null
-      else {
-        val md = v.getMap(r)
-        (0 until md.numElements).map { j =>
-          val k = md.keyArray.getUTF8String(j).toString
-          val x: Any =
-            if (md.valueArray.isNullAt(j)) null
-            else if (str) md.valueArray.getUTF8String(j).toString
-            else md.valueArray.getLong(j)
-          k -> x
-        }
-      }
-    def rowOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Any =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val s = b.column(1)
-        val name = if (s.getChild(0).isNullAt(r)) null
-                   else s.getChild(0).getUTF8String(r).toString
-        (name, mapOf(s.getChild(1), r, str = false), mapOf(s.getChild(2), r, str = true))
-      }
     val want = Seq[(Long, Any)](
       (1L, ("a", Seq("x" -> 1L, "y" -> 2L), null)),
       (2L, ("b", Seq.empty, null)),
@@ -835,18 +704,13 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (18L, (null, Seq("y" -> 2L), null)),       // dup STRUCT binding replaces
       (19L, ("g", Seq("z" -> 3L), null)),        // field order immaterial
       (20L, ("h", Seq("w" -> 4L), Seq("c" -> "v")))) // clean row after
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), rowOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
+    assertEverySplit(schema, input, want) { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) null
+        else {
+          val s = r.getStruct(1, 3)
+          (str(s, 0), mapOf(s, 1, strValues = false), mapOf(s, 2, strValues = true))
+        })
     }
   }
 
@@ -854,34 +718,25 @@ class ColumnarPlateSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.IsNotNull
     val schema = StructType.fromDDL(
       "id LONG, k STRING, p STRUCT<hdrs: MAP<STRING, LONG>>")
-    val plate = new ColumnarPlate(schema, Array(IsNotNull("k")))
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "p": {"hdrs": {"dead": 111, "beef": 222}}}""" + "\n" +
-      """{"id": 2, "k": "x", "p": {"hdrs": {"live": 5}}}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert(b.numRows == 1)
-    val md = b.column(2).getChild(0).getMap(0)
-    assert(md.numElements == 1)
-    assert(md.keyArray.getUTF8String(0).toString == "live")
-    assert(md.valueArray.getLong(0) == 5L)
+      """{"id": 2, "k": "x", "p": {"hdrs": {"live": 5}}}""" + "\n"),
+      filters = Array(IsNotNull("k")))
+    assert(rows.length == 1)
+    assert(mapOf(rows(0).getStruct(2, 1), 0, strValues = false) == Seq("live" -> 5L))
   }
 
   test("a filter-rejected row rewinds its ARRAY<STRUCT> struct-child writes") {
     import org.apache.spark.sql.sources.IsNotNull
     val schema = StructType.fromDDL(
       "id LONG, k STRING, u STRUCT<addresses: ARRAY<STRUCT<city: STRING, zip: LONG>>>")
-    val plate = new ColumnarPlate(schema, Array(IsNotNull("k")))
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "u": {"addresses": [{"city": "dead", "zip": 111}, {"city": "beef", "zip": 222}]}}""" + "\n" +
-      """{"id": 2, "k": "x", "u": {"addresses": [{"city": "live", "zip": 5}]}}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert(b.numRows == 1)
-    val ad = b.column(2).getChild(0).getArray(0)
-    assert(ad.numElements == 1)
+      """{"id": 2, "k": "x", "u": {"addresses": [{"city": "live", "zip": 5}]}}""" + "\n"),
+      filters = Array(IsNotNull("k")))
+    assert(rows.length == 1)
+    val ad = rows(0).getStruct(2, 1).getArray(0)
+    assert(ad.numElements() == 1)
     assert(ad.getStruct(0, 2).getUTF8String(0).toString == "live")
     assert(ad.getStruct(0, 2).getLong(1) == 5L)
   }
@@ -890,142 +745,96 @@ class ColumnarPlateSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.IsNotNull
     val schema = StructType.fromDDL(
       "id LONG, k STRING, s STRUCT<tags: ARRAY<LONG>>")
-    val plate = new ColumnarPlate(schema, Array(IsNotNull("k")))
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "s": {"tags": [111, 222]}}""" + "\n" +
-      """{"id": 2, "k": "x", "s": {"tags": [5]}}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert(b.numRows == 1)
-    val ad = b.column(2).getChild(0).getArray(0)
-    assert(ad.numElements == 1 && ad.getLong(0) == 5L,
+      """{"id": 2, "k": "x", "s": {"tags": [5]}}""" + "\n"),
+      filters = Array(IsNotNull("k")))
+    assert(rows.length == 1)
+    assert(longs(rows(0).getStruct(2, 1), 0) == Seq(5L),
       "rejected row's child-array elements leaked into the kept row")
   }
 
   test("takeBatch mid-struct-child-array carries the open run over") {
     val schema = StructType.fromDDL("id LONG, s STRUCT<a: LONG, tags: ARRAY<STRING>>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    // chunk 1 ends INSIDE row 2's child array: two elements appended
-    raise(p.absorb("""{"id": 1, "s": {"tags": ["x"], "a": 1}}""" + "\n" +
-      """{"id": 2, "s": {"a": 2, "tags": ["p", "q", """))
-    assert(plate.pendingRows == 1)
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    assert(b1.column(1).getChild(1).getArray(0).getUTF8String(0).toString == "x")
-    raise(p.absorb(""""r"]}}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    assert(b2.column(0).getLong(0) == 2L)
-    assert(b2.column(1).getChild(0).getLong(0) == 2L)
-    val ad = b2.column(1).getChild(1).getArray(0)
-    assert(ad.numElements == 3)
-    assert((0 until 3).map(ad.getUTF8String(_).toString) == Seq("p", "q", "r"))
+    // chunk 1 ends INSIDE row 2's child array: two elements parsed
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "s": {"tags": ["x"], "a": 1}}""" + "\n" +
+      """{"id": 2, "s": {"a": 2, "tags": ["p", "q", """,
+      """"r"]}}"""))
+    assert(rows.length == 2)
+    assert(strs(rows(0).getStruct(1, 2), 1) == Seq("x"))
+    assert(rows(1).getLong(0) == 2L)
+    assert(rows(1).getStruct(1, 2).getLong(0) == 2L)
+    assert(strs(rows(1).getStruct(1, 2), 1) == Seq("p", "q", "r"))
   }
 
   test("takeBatch after a CLOSED struct-child array cell of an in-flight row carries it") {
     val schema = StructType.fromDDL("id LONG, s STRUCT<tags: ARRAY<DOUBLE>, a: LONG>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb("""{"id": 1, "s": {"tags": [0.5], "a": 1}}""" + "\n" +
-      """{"id": 2, "s": {"tags": [1.5, 2.5], """))
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    raise(p.absorb(""""a": 2}}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    assert(b2.column(1).getChild(1).getLong(0) == 2L)
-    val ad = b2.column(1).getChild(0).getArray(0)
-    assert(ad.numElements == 2 && ad.getDouble(0) == 1.5 && ad.getDouble(1) == 2.5)
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "s": {"tags": [0.5], "a": 1}}""" + "\n" +
+      """{"id": 2, "s": {"tags": [1.5, 2.5], """,
+      """"a": 2}}"""))
+    assert(rows.length == 2)
+    assert(rows(1).getStruct(1, 2).getLong(1) == 2L)
+    val ad = rows(1).getStruct(1, 2).getArray(0)
+    assert(ad.numElements() == 2 && ad.getDouble(0) == 1.5 && ad.getDouble(1) == 2.5)
   }
 
   test("saturation=false: duplicate array bindings replace (last-wins)") {
     val schema = StructType.fromDDL("id LONG, a ARRAY<LONG>")
-    val plate = new ColumnarPlate(schema, Array.empty, saturate = false)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "a": [1], "a": [8, 9]}""" + "\n" +
       """{"id": 2, "a": [4], "a": null}""" + "\n" +
-      """{"id": 3, "a": null, "a": [6]}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert(b.numRows == 3)
-    val a1 = b.column(1).getArray(0)
-    assert((0 until a1.numElements).map(a1.getLong(_)) == Seq(8L, 9L))
-    assert(b.column(1).isNullAt(1), "last-wins null must shadow the array")
-    val a3 = b.column(1).getArray(2)
-    assert(a3.numElements == 1 && a3.getLong(0) == 6L,
-      "last-wins array must shadow the explicit null")
+      """{"id": 3, "a": null, "a": [6]}""" + "\n"), saturate = false)
+    assert(rows.length == 3)
+    assert(longs(rows(0), 1) == Seq(8L, 9L))
+    assert(rows(1).isNullAt(1), "last-wins null must shadow the array")
+    assert(longs(rows(2), 1) == Seq(6L), "last-wins array must shadow the explicit null")
 
     // ARRAY<STRUCT> twin: a duplicate binding replaces the whole array
     val schema2 = StructType.fromDDL("id LONG, xs ARRAY<STRUCT<x: LONG>>")
-    val plate2 = new ColumnarPlate(schema2, Array.empty, saturate = false)
-    val p2 = new JsonParser[Long](plate2, JsonParser.ValueStream)
-    raise(p2.absorb("""{"id": 1, "xs": [{"x": 1}], "xs": [{"x": 2}, {"x": 3}]}""" + "\n"))
-    raise(p2.finish())
-    val b2 = plate2.takeBatch()
-    val xs = b2.column(1).getArray(0)
-    assert(xs.numElements == 2 && xs.getStruct(0, 1).getLong(0) == 2L &&
+    val rows2 = rowsOf(schema2,
+      Seq("""{"id": 1, "xs": [{"x": 1}], "xs": [{"x": 2}, {"x": 3}]}""" + "\n"),
+      saturate = false)
+    val xs = rows2(0).getArray(1)
+    assert(xs.numElements() == 2 && xs.getStruct(0, 1).getLong(0) == 2L &&
       xs.getStruct(1, 1).getLong(0) == 3L, "dup ARRAY<STRUCT> binding must be last-wins")
   }
 
   test("takeBatch mid-array carries the open element run over") {
     val schema = StructType.fromDDL("id LONG, a ARRAY<STRING>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    // chunk 1 ends INSIDE row 2's array: two elements already appended
-    raise(p.absorb("""{"id": 1, "a": ["x"]}""" + "\n" +
-      """{"id": 2, "a": ["p", "q", """))
-    assert(plate.pendingRows == 1)
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    assert(b1.column(1).getArray(0).getUTF8String(0).toString == "x")
-    raise(p.absorb(""""r"]}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    assert(b2.column(0).getLong(0) == 2L)
-    val ad = b2.column(1).getArray(0)
-    assert(ad.numElements == 3)
-    assert((0 until 3).map(ad.getUTF8String(_).toString) == Seq("p", "q", "r"))
+    // chunk 1 ends INSIDE row 2's array: two elements already parsed
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "a": ["x"]}""" + "\n" + """{"id": 2, "a": ["p", "q", """,
+      """"r"]}"""))
+    assert(rows.length == 2)
+    assert(strs(rows(0), 1) == Seq("x"))
+    assert(rows(1).getLong(0) == 2L)
+    assert(strs(rows(1), 1) == Seq("p", "q", "r"))
   }
 
   test("takeBatch after a CLOSED array cell of an in-flight row carries it over") {
     val schema = StructType.fromDDL("a ARRAY<DOUBLE>, id LONG")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
     // chunk 1 ends AFTER row 2's array closed but before the row ends
-    raise(p.absorb("""{"a": [0.5], "id": 1}""" + "\n" +
-      """{"a": [1.5, 2.5], """))
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    raise(p.absorb(""""id": 2}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    assert(b2.column(1).getLong(0) == 2L)
-    val ad = b2.column(0).getArray(0)
-    assert(ad.numElements == 2 && ad.getDouble(0) == 1.5 && ad.getDouble(1) == 2.5)
+    val rows = rowsOf(schema, Seq(
+      """{"a": [0.5], "id": 1}""" + "\n" + """{"a": [1.5, 2.5], """,
+      """"id": 2}"""))
+    assert(rows.length == 2)
+    assert(rows(1).getLong(1) == 2L)
+    val ad = rows(1).getArray(0)
+    assert(ad.numElements() == 2 && ad.getDouble(0) == 1.5 && ad.getDouble(1) == 2.5)
   }
 
   test("a filter-rejected row rewinds its element writes") {
     import org.apache.spark.sql.sources.IsNotNull
     val schema = StructType.fromDDL("id LONG, s STRING, a ARRAY<LONG>")
-    val plate = new ColumnarPlate(schema, Array(IsNotNull("s")))
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    // row 1 is rejected at finishRow (s missing) AFTER its array wrote
+    // row 1 is rejected at finishRow (s missing) AFTER its array parsed
     // two elements; the kept row's array must not shift
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "a": [111, 222]}""" + "\n" +
-      """{"id": 2, "s": "k", "a": [5]}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert(b.numRows == 1)
-    val ad = b.column(2).getArray(0)
-    assert(ad.numElements == 1 && ad.getLong(0) == 5L,
+      """{"id": 2, "s": "k", "a": [5]}""" + "\n"), filters = Array(IsNotNull("s")))
+    assert(rows.length == 1)
+    assert(longs(rows(0), 2) == Seq(5L),
       "rejected row's elements leaked into the kept row's array")
   }
 
@@ -1048,17 +857,6 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 11, "m": {"a": 1, "b": 9, "a": 2}}""" + "\n" +
       """{"id": 12, "m": {"a": null, "a": 7}}""" + "\n" +
       """{"id": 13, "m": {"x": 12, "y": 13}}"""
-    val bytes = input.getBytes("UTF-8")
-    def mapOf(b: org.apache.spark.sql.vectorized.ColumnarBatch, r: Int): Seq[(String, Any)] =
-      if (b.column(1).isNullAt(r)) null
-      else {
-        val md = b.column(1).getMap(r)
-        (0 until md.numElements).map { j =>
-          val k = md.keyArray.getUTF8String(j).toString
-          val v = if (md.valueArray.isNullAt(j)) null else md.valueArray.getLong(j)
-          k -> v
-        }
-      }
     val want = Seq(
       (1L, Seq("a" -> 1L, "b" -> 2L)),
       (2L, Seq("a" -> null, "b" -> 3L)),
@@ -1075,97 +873,39 @@ class ColumnarPlateSpec extends AnyFunSuite {
       (11L, Seq("a" -> 1L, "b" -> 9L, "a" -> 2L)),
       (12L, Seq("a" -> null, "a" -> 7L)),
       (13L, Seq("x" -> 12L, "y" -> 13L))) // ...and later rows unaffected
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map(r => (b.column(0).getLong(r), mapOf(b, r)))
-      }
-      assert(rows == want, s"split $i")
-    }
+    assertEverySplit(schema, input, want)(r =>
+      (r.getLong(0), mapOf(r, 1, strValues = false)))
   }
 
   test("takeBatch mid-map carries the open entry run over") {
     val schema = StructType.fromDDL("id LONG, m MAP<STRING, STRING>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    // chunk 1 ends INSIDE row 2's map: two entries already appended
-    raise(p.absorb("""{"id": 1, "m": {"k": "x"}}""" + "\n" +
-      """{"id": 2, "m": {"p": "1", "q": "2", """))
-    assert(plate.pendingRows == 1)
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    assert(b1.column(1).getMap(0).valueArray.getUTF8String(0).toString == "x")
-    raise(p.absorb(""""r": "3"}}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    val md = b2.column(1).getMap(0)
-    assert(md.numElements == 3)
-    assert((0 until 3).map(j => md.keyArray.getUTF8String(j).toString) == Seq("p", "q", "r"))
-    assert((0 until 3).map(j => md.valueArray.getUTF8String(j).toString) == Seq("1", "2", "3"))
+    // chunk 1 ends INSIDE row 2's map: two entries already parsed
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "m": {"k": "x"}}""" + "\n" + """{"id": 2, "m": {"p": "1", "q": "2", """,
+      """"r": "3"}}"""))
+    assert(rows.length == 2)
+    assert(mapOf(rows(0), 1, strValues = true) == Seq("k" -> "x"))
+    assert(mapOf(rows(1), 1, strValues = true) == Seq("p" -> "1", "q" -> "2", "r" -> "3"))
   }
 
   test("unseen map/array columns rebase their element offset at takeBatch") {
-    // review finding (round 13): elemPos reset only covered ARRAY columns,
-    // so a MAP column's running offset carried into every fresh batch's
-    // children — quadratic allocation on multi-batch scans
     val schema = StructType.fromDDL("id LONG, m MAP<STRING, LONG>, a ARRAY<LONG>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb("""{"id": 1, "m": {"x": 1, "y": 2}, "a": [7, 8, 9]}""" + "\n"))
-    val b1 = plate.takeBatch() // clean row boundary: nothing in flight
-    assert(b1.numRows == 1)
-    raise(p.absorb("""{"id": 2, "m": {"z": 3}, "a": [4]}""" + "\n"))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    def offset0(c: Int) = b2.column(c)
-      .asInstanceOf[org.apache.spark.sql.execution.vectorized.WritableColumnVector]
-      .getArrayOffset(0)
-    assert(offset0(1) == 0, s"map offsets must rebase per batch, got ${offset0(1)}")
-    assert(offset0(2) == 0, s"array offsets must rebase per batch, got ${offset0(2)}")
-    assert(b2.column(1).getMap(0).valueArray.getLong(0) == 3L)
-    assert(b2.column(2).getArray(0).getLong(0) == 4L)
+    // a clean row boundary between the chunks: nothing in flight
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "m": {"x": 1, "y": 2}, "a": [7, 8, 9]}""" + "\n",
+      """{"id": 2, "m": {"z": 3}, "a": [4]}""" + "\n"))
+    assert(rows.length == 2)
+    assert(mapOf(rows(1), 1, strValues = false) == Seq("z" -> 3L))
+    assert(longs(rows(1), 2) == Seq(4L))
   }
 
   test("a poisoned run split mid-element leaves no stale slots for later rows") {
-    // review finding (round 13): the poisoned-split branch rebased
-    // entrySlot past the fresh child's origin, so the in-flight element's
-    // explicit null landed outside the close's scrub range and shadowed a
-    // later row's element at that slot
     val schema = StructType.fromDDL("id LONG, a ARRAY<LONG>")
     val input =
       """{"id": 1, "a": [[9], null, 7]}""" + "\n" +
       """{"id": 2, "a": [5, 6]}"""
-    val bytes = input.getBytes("UTF-8")
-    (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(schema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-      raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      raise(p.absorb(bytes.slice(i, bytes.length)))
-      raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val rows = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map { r =>
-          val a =
-            if (b.column(1).isNullAt(r)) null
-            else {
-              val ad = b.column(1).getArray(r)
-              (0 until ad.numElements).map(j =>
-                if (ad.isNullAt(j)) null else ad.getLong(j))
-            }
-          (b.column(0).getLong(r), a)
-        }
-      }
-      assert(rows == Seq((1L, null), (2L, Seq(5L, 6L))), s"split $i: $rows")
-    }
+    assertEverySplit(schema, input, Seq((1L, null), (2L, Seq(5L, 6L))))(r =>
+      (r.getLong(0), longs(r, 1)))
   }
 
   test("saturation=false: a duplicate key's mismatch NEVER overwrites (spark parity)") {
@@ -1199,37 +939,23 @@ class ColumnarPlateSpec extends AnyFunSuite {
 
   test("takeBatch mid-struct carries the partial struct's children over") {
     val schema = StructType.fromDDL("id LONG, n STRUCT<x: LONG, y: STRING>")
-    val plate = new ColumnarPlate(schema, Array.empty)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    // chunk 1 ends INSIDE row 2's struct: x already written, y pending
-    raise(p.absorb("""{"id": 1, "n": {"x": 5, "y": "a"}}""" + "\n" +
-      """{"id": 2, "n": {"x": 6, """))
-    assert(plate.pendingRows == 1)
-    val b1 = plate.takeBatch()
-    assert(b1.numRows == 1)
-    raise(p.absorb(""""y": "late"}}"""))
-    raise(p.finish())
-    val b2 = plate.takeBatch()
-    assert(b2.numRows == 1)
-    assert(b2.column(0).getLong(0) == 2L)
-    assert(!b2.column(1).isNullAt(0))
-    assert(b2.column(1).getChild(0).getLong(0) == 6L)
-    assert(b2.column(1).getChild(1).getUTF8String(0).toString == "late")
+    // chunk 1 ends INSIDE row 2's struct: x already parsed, y pending
+    val rows = rowsOf(schema, Seq(
+      """{"id": 1, "n": {"x": 5, "y": "a"}}""" + "\n" + """{"id": 2, "n": {"x": 6, """,
+      """"y": "late"}}"""))
+    assert(rows.length == 2)
+    assert(rows(1).getLong(0) == 2L)
+    assert(!rows(1).isNullAt(1))
+    assert(rows(1).getStruct(1, 2).getLong(0) == 6L)
+    assert(rows(1).getStruct(1, 2).getUTF8String(1).toString == "late")
   }
 
-  // putX value writes never reset a vector's validity bit, so a slot
-  // reused after an abandoned row must have its null bits scrubbed —
-  // minimal cases found by JsonSourceFuzzSpec (stale nulls leaked into
-  // the NEXT row's present values)
   test("struct-child filters drop at the plate (decided at finishRow over final values)") {
     import org.apache.spark.sql.sources.{GreaterThan, IsNotNull}
     val schema = StructType.fromDDL("id LONG, n STRUCT<x: LONG, y: STRING>")
     // plate-level drop is observable directly: residual filtering hasn't
-    // run, so any row in the batch survived the PLATE's check
-    val plate = new ColumnarPlate(schema,
-      Array(GreaterThan("n.x", java.lang.Long.valueOf(10L))))
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    // run, so any pushed row survived the PLATE's check
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "n": {"x": 5, "y": "drop"}}""" + "\n" +
       """{"id": 2, "n": {"x": 50, "y": "keep"}}""" + "\n" +
       """{"id": 3, "n": {"x": 3}, "zz": "tail never parsed"}""" + "\n" +
@@ -1238,22 +964,18 @@ class ColumnarPlateSpec extends AnyFunSuite {
       // DUPLICATE child keys are last-wins: the filter sees the FINAL
       // value, never the first binding's (x16 fuzz regression)
       """{"id": 6, "n": {"x": 0, "x": 44, "y": "dupkeep"}}""" + "\n" +
-      """{"id": 7, "n": {"x": 44, "x": 0, "y": "dupdrop"}}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert((0 until b.numRows).map(b.column(0).getLong(_)) == Seq(2L, 4L, 5L, 6L))
+      """{"id": 7, "n": {"x": 44, "x": 0, "y": "dupdrop"}}""" + "\n"),
+      filters = Array(GreaterThan("n.x", java.lang.Long.valueOf(10L))))
+    assert(rows.map(_.getLong(0)) == Seq(2L, 4L, 5L, 6L))
 
     // anchored IsNotNull does NOT early-drop (definitelyFails has no
     // IsNotNull case — unknown filters never drop at the plate; Spark's
-    // residual handles it). Row-path trie parity: both keep the row.
-    val plate2 = new ColumnarPlate(schema, Array(IsNotNull("n.x")))
-    val p2 = new JsonParser[Long](plate2, JsonParser.ValueStream)
-    raise(p2.absorb(
+    // residual handles it)
+    val rows2 = rowsOf(schema, Seq(
       """{"id": 1, "n": {"x": null, "y": "residual-drops-me"}}""" + "\n" +
-      """{"id": 2, "n": {"x": 1, "y": "keep"}}""" + "\n"))
-    raise(p2.finish())
-    val b2 = plate2.takeBatch()
-    assert((0 until b2.numRows).map(b2.column(0).getLong(_)) == Seq(1L, 2L))
+      """{"id": 2, "n": {"x": 1, "y": "keep"}}""" + "\n"),
+      filters = Array(IsNotNull("n.x")))
+    assert(rows2.map(_.getLong(0)) == Seq(1L, 2L))
   }
 
   test("duplicate bindings rebind filters: only the row's FINAL values decide") {
@@ -1265,22 +987,19 @@ class ColumnarPlateSpec extends AnyFunSuite {
     // read (with saturation on, a rebind after the row saturates is
     // never read — first-wins — and the filter agrees with that value).
     val schema = StructType.fromDDL("id LONG, s STRING, n STRUCT<x: LONG, y: STRING>")
-    val plate = new ColumnarPlate(schema,
-      Array(GreaterThan("n.x", java.lang.Long.valueOf(10L))), saturate = false)
-    val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(
+    val rows = rowsOf(schema, Seq(
       """{"id": 1, "n": {"x": 0}, "n": {"x": 44, "y": "rebind-save"}, "s": "a"}""" + "\n" +
       """{"id": 2, "n": {"x": 44}, "n": {"x": 0}, "s": "b"}""" + "\n" +
       """{"id": 3, "n": {"x": 7}, "s": "c"}""" + "\n" +
-      """{"id": 4, "n": {"x": 70}, "s": "d"}""" + "\n"))
-    raise(p.finish())
-    val b = plate.takeBatch()
-    assert((0 until b.numRows).map(b.column(0).getLong(_)) == Seq(1L, 4L),
+      """{"id": 4, "n": {"x": 70}, "s": "d"}""" + "\n"),
+      filters = Array(GreaterThan("n.x", java.lang.Long.valueOf(10L))), saturate = false)
+    assert(rows.map(_.getLong(0)) == Seq(1L, 4L),
       "the rebind-saved row must survive; the rebind-doomed row must drop")
-    assert(b.column(2).getChild(0).getLong(0) == 44L)
+    assert(rows(0).getStruct(2, 2).getLong(0) == 44L)
 
-    // same for a TOP-LEVEL scalar duplicate
-    val plate2 = new ColumnarPlate(schema,
+    // same for a TOP-LEVEL scalar duplicate, on the flat plate
+    val flat = StructType.fromDDL("id LONG, s STRING")
+    val plate2 = new ColumnarPlate(flat,
       Array(LessThan("id", java.lang.Long.valueOf(100L))), saturate = false)
     val p2 = new JsonParser[Long](plate2, JsonParser.ValueStream)
     raise(p2.absorb(
@@ -1314,6 +1033,10 @@ class ColumnarPlateSpec extends AnyFunSuite {
     assert((0 until b2.numRows).map(b2.column(0).getLong(_)) == Seq(2L))
   }
 
+  // putX value writes never reset a vector's validity bit, so a slot
+  // reused after an abandoned row must have its null bits scrubbed —
+  // minimal cases found by JsonSourceFuzzSpec (stale nulls leaked into
+  // the NEXT row's present values)
   test("a filter-abandoned row's explicit nulls do not leak into the next row") {
     import org.apache.spark.sql.sources.LessThan
     val schema = StructType.fromDDL("id LONG, d DOUBLE, b BOOLEAN")

@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -20,10 +19,10 @@ import graft.api.TrainingData
   * means re-run against the current snapshot); nothing may abort in a
   * poisoned-log state, double-apply, or silently drop a committed write.
   */
-class CommitLogContentionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CommitLogContentionSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
-  private val root = Files.createTempDirectory("graft-contention")
+  private val root = tempDir("graft-contention")
   private val schema = "id BIGINT, v STRING"
 
   /** Subclasses rerun the whole soak through an alternate [[GraftLogStore]]
@@ -60,8 +59,7 @@ class CommitLogContentionSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.sparkContext.hadoopConfiguration.unset(GraftLogStore.ImplKey)
       spark.stop()
     }
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    super.afterAll()
   }
 
   /** Run `op`, retrying only the documented OCC loss signal; anything
@@ -209,7 +207,7 @@ class CommitLogContentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until 500L).map(i => (i, s"seed$i")).toDF("id", "v")
       .repartition(2).write.format("graft-json").mode("overwrite").save(d)
 
-    val ckptDir = Files.createTempDirectory("graft-contention-ckpt")
+    val ckptDir = tempDir("graft-contention-ckpt")
     val q = s.readStream.format("graft-json").schema(schema)
       .option("followlog", "true").option("skipchangecommits", "true")
       .load(d)

@@ -2,7 +2,6 @@ package graft.spark
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 
@@ -11,10 +10,10 @@ import java.nio.file.Files
   * graft-csv reader (whose quoted-field parser is why CSV is unsplittable
   * by default), nested schemas must be refused, and compression composes.
   */
-class CsvSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CsvSinkSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
-  private val dir = Files.createTempDirectory("graft-csv-sink-spec")
+  private val dir = tempDir("graft-csv-sink-spec")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -29,8 +28,7 @@ class CsvSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    super.afterAll()
   }
 
   test("quoting edges round-trip: commas, quotes, embedded newlines") {
@@ -83,14 +81,14 @@ class CsvSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming csv sink: epoch-named files round-trip exactly once") {
-    val srcDir = Files.createTempDirectory("graft-csv-ssink-src")
+    val srcDir = tempDir("graft-csv-ssink-src")
     (1 to 3).foreach { f =>
       Files.write(srcDir.resolve(s"f$f.jsonl"),
         (1 to 10).map(i => s"""{"id": ${f * 100 + i}, "v": "x$i"}""")
           .mkString("", "\n", "\n").getBytes("UTF-8"))
     }
-    val out = Files.createTempDirectory("graft-csv-ssink-out").resolve("o").toString
-    val ckpt = Files.createTempDirectory("graft-csv-ssink-ckpt").toString
+    val out = tempDir("graft-csv-ssink-out").resolve("o").toString
+    val ckpt = tempDir("graft-csv-ssink-ckpt").toString
     val q = spark.readStream.format("graft-json")
       .schema("id LONG, v STRING")
       .option("maxfilespertrigger", "1")

@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 
@@ -15,10 +14,10 @@ import graft.api.TrainingData
   * travel before the delete still shows the rows; `materializeDeletes`
   * rewrites the masks away.
   */
-class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DeletionVectorSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
-  private val root = Files.createTempDirectory("graft-dv")
+  private val root = tempDir("graft-dv")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -33,8 +32,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    super.afterAll()
   }
 
   private def dir(name: String): String = root.resolve(name).toString
@@ -622,7 +620,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     (0L until 20L).map(i => (i, s"r$i")).toDF("id", "v")
       .repartition(1).write.format("graft-json").mode("overwrite").save(d) // v0
-    val ckpt = Files.createTempDirectory("graft-dvstream-ckpt")
+    val ckpt = tempDir("graft-dvstream-ckpt")
     val q = s.readStream.format("graft-json").schema(schema)
       .option("followlog", "true").option("skipchangecommits", "true")
       .load(d)

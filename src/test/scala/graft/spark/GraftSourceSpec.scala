@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -11,7 +10,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 /** DataFrame-level parity: the graft DSv2 readers vs spark.read.json/csv
   * on identical fixtures, plus byte-range splitting and pushdown checks.
   */
-class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftSourceSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var dir: java.nio.file.Path = _
@@ -25,11 +24,12 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("graft-src")
+    dir = tempDir("graft-src")
   }
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
+    super.afterAll()
   }
 
   private def write(name: String, content: String): String = {
@@ -196,7 +196,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hive-partitioned directories: columns, values, and file pruning") {
-    val base = Files.createTempDirectory("graft-part")
+    val base = tempDir("graft-part")
     def writePart(date: String, region: Long, ids: Range): Unit = {
       val d = base.resolve(s"date=$date").resolve(s"region=$region")
       Files.createDirectories(d)
@@ -231,7 +231,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(filtered.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       (6L to 10L))
     // CSV partitioned reads share the machinery
-    val cbase = Files.createTempDirectory("graft-part-csv")
+    val cbase = tempDir("graft-part-csv")
     val cd = cbase.resolve("grp=7")
     Files.createDirectories(cd)
     Files.write(cd.resolve("f.csv"), "a,b\n1,x\n2,y\n".getBytes(UTF_8))
@@ -239,7 +239,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cdf.select("a", "grp").collect().map(r =>
       (r.getString(0), r.getLong(1))).sorted.toSeq == Seq(("1", 7L), ("2", 7L)))
     // hive escaping: %xx decodes, '+' stays literal
-    val ebase = Files.createTempDirectory("graft-part-esc")
+    val ebase = tempDir("graft-part-esc")
     val ed = ebase.resolve("tag=a%3Ab+c")
     Files.createDirectories(ed)
     Files.write(ed.resolve("f.json"), """{"id": 1}""".getBytes(UTF_8))
@@ -249,12 +249,12 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming discovers files that land after the stream starts") {
     import org.apache.spark.sql.streaming.Trigger
-    val streamDir = Files.createTempDirectory("graft-stream-disc")
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val streamDir = tempDir("graft-stream-disc")
+    val ckpt = tempDir("graft-stream-ckpt").toString
     def writeFile(name: String, ids: Range): Unit =
       Files.write(streamDir.resolve(name),
         ids.map(i => s"""{"id": $i}""").mkString("", "\n", "\n").getBytes(UTF_8))
-    val outDir = Files.createTempDirectory("graft-stream-out").toString
+    val outDir = tempDir("graft-stream-out").toString
     def sunk(): Seq[Long] =
       spark.read.parquet(outDir).collect().map(_.getLong(0)).sorted.toSeq
     def startQuery() = spark.readStream.format("graft-json")
@@ -460,29 +460,27 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.json(p).selectExpr("id", "name", "score").orderBy("id")
         .collect().map(_.toString).toSeq)
 
-    // one-level struct + array-of-atomic columns ride the columnar path
-    // too (round 13 struct/array lanes) — the inferred fixture schema
-    // (tags ARRAY<STRING>, meta STRUCT<flag,grp>) no longer falls off
+    // any struct/array/map column takes the row reader (ColumnarPlate is
+    // flat-only) — the inferred fixture schema has tags ARRAY<STRING> and
+    // meta STRUCT<flag,grp>
     val nested = spark.read.format("graft-json").load(p)
     val nestedScans = nested.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }
-    assert(nestedScans.head.supportsColumnar,
-      "one-level struct/array schema should take the vectorized path")
+    assert(!nestedScans.head.supportsColumnar,
+      "one-level struct/array schema should take the row path")
     assert(nested.orderBy("id").collect().map(_.toString).toSeq ==
       spark.read.json(p).select(nested.columns.map(col).toSeq: _*).orderBy("id")
         .collect().map(_.toString).toSeq)
 
-    // TWO-level nesting vectorizes since round 14 (grand lanes), THREE
-    // levels since round 17 (great lanes) — values covered by the
-    // three-way fuzz; FOUR levels still fall back to rows
+    // two, three and four levels of nesting read rows too
     val deepP = write("colmnr_deep.json",
       """{"id": 1, "n": {"inner": {"x": 1}}}""" + "\n")
     val deep = spark.read.format("graft-json").load(deepP)
     val deepScans = deep.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }
-    assert(deepScans.head.supportsColumnar, "two-level nesting vectorizes (round 14)")
+    assert(!deepScans.head.supportsColumnar, "two-level nesting takes the row path")
     assert(deep.collect().head.getStruct(1).getStruct(0).getLong(0) == 1L)
     val deep3P = write("colmnr_deep3.json",
       """{"id": 1, "n": {"inner": {"g": {"x": 1}}}}""" + "\n")
@@ -490,7 +488,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deep3Scans = deep3.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }
-    assert(deep3Scans.head.supportsColumnar, "three-level nesting vectorizes (round 17)")
+    assert(!deep3Scans.head.supportsColumnar, "three-level nesting takes the row path")
     assert(deep3.collect().head.getStruct(1).getStruct(0).getStruct(0).getLong(0) == 1L)
     val deep4P = write("colmnr_deep4.json",
       """{"id": 1, "n": {"inner": {"g": {"gg": {"x": 1}}}}}""" + "\n")
@@ -551,7 +549,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runtime filtering (DPP): join-key values prune partition files at execution") {
-    val base = Files.createTempDirectory("graft-dpp")
+    val base = tempDir("graft-dpp")
     (0L to 4L).foreach { r =>
       val d = base.resolve(s"region=$r")
       Files.createDirectories(d)
@@ -564,7 +562,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // selective dim: only region 2 survives its filter. The dim must be a
     // real scan + Filter (a LocalRelation folds the filter away and DPP's
     // "has selective predicate" check never fires)
-    val dimPath = Files.createTempDirectory("graft-dpp-dim").resolve("dim").toString
+    val dimPath = tempDir("graft-dpp-dim").resolve("dim").toString
     Seq((2L, "keep"), (7L, "other")).toDF("r", "tag")
       .write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
@@ -595,7 +593,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a graft-json dim joined to a parquet fact broadcasts WITHOUT a hint
     // (absent stats, v2 relations default to defaultSizeInBytes = never
     // broadcast)
-    val factPath = Files.createTempDirectory("graft-stats").resolve("fact").toString
+    val factPath = tempDir("graft-stats").resolve("fact").toString
     val s = spark; import s.implicits._
     (1 to 5000).map(i => (i.toLong, (i % 50).toLong)).toDF("k", "fk")
       .write.mode("overwrite").parquet(factPath)
@@ -608,7 +606,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft-json DSv2 sink: write + overwrite round-trip, nested values, escaping") {
     val s = spark; import s.implicits._
-    val out = Files.createTempDirectory("graft-sink").resolve("out").toString
+    val out = tempDir("graft-sink").resolve("out").toString
     val df = Seq(
       (1L, "plain", Seq(1L, 2L), ("x", 10L)),
       (2L, "esc \"q\" \\ tab\t nl\n", Seq.empty[Long], ("y", 20L)),
@@ -631,14 +629,14 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft-json streaming sink: micro-batches land as epoch-named files") {
-    val srcDir = Files.createTempDirectory("graft-ssink-src")
+    val srcDir = tempDir("graft-ssink-src")
     (1 to 3).foreach { f =>
       Files.write(srcDir.resolve(s"f$f.json"),
         (1 to 10).map(i => s"""{"id": ${f * 100 + i}, "v": "x$i"}""")
           .mkString("", "\n", "\n").getBytes(UTF_8))
     }
-    val outDir = Files.createTempDirectory("graft-ssink-out").resolve("out").toString
-    val ckpt = Files.createTempDirectory("graft-ssink-ckpt").toString
+    val outDir = tempDir("graft-ssink-out").resolve("out").toString
+    val ckpt = tempDir("graft-ssink-ckpt").toString
     val q = spark.readStream.format("graft-json")
       .schema("id LONG, v STRING")
       .option("maxbytespertrigger", "120") // several micro-batches
@@ -839,7 +837,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.functions.to_date($"raw").as("d"))
     val want = df.orderBy("raw").collect().toSeq
     for (fmt <- Seq("graft-json", "graft-csv")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-temporal-$fmt").toString
+      val dir = tempDir(s"graft-temporal-$fmt").toString
       df.write.format(fmt).mode("overwrite").save(dir)
       val back = spark.read.format(fmt)
         .schema("raw STRING, ts TIMESTAMP, d DATE").load(dir)
@@ -847,7 +845,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(back === want, s"graft reader round-trip via $fmt")
     }
     // and the json output is readable by the BUILT-IN reader too
-    val jdir = java.nio.file.Files.createTempDirectory("graft-temporal-native").toString
+    val jdir = tempDir("graft-temporal-native").toString
     df.write.format("graft-json").mode("overwrite").save(jdir)
     val native = spark.read.schema("raw STRING, ts TIMESTAMP, d DATE")
       .json(jdir).orderBy("raw").collect().toSeq
@@ -856,7 +854,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("temporal columns vectorize: columnar plan + value/filter parity with the row path") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-temporal-vec").toString
+    val dir = tempDir("graft-temporal-vec").toString
     val df = (1 to 50).map(i => (i.toLong, f"2026-01-${i % 28 + 1}%02d 03:04:${i % 60}%02d"))
       .toDF("id", "raw")
       .select($"id",
@@ -882,7 +880,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark; import s.implicits._
     val df = Seq((1L, Array[Byte](0, 1, 2, -1, 127)), (2L, Array.empty[Byte]))
       .toDF("id", "media")
-    val dir = java.nio.file.Files.createTempDirectory("graft-binary").toString
+    val dir = tempDir("graft-binary").toString
     df.write.format("graft-json").mode("overwrite").save(dir)
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("id").collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq
@@ -894,7 +892,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft-csv refuses binary columns loudly (no toString garbage)") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-binary").toString
+    val dir = tempDir("graft-csv-binary").toString
     val e = intercept[Exception] {
       Seq((1L, Array[Byte](1, 2))).toDF("id", "media")
         .write.format("graft-csv").mode("overwrite").save(dir)
@@ -910,7 +908,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must clamp to the file and exclude the record's own terminator
     // (this used to readFully one byte past EOF and fail the task; after
     // clamping alone, the last capture came back empty)
-    val dir = java.nio.file.Files.createTempDirectory("graft-eof-capture")
+    val dir = tempDir("graft-eof-capture")
     java.nio.file.Files.write(dir.resolve("garbage.jsonl"),
       "{broken\nnot json at all\n[1,2,}\n".getBytes("UTF-8"))
     java.nio.file.Files.write(dir.resolve("mixed.jsonl"),

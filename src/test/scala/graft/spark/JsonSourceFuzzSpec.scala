@@ -15,6 +15,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * and row paths, saturation + cruise — must collect exactly what
   * `spark.read.json` collects under the same explicit schema, projection,
   * and filter. Deterministic seed: failures reproduce.
+  *
+  * The "… go COLUMNAR …" cases keep their names from when nested schemas
+  * had vector lanes; ColumnarPlate is flat-only now, so each asserts its
+  * nested schema reads through the row scan.
   */
 class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -315,10 +319,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(nestedSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(nestedSchema).json(p.toString)
-      // the plan MUST be columnar: a struct schema no longer falls off
-      // the ColumnarBatch path
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: nested schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: nested schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(4) match {
@@ -397,10 +400,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(arraySchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(arraySchema).json(p.toString)
-      // the plan MUST be columnar: an array-of-atomic schema no longer
-      // falls off the ColumnarBatch path
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: array schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: array schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(4) match {
@@ -479,8 +481,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(tlSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(tlSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: two-level struct schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: two-level struct schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(4) match {
@@ -495,13 +498,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(tlSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      val colAll = g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == colAll, s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -580,8 +576,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(saSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(saSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: struct-child array schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: struct-child array schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(4) match {
@@ -596,13 +593,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(saSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      val colAll = g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == colAll, s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -663,8 +653,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(asSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(asSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: ARRAY<STRUCT> schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: ARRAY<STRUCT> schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(4) match {
@@ -679,13 +670,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(asSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == (g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq),
-        s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -769,8 +753,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(ecSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(ecSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: container-field schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: container-field schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(3) match {
@@ -784,13 +769,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(ecSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == (g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq),
-        s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -866,8 +844,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(ckSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(ckSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: struct-child ARRAY<STRUCT> schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: struct-child ARRAY<STRUCT> schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(3) match {
@@ -881,13 +860,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(ckSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == (g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq),
-        s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -965,8 +937,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(tlSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(tlSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: three-level struct schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: three-level struct schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(3) match {
@@ -980,13 +953,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(tlSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == (g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq),
-        s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -1065,8 +1031,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(cmSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(cmSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: struct-child MAP schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: struct-child MAP schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       val proj = projections(rng.nextInt(projections.length))
       val (g, j) = rng.nextInt(3) match {
@@ -1080,13 +1047,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split proj=$proj: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(cmSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = rowSide.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == (g0.select(proj.map(col): _*).collect().map(_.toString).sorted.toSeq),
-        s"trial $trial: row vs columnar diverged")
     }
   }
 
@@ -1154,8 +1114,9 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g0 = spark.read.format("graft-json").schema(mapSchema)
         .option("maxsplitbytes", split).load(p.toString)
       val j0 = spark.read.schema(mapSchema).json(p.toString)
-      assert(g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        s"trial $trial: map schema fell off the columnar path\n" +
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!g0.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"trial $trial: map schema must read through the row scan\n" +
           g0.queryExecution.executedPlan.toString)
       // order-insensitive map projection: sorted keys + per-key lookups
       def shape(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -1172,14 +1133,6 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"trial $trial split=$split: ${got.size} vs ${want.size} rows\n" +
           got.zip(want).find { case (a, b) => a != b }.map { case (a, b) =>
             s"first diff:\n  graft: $a\n  spark: $b" }.getOrElse(""))
-      // and the ROW path must agree with the columnar path exactly
-      val rowSide = spark.read.format("graft-json").schema(mapSchema)
-        .option("vectorized", "false").load(p.toString)
-      assert(!rowSide.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      val rowGot = shape(rowSide).collect().map(_.toString).sorted.toSeq
-      assert(rowGot == got, s"trial $trial: row vs columnar diverged\n" +
-        rowGot.zip(got).find { case (a, b) => a != b }.map { case (a, b) =>
-          s"first diff:\n  row: $a\n  columnar: $b" }.getOrElse(""))
     }
   }
 
@@ -1344,9 +1297,8 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("duplicate bindings: columnar, row, and spark.read.json agree (both modes)") {
     // round 15: duplicate ROW-LEVEL bindings are last-wins in DEFAULT
     // mode too (the saturated tail cruises and re-parses schema-key
-    // duplicates) — asserted across the COLUMNAR struct lanes, the ROW
-    // path (withrowindex forces it), spark.read.json, and both
-    // saturation settings
+    // duplicates) — asserted across the plain scan, the row-index scan
+    // (withrowindex), spark.read.json, and both saturation settings
     val rng = new scala.util.Random(0xD0B1E5)
     val nestedSchema = "id LONG, s STRING, n STRUCT<x: LONG, y: STRING>"
     for (trial <- 1 to 6 * SoakX.x) {
@@ -1354,13 +1306,13 @@ class JsonSourceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       Files.write(p, nestedCorpus(rng, 120, dupBindings = true).getBytes(UTF_8))
       val colPath = spark.read.format("graft-json").schema(nestedSchema)
         .option("saturation", "false").load(p.toString)
-      assert(colPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+      // nested schemas read through the row scan (ColumnarPlate is flat-only)
+      assert(!colPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
       // round 15: DEFAULT mode (saturation ON) keeps last-wins too — the
       // cruise-consumed tail re-parses schema-key duplicates
       val colDefault = spark.read.format("graft-json").schema(nestedSchema)
         .load(p.toString)
-      // the row index must stay in the projection or pruning drops it and
-      // the scan re-admits the columnar path
+      // the row index must stay in the projection or pruning drops it
       val rowPath = spark.read.format("graft-json")
         .schema(s"$nestedSchema, ${GraftSources.RowIndexCol} LONG")
         .option("withrowindex", "true").load(p.toString)

@@ -2,7 +2,6 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
@@ -10,7 +9,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 /** OFFSET pushdown: accepted (and exact) for a single-file scan, refused
   * for multi-file listings where no global row order exists.
   */
-class OffsetPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OffsetPushdownSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var dir: java.nio.file.Path = _
@@ -24,10 +23,13 @@ class OffsetPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("graft-offset")
+    dir = tempDir("graft-offset")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   private val fixture: String =
     (1 to 40).map(i => s"""{"id": $i, "name": "row$i"}""").mkString("\n") + "\n"
@@ -74,7 +76,7 @@ class OffsetPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("multi-file listing refuses the offset (Spark applies it itself, still exact)") {
-    val multi = Files.createTempDirectory("graft-offset-multi")
+    val multi = tempDir("graft-offset-multi")
     Files.write(multi.resolve("a.json"),
       (1 to 20).map(i => s"""{"id": $i}""").mkString("\n").getBytes(UTF_8))
     Files.write(multi.resolve("b.json"),

@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 
@@ -14,10 +13,10 @@ import java.nio.file.Files
   * manifest, and the graft scan lists/prunes/reads the layout back —
   * the full 100 TB corpus round trip without a metastore.
   */
-class PartitionedSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PartitionedSinkSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
-  private val dir = Files.createTempDirectory("graft-psink")
+  private val dir = tempDir("graft-psink")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -32,8 +31,7 @@ class PartitionedSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    super.afterAll()
   }
 
   test("json partitionBy round-trips: layout, stripping, nulls, escaping") {
@@ -244,7 +242,7 @@ class PartitionedSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DATE partition values render as ISO directories, not epoch-day ints") {
     val s = spark; import s.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-part-date").toString
+    val out = tempDir("graft-part-date").toString
     Seq(("2026-01-02", 1L), ("2026-01-02", 2L), ("1999-12-31", 3L))
       .toDF("ds", "v")
       .select(org.apache.spark.sql.functions.to_date($"ds").as("d"), $"v")

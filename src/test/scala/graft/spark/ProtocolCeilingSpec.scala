@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 
@@ -16,10 +15,10 @@ import java.nio.file.Files
   * versionAsOf, the tailing (followLog-admission) read, a LIVE followLog
   * stream, checkpoint folds, and DV artifact opens.
   */
-class ProtocolCeilingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ProtocolCeilingSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
-  private val root = Files.createTempDirectory("graft-protocol-ceiling")
+  private val root = tempDir("graft-protocol-ceiling")
   private val schema = "id BIGINT, v STRING"
 
   override def beforeAll(): Unit = {
@@ -35,8 +34,7 @@ class ProtocolCeilingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    super.afterAll()
   }
 
   private def conf = spark.sparkContext.hadoopConfiguration
@@ -148,7 +146,7 @@ class ProtocolCeilingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a LIVE followLog stream dies with the upgrade message when a v9 entry lands") {
     val d = dir("v9_stream")
     mkTable(d, 50L)
-    val ckpt = Files.createTempDirectory("graft-ceiling-ckpt")
+    val ckpt = tempDir("graft-ceiling-ckpt")
     val q = spark.readStream.format("graft-json").schema(schema)
       .option("followlog", "true").load(d)
       .writeStream.format("memory").queryName("ceiling_stream")

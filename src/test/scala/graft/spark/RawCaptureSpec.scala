@@ -20,7 +20,9 @@ import scala.collection.mutable
   *
   * Both plates are pinned at every chunk split point — the capture spans
   * chunk boundaries through the parser's stash (the input buffer may be
-  * compacted or swapped between churns).
+  * compacted or swapped between churns). ColumnarPlate reads flat schemas
+  * only, so its capture anchor is the top-level STRING column; nested
+  * anchors read through RowPlate.
   */
 class RawCaptureSpec extends AnyFunSuite {
 
@@ -133,67 +135,51 @@ class RawCaptureSpec extends AnyFunSuite {
     assert(colM == want._4, s"$ctx: m")
   }
 
+  // nested schemas read through RowPlate (ColumnarPlate is flat-only):
+  // the split-point pin for the nested anchors runs there
   test("columnar path: nested STRING anchors capture at every split point") {
     val input = nested.map(_._1).mkString("\n")
     val bytes = input.getBytes("UTF-8")
     (0 to bytes.length).foreach { i =>
-      val plate = new ColumnarPlate(nestedSchema, Array.empty)
-      val p = new JsonParser[Long](plate, JsonParser.ValueStream)
+      val rows = mutable.ArrayBuffer[InternalRow]()
+      val plate = new RowPlate(nestedSchema, Array.empty, r => rows.append(r.copy()))
+      val p = new JsonParser(plate, JsonParser.ValueStream)
       raise(p.absorb(bytes.slice(0, i)))
-      val head = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
       raise(p.absorb(bytes.slice(i, bytes.length)))
       raise(p.finish())
-      val tail = if (plate.pendingRows > 0) Some(plate.takeBatch()) else None
-      val all = (head.toSeq ++ tail.toSeq).flatMap { b =>
-        (0 until b.numRows).map { r =>
-          def s(v: org.apache.spark.sql.vectorized.ColumnVector, at: Int) =
-            if (v.isNullAt(at)) null else v.getUTF8String(at).toString
-          val n = b.column(1)
-          val c = if (n.isNullAt(r)) null else s(n.getChild(0), r)
-          val g = if (n.isNullAt(r) || n.getChild(1).isNullAt(r)) null
-                  else s(n.getChild(1).getChild(0), r)
-          val a = if (b.column(2).isNullAt(r)) null else {
-            val ad = b.column(2).getArray(r)
-            (0 until ad.numElements).map(j =>
-              if (ad.isNullAt(j)) null else ad.getUTF8String(j).toString)
-          }
-          val m = if (b.column(3).isNullAt(r)) null else {
-            val md = b.column(3).getMap(r)
-            (0 until md.numElements).map(j =>
-              md.keyArray.getUTF8String(j).toString ->
-                (if (md.valueArray.isNullAt(j)) null
-                 else md.valueArray.getUTF8String(j).toString))
-          }
-          (c, g, a, m)
-        }
-      }
-      assert(all.length == nested.length, s"split $i")
-      all.zip(nested).foreach { case ((c, g, a, m), (in, want)) =>
+      assert(rows.length == nested.length, s"split $i")
+      rows.zip(nested).foreach { case (r, (in, want)) =>
+        val (c, g, a, m) = nestedCells(r)
         checkNested(c, g, a, m, want, s"split $i input $in")
       }
     }
   }
 
+  private def nestedCells(r: InternalRow): (Any, Any, Any, Any) = {
+    val n = if (r.isNullAt(1)) null else r.getStruct(1, 2)
+    val c = if (n == null || n.isNullAt(0)) null else n.getUTF8String(0).toString
+    val g = if (n == null || n.isNullAt(1)) null
+            else if (n.getStruct(1, 1).isNullAt(0)) null
+            else n.getStruct(1, 1).getUTF8String(0).toString
+    val a = if (r.isNullAt(2)) null else {
+      val ad = r.getArray(2)
+      (0 until ad.numElements).map(j =>
+        if (ad.isNullAt(j)) null else ad.getUTF8String(j).toString)
+    }
+    val m = if (r.isNullAt(3)) null else {
+      val md = r.getMap(3)
+      (0 until md.numElements).map(j =>
+        md.keyArray.getUTF8String(j).toString ->
+          (if (md.valueArray.isNullAt(j)) null
+           else md.valueArray.getUTF8String(j).toString))
+    }
+    (c, g, a, m)
+  }
+
   test("row path: nested STRING anchors capture (arbitrary depth)") {
     val rows = rowPath(nestedSchema, nested.map(_._1).mkString("\n"))
     rows.zip(nested).foreach { case (r, (in, want)) =>
-      val n = if (r.isNullAt(1)) null else r.getStruct(1, 2)
-      val c = if (n == null || n.isNullAt(0)) null else n.getUTF8String(0).toString
-      val g = if (n == null || n.isNullAt(1)) null
-              else if (n.getStruct(1, 1).isNullAt(0)) null
-              else n.getStruct(1, 1).getUTF8String(0).toString
-      val a = if (r.isNullAt(2)) null else {
-        val ad = r.getArray(2)
-        (0 until ad.numElements).map(j =>
-          if (ad.isNullAt(j)) null else ad.getUTF8String(j).toString)
-      }
-      val m = if (r.isNullAt(3)) null else {
-        val md = r.getMap(3)
-        (0 until md.numElements).map(j =>
-          md.keyArray.getUTF8String(j).toString ->
-            (if (md.valueArray.isNullAt(j)) null
-             else md.valueArray.getUTF8String(j).toString))
-      }
+      val (c, g, a, m) = nestedCells(r)
       checkNested(c, g, a, m, want, s"input $in")
     }
   }
@@ -210,13 +196,15 @@ class RawCaptureSpec extends AnyFunSuite {
     assert(rows(0).getStruct(2, 1).isNullAt(0), "container under LONG field reads null")
     assert(rows(1).getArray(1).getLong(0) == 4L)
 
-    val plate = new ColumnarPlate(schema, Array.empty)
+    // the flat columnar plate: a container under a LONG column reads null
+    val flat = StructType.fromDDL("id LONG, x LONG")
+    val plate = new ColumnarPlate(flat, Array.empty)
     val p = new JsonParser[Long](plate, JsonParser.ValueStream)
-    raise(p.absorb(input)); raise(p.finish())
+    raise(p.absorb("""{"id": 1, "x": {"deep": 1}}""" + "\n" + """{"id": 2, "x": 5}"""))
+    raise(p.finish())
     val b = plate.takeBatch()
-    assert(b.column(1).isNullAt(0))
-    assert(b.column(2).getChild(0).isNullAt(0))
-    assert(b.column(1).getArray(1).getLong(0) == 4L)
+    assert(b.column(1).isNullAt(0), "container under a LONG column reads null")
+    assert(b.column(1).getLong(1) == 5L)
   }
 
   test("container ROWS do not capture into the schemaless value column") {

@@ -147,10 +147,10 @@ object LagListingFileSystem {
   * real payload — they rerun the full contention and COW-lifecycle
   * suites through it).
   */
-class S3LogStoreSpec extends AnyFunSuite {
+class S3LogStoreSpec extends AnyFunSuite with TempDirs {
   private val conf = new org.apache.hadoop.conf.Configuration()
   private val store = new S3SemanticsLogStore
-  private val dir = Files.createTempDirectory("graft-s3fake")
+  private val dir = tempDir("graft-s3fake")
 
   private def fs = new Path(dir.toString).getFileSystem(conf)
 

@@ -2,14 +2,13 @@ package graft.spark
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** SQL DDL over the graft DSv2 sources: CREATE TABLE ... USING graft-json
   * registers a catalog table whose reads go through the graft scan
   * (pushdown included) — the surface a SQL-first user drives the engine
   * with, no DataFrame code at all.
   */
-class SqlDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlDdlSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -24,7 +23,10 @@ class SqlDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   test("CREATE TABLE USING graft-json + SQL reads with pushdown") {
     val s = spark
@@ -104,7 +106,7 @@ class SqlDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("table-level CHECK constraint via TBLPROPERTIES binds every INSERT") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-ddl-check").toString
+    val dir = tempDir("graft-ddl-check").toString
     s.sql(
       s"""CREATE TABLE graft_ddl_chk (id BIGINT, score DOUBLE)
          |USING `graft-json` LOCATION '$dir'

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -25,7 +24,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *   - no session is emitted twice (the file sink's manifest provides
   *     exactly-once across the restart).
   */
-class StatefulRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StatefulRestartSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var root: Path = _
@@ -39,10 +38,13 @@ class StatefulRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    root = Files.createTempDirectory("graft-stateful-restart")
+    root = tempDir("graft-stateful-restart")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   import StatefulRestartSpec._
 

@@ -2,7 +2,6 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
@@ -12,7 +11,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * push is PARTIAL, so results must be byte-identical to the unpushed
   * plan in every direction/null-ordering combination.
   */
-class TopNPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TopNPushdownSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var dir: java.nio.file.Path = _
@@ -26,10 +25,13 @@ class TopNPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("graft-topn")
+    dir = tempDir("graft-topn")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   // ids deliberately NOT in file order; every 7th name is null
   private val fixture: String = (1 to 200).map { i =>

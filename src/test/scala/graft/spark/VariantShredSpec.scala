@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
@@ -17,7 +16,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * implemented — this Spark build's planner rewrite breaks for V2 sources
   * whatever the source answers; see the note in GraftScanBuilder.)
   */
-class VariantShredSpec extends AnyFunSuite with BeforeAndAfterAll {
+class VariantShredSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
   private var path: String = _
@@ -30,7 +29,7 @@ class VariantShredSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val dir = Files.createTempDirectory("graft-shred")
+    val dir = tempDir("graft-shred")
     val rows = (1 to 30).map { i =>
       if (i % 5 == 0) s"""{"a": $i, "pad": "${"x" * 50}"}""" // meta missing
       else
@@ -41,7 +40,10 @@ class VariantShredSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(java.nio.file.Paths.get(path), rows.getBytes(UTF_8))
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    super.afterAll()
+  }
 
   test("shredded read equals variant_get over the full variant read") {
     val shredded = spark.read.format("graft-json")
@@ -121,7 +123,7 @@ class VariantShredSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"{${keys.map(k => s""""$k": ${gen(depth - 1)}""").mkString(",")}}"
       }
     val docs = Seq.fill(40)(s"""{"r": ${gen(3)}, "pad": "zz"}""")
-    val dir = Files.createTempDirectory("graft-shred-rnd")
+    val dir = tempDir("graft-shred-rnd")
     val p = dir.resolve("r.jsonl").toString
     Files.write(java.nio.file.Paths.get(p), docs.mkString("\n").getBytes(UTF_8))
     val paths = Seq("$.r", "$.r.a", "$.r.b", "$.r.a.c", "$.r.d")
@@ -136,7 +138,7 @@ class VariantShredSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("exact decimals survive subtree capture") {
-    val p2 = Files.createTempDirectory("graft-shred2").resolve("d.jsonl").toString
+    val p2 = tempDir("graft-shred2").resolve("d.jsonl").toString
     Files.write(java.nio.file.Paths.get(p2),
       """{"m": {"d": 1.230, "big": 12345678901234567890.12345}}""".getBytes(UTF_8))
     val s = spark.read.format("graft-json").option("variant", "true")
