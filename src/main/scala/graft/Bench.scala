@@ -15,23 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // round 16: read parquet NTZ timestamps as session-UTC TIMESTAMP
-      // directly (identical values under the pinned UTC tz) — drops the
-      // cast-Project Tables.apply otherwise grafts over every
-      // timestamp-bearing scan and keeps native parquet pushdown for
-      // timestamp predicates (measured: q08 −25%, q01 −15% exec)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", GraftSession.cpus(32))
 
     def time(q: GQuery): Double = {
       val t0 = System.nanoTime()

@@ -225,19 +225,12 @@ object ProfParse {
     * user-supplied 1-column schema (Jackson still tokenizes every byte).
     */
   private def e2eSkip(): Unit = {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.functions._
     // ~120 MB: large enough that per-query planning/listing overhead
     // (~100 ms fixed) stops dominating the rate
     val data = SkipBench.profCorpus(300000)
     val mb = data.length / 1e6
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .appName("prof-parse")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("prof-parse", 1)
     val path = "/tmp/prof_parse/ugh.json"
     new java.io.File("/tmp/prof_parse").mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(path), data)
@@ -267,15 +260,8 @@ object ProfParse {
     * aggregating a data column.
     */
   private def e2e(data: Array[Byte], mb: Double): Unit = {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.functions._
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .appName("prof-parse")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("prof-parse", 1)
     val path = "/tmp/prof_parse/flat.json"
     val dir = new java.io.File("/tmp/prof_parse")
     dir.mkdirs()

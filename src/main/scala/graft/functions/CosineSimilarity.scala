@@ -139,7 +139,8 @@ object GraftFunctions {
     })
 
   /** Register the graft function library on an existing session
-    * (idempotent) — for sessions not built with the extensions class.
+    * (idempotent). Sessions built with [[GraftSparkExtensions]] already
+    * have it; there this only re-registers the functions.
     */
   def register(spark: SparkSession): Unit = {
     Seq(cosineInfo, shinglesInfo, levBoundedInfo, jaroWinklerInfo, rollingHashInfo)
@@ -150,8 +151,12 @@ object GraftFunctions {
       val (id, info, builder) = graft.spark.GraftTableFunctions.tableChangesInfo
       spark.sessionState.tableFunctionRegistry.registerFunction(id, info, builder)
     }
-    // optimizer rules for sessions not built through GraftSparkExtensions
-    if (!spark.experimental.extraOptimizations.contains(BoundedLevenshteinRule))
+    // optimizer rules for sessions not built through GraftSparkExtensions;
+    // a session whose extensions injected the rule would otherwise run it
+    // twice per optimization
+    val injected = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    if (!injected.contains(BoundedLevenshteinRule) &&
+        !spark.experimental.extraOptimizations.contains(BoundedLevenshteinRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ BoundedLevenshteinRule
   }
@@ -159,7 +164,7 @@ object GraftFunctions {
 
 /** `SparkSessionExtensions` entry point: users opt in with
   * `.config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")`
-  * or `SparkSession.builder.withExtensions(new GraftSparkExtensions)`.
+  * or the session builder's `.withExtensions(new GraftSparkExtensions)`.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

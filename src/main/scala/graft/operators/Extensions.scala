@@ -79,8 +79,9 @@ object Extensions {
     * to the feed, the way triggerBytes sizes the admission cap. The r16
     * shape planned every stateful gate at the session's core-count
     * partitioning regardless of feed size: at test scale that is 32 state
-    * stores per operator per micro-batch over a few MB (ProbeStream: q63's
-    * summed state-commit time 74 s/batch at 32 partitions vs 0.9 s at 4 —
+    * stores per operator per micro-batch over a few MB (round 17,
+    * OPTIMIZATION_r17.md: q63's summed state-commit time 74 s/batch at 32
+    * partitions vs 0.9 s at 4 —
     * concurrent tiny-store commits contend, and every batch pays 32 task
     * launches + commits for rows that fit in one). One partition per 1 MB
     * of feed, floored at 1 and capped at the cluster's parallelism, keeps

@@ -41,8 +41,9 @@ object Pipeline {
     * sort-merge join whose brand exchange carries a few MB, which AQE
     * correctly coalesces to ~1 partition — and then the JOIN OUTPUT
     * explodes to ~|block|² candidate pairs whose kernel evaluations all
-    * run inside that one task (ProbeJw: the kernel is ~355 ns/eval and
-    * the pair table is the real workload, so the whole gate serialized).
+    * run inside that one task (round 16, OPTIMIZATION_r16.md: the kernel
+    * is ~355 ns/eval and the pair table is the real workload, so the whole
+    * gate serialized).
     * The deliberate shape instead (guide §3.1, the q03 discipline): the
     * dimension side BROADCASTS — the streamed side never exchanges, so
     * the pair explosion inherits the STREAMED side's parallelism — and

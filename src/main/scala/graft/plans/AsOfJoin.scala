@@ -252,9 +252,12 @@ private final class AsOfMergeIterator(
 
 object AsOfJoin {
 
-  /** Install the planner strategy on a session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
+  /** Install the planner strategy on a session (idempotent) that
+    * `GraftSparkExtensions` did not already give it.
+    */
+  private def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (!spark.sessionState.planner.extraPlanningStrategies.contains(AsOfJoinStrategy) &&
+        !spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
 

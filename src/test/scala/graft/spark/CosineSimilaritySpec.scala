@@ -87,4 +87,9 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT cosine_sim(array(1D, 0D), array(1D, 0D))")
       .collect()(0).getDouble(0) == 1.0)
   }
+
+  test("register() leaves the optimizer rule to the extension that injected it") {
+    GraftFunctions.register(spark)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
 }
