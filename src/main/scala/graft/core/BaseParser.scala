@@ -36,9 +36,10 @@ abstract class BaseParser[A](protected val plate: Plate[A]) {
   // for error positions: a full second (cache-cold) pass over the input,
   // ~14% of the PRUNED skip path's profile and a constant added to both
   // sides of the projection-skip ratio. Like the reference, newlines
-  // inside byte-SKIPPED spans and quoted CSV cells are not tracked — error
-  // lines are exact for validated content (JsonParserSpec pins the
-  // zero-copy multi-chunk cases) and best-effort after unvalidated skips.
+  // inside byte-SKIPPED JSON spans are not tracked — error lines are exact
+  // for validated content (JsonParserSpec pins the zero-copy multi-chunk
+  // cases; CSV counts its quoted cells' newlines) and best-effort after
+  // unvalidated skips.
   private[this] var nlSeen = 0L     // newlines consumed (counted) so far
   private[this] var lastNlAbs = 0L  // ABSOLUTE offset of the byte after it
   protected var done = false

@@ -18,68 +18,6 @@ package graft.core
   * `skipped(bytes)` is a metrics side-channel reporting bytes the producer
   * pruned due to SkipColumn/SkipRow pushdown (accuracy ±1-2 bytes).
   */
-/** Optional plate capability — Mison-style key pushdown (Li et al., VLDB
-  * 2017; the same family as the reference's SkipColumn, taken one step
-  * further): a producer that sees this on its plate may skip a whole
-  * `"key": value` pair at ROW depth (depth 1) with NO plate notification
-  * (no nestMap/unnest, no skipped-value events) whenever `cruisableKey`
-  * returns true. The plate must therefore answer false for every key it
-  * could act on (schema columns, filter anchors, capture-alls). Only
-  * consulted for unescaped, ASCII-verified key bytes; anything else takes
-  * the ordinary nestMap path.
-  */
-trait KeyProbe {
-  def cruisableKey(bytes: Array[Byte], off: Int, len: Int): Boolean
-
-  /** Opt back into the pre-round-15 BLIND saturation tail skip
-    * (`option("saturation", "fast")`): once a row saturates, its tail is
-    * byte-skipped in one aggregate scan without key inspection — maximum
-    * projection-skip throughput, at the documented cost that duplicate
-    * keys after saturation keep the FIRST value (spark.read.json is
-    * last-wins). Default false: the tail is scanned by the OPTIMISTIC
-    * skip (round 16) — full-speed blind scan that falls back to exact
-    * re-parsing only at candidate duplicates of wanted keys — or, when
-    * [[cruiseKeyFirstBytes]] is unavailable, by the chained key cruise.
-    * Both default paths re-parse wanted-key duplicates (exact parity).
-    */
-  def fastSaturationTail: Boolean = false
-
-  /** 256-bit bitmap (4 longs, bit = first UTF-8 byte) over every key this
-    * probe could act on (the keys [[cruisableKey]] answers false for),
-    * plus '\\' (any wanted key may arrive \u-escaped) and '"' when an
-    * empty-string key is wanted. Enables the parser's OPTIMISTIC
-    * saturated-tail scan: the blind SWAR skip watches quote-follower
-    * bytes against this bitmap and only falls back to exact key
-    * confirmation on a hit. null (the default) disables the optimistic
-    * path — the chained key cruise consumes saturated tails instead.
-    */
-  def cruiseKeyFirstBytes: Array[Long] = null
-
-  /** Raw byte length of the longest wanted key (0 when unavailable);
-    * bounds the optimistic confirmation scan — a row-depth key longer
-    * than 6x this (the worst \u-escape inflation) cannot be wanted.
-    */
-  def cruiseMaxKeyLen: Int = 0
-}
-
-object KeyProbe {
-  /** Build [[KeyProbe.cruiseKeyFirstBytes]] from a wanted-key set. */
-  def firstByteBitmap(wanted: Array[Array[Byte]]): Array[Long] =
-    if (wanted == null) null
-    else {
-      val bm = new Array[Long](4)
-      def set(b: Int): Unit = bm((b & 0xFF) >>> 6) |= 1L << (b & 63)
-      wanted.foreach(w => if (w.length == 0) set('"') else set(w(0)))
-      set('\\')
-      bm
-    }
-
-  /** Build [[KeyProbe.cruiseMaxKeyLen]] from a wanted-key set. */
-  def maxKeyLen(wanted: Array[Array[Byte]]): Int =
-    if (wanted == null) 0
-    else wanted.foldLeft(0)((m, w) => math.max(m, w.length))
-}
-
 /** Optional plate capability — verbatim raw-text capture of container
   * values bound for STRING lanes (spark.read.json parity, probed round 15:
   * an object/array value whose schema target is StringType reads back as

@@ -291,8 +291,8 @@ final class CsvParser[A](plate0: Plate[A], config: CsvParser.Config)
   /** Line bookkeeping (round 17, BaseParser.countNewline): a consumed row
     * terminator whose bytes include '\n' advances the error-position line
     * base — the incremental replacement for the retired full-buffer
-    * newline re-walk. Newlines inside quoted cells and skipped rows are
-    * not tracked (best-effort positions there, like the reference).
+    * newline re-walk. A quoted cell counts its own newlines once it
+    * completes ([[countQuotedNewlines]]).
     */
   @inline private[this] def noteRowNl(row1Idx: Int): Unit =
     if (config.row2 == '\n') countNewline(row1Idx + 1)
@@ -349,23 +349,37 @@ final class CsvParser[A](plate0: Plate[A], config: CsvParser.Config)
       else unescapeQuoted(start + 1, end)
     curr = end + 1
     // after the closing quote: a record/row delimiter or EOF must follow
-    if (curr >= len) {
-      if (!done) throw NeedsInput
-      return TermEof
-    }
-    val b = data(curr)
-    if (b == config.record) { curr += 1; TermRecord }
-    else if (b == config.row1) {
+    val term =
+      if (curr >= len) { if (!done) throw NeedsInput; TermEof }
+      else {
+        val b = data(curr)
+        if (b == config.record) TermRecord
+        else if (b == config.row1 && config.row2 == 0) TermRow
+        else if (b == config.row1 && curr + 1 < len) {
+          if (data(curr + 1) == config.row2) TermRow
+          else die(curr, "unexpected content after closing quote")
+        } else if (b == config.row1 && !done) throw NeedsInput
+        else die(curr, "unexpected content after closing quote")
+      }
+    // the cell is complete: count its newlines now, so a scan that a
+    // NeedsInput above restarts never counts them twice
+    countQuotedNewlines(start + 1, end)
+    if (term == TermRecord) curr += 1
+    else if (term == TermRow) {
       if (config.row2 == 0) {
         if (config.row1 == '\n') countNewline(curr)
-        curr += 1; TermRow
-      }
-      else if (curr + 1 < len) {
-        if (data(curr + 1) == config.row2) { noteRowNl(curr); curr += 2; TermRow }
-        else die(curr, "unexpected content after closing quote")
-      } else if (done) die(curr, "unexpected content after closing quote")
-      else throw NeedsInput
-    } else die(curr, "unexpected content after closing quote")
+        curr += 1
+      } else { noteRowNl(curr); curr += 2 }
+    }
+    term
+  }
+
+  /** Line bookkeeping for a quoted cell's content `[from, to)`: its '\n'
+    * bytes are literal, so the cell scan above passes them uncounted.
+    */
+  private[this] def countQuotedNewlines(from: Int, to: Int): Unit = {
+    var i = from
+    while (i < to) { if (data(i) == '\n') countNewline(i); i += 1 }
   }
 
   private[this] def unescapeQuoted(from: Int, to: Int): String = {

@@ -61,8 +61,8 @@ final class JsonParser[A](plate0: Plate[A], mode: JsonParser.Mode)
 
   // Mison-style key cruise ([[KeyProbe]]): row-depth keys the plate cannot
   // act on are consumed `"key": value` in one motion, with no plate calls.
-  private[this] val cruiseProbe: KeyProbe = plate0 match {
-    case k: KeyProbe => k
+  private[this] val cruiseProbe: KeyCruise = plate0 match {
+    case k: KeyProbe => k.keyCruise
     case _           => null
   }
   // a cruise-initiated column skip is in flight: its completion must NOT
@@ -76,11 +76,11 @@ final class JsonParser[A](plate0: Plate[A], mode: JsonParser.Mode)
   // the tail back to the phase machine for an exact last-wins re-parse.
   private[this] var optimisticTail = false
   private[this] val cruiseFirstBytes: Array[Long] =
-    if (cruiseProbe == null) null else cruiseProbe.cruiseKeyFirstBytes
+    if (cruiseProbe == null) null else cruiseProbe.keyFirstBytes
   // longest escaped form a wanted key can take (\uXXXX inflates a raw
   // byte at most 6x) — a longer row-depth key cannot be wanted
   private[this] val cruiseConfirmBound: Int =
-    if (cruiseProbe == null) 0 else 6 * cruiseProbe.cruiseMaxKeyLen + 8
+    if (cruiseProbe == null) 0 else 6 * cruiseProbe.maxKeyLen + 8
   // Broadcast constants for the in-word follower compare: with <= 3
   // distinct wanted first bytes (the common pruned-schema case) the
   // candidate test is pure SWAR — shift, xor, zeros, and — with no loads
@@ -459,8 +459,9 @@ final class JsonParser[A](plate0: Plate[A], mode: JsonParser.Mode)
   }
 
   /** Key cruise: scan the row-depth key non-committally; if it is plain
-    * ASCII, complete in buffer, and the [[KeyProbe]] rules it out, consume
-    * it silently and set up a no-notification column skip for its value.
+    * ASCII, complete in buffer, and the plate's [[KeyCruise]] rules it
+    * out, consume it silently and set up a no-notification column skip
+    * for its value.
     * A wanted key is delivered from the same scan (no re-scan). Returns
     * false — state untouched — for escapes / UTF-8 / incomplete keys,
     * which take the ordinary parseKey path.

@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.core.{ByteSliceCharSeq, KeyProbe, Plate, Signal}
+import graft.core.{ByteSliceCharSeq, KeyCruise, KeyOrderCache, KeyProbe, Plate, Signal}
 
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources._
@@ -31,10 +31,10 @@ final class ColumnarPlate(
     filters: Array[Filter],
     // saturation pushdown (Signal.FinishRow) elides validation of the row
     // tail; readers that must fully validate rows (dropMalformed) turn it
-    // off — see RowPlate's twin flag
+    // off — the same flag as RowPlate's
     saturate: Boolean = true,
     // CSV semantics: an empty cell is NULL (Spark's csv nullValue default
-    // and DuckDB's read_csv behavior) — see RowPlate's twin flag
+    // and DuckDB's read_csv behavior) — the same flag as RowPlate's
     emptyCellsAsNull: Boolean = false,
     // deletion-vector mask in the whole-file ordinal address space (the
     // plate must see every row of the file in order — whole-file
@@ -59,7 +59,6 @@ final class ColumnarPlate(
   require(ColumnarPlate.supports(schema),
     s"ColumnarPlate reads flat atomic schemas only; got ${schema.simpleString}")
 
-  override def fastSaturationTail: Boolean = fastSatTail
   private[this] val zoneId: java.time.ZoneId =
     org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(timeZoneId)
 
@@ -86,37 +85,11 @@ final class ColumnarPlate(
   private[this] var seenCnt = 0
   private[this] val canSaturate = saturate && numCols > 0
 
-  // Key-cruise probe (Mison-style, [[graft.core.KeyProbe]]), the twin of
-  // RowPlate's: unknown row-depth keys skip with no plate notification.
-  // Gated on `saturate` (the cruise elides per-value validation).
-  private[this] val probeWanted: Array[Array[Byte]] =
-    if (!saturate) null
-    else (names ++ filters.flatMap(_.references))
-      .distinct
-      .map(b => b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private[this] val probePacked: Array[Long] =
-    if (probeWanted == null) null
-    else probeWanted.map(b => graft.core.Swar.packPrefix(b, 0, b.length))
-
-  // Optimistic saturated-tail support (round 16), twin of RowPlate's
-  override val cruiseKeyFirstBytes: Array[Long] = KeyProbe.firstByteBitmap(probeWanted)
-  override val cruiseMaxKeyLen: Int = KeyProbe.maxKeyLen(probeWanted)
-
-  override def cruisableKey(bytes: Array[Byte], off: Int, len: Int): Boolean = {
-    if (probeWanted == null) return false
-    var i = 0
-    while (i < probeWanted.length) {
-      val w = probeWanted(i)
-      if (w.length == len && {
-        if (len <= 8)
-          graft.core.Swar.packPrefix(bytes, off, len) == probePacked(i)
-        else
-          java.util.Arrays.equals(w, 0, len, bytes, off, off + len)
-      }) return false
-      i += 1
-    }
-    true
-  }
+  // Key-cruise probe (Mison-style, [[graft.core.KeyCruise]]): unknown
+  // row-depth keys skip with no plate notification. Gated on `saturate`
+  // (the cruise elides per-value validation).
+  override val keyCruise: KeyCruise =
+    KeyCruise(if (!saturate) null else names ++ filters.flatMap(_.references), fastSatTail)
 
   @inline private[this] def markSeen(idx: Int): Unit = {
     if (!seen(idx)) {
@@ -138,18 +111,8 @@ final class ColumnarPlate(
   private[this] var rowCount = 0L
   private[this] val valueColIdx = names.indexOf("value") // scalar rows land here
 
-  // single-column value filters per column index (an array, so the
-  // finishRow check never boxes the index into a Map key)
-  private[this] val filterAt: Array[Array[Filter]] = {
-    val a = new Array[Array[Filter]](numCols)
-    FilterEval.normalize(filters.filter(_.references.length == 1))
-      .groupBy(f => names.indexOf(f.references.head))
-      .foreach { case (i, fs) => if (i >= 0) a(i) = fs }
-    a
-  }
-  private[this] val hasNullFilters =
-    filters.exists(f => f.isInstanceOf[IsNotNull] || f.isInstanceOf[IsNull])
-  private[this] val hasValueFilters = filterAt.exists(_ != null)
+  // top-level value filters and null demands, decided at finishRow
+  private[this] val rowEnd = new RowEndFilters(names, filters)
 
   // fresh vectors per batch (NOT ping-pong reuse): an A/B measured reuse
   // at zero gain on aggregate shapes — parse cost dominates — and reuse
@@ -212,46 +175,15 @@ final class ColumnarPlate(
 
   // ------------------------------------------------------------- events
 
-  // key-order cache: JSON rows almost always repeat the same key order, so
-  // remember (key, column) per field position and hit with one compare —
-  // raw UTF-8 bytes vs the parser's zero-copy ASCII views (one vectorized
-  // Arrays.equals range check, no per-char CharSequence walk)
-  private[this] val orderCap = 64
-  private[this] val orderNames = new Array[String](orderCap)
-  private[this] val orderBytes = new Array[Array[Byte]](orderCap)
-  private[this] val orderCols = new Array[Int](orderCap)
+  // key → column resolver, cached by key arrival position
+  private[this] val keys = new KeyOrderCache(names)
   private[this] var fieldPos = 0
 
   def nestMap(pathComponent: CharSequence): Signal = {
     if (depth == 0) {
       // a top-level column opens
-      val pos = fieldPos
+      val idx = keys.indexOf(pathComponent, fieldPos)
       fieldPos += 1
-      var idx = -2 // -2 = unresolved; -1 = known-absent (skip)
-      if (pos < orderCap && orderNames(pos) != null && {
-            pathComponent match {
-              case v: ByteSliceCharSeq =>
-                val ob = orderBytes(pos)
-                java.util.Arrays.equals(ob, 0, ob.length,
-                  v.bytes, v.offset, v.offset + v.length)
-              case _ => orderNames(pos).contentEquals(pathComponent)
-            }
-          }) {
-        idx = orderCols(pos)
-      } else {
-        var i = 0
-        idx = -1
-        while (idx < 0 && i < numCols) {
-          if (names(i).contentEquals(pathComponent)) idx = i
-          i += 1
-        }
-        if (pos < orderCap) {
-          val s = pathComponent.toString // copy: views are reused
-          orderNames(pos) = s
-          orderBytes(pos) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          orderCols(pos) = idx
-        }
-      }
       if (idx < 0) {
         skipPending = true
         Signal.SkipColumn
@@ -375,28 +307,10 @@ final class ColumnarPlate(
       case _ => null
     }
 
-  /** Pushed value filters, decided at finishRow over the row's FINAL
-    * written cells — never per binding: duplicate keys rebind last-wins,
-    * and pushdown must never change what an unpushed read returns
-    * (round 14). Unwritten/null cells evaluate as null — conservative:
-    * definitelyFails(_, null) is false for comparisons, so the row stays
-    * for Spark's residual filter.
-    */
-  private def passesValueFilters(): Boolean = {
-    if (hasValueFilters) {
-      var i = 0
-      while (i < numCols) {
-        val fs = filterAt(i)
-        if (fs != null) {
-          val v: Any =
-            if (!seen(i) || vectors(i).isNullAt(rows)) null
-            else vecValue(vectors(i), types(i), rows)
-          if (fs.exists(FilterEval.definitelyFails(_, v))) return false
-        }
-        i += 1
-      }
-    }
-    true
+  // the row being finished: an unwritten cell reads null
+  private[this] val rowCells = new RowEndFilters.Cells {
+    def isNull(i: Int): Boolean = !seen(i) || vectors(i).isNullAt(rows)
+    def value(i: Int): Any = if (isNull(i)) null else vecValue(vectors(i), types(i), rows)
   }
 
   def nul(): Signal = {
@@ -524,22 +438,11 @@ final class ColumnarPlate(
             case Some(d) => vec.putInt(at, d)
             case None => vec.putNull(at); tDiscard()
           }
-        case DoubleType if strictTokens => s.toString match {
-          case "NaN" => vec.putDouble(at, Double.NaN)
-          case "+INF" | "+Infinity" | "Infinity" =>
-            vec.putDouble(at, Double.PositiveInfinity)
-          case "-INF" | "-Infinity" =>
-            vec.putDouble(at, Double.NegativeInfinity)
-          case _ => vec.putNull(at); tDiscard()
-        }
-        case FloatType if strictTokens => s.toString match {
-          case "NaN" => vec.putFloat(at, Float.NaN)
-          case "+INF" | "+Infinity" | "Infinity" =>
-            vec.putFloat(at, Float.PositiveInfinity)
-          case "-INF" | "-Infinity" =>
-            vec.putFloat(at, Float.NegativeInfinity)
-          case _ => vec.putNull(at); tDiscard()
-        }
+        case DoubleType | FloatType if strictTokens =>
+          val d = Conversions.quotedSpecialFloat(s.toString)
+          if (d == 0.0) { vec.putNull(at); tDiscard() }
+          else if (tT eq DoubleType) vec.putDouble(at, d)
+          else vec.putFloat(at, d.toFloat)
         case _ if strictTokens => vec.putNull(at); tDiscard()
         case LongType =>
           vec.putLong(at, java.lang.Long.parseLong(s.toString.trim))
@@ -578,21 +481,10 @@ final class ColumnarPlate(
       fileOrd += 1
     }
     if (keep && dropDiscarded && rowDiscarded) keep = false
-    if (keep && hasNullFilters) {
-      // value-based like the row path's passesRowEnd: an EXPLICIT null
-      // binding ({"x": null}) satisfies IsNull and fails IsNotNull — the
-      // seen bit alone conflated it with a present value (round 14)
-      keep = filters.forall {
-        case IsNotNull(col) =>
-          val idx = names.indexOf(col)
-          idx < 0 || (seen(idx) && !vectors(idx).isNullAt(rows))
-        case IsNull(col) =>
-          val idx = names.indexOf(col)
-          idx < 0 || !seen(idx) || vectors(idx).isNullAt(rows)
-        case _ => true
-      }
-    }
-    if (keep) keep = passesValueFilters()
+    // value-based: an EXPLICIT null binding ({"x": null}) satisfies IsNull
+    // and fails IsNotNull — the seen bit alone conflated it with a present
+    // value (round 14)
+    if (keep) keep = rowEnd.passes(rowCells)
     if (keep) {
       var i = 0
       while (i < numCols) {
@@ -616,6 +508,7 @@ final class ColumnarPlate(
     curIdx = -1
     skipPending = false
     fieldPos = 0
+    if (keyCruise != null) keyCruise.rowStart()
     rowDiscarded = false
   }
 

@@ -1767,33 +1767,11 @@ private[graft] object GraftCommitLog {
     case _: Exception => None
   }
 
-  /** The schema line of a v2 checkpoint; None for v1 or unparsable. */
-  def readCheckpointSchema(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      version: Long): Option[StructType] = try {
-    val p = checkpointFile(root, version)
-    if (!fs.exists(p)) return None
-    val lines = slurpLines(fs, p)
-    checkCheckpointCeiling(p, lines)
-    if (!lines.headOption.exists(h =>
-        h == "graft-checkpoint v2" || h == "graft-checkpoint v3" ||
-          h == "graft-checkpoint v4")) None
-    else lines.tail.find(_.startsWith("s ")).flatMap(parseSchemaLine)
-  } catch {
-    case e: ProtocolTooNewException => throw e
-    case _: Exception => None
-  }
-
-  /** Newest READABLE checkpoint at or before `version`, tried newest
-    * first (`_last_checkpoint` is only a hint — the listing is the
-    * authority, and an unreadable checkpoint falls through to the next).
+  /** Newest READABLE checkpoint at or before `version`, with its
+    * deletion-vector attachments, tried newest first (`_last_checkpoint`
+    * is only a hint — the listing is the authority, and an unreadable
+    * checkpoint falls through to the next).
     */
-  def checkpointAtOrBefore(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      version: Long): Option[(Long, Set[String])] =
-    checkpointVersions(fs, root).filter(_ <= version).sorted(Ordering[Long].reverse)
-      .iterator.flatMap(v => readCheckpoint(fs, root, v).map((v, _)))
-      .nextOption()
-
-  /** [[checkpointAtOrBefore]] with deletion-vector attachments. */
   def checkpointStateAtOrBefore(fs: org.apache.hadoop.fs.FileSystem, root: Path,
       version: Long): Option[(Long, Map[String, String])] =
     checkpointStateAtOrBefore(new LogListing(fs, root), version)

@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.core.{KeyProbe, Plate, Signal}
+import graft.core.{KeyCruise, KeyProbe, Plate, Signal}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -45,36 +45,11 @@ final class PathVariantPlate(
     var isRoot = false // '$' capture: closes at finishRow, not at an unnest
   }
 
-  // Key-cruise probe ([[graft.core.KeyProbe]]): only the trie's depth-1
+  // Key-cruise probe ([[graft.core.KeyCruise]]): only the trie's depth-1
   // heads can start a capture, so every other row-level key skips with no
   // plate notification. A root terminal ('$' capture) wants every key.
-  private[this] val probeWanted: Array[Array[Byte]] =
-    if (root.terminals.nonEmpty) null
-    else root.children.keysIterator
-      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-  private[this] val probePacked: Array[Long] =
-    if (probeWanted == null) null
-    else probeWanted.map(b => graft.core.Swar.packPrefix(b, 0, b.length))
-
-  // Optimistic saturated-tail support (round 16), twin of RowPlate's
-  override val cruiseKeyFirstBytes: Array[Long] = KeyProbe.firstByteBitmap(probeWanted)
-  override val cruiseMaxKeyLen: Int = KeyProbe.maxKeyLen(probeWanted)
-
-  override def cruisableKey(bytes: Array[Byte], off: Int, len: Int): Boolean = {
-    if (probeWanted == null) return false
-    var i = 0
-    while (i < probeWanted.length) {
-      val w = probeWanted(i)
-      if (w.length == len && {
-        if (len <= 8)
-          graft.core.Swar.packPrefix(bytes, off, len) == probePacked(i)
-        else
-          java.util.Arrays.equals(w, 0, len, bytes, off, off + len)
-      }) return false
-      i += 1
-    }
-    true
-  }
+  override val keyCruise: KeyCruise =
+    KeyCruise(if (root.terminals.nonEmpty) null else root.children.keys)
 
   private[this] val outputs = new Array[Any](paths.length)
   private[this] val active = new mutable.ArrayDeque[Active] // innermost first
@@ -91,6 +66,7 @@ final class PathVariantPlate(
     nodeStack.clear()
     nodeStack.prepend(root)
     skipPending = false
+    if (keyCruise != null) keyCruise.rowStart()
     if (root.terminals.nonEmpty) { // '$' requested: capture the whole row
       val a = new Active(root.terminals.toSeq)
       a.isRoot = true

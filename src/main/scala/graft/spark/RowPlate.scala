@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.core.{KeyProbe, Plate, Signal}
+import graft.core.{KeyCruise, KeyOrderCache, KeyProbe, Plate, Signal}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -60,7 +60,6 @@ final class RowPlate(
     // container) is dropped whole, not kept with nulls
     dropDiscarded: Boolean = false) extends Plate[Long] with KeyProbe
     with graft.core.RawValueCapture {
-  override def fastSaturationTail: Boolean = fastSatTail
   private[this] val zoneId: java.time.ZoneId =
     org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(timeZoneId)
 
@@ -193,98 +192,13 @@ final class RowPlate(
   private[this] val valueColIdx: Int = topIndex.getOrElse("value", -1)
 
   // Per-struct-node lookup state, cached by node identity (schemas are
-  // shared). Lookup is allocation-free (no toString on the parser's
-  // zero-copy key views): a KEY-ORDER cache keyed by field position —
-  // JSON rows almost always repeat the same key order, so the steady
-  // state is a single contentEquals per key; misses fall back to a
-  // linear scan and re-learn the order.
-  private final class StructLookup(st: StructType) {
-    val names: Array[String] = st.fieldNames
-    // per-field converter code (CvDouble/CvLong/CvString/CvOther):
-    // computed once per schema node so the per-scalar hot path dispatches
-    // on an int instead of walking a DataType match chain
+  // shared): the key→field resolver (allocation-free, no toString on the
+  // parser's zero-copy key views) plus each field's converter code
+  // (CvDouble/CvLong/CvString/CvOther), computed once per schema node so
+  // the per-scalar hot path dispatches on an int instead of walking a
+  // DataType match chain
+  private final class StructLookup(st: StructType) extends KeyOrderCache(st.fieldNames) {
     val convs: Array[Int] = st.fields.map(f => RowPlate.convOf(f.dataType))
-    // the order cache tracks OBSERVED key positions, which under pruning
-    // exceed the schema width (19 skipped keys still occupy positions);
-    // growable so wide rows with narrow schemas stay fully cached
-    private[this] var cap = names.length + 8
-    private[this] var orderNames = new Array[String](cap)
-    // UTF-8 bytes of each order-slot name: the parser's zero-copy key views
-    // are verified ASCII slices, so the steady-state compare is one
-    // Arrays.equals range check (vectorized intrinsic) on raw bytes instead
-    // of a per-char CharSequence walk. Keys of <= 8 bytes (the common case
-    // by far) compare as ONE masked little-endian long — Arrays.equals'
-    // vectorized intro costs more than the whole key at these lengths.
-    private[this] var orderBytes = new Array[Array[Byte]](cap)
-    private[this] var orderCols = new Array[Int](cap)
-    private[this] var orderLen = { val a = new Array[Int](cap); java.util.Arrays.fill(a, -1); a }
-    private[this] var orderPacked = new Array[Long](cap)
-
-    @inline private[this] def packOf(b: Array[Byte], off: Int, n: Int): Long =
-      if (n == 0) 0L // Java's >>> masks the shift to 6 bits: guard n=0
-      else if (off + 8 <= b.length)
-        graft.core.Swar.readLongLE(b, off) & (-1L >>> ((8 - n) << 3))
-      else { // end-of-buffer tail: assemble (rare)
-        var x = 0L
-        var k = n - 1
-        while (k >= 0) { x = (x << 8) | (b(off + k) & 0xffL); k -= 1 }
-        x
-      }
-
-    def indexOf(name: CharSequence, pos: Int): Int = {
-      if (pos < cap) {
-        name match {
-          case v: graft.core.ByteSliceCharSeq =>
-            val ol = orderLen(pos)
-            if (ol >= 0) {
-              if (ol <= 8) {
-                if (v.length == ol && packOf(v.bytes, v.offset, ol) == orderPacked(pos))
-                  return orderCols(pos)
-              } else {
-                val ob = orderBytes(pos)
-                if (java.util.Arrays.equals(
-                    ob, 0, ob.length, v.bytes, v.offset, v.offset + v.length))
-                  return orderCols(pos)
-              }
-            }
-          case _ =>
-            if (orderNames(pos) != null && orderNames(pos).contentEquals(name))
-              return orderCols(pos)
-        }
-      }
-      indexOfSlow(name, pos)
-    }
-
-    private def indexOfSlow(name: CharSequence, pos: Int): Int = {
-      while (pos >= cap) { // grow to cover this key position (amortized)
-        val old = cap
-        cap *= 2
-        orderNames = java.util.Arrays.copyOf(orderNames, cap)
-        orderBytes = java.util.Arrays.copyOf(orderBytes, cap)
-        orderCols = java.util.Arrays.copyOf(orderCols, cap)
-        orderLen = java.util.Arrays.copyOf(orderLen, cap)
-        java.util.Arrays.fill(orderLen, old, cap, -1)
-        orderPacked = java.util.Arrays.copyOf(orderPacked, cap)
-      }
-      @inline def learn(s: String, col: Int): Unit = {
-        orderNames(pos) = s
-        val ob = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        orderBytes(pos) = ob
-        orderCols(pos) = col
-        orderLen(pos) = ob.length
-        if (ob.length <= 8) orderPacked(pos) = packOf(ob, 0, ob.length)
-      }
-      var i = 0
-      while (i < names.length) {
-        if (names(i).contentEquals(name)) {
-          learn(names(i), i) // interned copy, not the view
-          return i
-        }
-        i += 1
-      }
-      learn(name.toString, -1) // absent key: remember the prune
-      -1
-    }
   }
 
   private[this] val structLookups =
@@ -298,19 +212,8 @@ final class RowPlate(
     l
   }
 
-  // single-column filters grouped by referenced top-level column index
-  private[this] val filtersByIdx: Map[Int, Array[Filter]] =
-    FilterEval.normalize(filters.filter(f =>
-        f.references.length == 1 &&
-        (!f.references.head.contains(".") || topIndex.contains(f.references.head))))
-      .groupBy(f => topIndex.getOrElse(f.references.head, -1))
-      .removed(-1)
-  // array-indexed view: the per-value lookup must not box the column index
-  private[this] val filterAt: Array[Array[Filter]] = {
-    val a = new Array[Array[Filter]](schema.length)
-    filtersByIdx.foreach { case (i, fs) => if (i >= 0 && i < schema.length) a(i) = fs }
-    a
-  }
+  // top-level value filters and null demands, decided at finishRow
+  private[this] val rowEnd = new RowEndFilters(schema.fieldNames, filters)
 
   /** Trie over nested filter paths (dotted references like `meta.len`),
     * keyed by struct field index per level. Walked once per row at
@@ -343,9 +246,6 @@ final class RowPlate(
     }
     root
   }
-  private[this] val hasNullFilters =
-    filters.exists(f => f.isInstanceOf[IsNotNull] || f.isInstanceOf[IsNull])
-
   private[this] var rootLookup: StructLookup = null
 
   // saturation pushdown (Signal.FinishRow): a per-row bitmask of top-level
@@ -361,85 +261,14 @@ final class RowPlate(
     else 0L
   private[this] var seenMask = 0L
 
-  // Key-cruise probe (Mison-style, [[graft.core.KeyProbe]]): a row-depth
+  // Key-cruise probe (Mison-style, [[graft.core.KeyCruise]]): a row-depth
   // key that is neither a schema column nor a pushed-filter anchor head
   // can be skipped with no plate notification. Gated on `saturate` — the
   // cruise, like saturation, elides per-value structural validation.
-  private[this] val probeWanted: Array[Array[Byte]] =
+  override val keyCruise: KeyCruise = KeyCruise(
     if (!saturate) null
-    else (schema.fieldNames ++
-      filters.flatMap(_.references).map(r => r.takeWhile(_ != '.')))
-      .distinct
-      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private[this] val probePacked: Array[Long] =
-    if (probeWanted == null) null
-    else probeWanted.map(b => graft.core.Swar.packPrefix(b, 0, b.length))
-
-  // Optimistic saturated-tail support (round 16): first bytes of every
-  // wanted key, so the parser's blind tail scan only drops to exact key
-  // confirmation at a candidate duplicate.
-  override val cruiseKeyFirstBytes: Array[Long] = KeyProbe.firstByteBitmap(probeWanted)
-  override val cruiseMaxKeyLen: Int = KeyProbe.maxKeyLen(probeWanted)
-
-  // Probe order cache: rows almost always repeat the same key order, so
-  // remember (key bytes, verdict) by ARRIVAL POSITION within the row and
-  // answer the steady state with one packed-long compare instead of a
-  // linear scan over every wanted name (the scan was ~1/7 of full-parse
-  // samples — every schema key pays it just to learn it is NOT cruisable).
-  // Entries self-verify against the actual bytes, so a changed key order
-  // only costs a relearn, never a wrong verdict.
-  private[this] val probeOrderCap = 64
-  private[this] var probePos = 0
-  private[this] val probeOrderLen: Array[Int] =
-    if (probeWanted == null) null else { val a = new Array[Int](probeOrderCap); java.util.Arrays.fill(a, -1); a }
-  private[this] val probeOrderPacked: Array[Long] =
-    if (probeWanted == null) null else new Array[Long](probeOrderCap)
-  private[this] val probeOrderBytes: Array[Array[Byte]] =
-    if (probeWanted == null) null else new Array[Array[Byte]](probeOrderCap)
-  private[this] val probeOrderCruise: Array[Boolean] =
-    if (probeWanted == null) null else new Array[Boolean](probeOrderCap)
-
-  override def cruisableKey(bytes: Array[Byte], off: Int, len: Int): Boolean = {
-    if (probeWanted == null) return false
-    val pos = probePos
-    probePos = pos + 1
-    if (pos < probeOrderCap) {
-      val ol = probeOrderLen(pos)
-      if (ol == len) {
-        if (len <= 8) {
-          if (graft.core.Swar.packPrefix(bytes, off, len) == probeOrderPacked(pos))
-            return probeOrderCruise(pos)
-        } else {
-          val ob = probeOrderBytes(pos)
-          if (java.util.Arrays.equals(ob, 0, ob.length, bytes, off, off + len))
-            return probeOrderCruise(pos)
-        }
-      }
-    }
-    cruisableKeySlow(bytes, off, len, pos)
-  }
-
-  private def cruisableKeySlow(bytes: Array[Byte], off: Int, len: Int, pos: Int): Boolean = {
-    var cruise = true
-    var i = 0
-    while (cruise && i < probeWanted.length) {
-      val w = probeWanted(i)
-      if (w.length == len && {
-        if (len <= 8)
-          graft.core.Swar.packPrefix(bytes, off, len) == probePacked(i)
-        else
-          java.util.Arrays.equals(w, 0, len, bytes, off, off + len)
-      }) cruise = false
-      i += 1
-    }
-    if (pos < probeOrderCap) { // learn this position (copy: bytes is the parse buffer)
-      probeOrderLen(pos) = len
-      probeOrderBytes(pos) = java.util.Arrays.copyOfRange(bytes, off, off + len)
-      if (len <= 8) probeOrderPacked(pos) = graft.core.Swar.packPrefix(bytes, off, len)
-      probeOrderCruise(pos) = cruise
-    }
-    cruise
-  }
+    else schema.fieldNames ++ filters.flatMap(_.references).map(_.takeWhile(_ != '.')),
+    fastSatTail)
 
   // ------------------------------------------------- row object recycling
   // A DSv2 row reader may return the same InternalRow object on every
@@ -485,7 +314,7 @@ final class RowPlate(
     frames(0).morphStructWith(schema, rootLookup, rowWrapper.values)
     skipPending = false
     seenMask = 0L
-    probePos = 0
+    if (keyCruise != null) keyCruise.rowStart()
     rowDiscarded = false
   }
 
@@ -781,8 +610,6 @@ final class RowPlate(
 
   // ------------------------------------------------------------ filters
 
-  private[this] val hasValueFilters = filterAt.exists(_ != null)
-
   /** Walk the nested-filter trie over the row's FINAL values. Missing,
     * null, or non-struct values along a path evaluate the leaf as null —
     * conservative: definitelyFails(_, null) is false for comparisons, so
@@ -821,29 +648,13 @@ final class RowPlate(
     * change what an unpushed read returns (round 14). Saturation still
     * byte-skips row tails — it calls finishRow, which lands here.
     */
-  private def passesRowEnd(row: GenericInternalRow): Boolean = {
-    if (hasValueFilters) {
-      var i = 0
-      while (i < filterAt.length) {
-        val fs = filterAt(i)
-        if (fs != null && fs.exists(FilterEval.definitelyFails(_, row.values(i))))
-          return false
-        i += 1
-      }
-    }
-    if (nestedRoot != null && !nestedPasses(nestedRoot, row)) return false
-    if (!hasNullFilters) return true
-    filters.forall { f =>
-      f match {
-        case IsNotNull(col) =>
-          val idx = topIndex.getOrElse(col, -1)
-          idx < 0 || !row.isNullAt(idx)
-        case IsNull(col) =>
-          val idx = topIndex.getOrElse(col, -1)
-          idx < 0 || row.isNullAt(idx)
-        case _ => true
-      }
-    }
+  private def passesRowEnd(row: GenericInternalRow): Boolean =
+    rowEnd.passes(rowCells) && (nestedRoot == null || nestedPasses(nestedRoot, row))
+
+  // the row being finished: rowWrapper owns its values until emission
+  private[this] val rowCells = new RowEndFilters.Cells {
+    def value(i: Int): Any = rowWrapper.values(i)
+    def isNull(i: Int): Boolean = rowWrapper.values(i) == null
   }
 }
 
@@ -1012,6 +823,18 @@ object Conversions {
     case _   => java.lang.Float.valueOf(Float.PositiveInfinity)
   }
 
+  /** The quoted special-float strings strict JSON accepts — spark's exact,
+    * case-sensitive set ("nan"/"inf" etc. stay null): NaN or ±Infinity, and
+    * 0.0 (none of those) for any other text. A double narrows to the same
+    * float special.
+    */
+  def quotedSpecialFloat(s: String): Double = s match {
+    case "NaN" => Double.NaN
+    case "+INF" | "+Infinity" | "Infinity" => Double.PositiveInfinity
+    case "-INF" | "-Infinity" => Double.NegativeInfinity
+    case _ => 0.0
+  }
+
   /** String-token conversions under spark.read.json's STRICT token typing
     * (probed round 20): strings convert ONLY to STRING, DECIMAL (no
     * trimming — " 12.34 " is null), DATE / TIMESTAMP / TIMESTAMP_NTZ
@@ -1033,24 +856,12 @@ object Conversions {
     val s = text.toString
     try dt match {
       case StringType => UTF8String.fromString(s)
-      // quoted special float strings — spark's exact accept set (probed:
-      // "nan"/"inf" etc. stay null; the match is case-sensitive)
-      case DoubleType => s match {
-        case "NaN" => java.lang.Double.valueOf(Double.NaN)
-        case "+INF" | "+Infinity" | "Infinity" =>
-          java.lang.Double.valueOf(Double.PositiveInfinity)
-        case "-INF" | "-Infinity" =>
-          java.lang.Double.valueOf(Double.NegativeInfinity)
-        case _ => null
-      }
-      case FloatType => s match {
-        case "NaN" => java.lang.Float.valueOf(Float.NaN)
-        case "+INF" | "+Infinity" | "Infinity" =>
-          java.lang.Float.valueOf(Float.PositiveInfinity)
-        case "-INF" | "-Infinity" =>
-          java.lang.Float.valueOf(Float.NegativeInfinity)
-        case _ => null
-      }
+      case DoubleType =>
+        val d = quotedSpecialFloat(s)
+        if (d == 0.0) null else java.lang.Double.valueOf(d)
+      case FloatType =>
+        val d = quotedSpecialFloat(s)
+        if (d == 0.0) null else java.lang.Float.valueOf(d.toFloat)
       case d: DecimalType =>
         val dec = org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(s))
         if (dec.changePrecision(d.precision, d.scale)) dec else null

@@ -149,6 +149,31 @@ class CsvParserSpec extends AnyFunSuite {
     assert(e.col == 3, s"col ${e.col}")
   }
 
+  test("error lines count the newlines inside multi-line quoted cells") {
+    // a two-line quoted cell, then a malformed row on line 5 — at every
+    // split into two chunks, so a quoted cell whose scan a chunk boundary
+    // restarts still counts its newline once
+    for ((input, config) <- Seq(
+        ("a,b\n\"two\nlines\",x\nok,1\n\"bad\"junk,2\n", unix),
+        ("a,b\r\n\"two\r\nlines\",x\r\nok,1\r\n\"bad\"junk,2\r\n", excel))) {
+      val bytes = input.getBytes("UTF-8")
+      for (i <- 0 to bytes.length) {
+        val p = new CsvParser(new ReifiedPlate, config)
+        val failure = Iterator(
+            () => p.absorb(bytes.slice(0, i)),
+            () => p.absorb(bytes.slice(i, bytes.length)),
+            () => p.finish())
+          .map(_.apply()).collectFirst { case ParseResult.Failure(e) => e }
+        failure match {
+          case Some(e: ParseException) =>
+            assert(e.getMessage.contains("unexpected content after closing quote"))
+            assert((e.line, e.col) == ((5, 6)), s"split $i of ${input.length}")
+          case other => fail(s"split $i: expected a ParseException, got $other")
+        }
+      }
+    }
+  }
+
   test("junk after closing quote fails") {
     assert(csvError("a\r\n\"fu\"bar\r\n").isInstanceOf[ParseException])
   }
