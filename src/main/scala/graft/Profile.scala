@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
@@ -20,6 +21,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    `QueryPlanningTracker` phases summed over the pass's query executions;
   *  - `jobs`, `stages`, `tasks`, `task_run_ms`, `shuffle_read_bytes`,
   *    `shuffle_write_bytes`, and `job_ms`, the time any job was running;
+  *  - `codegen_compiles`: the whole-stage and expression classes Janino
+  *    compiled during the pass (driver and, in local mode, executors);
+  *    a warm query compiles none unless its generated code changed;
   *  - `batches`: each micro-batch's `durationMs`, for streaming gates;
   *  - `error` when the query throws (the run goes on);
   *  - `plan` with `--plan`: `explain("formatted")` of the warm-up build,
@@ -123,6 +127,7 @@ final class Profile(spark: SparkSession, sfDir: String) {
     val sc = spark.sparkContext
     val key = s"${q.name}#$pass"
     sc.setLocalProperty(PassKey, key)
+    val c0 = compiles
     val t0 = System.currentTimeMillis()
     val n0 = System.nanoTime()
     var built = -1L
@@ -138,7 +143,7 @@ final class Profile(spark: SparkSession, sfDir: String) {
     finally sc.setLocalProperty(PassKey, null)
     val n1 = System.nanoTime()
     if (built < 0) built = n1
-    Pass(q.name, pass, key, t0, System.currentTimeMillis(), n0, built, n1,
+    Pass(q.name, pass, key, t0, System.currentTimeMillis(), n0, built, n1, compiles - c0,
       Option(df).map(_.queryExecution), planText, error)
   }
 
@@ -168,7 +173,8 @@ final class Profile(spark: SparkSession, sfDir: String) {
       "tasks" -> passTasks.size.toString,
       "task_run_ms" -> passTasks.map(_.runMs).sum.toString,
       "shuffle_read_bytes" -> passTasks.map(_.shuffleRead).sum.toString,
-      "shuffle_write_bytes" -> passTasks.map(_.shuffleWrite).sum.toString) ++
+      "shuffle_write_bytes" -> passTasks.map(_.shuffleWrite).sum.toString,
+      "codegen_compiles" -> r.compiles.toString) ++
       (if (passBatches.isEmpty) Nil else Seq("batches" -> passBatches.map { case (_, d) =>
         obj(d.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })
       }.mkString("[", ",", "]"))) ++
@@ -182,8 +188,11 @@ object Profile {
 
   private final case class Task(pass: String, runMs: Long, shuffleRead: Long, shuffleWrite: Long)
   private final case class Pass(name: String, pass: Int, key: String, startMs: Long, endMs: Long,
-      startNs: Long, builtNs: Long, endNs: Long, built: Option[QueryExecution],
+      startNs: Long, builtNs: Long, endNs: Long, compiles: Long, built: Option[QueryExecution],
       plan: Option[String], error: Option[String])
+
+  /** Classes compiled by Janino in this JVM so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Wall time covered by at least one of the intervals. */
   private def unionMs(iv: Seq[(Long, Long)]): Long =

@@ -1134,29 +1134,41 @@ final class GraftScanBuilder(
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  // the pushed filters the plate decides exactly: Spark keeps no Filter
+  // node for them, so the read schema must keep their columns
+  private var exact: Array[Filter] = Array.empty
   private var limit: Int = -1
   private var offset: Int = -1
   private var countStar = false
   private var aggSpec: Option[GraftAgg.Spec] = None
   private var topN: Array[(String, Boolean, Boolean)] = null // (col, asc, nullsFirst)
   private var topNLimit = -1
-  // one listing resolution per builder (pushOffset consults it; the final
-  // GraftScan resolves its own — planning stays at two log folds per
-  // query, not one per pushdown probe). Deletion vectors never refuse a
-  // pushdown here: every accepted path either wraps the mask-applying
-  // readers (TopN, offset, parse-folded aggregates) or gates its
-  // metadata-only answers on the PARTITION carrying no vector.
+  // one listing resolution per read: the exactness rule and the offset,
+  // TopN and aggregate pushdowns consult it, and the built GraftScan
+  // takes it over. Deletion vectors never refuse a pushdown here: every
+  // accepted path either wraps the mask-applying readers (TopN, offset,
+  // parse-folded aggregates) or gates its metadata-only answers on the
+  // PARTITION carrying no vector.
   private lazy val builderListing = GraftSources.resolvePartitioned(options)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    // `count(*) WHERE id > 5` requires no column, but the plate decides
+    // `id > 5` only over a column it reads; Spark projects the wider
+    // scan away
+    val kept = exact.flatMap(_.references).distinct
+      .filterNot(requiredSchema.fieldNames.contains).map(fullSchema(_))
+    required = StructType(requiredSchema.fields ++ kept)
+  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // accept single-column filters for file, block and partition pruning
     // and, where the format's reader takes them, byte-level SkipRow —
     // including dotted nested references that resolve through struct
-    // fields; return every filter as residual so Spark re-evaluates (our
-    // eval is conservative, never dropping rows a correct filter would keep)
+    // fields. Only the filters the plate decides exactly leave Spark's
+    // plan: with no Filter node above the scan, a new literal no longer
+    // changes the stage's generated code. The rest stay residual (the
+    // plate's eval of them is conservative, never dropping a row a
+    // correct filter would keep).
     pushed = filters.filter(f =>
       f.references.length == 1 && {
         val ref = f.references.head
@@ -1164,7 +1176,41 @@ final class GraftScanBuilder(
           fullSchema.fieldNames.contains(ref) ||
           RowPlate.resolvePath(fullSchema, ref).isDefined
       })
-    filters
+    exact = exactFilters
+    filters.filterNot(f => exact.exists(_ eq f))
+  }
+
+  /** The pushed filters whose plate verdict equals Spark's: the format's
+    * reader takes filters and drops no corrupt record (`badrecords=fail`);
+    * the column is a top-level data column the plate reads as the scan
+    * outputs it ([[GraftScan.plateReads]], the rule that also picks the
+    * plate's filters) and compares exactly ([[FilterEval.exactType]]);
+    * and the filter is a null test, or a comparison with exact non-null
+    * literals whose column also has a pushed `IsNotNull` (the plate keeps
+    * a null cell under a comparison; Spark drops it).
+    */
+  private def exactFilters: Array[Filter] = {
+    import org.apache.spark.sql.sources._
+    if (!format.filtersReachReader ||
+        !"fail".equalsIgnoreCase(options.getOrDefault("badrecords", "fail")))
+      return Array.empty
+    val notNull = pushed.collect { case IsNotNull(c) => c }.toSet
+    def column(c: String) =
+      if (c.contains(".") || !GraftScan.plateReads(builderListing, c)) None
+      else fullSchema.find(_.name == c).map(_.dataType).filter(FilterEval.exactType)
+    def compared(c: String, vs: Seq[Any]): Boolean = vs.nonEmpty && notNull(c) &&
+      column(c).exists(dt => vs.forall(FilterEval.exactLiteral(dt, _)))
+    pushed.filter {
+      case IsNull(c)                => column(c).isDefined
+      case IsNotNull(c)             => column(c).isDefined
+      case EqualTo(c, v)            => compared(c, Seq(v))
+      case LessThan(c, v)           => compared(c, Seq(v))
+      case LessThanOrEqual(c, v)    => compared(c, Seq(v))
+      case GreaterThan(c, v)        => compared(c, Seq(v))
+      case GreaterThanOrEqual(c, v) => compared(c, Seq(v))
+      case In(c, vs)                => compared(c, vs.toSeq)
+      case _                        => false
+    }
   }
 
   override def pushedFilters(): Array[Filter] =
@@ -1190,9 +1236,10 @@ final class GraftScanBuilder(
     // in file order — keep the mutual exclusion local (Spark never asks
     // for both today, but the invariant should not live in the planner)
     if (topN != null) return false
-    // COMPLETE offset must not reorder past a filter: our pushFilters keeps
-    // every filter as residual (Spark's Filter node stays above the scan),
-    // but that soundness must hold locally — refuse if that ever changes.
+    // Spark offers the offset only when no residual filter remains above
+    // the scan, so every pushed filter here is exact and the plate drops
+    // its rows before the wrapper counts them. Offsets with filters are
+    // refused all the same: no reader path has been checked for it.
     if (pushed.nonEmpty) return false
     if (builderListing.files.length != 1) return false
     // a deletion vector is fine: the wrapper trims the inner reader's
@@ -1240,10 +1287,11 @@ final class GraftScanBuilder(
     *     ([[GraftAgg]]): only the referenced columns are parsed, one
     *     partial row per group per partition ships out.
     *
-    * Spark only attempts this when no residual filter remains; we
-    * double-check and also refuse when filters were pushed (our filter
-    * eval is conservative by design). PERMISSIVE mode keeps the COUNT(*)
-    * fast path (which counts corrupt rows explicitly) but refuses the
+    * Spark only attempts this when no residual filter remains, which
+    * includes reads whose filters are all exact. Those are refused: the
+    * count-only, metadata-only and pruned parses decide no pushed filter,
+    * so the rows they fold would ignore it. PERMISSIVE mode keeps the
+    * COUNT(*) fast path (which counts corrupt rows explicitly) but refuses the
     * general battery — a corrupt record's null-filled row cannot be
     * reproduced from the pruned parse. Drop mode is fine for both: the
     * inner pruned reader drops exactly the rows the full scan would.
@@ -1300,7 +1348,7 @@ final class GraftScanBuilder(
 
 
   override def build(): Scan =
-    new GraftScan(format, required, pushed, options, limit, countStar,
+    new GraftScan(format, required, pushed, options, builderListing, limit, countStar,
       fullSchema = fullSchema, aggSpec = aggSpec, offset = offset,
       topN = topN, topNLimit = topNLimit)
 }
@@ -1310,6 +1358,8 @@ final class GraftScan(
     schema: StructType,
     filters: Array[Filter],
     options: CaseInsensitiveStringMap,
+    // the builder's listing, resolved on first use
+    resolvedListing: => GraftSources.Listing,
     limit: Int = -1,
     countStar: Boolean = false,
     fullSchema: StructType = StructType(Nil),
@@ -1549,7 +1599,7 @@ final class GraftScan(
     Array(new SkippedBytesMetric)
 
   // driver-side partition discovery, shared by planning and the factory
-  private lazy val listing = GraftSources.resolvePartitioned(options)
+  private lazy val listing = resolvedListing
   // column mapping (ALTER RENAME): logical -> physical for sidecar-stats /
   // bloom / block lookups and the parse-side schemas (data files and
   // their stats carry PHYSICAL keys)
@@ -1853,26 +1903,14 @@ final class GraftScan(
     val rowSchema = aggSpec.map(_.parseSchema(fullSchema)).getOrElse(schema)
     // required-schema slots served from hive-style partition values
     val partSpec = GraftSources.partSpecFor(rowSchema, listing.partCols)
-    // partition-column filters are handled at planning time (file pruning)
-    // and by the residual; the row plate must not see them (the column is
-    // null until the partition value is stamped in). The same goes for
-    // filters on the synthetic row-index column — its value is stamped
-    // post-parse (a plate would read it as forever-null and a pushed
-    // IsNotNull would wrongly drop every row).
-    // Row-index / masked modes KEEP plate filters (round 11): the plate
-    // counts the rows it drops and the readers fold the count into their
-    // ordinal accounting, so SkipRow byte-skip composes with provenance
-    // and deletion masks — the "all filters residual" price is gone.
-    // filters referencing RENAMED columns are excluded from plate-level
-    // byte-skip (the plate matches PHYSICAL keys; Spark re-applies every
-    // filter as residual, so correctness is untouched — the renamed
-    // column just loses the skip fast path)
-    val partNames = listing.partCols.toSet
+    // partition, renamed and row-index columns are not what the plate
+    // reads ([[GraftScan.plateReads]]); their filters prune files or stay
+    // residual. Row-index / masked modes KEEP plate filters (round 11):
+    // the plate counts the rows it drops and the readers fold the count
+    // into their ordinal accounting, so SkipRow byte-skip composes with
+    // provenance and deletion masks.
     val plateFilters =
-      (if (partSpec.isEmpty) filters
-       else filters.filterNot(_.references.exists(partNames.contains)))
-        .filterNot(_.references.exists(physMap.contains))
-        .filterNot(_.references.contains(GraftSources.RowIndexCol))
+      filters.filter(_.references.forall(GraftScan.plateReads(listing, _)))
     val rowIdxSlot =
       if (withRowIndex) rowSchema.fieldNames.indexOf(GraftSources.RowIndexCol)
       else -1
@@ -1880,7 +1918,7 @@ final class GraftScan(
     // PHYSICAL keys; rows are positional, so Spark still sees the logical
     // readSchema
     val spec = ReadSpec(options, conf,
-      physical(rowSchema, partNames + GraftSources.RowIndexCol), plateFilters,
+      physical(rowSchema, listing.partCols.toSet + GraftSources.RowIndexCol), plateFilters,
       partSpec, listing.recordedCols, dataCols.toArray, limit, rowIdxSlot)
     if (countStar) format.countReaderFactory(spec)
     else {
@@ -1904,6 +1942,17 @@ final class GraftScan(
 }
 
 object GraftScan {
+  /** Whether the plate reads column `ref` as the scan outputs it. It does
+    * not for the listing's partition and file-path columns (stamped after
+    * the parse; the plate would read them as null), renamed columns (the
+    * plate matches PHYSICAL keys) and the row-index column (stamped
+    * post-parse). The plate takes the filters on the columns it reads,
+    * and only those can be exact ([[GraftScanBuilder]]).
+    */
+  def plateReads(listing: GraftSources.Listing, ref: String): Boolean =
+    !listing.partCols.contains(ref) && !listing.physMap.contains(ref) &&
+      ref != GraftSources.RowIndexCol
+
   /** Output schema of a pushed-down ungrouped COUNT(*): one non-null
     * partial count per partition (Spark plans the summing final agg).
     */

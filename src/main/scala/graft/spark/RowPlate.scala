@@ -4,7 +4,8 @@ import graft.core.{KeyCruise, KeyOrderCache, KeyProbe, Plate, Signal}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData,
+  SQLOrderingUtil}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,8 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    decided at finishRow over the row's FINAL values — never per
   *    binding, because duplicate keys rebind (round 14); a saturated
   *    row still byte-skips its tail (FinishRow lands in finishRow,
-  *    which rejects there). Rows are dropped only on DEFINITE failure,
-  *    so Spark's residual filter stays correct.
+  *    which rejects there). Rows are dropped only on DEFINITE failure;
+  *    for the filters the scan builder deems exact (top-level, exactly
+  *    comparable types, non-null literals, the column's IsNotNull
+  *    pushed) that is Spark's own verdict, and the rest stay residual.
   *
   * The same plate serves the CSV source: cells arrive as `str` events and
   * are coerced to the schema type.
@@ -852,7 +855,6 @@ object Conversions {
           java.util.Arrays.copyOfRange(v.bytes, v.offset, v.offset + v.length))
       case _ => ()
     }
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
     val s = text.toString
     try dt match {
       case StringType => UTF8String.fromString(s)
@@ -925,21 +927,36 @@ object Conversions {
 
 /** Conservative evaluation of DSv2 source filters against Catalyst values:
   * true = the filter DEFINITELY fails for this value (safe to drop the row
-  * early; unknowns are kept for the residual Catalyst filter).
+  * early; unknowns are kept for the residual Catalyst filter). The
+  * verdict is exact for [[FilterEval.exactType]] cells and
+  * [[FilterEval.exactLiteral]] literals.
   */
 object FilterEval {
-  /** Pre-convert comparison literals (String → UTF8String) once at plate
-    * construction so the per-row cmp path never allocates.
+  /** Pre-convert comparison literals once at plate construction so the
+    * per-row cmp path never allocates: strings to UTF8String, dates and
+    * timestamps to the days and micros their cells hold.
     */
   def normalize(filters: Array[Filter]): Array[Filter] = filters.map {
-    case EqualTo(c, v: String)            => EqualTo(c, UTF8String.fromString(v))
-    case GreaterThan(c, v: String)        => GreaterThan(c, UTF8String.fromString(v))
-    case GreaterThanOrEqual(c, v: String) => GreaterThanOrEqual(c, UTF8String.fromString(v))
-    case LessThan(c, v: String)           => LessThan(c, UTF8String.fromString(v))
-    case LessThanOrEqual(c, v: String)    => LessThanOrEqual(c, UTF8String.fromString(v))
-    case In(c, vs) if vs.exists(_.isInstanceOf[String]) =>
-      In(c, vs.map { case s: String => UTF8String.fromString(s); case v => v })
+    case EqualTo(c, v)            => EqualTo(c, internal(v))
+    case GreaterThan(c, v)        => GreaterThan(c, internal(v))
+    case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(c, internal(v))
+    case LessThan(c, v)           => LessThan(c, internal(v))
+    case LessThanOrEqual(c, v)    => LessThanOrEqual(c, internal(v))
+    case In(c, vs)                => In(c, vs.map(internal))
     case f => f
+  }
+
+  // a literal in the 1582 switch window stays as it is: cmp leaves it
+  // undecided
+  private def internal(v: Any): Any = v match {
+    case s: String => UTF8String.fromString(s)
+    case d: java.sql.Date if !switchImage(d) =>
+      java.lang.Integer.valueOf(DateTimeUtils.fromJavaDate(d))
+    case t: java.sql.Timestamp if !switchImage(t) =>
+      java.lang.Long.valueOf(DateTimeUtils.fromJavaTimestamp(t))
+    case d: java.time.LocalDate => java.lang.Integer.valueOf(d.toEpochDay.toInt)
+    case i: java.time.Instant => java.lang.Long.valueOf(DateTimeUtils.instantToMicros(i))
+    case v => v
   }
 
   @inline private def isFloating(n: java.lang.Number): Boolean =
@@ -965,13 +982,61 @@ object FilterEval {
       val xn = xf && java.lang.Double.isNaN(x.doubleValue)
       val yn = yf && java.lang.Double.isNaN(y.doubleValue)
       if (xn || yn) java.lang.Boolean.compare(xn, yn)
-      else if (xf && yf) java.lang.Double.compare(x.doubleValue, y.doubleValue)
+      // -0.0 equals 0.0 (Spark's SQLOrderingUtil.compareDoubles)
+      else if (xf && yf) SQLOrderingUtil.compareDoubles(x.doubleValue, y.doubleValue)
       else toBig(x).compareTo(toBig(y))
     }
   }
 
+  /** Column types whose non-null cells [[cmp]] orders exactly as Spark
+    * orders them, given an [[exactLiteral]].
+    */
+  def exactType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType => true
+    case s: StringType => s.collationId == StringType.collationId
+    case _ => false
+  }
+
+  /** Whether [[cmp]] orders the cells of an [[exactType]] column against
+    * literal `v` exactly as Spark orders them against the literal Spark
+    * meant.
+    */
+  def exactLiteral(dt: DataType, v: Any): Boolean = (dt, v) match {
+    case (ByteType | ShortType | IntegerType | LongType,
+          _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+          _: java.lang.Long) => true
+    case (BooleanType, _: java.lang.Boolean) => true
+    case (_: StringType, _: String) => true
+    case (DateType, _: java.time.LocalDate) => true
+    case (DateType, d: java.sql.Date) => !switchImage(d)
+    case (TimestampType, _: java.time.Instant) => true
+    case (TimestampType, t: java.sql.Timestamp) => !switchImage(t)
+    case _ => false
+  }
+
+  // A java.sql.Date/Timestamp literal is Spark's value rebased to the
+  // hybrid Julian/Gregorian calendar (DateTimeUtils.toJavaDate and
+  // toJavaTimestamp keep the local fields). The ten proleptic dates the
+  // 1582 switch removed (October 5-14) have no hybrid date and rebase
+  // onto October 15-24, so a literal there may stand for another day.
+  // The window is one day wider on each side for zone offsets.
+  private val switchImageDays =
+    (java.time.LocalDate.of(1582, 10, 14).toEpochDay,
+     java.time.LocalDate.of(1582, 10, 25).toEpochDay)
+  private def switchImage(v: Any): Boolean = {
+    val day = v match {
+      case d: java.sql.Date => DateTimeUtils.fromJavaDate(d).toLong
+      case t: java.sql.Timestamp =>
+        Math.floorDiv(DateTimeUtils.fromJavaTimestamp(t), 86400000000L)
+      case _ => return false
+    }
+    day >= switchImageDays._1 && day <= switchImageDays._2
+  }
+
   private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (null, _) | (_, null) => None
+    case (_, _: java.sql.Date | _: java.sql.Timestamp) if switchImage(b) => None
     // binary UTF-8 ordering, matching Spark's UTF8String sort order (UTF-16
     // String.compareTo disagrees for U+E000..U+FFFF vs supplementary chars)
     case (x: UTF8String, y: String) => Some(x.binaryCompare(UTF8String.fromString(y)))
@@ -985,20 +1050,16 @@ object FilterEval {
     case (x: org.apache.spark.sql.types.Decimal, y: java.lang.Number) =>
       Some(cmpNum(x.toJavaBigDecimal, y))
     // temporal columns: row values / sidecar bounds are the internal
-    // micros (timestamps) or days (dates) Longs; pushed literals arrive
-    // in the external java.sql / java.time forms
+    // micros (timestamps) or days (dates); a literal [[normalize]] has not
+    // converted arrives in the external java.sql / java.time forms
     case (x: java.lang.Number, y: java.sql.Timestamp) =>
-      Some(java.lang.Long.compare(x.longValue,
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(y)))
+      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.fromJavaTimestamp(y)))
     case (x: java.lang.Number, y: java.time.Instant) =>
-      Some(java.lang.Long.compare(x.longValue,
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(y)))
+      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.instantToMicros(y)))
     case (x: java.lang.Number, y: java.time.LocalDateTime) =>
-      Some(java.lang.Long.compare(x.longValue,
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.localDateTimeToMicros(y)))
+      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.localDateTimeToMicros(y)))
     case (x: java.lang.Number, y: java.sql.Date) =>
-      Some(java.lang.Long.compare(x.longValue,
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(y).toLong))
+      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.fromJavaDate(y).toLong))
     case (x: java.lang.Number, y: java.time.LocalDate) =>
       Some(java.lang.Long.compare(x.longValue, y.toEpochDay))
     case _ => None

@@ -59,7 +59,8 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rec.get("name").asText == name && rec.get("pass").asInt == 1)
     Seq("wall_ms", "build_ms", "exec_ms", "analysis_ms", "optimization_ms", "planning_ms",
       "jobs", "job_ms", "stages", "tasks", "task_run_ms", "shuffle_read_bytes",
-      "shuffle_write_bytes").foreach(f => assert(rec.get(f).isNumber, f))
+      "shuffle_write_bytes", "codegen_compiles").foreach(f => assert(rec.get(f).isNumber, f))
+    assert(rec.get("codegen_compiles").asLong >= 0)
     assert(!rec.has("error"), String.valueOf(rec.get("error")))
     assert(rec.get("jobs").asLong >= 1)
     def micros(f: String) = math.round(rec.get(f).asDouble * 1000)

@@ -125,7 +125,8 @@ class AggPushdownSpec extends AnyFunSuite with TempDirs {
     assert(!scanDescr(sd).contains("pushedAgg"), scanDescr(sd))
     assert(sd.collect().toSeq == j.agg(sum_distinct(col("id")).as("sd")).collect().toSeq)
 
-    // a filter above the scan blocks aggregate pushdown (residual filter)
+    // a pushed filter blocks aggregate pushdown (exact `id > 30` leaves no
+    // Filter node; the builder still refuses the battery)
     val f = g.filter(col("id") > 30).groupBy("grp").agg(max("score").as("mx")).orderBy("grp")
     assert(!scanDescr(f).contains("pushedAgg"), scanDescr(f))
     assert(f.collect().toSeq ==

@@ -326,8 +326,8 @@ class GraftSourceSpec extends AnyFunSuite with TempDirs {
     }
     assert(scans.nonEmpty && scans.head.description().contains("countStar"))
     assert(df.collect().head.getLong(0) == 50)
-    // a filter blocks the pushdown (our filter eval is residual-only) but
-    // the count stays correct through the normal path
+    // a pushed filter blocks the pushdown (the count-only parse decides no
+    // filter) and the count stays correct through the filtering row path
     val filtered = spark.read.format("graft-json").load(p).filter(col("id") > 40)
     assert(filtered.count() == 10)
   }

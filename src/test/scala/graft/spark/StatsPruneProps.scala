@@ -38,7 +38,8 @@ object StatsPruneProps extends Properties("StatsPrune") {
     case (x: UTF8String, y: UTF8String) => Some(x.binaryCompare(y))
     case (x: java.lang.Long, y: java.lang.Long) => Some(java.lang.Long.compare(x, y))
     case (x: java.lang.Double, y: java.lang.Double) =>
-      Some(java.lang.Double.compare(x, y)) // NaN last, matching Spark's ordering
+      // NaN last and -0.0 equal to 0.0, as Spark orders doubles
+      Some(org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(x, y))
     case (x: java.math.BigDecimal, y: java.math.BigDecimal) => Some(x.compareTo(y))
     case _ => None
   }
