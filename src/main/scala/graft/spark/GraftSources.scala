@@ -1185,20 +1185,18 @@ final class GraftScanBuilder(
     * the column is a top-level data column the plate reads as the scan
     * outputs it ([[GraftScan.plateReads]], the rule that also picks the
     * plate's filters) and compares exactly ([[FilterEval.exactType]]);
-    * and the filter is a null test, or a comparison with exact non-null
-    * literals whose column also has a pushed `IsNotNull` (the plate keeps
-    * a null cell under a comparison; Spark drops it).
+    * and the filter is a null test, or a comparison or `In` with exact
+    * non-null literals.
     */
   private def exactFilters: Array[Filter] = {
     import org.apache.spark.sql.sources._
     if (!format.filtersReachReader ||
         !"fail".equalsIgnoreCase(options.getOrDefault("badrecords", "fail")))
       return Array.empty
-    val notNull = pushed.collect { case IsNotNull(c) => c }.toSet
     def column(c: String) =
       if (c.contains(".") || !GraftScan.plateReads(builderListing, c)) None
       else fullSchema.find(_.name == c).map(_.dataType).filter(FilterEval.exactType)
-    def compared(c: String, vs: Seq[Any]): Boolean = vs.nonEmpty && notNull(c) &&
+    def compared(c: String, vs: Seq[Any]): Boolean = vs.nonEmpty &&
       column(c).exists(dt => vs.forall(FilterEval.exactLiteral(dt, _)))
     pushed.filter {
       case IsNull(c)                => column(c).isDefined
@@ -1236,10 +1234,8 @@ final class GraftScanBuilder(
     // in file order — keep the mutual exclusion local (Spark never asks
     // for both today, but the invariant should not live in the planner)
     if (topN != null) return false
-    // Spark offers the offset only when no residual filter remains above
-    // the scan, so every pushed filter here is exact and the plate drops
-    // its rows before the wrapper counts them. Offsets with filters are
-    // refused all the same: no reader path has been checked for it.
+    // offsets over pushed filters are refused: no reader path has been
+    // checked for them
     if (pushed.nonEmpty) return false
     if (builderListing.files.length != 1) return false
     // a deletion vector is fine: the wrapper trims the inner reader's

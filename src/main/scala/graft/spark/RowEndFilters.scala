@@ -28,8 +28,7 @@ private[spark] final class RowEndFilters(names: Array[String], filters: Array[Fi
   }
 
   /** Does the row pass? Unwritten and null cells evaluate as null, which
-    * is conservative: `definitelyFails(_, null)` is false for comparisons,
-    * so the row stays for Spark's residual filter.
+    * fails every comparison (`FilterEval.definitelyFails`).
     */
   def passes(cells: RowEndFilters.Cells): Boolean = {
     var k = 0

@@ -613,11 +613,9 @@ final class RowPlate(
 
   // ------------------------------------------------------------ filters
 
-  /** Walk the nested-filter trie over the row's FINAL values. Missing,
-    * null, or non-struct values along a path evaluate the leaf as null —
-    * conservative: definitelyFails(_, null) is false for comparisons, so
-    * the row survives for Spark's residual filter (exactly like the
-    * per-close evaluation this replaces treated unwritten children).
+  /** Walk the nested-filter trie over the row's FINAL values. Missing or
+    * null values along a path evaluate the leaf as null, as Spark's
+    * field access does, so a comparison on it drops the row.
     */
   private def nestedPasses(node: NestedNode, parent: Any): Boolean =
     node.children.forall { case (idx, c) =>
@@ -928,8 +926,9 @@ object Conversions {
 /** Conservative evaluation of DSv2 source filters against Catalyst values:
   * true = the filter DEFINITELY fails for this value (safe to drop the row
   * early; unknowns are kept for the residual Catalyst filter). The
-  * verdict is exact for [[FilterEval.exactType]] cells and
-  * [[FilterEval.exactLiteral]] literals.
+  * verdict is exact for null cells and for the non-null cells of
+  * [[FilterEval.exactType]] columns against [[FilterEval.exactLiteral]]
+  * literals.
   */
 object FilterEval {
   /** Pre-convert comparison literals once at plate construction so the
@@ -946,14 +945,17 @@ object FilterEval {
     case f => f
   }
 
-  // a literal in the 1582 switch window stays as it is: cmp leaves it
-  // undecided
+  // a java.sql literal in the 1582 switch window stays as it is: cmp
+  // leaves it undecided
   private def internal(v: Any): Any = v match {
     case s: String => UTF8String.fromString(s)
-    case d: java.sql.Date if !switchImage(d) =>
-      java.lang.Integer.valueOf(DateTimeUtils.fromJavaDate(d))
-    case t: java.sql.Timestamp if !switchImage(t) =>
-      java.lang.Long.valueOf(DateTimeUtils.fromJavaTimestamp(t))
+    case d: java.sql.Date =>
+      val days = DateTimeUtils.fromJavaDate(d)
+      if (inSwitchImage(days)) d else java.lang.Integer.valueOf(days)
+    case t: java.sql.Timestamp =>
+      val micros = DateTimeUtils.fromJavaTimestamp(t)
+      if (inSwitchImage(Math.floorDiv(micros, 86400000000L))) t
+      else java.lang.Long.valueOf(micros)
     case d: java.time.LocalDate => java.lang.Integer.valueOf(d.toEpochDay.toInt)
     case i: java.time.Instant => java.lang.Long.valueOf(DateTimeUtils.instantToMicros(i))
     case v => v
@@ -1008,10 +1010,9 @@ object FilterEval {
           _: java.lang.Long) => true
     case (BooleanType, _: java.lang.Boolean) => true
     case (_: StringType, _: String) => true
-    case (DateType, _: java.time.LocalDate) => true
-    case (DateType, d: java.sql.Date) => !switchImage(d)
-    case (TimestampType, _: java.time.Instant) => true
-    case (TimestampType, t: java.sql.Timestamp) => !switchImage(t)
+    case (DateType, _: java.sql.Date | _: java.time.LocalDate) |
+         (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) =>
+      internal(v).isInstanceOf[java.lang.Number]
     case _ => false
   }
 
@@ -1024,19 +1025,11 @@ object FilterEval {
   private val switchImageDays =
     (java.time.LocalDate.of(1582, 10, 14).toEpochDay,
      java.time.LocalDate.of(1582, 10, 25).toEpochDay)
-  private def switchImage(v: Any): Boolean = {
-    val day = v match {
-      case d: java.sql.Date => DateTimeUtils.fromJavaDate(d).toLong
-      case t: java.sql.Timestamp =>
-        Math.floorDiv(DateTimeUtils.fromJavaTimestamp(t), 86400000000L)
-      case _ => return false
-    }
+  private def inSwitchImage(day: Long): Boolean =
     day >= switchImageDays._1 && day <= switchImageDays._2
-  }
 
   private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (null, _) | (_, null) => None
-    case (_, _: java.sql.Date | _: java.sql.Timestamp) if switchImage(b) => None
     // binary UTF-8 ordering, matching Spark's UTF8String sort order (UTF-16
     // String.compareTo disagrees for U+E000..U+FFFF vs supplementary chars)
     case (x: UTF8String, y: String) => Some(x.binaryCompare(UTF8String.fromString(y)))
@@ -1049,29 +1042,29 @@ object FilterEval {
       Some(x.toJavaBigDecimal.compareTo(y))
     case (x: org.apache.spark.sql.types.Decimal, y: java.lang.Number) =>
       Some(cmpNum(x.toJavaBigDecimal, y))
-    // temporal columns: row values / sidecar bounds are the internal
-    // micros (timestamps) or days (dates); a literal [[normalize]] has not
-    // converted arrives in the external java.sql / java.time forms
-    case (x: java.lang.Number, y: java.sql.Timestamp) =>
-      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.fromJavaTimestamp(y)))
-    case (x: java.lang.Number, y: java.time.Instant) =>
-      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.instantToMicros(y)))
+    // TIMESTAMP_NTZ cells are micros; [[normalize]] leaves their
+    // LocalDateTime literals as they are (dates and timestamps it
+    // converts, except in the 1582 switch window, which stays undecided)
     case (x: java.lang.Number, y: java.time.LocalDateTime) =>
       Some(java.lang.Long.compare(x.longValue, DateTimeUtils.localDateTimeToMicros(y)))
-    case (x: java.lang.Number, y: java.sql.Date) =>
-      Some(java.lang.Long.compare(x.longValue, DateTimeUtils.fromJavaDate(y).toLong))
-    case (x: java.lang.Number, y: java.time.LocalDate) =>
-      Some(java.lang.Long.compare(x.longValue, y.toEpochDay))
     case _ => None
   }
 
+  /** A null cell fails every comparison, `In` and string predicate: each
+    * pushed filter is a conjunct of a WHERE condition, and the null such a
+    * predicate yields there drops the row.
+    */
   def definitelyFails(f: Filter, value: Any): Boolean = f match {
+    case IsNull(_)                => value != null
+    case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
+         _: LessThanOrEqual | _: In | _: StringStartsWith | _: StringEndsWith |
+         _: StringContains if value == null => true
     case EqualTo(_, v)            => cmp(value, v).exists(_ != 0)
     case GreaterThan(_, v)        => cmp(value, v).exists(_ <= 0)
     case GreaterThanOrEqual(_, v) => cmp(value, v).exists(_ < 0)
     case LessThan(_, v)           => cmp(value, v).exists(_ >= 0)
     case LessThanOrEqual(_, v)    => cmp(value, v).exists(_ > 0)
-    case In(_, vs)                => value != null && vs.nonEmpty &&
+    case In(_, vs)                => vs.nonEmpty &&
       vs.forall(v => cmp(value, v).exists(_ != 0))
     case StringStartsWith(_, p)   => value match {
       case s: UTF8String => !s.toString.startsWith(p)
@@ -1085,7 +1078,6 @@ object FilterEval {
       case s: UTF8String => !s.toString.contains(p)
       case _ => false
     }
-    case IsNull(_)                => value != null
     case _                        => false // unknown filter: never drop early
   }
 

@@ -959,14 +959,14 @@ class ColumnarPlateSpec extends AnyFunSuite {
       """{"id": 1, "n": {"x": 5, "y": "drop"}}""" + "\n" +
       """{"id": 2, "n": {"x": 50, "y": "keep"}}""" + "\n" +
       """{"id": 3, "n": {"x": 3}, "zz": "tail never parsed"}""" + "\n" +
-      """{"id": 4}""" + "\n" + // missing struct: residual's problem, kept
+      """{"id": 4}""" + "\n" + // missing struct: n.x is null, dropped
       """{"id": 5, "n": {"x": 99, "y": "keep2"}}""" + "\n" +
       // DUPLICATE child keys are last-wins: the filter sees the FINAL
       // value, never the first binding's (x16 fuzz regression)
       """{"id": 6, "n": {"x": 0, "x": 44, "y": "dupkeep"}}""" + "\n" +
       """{"id": 7, "n": {"x": 44, "x": 0, "y": "dupdrop"}}""" + "\n"),
       filters = Array(GreaterThan("n.x", java.lang.Long.valueOf(10L))))
-    assert(rows.map(_.getLong(0)) == Seq(2L, 4L, 5L, 6L))
+    assert(rows.map(_.getLong(0)) == Seq(2L, 5L, 6L))
 
     // anchored IsNotNull does NOT early-drop (definitelyFails has no
     // IsNotNull case — unknown filters never drop at the plate; Spark's

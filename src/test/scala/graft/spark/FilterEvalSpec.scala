@@ -79,4 +79,15 @@ class FilterEvalSpec extends AnyFunSuite {
     assert(FilterEval.definitelyFails(LessThan("c", java.lang.Long.valueOf(Long.MaxValue)), nan))
     assert(!FilterEval.definitelyFails(EqualTo("c", nan), nan))
   }
+
+  test("a null cell fails comparisons, IN and string predicates, not null tests or negations") {
+    val one = java.lang.Long.valueOf(1L)
+    Seq(EqualTo("c", one), GreaterThan("c", one), GreaterThanOrEqual("c", one),
+        LessThan("c", one), LessThanOrEqual("c", one), In("c", Array[Any](one)),
+        StringStartsWith("c", "a"), StringEndsWith("c", "a"), StringContains("c", "a"))
+      .foreach(f => assert(FilterEval.definitelyFails(f, null), f))
+    Seq(IsNull("c"), IsNotNull("c"), Not(EqualTo("c", one)), EqualNullSafe("c", one),
+        Or(EqualTo("c", one), IsNull("c")))
+      .foreach(f => assert(!FilterEval.definitelyFails(f, null), f))
+  }
 }

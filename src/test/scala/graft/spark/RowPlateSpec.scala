@@ -84,10 +84,14 @@ class RowPlateSpec extends AnyFunSuite {
         |{"v": "no-id"}
         |""".stripMargin
     val (rows, _) = parse(schema, json, Array(LessThan("id", 3L)))
-    // id=5 definitively fails; the id-less row is UNKNOWN and must survive
-    // for Spark's residual filter
+    // id=5 definitively fails, and so does the id-less row: its null id
+    // fails the comparison, as it does in a WHERE
     assert(rows.map(r => if (r.isNullAt(1)) null else r.getUTF8String(1).toString) ==
-      Seq("keep", "no-id"))
+      Seq("keep"))
+    // a shape the plate does not evaluate is UNKNOWN: every row survives
+    // for Spark's residual filter
+    val (rows1, _) = parse(schema, json, Array(Not(EqualTo("id", 1L))))
+    assert(rows1.size == 3)
     val (rows2, _) = parse(schema, json, Array(IsNotNull("id")))
     assert(rows2.size == 2) // the id-less row definitively fails IsNotNull
   }
